@@ -137,20 +137,22 @@ NOTES = {
 }
 
 
-def _usable_queries(parsed: dict) -> dict[str, float]:
-    """The per-query map of a bench doc iff it holds real timings.
+def _usable_queries(parsed: dict, key: str = "queries") -> dict[str, float]:
+    """The `key` timing map of a bench doc (the per-query map by
+    default, or `derived_build_sec`) iff it holds real timings.
 
-    r21's tail-guard replaced `queries` with a slim pointer
-    (`{"_see": ..., "n": 27}`) whose truthiness made _prev_bench adopt
-    it as the baseline — every prev lookup then missed, so host_factor
-    fell back to 1.0 and BOTH regression gates ran blind (observed on
-    the first r22 bench: regressions [] against a baseline of zero
-    usable entries).  A map carrying the slim marker is no baseline;
-    non-numeric entries are dropped defensively either way."""
-    q = parsed.get("queries") or {}
-    if "_see" in q:
+    r21's tail-guard replaced `queries` and `derived_build_sec` with
+    slim pointers (`{"_see": ..., "n": 27}`) whose truthiness made
+    _prev_bench adopt them as the baseline — every prev lookup then
+    missed, so host_factor fell back to 1.0 and the regression gates
+    ran blind (observed on the first r22 bench: regressions [] against
+    a baseline of zero usable entries).  A map carrying the slim
+    marker is no baseline; non-numeric entries are dropped either
+    way."""
+    m = parsed.get(key) or {}
+    if not isinstance(m, dict) or "_see" in m:
         return {}
-    return {k: v for k, v in q.items() if isinstance(v, (int, float))}
+    return {k: v for k, v in m.items() if isinstance(v, (int, float))}
 
 
 def _prev_bench() -> tuple[dict[str, float], dict[str, float]]:
@@ -174,7 +176,7 @@ def _prev_bench() -> tuple[dict[str, float], dict[str, float]]:
         if int(m.group(1)) > best_n and q:
             best_n = int(m.group(1))
             best_q = q
-            best_d = parsed.get("derived_build_sec") or {}
+            best_d = _usable_queries(parsed, "derived_build_sec")
     return best_q, best_d
 
 

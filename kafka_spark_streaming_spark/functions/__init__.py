@@ -1,4 +1,5 @@
-"""Column-expression helpers shared by operators.
+"""Column-expression helpers shared by operators, and the JVM-side
+literal-frame builder of the per-batch write path.
 
 Oracle-determinism policy (the driver hash-compares Spark output against
 DuckDB output, CORRECTNESS gate):
@@ -20,11 +21,38 @@ no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MONEY = "decimal(12,2)"
 FACTOR = "decimal(8,4)"
+
+
+def literal_frame(
+    spark: SparkSession,
+    schema: T.StructType | str,
+    row: tuple | None = None,
+) -> DataFrame:
+    """`row` as a one-row frame of `schema` (a StructType or a DDL
+    string), or a zero-row frame when `row` is None — built on the JVM.
+
+    spark.createDataFrame over local data is a parallelized Python RDD
+    in classic PySpark: every job that reads such a frame runs one
+    Python-worker task per default-parallelism slice just to unpickle
+    its row.  A one-partition range projected to typed literals is a
+    plain JVM plan (Project over Range, whole-stage codegen'd).  Column
+    names and types follow `schema`; literal columns report non-null,
+    and the zero-row frame's columns are nullable."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    values = (None,) * len(schema.fields) if row is None else row
+    return spark.range(0, 0 if row is None else 1, 1, 1).select(
+        *[
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for f, v in zip(schema.fields, values, strict=True)
+        ]
+    )
 
 
 def _c(col: Column | str) -> Column:

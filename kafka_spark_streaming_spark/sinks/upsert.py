@@ -85,6 +85,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_spark_streaming_spark.fencing import WriterFence
+from kafka_spark_streaming_spark.functions import literal_frame
 
 CELL_KEY = ["rowkey", "cf", "qualifier"]
 
@@ -96,6 +97,13 @@ STATE_SCHEMA = T.StructType(
         T.StructField("value", T.StringType(), True),
         T.StructField("batch_id", T.LongType(), False),
     ]
+)
+
+# STATE_SCHEMA plus the rb partition column: the explicit schema of
+# every state read (no parquet footer-inference job per referenced
+# version) and of the empty state
+READ_SCHEMA = T.StructType(
+    STATE_SCHEMA.fields + [T.StructField("rb", T.IntegerType(), True)]
 )
 
 
@@ -314,10 +322,7 @@ class KeyedUpsertSink:
         pruned despite the pin)."""
         versions = self._versions()
         if not versions:
-            empty = self.spark.createDataFrame(
-                [], STATE_SCHEMA
-            ).withColumn("rb", F.lit(None).cast("int"))
-            return empty, None, {}
+            return literal_frame(self.spark, READ_SCHEMA), None, {}
         head = versions[-1]
         manifest = self._manifest(head)
         if not manifest:
@@ -325,10 +330,7 @@ class KeyedUpsertSink:
                 # a committed EMPTY manifest is a real (empty) state —
                 # the purge-everything outcome of an empty retry over a
                 # first-ever batch — not the flat legacy layout
-                empty = self.spark.createDataFrame(
-                    [], STATE_SCHEMA
-                ).withColumn("rb", F.lit(None).cast("int"))
-                return empty, head, manifest
+                return literal_frame(self.spark, READ_SCHEMA), head, manifest
             # flat pre-r16 unpartitioned store
             df = self.spark.read.parquet(os.path.join(self.path, head))
             if "rb" not in df.columns:
@@ -337,21 +339,16 @@ class KeyedUpsertSink:
         by_owner: dict[str, list[str]] = {}
         for rb_dir, owner in manifest.items():
             by_owner.setdefault(owner, []).append(rb_dir)
-        # explicit schema (STATE_SCHEMA + the rb partition column):
-        # the cell layout is fixed, so none of the per-owner reads
-        # needs a parquet footer-inference job — at one read per
-        # referenced version per merge, that is compact_versions
-        # 1-task driver jobs per batch saved (same job-floor lever as
-        # the dedup store probes, r17)
-        read_schema = T.StructType(
-            STATE_SCHEMA.fields
-            + [T.StructField("rb", T.IntegerType(), True)]
-        )
+        # explicit READ_SCHEMA: the cell layout is fixed, so none of
+        # the per-owner reads needs a parquet footer-inference job — at
+        # one read per referenced version per merge, that is
+        # compact_versions 1-task driver jobs per batch saved (same
+        # job-floor lever as the dedup store probes, r17)
         parts = []
         for owner, rb_dirs in sorted(by_owner.items()):
             vdir = os.path.join(self.path, owner)
             parts.append(
-                self.spark.read.schema(read_schema)
+                self.spark.read.schema(READ_SCHEMA)
                 .option("basePath", vdir)
                 .parquet(*[os.path.join(vdir, d) for d in sorted(rb_dirs)])
             )
@@ -752,10 +749,12 @@ def single_cell(
     """One summary cell in cell shape — the single source of the
     (rowkey, cf, qualifier, value) construction, shared by put_single
     and the pipeline's merged per-batch write (code-review r15: two
-    inline copies could drift)."""
-    return spark.createDataFrame(
-        [(rowkey, cf, qualifier, value)],
+    inline copies could drift).  A JVM literal frame, so the batch's
+    sink jobs start no Python worker (functions.literal_frame)."""
+    return literal_frame(
+        spark,
         "rowkey string, cf string, qualifier string, value string",
+        (rowkey, cf, qualifier, value),
     )
 
 

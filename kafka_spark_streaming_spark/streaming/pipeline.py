@@ -15,7 +15,10 @@ records. Re-expressed:
 
 Everything inside foreachBatch is declarative DataFrame work — the two
 counts are distributed aggregations; only the 1-row summary ever
-reaches the driver.
+reaches the driver.  The per-batch body runs no Python worker: the
+one-row frames it writes (summary cell, summary log row, Kafka summary
+record) are JVM literal frames (functions.literal_frame), not
+createDataFrame's parallelized Python RDD.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_spark_streaming_spark.functions import literal_frame
 from kafka_spark_streaming_spark.sinks.kafka import (
     to_kafka_records,
     write_batch_to_kafka,
@@ -154,10 +158,11 @@ class StreamerPipeline:
                 # one deterministic subdir per batch, overwritten on a
                 # foreachBatch retry — append would duplicate the row
                 # and break the exactly-once summary contract
-                self.spark.createDataFrame(
-                    [(batch_id, n, n_distinct, date_str, summary)],
+                literal_frame(
+                    self.spark,
                     "batch_id long, n_messages long, n_distinct long,"
                     " batch_date string, summary string",
+                    (batch_id, n, n_distinct, date_str, summary),
                 ).write.mode("overwrite").parquet(
                     f"{self.cfg.summary_path}/batch={batch_id}"
                 )
@@ -165,7 +170,7 @@ class StreamerPipeline:
             if self.cfg.output_topic and self.cfg.brokers:
                 write_batch_to_kafka(
                     to_kafka_records(
-                        self.spark.createDataFrame([(summary,)], "value string")
+                        literal_frame(self.spark, "value string", (summary,))
                     ),
                     self.cfg.brokers,
                     self.cfg.output_topic,

@@ -448,7 +448,26 @@ def reset_derived_cache() -> None:
         except Exception:
             pass  # a dead session's handle: nothing to release
     _DERIVED_CACHE.clear()
+    for sidecar in _DERIVED_SIDECAR.values():
+        _release_sidecar(sidecar)
     _DERIVED_SIDECAR.clear()
+
+
+def _release_sidecar(sidecar: object) -> None:
+    """Unpersist every Broadcast an evicted sidecar holds (the sidecar
+    itself or a member of its tuple/list), so the executors' and the
+    block manager's copies go with the memo entry instead of lingering
+    until the handle is garbage-collected.  Each release is
+    best-effort: a broadcast of a stopped context is already gone."""
+    from pyspark import Broadcast
+
+    members = sidecar if isinstance(sidecar, (tuple, list)) else (sidecar,)
+    for m in members:
+        if isinstance(m, Broadcast):
+            try:
+                m.unpersist()
+            except Exception:
+                pass
 
 
 def _artifact_parquet_roundtrip(spark, key: str, built: DataFrame) -> DataFrame:
@@ -613,7 +632,7 @@ def session_checkpoint(
         except Exception:
             pass  # other app's handle or already released
         del _DERIVED_CACHE[stale]
-        _DERIVED_SIDECAR.pop(stale, None)
+        _release_sidecar(_DERIVED_SIDECAR.pop(stale, None))
     import time
 
     t0 = time.perf_counter()

@@ -168,6 +168,50 @@ def test_session_checkpoint_sidecar_rides_same_entry(spark, tmp_path):
     assert tables._DERIVED_CACHE == {} and tables._DERIVED_SIDECAR == {}
 
 
+def test_session_checkpoint_eviction_unpersists_sidecar_broadcasts(
+    spark, tmp_path
+):
+    """ADVICE r22 (tables.py eviction): an evicted entry's sidecar
+    Broadcasts are unpersisted with it — on fixture regeneration and on
+    reset_derived_cache — and a broadcast whose unpersist raises (its
+    context already gone) does not break the eviction."""
+    sf_dir = str(tmp_path)
+    shutil.copyfile(
+        os.path.join(tables.DEFAULT_SF_DIR, "documents.parquet"),
+        os.path.join(sf_dir, "documents.parquet"),
+    )
+    released = []
+
+    def build():
+        bc = spark.sparkContext.broadcast(("ids", "matrix"))
+        broken = spark.sparkContext.broadcast(("stale",))
+        real = bc.unpersist
+
+        def unpersist(blocking=False):
+            released.append(bc)
+            real(blocking)
+
+        def fail(blocking=False):
+            raise RuntimeError("context already stopped")
+
+        bc.unpersist = unpersist
+        broken.unpersist = fail
+        return spark.range(1), ("ids", broken, bc)
+
+    key = f"probe_bc:{sf_dir}"
+    _, (_, _, first) = tables.session_checkpoint(
+        spark, key, build, sf_dir=sf_dir, with_sidecar=True
+    )
+    assert released == []
+    os.utime(os.path.join(sf_dir, "documents.parquet"), None)
+    _, (_, _, second) = tables.session_checkpoint(
+        spark, key, build, sf_dir=sf_dir, with_sidecar=True
+    )
+    assert released == [first]  # evicted with its entry, not the new one
+    tables.reset_derived_cache()
+    assert released == [first, second]
+
+
 def test_engine_confs_pinned_on_foreign_session(spark):
     """The correctness driver builds its own SparkSession without the
     engine's configuration. ensure_engine_confs (called from every

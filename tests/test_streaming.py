@@ -100,6 +100,52 @@ def test_pipeline_two_batches_and_lww(spark, two_file_stream_dir, tmp_path):
     assert n_bulk == exp
 
 
+def test_pipeline_summary_path_one_row_per_batch(
+    spark, two_file_stream_dir, tmp_path
+):
+    """StreamerConfig.summary_path: every micro-batch writes ONE row
+    (batch_id, n_messages, n_distinct, batch_date, summary) under
+    batch={id}, and a foreachBatch replay of a batch_id overwrites
+    that batch's row instead of appending a second one."""
+    base, _ = two_file_stream_dir
+    summary_path = str(tmp_path / "summary")
+    pipe = StreamerPipeline(
+        spark,
+        StreamerConfig(summary_path=summary_path, clock=lambda: 1700000000),
+    )
+    q = pipe.start(
+        file_stream_messages(spark, base, max_files_per_trigger=1),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination()
+    assert [s[0] for s in pipe.summaries] == [0, 1]
+
+    def rows(batch_id):
+        df = spark.read.parquet(f"{summary_path}/batch={batch_id}")
+        assert df.dtypes == [
+            ("batch_id", "bigint"), ("n_messages", "bigint"),
+            ("n_distinct", "bigint"), ("batch_date", "string"),
+            ("summary", "string"),
+        ]
+        return [tuple(r) for r in df.collect()]
+
+    for batch_id, n, n_distinct, summary in pipe.summaries:
+        assert rows(batch_id) == [
+            (batch_id, n, n_distinct, "2023/11/14 22:13", summary)
+        ]
+    assert sum(s[1] for s in pipe.summaries) == 1000
+
+    # replay batch 1 with different content: its row is replaced
+    replay = spark.range(3).select(
+        F.col("id").cast("string").alias("key"),
+        F.lit("v").alias("value"),
+    )
+    pipe.process_batch(replay, 1)
+    assert rows(1) == [(1, 3, 3, "2023/11/14 22:13", pipe.summaries[-1][3])]
+    everything = spark.read.parquet(summary_path)
+    assert sorted(r.batch_id for r in everything.collect()) == [0, 1]
+
+
 def test_pipeline_distinct_count_fold_is_null_safe(spark):
     """r17 folded the pipeline's T2/T3 distinct count into the T4
     count job as count_distinct(struct(key, value)).  The fold is only

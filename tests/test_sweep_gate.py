@@ -448,6 +448,36 @@ def test_prev_bench_rejects_slim_queries_map():
     assert _usable_queries({}) == {}
 
 
+def test_prev_bench_rejects_pointer_derived_map(tmp_path, monkeypatch):
+    """The derived-build map gets the same sanitizer as the per-query
+    map: a pointer-shaped `derived_build_sec` (the r21 slim line) must
+    never become the derived-build gate's baseline, and non-numeric
+    entries are dropped — while the round's real per-query timings are
+    still adopted."""
+    import json
+
+    import bench
+
+    key = "derived_build_sec"
+    assert bench._usable_queries(
+        {key: {"_see": "BENCH_FULL_LAST.json", "n": 8}}, key
+    ) == {}
+    assert bench._usable_queries(
+        {key: {"minhash_sig": 2.5, "junk": "str"}}, key
+    ) == {"minhash_sig": 2.5}
+    assert bench._usable_queries({key: "pointer"}, key) == {}
+
+    doc = {
+        "parsed": {
+            "queries": {"q1_pricing_summary": 1.2},
+            "derived_build_sec": {"_see": "BENCH_FULL_LAST.json", "n": 8},
+        }
+    }
+    (tmp_path / "BENCH_r90.json").write_text(json.dumps(doc))
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._prev_bench() == ({"q1_pricing_summary": 1.2}, {})
+
+
 def test_table_plan_memo_misses_on_fixture_regeneration(tmp_path):
     """r22 plan-handle memo: table() returns the SAME unexecuted frame
     for repeated calls (no per-call footer re-read), a regenerated
