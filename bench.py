@@ -4,18 +4,29 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is forced
 end-to-end with a noop-format write (full plan executes, nothing
 collected to the driver — same shape a cluster job has).
+
+This module is also the one measurement core that tools/sweep.py and
+sf1_smoke.py drive: the pass loop (Timer.time_queries), the baseline
+reader (_prev_bench), the derived-build resample (Timer.resample), the
+dirty-window predicate (should_rerun_window), the prev-round gate (gate)
+and the teardown before the last stdout line (Timer.emit).  Each harness
+keeps only its query set, its gate policy and its output schema.
 """
 
 from __future__ import annotations
 
-import glob
+import functools
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from kafka_spark_streaming_spark import tables  # noqa: E402
+from kafka_spark_streaming_spark.operators import QUERIES  # noqa: E402
 
 # Headline set: one per operator family — scan-agg, top-k join,
 # star join, scan-filter-agg, multiway join, windowing, as-of join,
@@ -66,24 +77,20 @@ HEADLINE = [
 ]
 
 
-def _force(df) -> None:
+def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _stateful_2batch(spark, sf_dir):
-    # Same data, same operator, 2 forced micro-batch boundaries instead
-    # of 4: the timing is dominated by the per-batch state-store floor
-    # (task + commit + Arrow hop per store per batch), not by data
-    # volume, so fewer forced batches makes the number interpretable as
-    # operator cost rather than micro-batch count.
-    from kafka_spark_streaming_spark.operators.streaming_queries import (
-        s_stateful_user_stats,
+# Same data, same operator, 2 forced micro-batch boundaries instead of
+# 4: the timing is dominated by the per-batch state-store floor (task +
+# commit + Arrow hop per store per batch), not by data volume, so fewer
+# forced batches makes the number interpretable as operator cost rather
+# than micro-batch count.
+OVERRIDES = {
+    "s_stateful_user_stats": functools.partial(
+        QUERIES["s_stateful_user_stats"], n_batches=2
     )
-
-    return s_stateful_user_stats(spark, sf_dir, n_batches=2)
-
-
-OVERRIDES = {"s_stateful_user_stats": _stateful_2batch}
+}
 NOTES = {
     "s_stateful_user_stats": (
         "applyInPandasWithState drained over 2 real micro-batches; "
@@ -96,88 +103,230 @@ NOTES = {
         "(shared-host VM shows 1.5-2x whole-run noise between passes, "
         "measured across identical back-to-back runs in r7)"
     ),
-    "r17_scalar_map_funcs_rescope": (
-        "scalar_map_funcs was rescoped in r17 to the l_orderkey % 97 "
-        "== 0 slice of lineitem (Spark query and DuckDB oracle changed "
-        "identically — parity holds); numbers from r17 onward are NOT "
-        "comparable to pre-r17 rounds for this slot (ADVICE r17). The "
-        "canonical comparison points — SWEEP_BASELINE.json and the "
-        "latest BENCH_r*.json the gate reads — were both refreshed on "
-        "the rescoped shape in r17"
-    ),
-    "r12_headline_change": (
-        "sim_ann_ivf added to HEADLINE (VERDICT r11 #6) — the TOTAL "
-        "grows by its ~1 s warm probe vs BENCH_r11 by construction; "
-        "its one-time index build is reported in derived_build_sec"
-    ),
-    "r11_headline_change": (
-        "d_simhash_pairs / d_containment_pairs added to HEADLINE "
-        "(VERDICT r10 #3) — the TOTAL grows by their ~3 s vs BENCH_r10 "
-        "by construction; per-query numbers + the regressions gate "
-        "remain the round-over-round signal"
-    ),
-    "r9_headline_change": (
-        "t_bigram_logprob / sim_kmeans_clusters / aj_scd2_point_lookup "
-        "added to HEADLINE this round (VERDICT r8 next #6) — the TOTAL "
-        "therefore grows by their ~5 s vs BENCH_r08 by construction; "
-        "round-over-round comparability lives in the per-query numbers "
-        "and the regressions gate, which covers every query present in "
-        "both rounds"
-    ),
     "derived_tables": (
-        "d_minhash_lsh_pairs / g_pagerank_trade / p_decontaminate_ngram "
-        "probe derived artifacts (minhash signature profile, distilled "
-        "edge list, 8-gram index) memoized per (session, corpus) via "
+        "derived artifacts (minhash signature profile, distilled edge "
+        "list, 8-gram index, ...) are memoized per (session, corpus) via "
         "tables.session_checkpoint — the production shape persists these "
-        "next to the corpus, so the min-of-2 number measures the probe; "
-        "each artifact's one-time build cost is reported separately as "
+        "next to the corpus, so the per-query numbers measure the probe; "
+        "each artifact's build cost is reported separately as "
         "derived_build_sec and gated at the same 1.5x vs the previous "
         "round"
     ),
 }
 
+# Dirty-window threshold (VERDICT r21 #7): a canary factor above it
+# means co-tenant CPU steal polluted the whole timing window.
+DIRTY_FACTOR = 2.0
+
+
+def settle_streams(spark) -> None:
+    """Drain the previous streaming query's teardown off the clock
+    (VERDICT r11 #3: registry-order timing charged the prior stream's
+    stop tax to the next entry — s_stream_stream_join recorded 30.2 s
+    vs 12.5-19.5 s isolated).  Stop any still-active query, then run a
+    trivial job as a scheduler barrier so stop/cleanup threads finish
+    before the next timer starts."""
+    for q in spark.streams.active:
+        try:
+            q.stop()
+        except Exception:  # noqa: BLE001 — settle must not fail a run
+            pass
+    spark.range(1).count()
+
+
+class Timer:
+    """One harness run on one Spark session: the pass loop, the
+    derived-build resample and the teardown, plus what they share —
+    per sf_dir, the queries whose first timed pass built a derived
+    artifact there (in timing order, with the artifacts), the action
+    output that went with each query's last recorded timing, and
+    whether an s_* entry ran.
+    """
+
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        self.builders: dict[str, dict[str, tuple]] = {}
+        self.outputs: dict[str, object] = {}
+        self.streamed = False
+
+    def time_queries(
+        self,
+        fns: dict,
+        sf_dir: str,
+        passes: int,
+        action=force,
+        timings: dict[str, float] | None = None,
+        errors: dict[str, str] | None = None,
+    ) -> tuple[dict[str, float], dict[str, str]]:
+        """The pass loop: `passes` passes over `fns` ({name: fn(spark,
+        sf_dir) -> DataFrame}), each query timed through `action(df)`,
+        the min per query kept in `timings` (min-of-N reports the
+        machine's capability per plan rather than whichever pass caught
+        the noisy neighbor on a shared host).  Pass existing
+        `timings`/`errors` to extend a run with more passes.
+
+        A query that raises is recorded in `errors` and skipped by later
+        passes; its earlier timing (if any) stays.  An entry is
+        streaming iff its name starts with ``s_``: streams are settled
+        before and after each such entry so no stop tax lands on a
+        neighbor's clock."""
+        timings = {} if timings is None else timings
+        errors = {} if errors is None else errors
+        for _ in range(passes):
+            for name, fn in fns.items():
+                if name in errors:
+                    continue
+                stream = name.startswith("s_")
+                if stream:
+                    self.streamed = True
+                    settle_streams(self.spark)
+                first = name not in timings
+                known = set(derived_build_sec(sf_dir))
+                t0 = time.perf_counter()
+                try:
+                    out = action(fn(self.spark, sf_dir))
+                except Exception as exc:  # noqa: BLE001 — report, don't die
+                    errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+                else:
+                    dt = round(time.perf_counter() - t0, 3)
+                    if dt < timings.get(name, float("inf")):
+                        timings[name] = dt
+                        self.outputs[name] = out
+                built = sorted(set(derived_build_sec(sf_dir)) - known)
+                if first and built:
+                    self.builders.setdefault(sf_dir, {})[name] = (fn, built)
+                if stream:
+                    settle_streams(self.spark)
+        return timings, errors
+
+    def resample(
+        self, sf_dir: str, rebuilds: int = 1, action=force
+    ) -> tuple[dict[str, str], list[str]]:
+        """Rebuild every derived artifact the timed passes built at
+        sf_dir `rebuilds` more times, memo cleared before each round, by
+        replaying the queries observed building them (ADVICE r4 #2: the
+        memo hides build cost from the timed passes).
+        session_checkpoint keeps the min per artifact across builds, so
+        derived_build_sec becomes min-of-(1 + rebuilds) instead of a
+        one-shot noise sample.  Returns ({query: error} for replays that
+        raised, the artifacts those queries first built — possibly left
+        one-shot)."""
+        builders = dict(self.builders.get(sf_dir, {}))
+        errors: dict[str, str] = {}
+        for _ in range(rebuilds):
+            tables.reset_derived_cache()  # cache + sidecars together
+            self.time_queries(
+                {n: fn for n, (fn, _) in builders.items()}, sf_dir, 1,
+                action, errors=errors,
+            )
+        return errors, sorted(a for n in errors for a in builders[n][1])
+
+    def emit(self, line: str) -> None:
+        """Teardown, then print `line` as the process' final stdout
+        bytes.
+
+        BENCH_r12 was `parsed: null` because a post-stop StateStore
+        maintenance WARN printed AFTER the JSON line, pushing it out of
+        the driver's 2000-byte tail window.  So: stop any streaming
+        queries still holding state stores, stop the session (joins the
+        maintenance pool), and — only if an s_* entry ran, since
+        batch-only runs have no maintenance threads to wait for — give
+        lagging daemon threads a beat to flush.  The print lives in
+        `finally` so a teardown exception (wedged stream, dropped py4j
+        connection) degrades to a possibly-noisy tail rather than
+        losing the line."""
+        try:
+            settle_streams(self.spark)
+            self.spark.stop()
+            if self.streamed:
+                time.sleep(2)
+        finally:
+            sys.stderr.flush()
+            print(line, flush=True)
+
+
+def derived_build_sec(sf_dir: str) -> dict[str, float]:
+    """Derived-artifact build seconds at sf_dir, keyed by artifact name
+    ("artifact:<sf_dir>" keys shortened for round-over-round
+    comparability)."""
+    return {
+        k.split(":", 1)[0]: v
+        for k, v in tables.DERIVED_BUILD_SEC.items()
+        if k.endswith(f":{sf_dir}")
+    }
+
+
+def should_rerun_window(
+    host_window: float,
+    attempt: int,
+    retries: int,
+    threshold: float = DIRTY_FACTOR,
+) -> bool:
+    """Pure dirty-window policy (VERDICT r21 #7): a canary factor above
+    `threshold` means co-tenant load polluted the timing window — time
+    again (while `retries` attempts remain) instead of gating near-blind
+    behind a clamped factor.  The bench takes extra passes; the sweep
+    re-runs its whole window."""
+    return host_window > threshold and attempt < retries
+
 
 def _usable_queries(parsed: dict, key: str = "queries") -> dict[str, float]:
-    """The `key` timing map of a bench doc (the per-query map by
-    default, or `derived_build_sec`) iff it holds real timings.
+    """The one sanitizer for every timing map: the `key` map of a bench
+    or sf1 doc (the per-query map by default, or `derived_build_sec`)
+    iff it holds real timings.
 
     r21's tail-guard replaced `queries` and `derived_build_sec` with
-    slim pointers (`{"_see": ..., "n": 27}`) whose truthiness made
-    _prev_bench adopt them as the baseline — every prev lookup then
-    missed, so host_factor fell back to 1.0 and the regression gates
-    ran blind (observed on the first r22 bench: regressions [] against
-    a baseline of zero usable entries).  A map carrying the slim
-    marker is no baseline; non-numeric entries are dropped either
-    way."""
+    slim pointers (`{"_see": ..., "n": 27}`) whose truthiness made the
+    reader adopt them as the baseline — every prev lookup then missed,
+    so host_factor fell back to 1.0 and the regression gates ran blind.
+    A map carrying the slim marker is no baseline.  sf1 entries
+    (`{"sec": ..., "rows": ...}`) read as their seconds; `{"error":
+    ...}` entries and other non-numeric values are dropped."""
     m = parsed.get(key) or {}
     if not isinstance(m, dict) or "_see" in m:
         return {}
-    return {k: v for k, v in m.items() if isinstance(v, (int, float))}
+
+    def sec(v):
+        return v.get("sec") if isinstance(v, dict) and "error" not in v else v
+
+    return {
+        k: s for k, v in m.items() if isinstance(s := sec(v), (int, float))
+    }
 
 
-def _prev_bench() -> tuple[dict[str, float], dict[str, float]]:
-    """(per-query, derived-build) timings from the latest BENCH_r{N}.json
-    that actually produced numbers — a crashed round (parsed: null, like
-    r05) or a slim-line round (r21) is skipped, so the gate compares
-    against the last REAL bench."""
+def read_json(path: str) -> dict:
+    """The JSON object at `path`, or {} if it is missing or unreadable."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
+
+
+def rounds(pattern: str) -> list[tuple[int, str]]:
+    """(round, path) of every repo-root file whose name fully matches
+    `pattern` (its one group is the round number), newest first."""
     here = os.path.dirname(os.path.abspath(__file__))
-    best_n, best_q, best_d = -1, {}, {}
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
+    found = [
+        (int(m.group(1)), os.path.join(here, f))
+        for f in os.listdir(here)
+        if (m := re.fullmatch(pattern, f))
+    ]
+    return sorted(found, reverse=True)
+
+
+def _prev_bench(suffix: str = "") -> tuple[dict[str, float], dict[str, float]]:
+    """(per-query, derived-build) timings from the newest
+    BENCH_r{N}{suffix}.json that actually produced numbers — "" for the
+    bench, "_sf1" for the sf1 smoke.  A crashed round (parsed: null,
+    like r05) or a slim-line round (r21) is skipped, so the gate
+    compares against the last REAL round."""
+    for _, path in rounds(rf"BENCH_r(\d+){suffix}\.json"):
+        doc = read_json(path)
         parsed = doc.get("parsed") or doc
-        q = _usable_queries(parsed)
-        if int(m.group(1)) > best_n and q:
-            best_n = int(m.group(1))
-            best_q = q
-            best_d = _usable_queries(parsed, "derived_build_sec")
-    return best_q, best_d
+        if q := _usable_queries(parsed):
+            return q, _usable_queries(parsed, "derived_build_sec")
+    return {}, {}
 
 
 # JVM-side canary slots for host-drift normalization (VERDICT r18 #4,
@@ -208,11 +357,9 @@ def host_factor(
     silently forgive the whole board).  MEDIAN of three keeps one
     genuinely-regressed canary from inflating the factor — the other
     two outvote it and the regressed one then flags itself.  Shared
-    policy: sf1_smoke delegates here (its r18 implementation was the
-    prototype) and tools/sweep.py normalizes against its min-of-
-    history baseline with the same function."""
-    import statistics
-
+    policy: sf1_smoke passes its own canary set, and tools/sweep.py
+    normalizes against its min-of-history baseline with the same
+    function."""
     ratios = [
         timings[c] / prev[c]
         for c in canaries
@@ -249,15 +396,38 @@ def regressions(
                 "ratio": round(sec / p, 2),
             }
             if host != 1.0:
-                entry.update(
-                    {
-                        "norm_sec": round(sec / host, 3),
-                        "norm_ratio": round(sec / host / p, 2),
-                        "host": round(host, 3),
-                    }
-                )
+                entry["norm_sec"] = round(sec / host, 3)
+                entry["norm_ratio"] = round(sec / host / p, 2)
+                entry["host"] = round(host, 3)
             out.append(entry)
     return out
+
+
+def gate(
+    timings: dict[str, float],
+    derived: dict[str, float],
+    prev_q: dict[str, float],
+    prev_d: dict[str, float],
+    canaries: tuple[str, ...] = CANARIES,
+) -> dict:
+    """The prev-round gate of the bench and the sf1 smoke (VERDICT r18
+    #4): per-query and derived-build seconds flagged at 1.5x their
+    previous round after dividing by the same run's canary factor, so
+    a loaded window on unchanged code prints regressions: [] while a
+    real single-query regression still flags.  Raw seconds stay in the
+    caller's maps and the unnormalized flags in raw_regressions."""
+    hf = host_factor(timings, prev_q, canaries)
+
+    def flags(host: float) -> list[dict]:
+        return regressions(timings, prev_q, host=host) + regressions(
+            derived, prev_d, host=host
+        )
+
+    return {
+        "host_factor": round(hf, 3),
+        "regressions": flags(hf),
+        "raw_regressions": flags(1.0),
+    }
 
 
 def compact_line(doc: dict, budget: int = 1900) -> str:
@@ -271,7 +441,9 @@ def compact_line(doc: dict, budget: int = 1900) -> str:
     the flag arrays are capped FIRST (top-3 by raw ratio, plus an
     honest `<name>_n` total so a capped line is self-describing), then
     derived_build_sec collapses to a pointer, and `queries` is NEVER
-    dropped.  Full detail always lives in BENCH_FULL_LAST.json.
+    dropped.  Full detail always lives in BENCH_FULL_LAST.json.  A line
+    still over budget after all of that is printed anyway, with a loud
+    stderr warning, since its front will be clipped.
     """
     line = json.dumps(doc)
     if len(line) <= budget:
@@ -298,210 +470,74 @@ def compact_line(doc: dict, budget: int = 1900) -> str:
             return line
     # cap 0 + derived collapsed is the smallest doc that still honors
     # the contract; at that point the line is queries + scalars only.
+    print(
+        f"WARNING: compact_line: printed line is {len(line)} bytes, over "
+        f"the {budget}-byte budget even with flags capped and "
+        "derived_build_sec collapsed; its front will be clipped",
+        file=sys.stderr,
+    )
     return line
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from kafka_spark_streaming_spark.operators import QUERIES
     from kafka_spark_streaming_spark.session import get_spark
 
-    spark = get_spark(app_name="kss-bench")
-
-    # Ground-truth "did any streaming query ever run" flag (ADVICE
-    # r13): the state-store maintenance WARN the quiesce sleep guards
-    # against only exists if a streaming query started in this
-    # process.  Streams stop inside their query functions, so checking
-    # spark.streams.active at teardown misses them — a listener sees
-    # every start.  Batch-only invocations then skip the fixed 2 s
-    # quiesce tax entirely.
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    ran_streaming = {"flag": False}
-
-    class _StreamFlag(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            ran_streaming["flag"] = True
-
-        def onQueryProgress(self, event):
-            pass
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    spark.streams.addListener(_StreamFlag())
-    names = [n for n in HEADLINE if n in QUERIES]
-    fns = {n: OVERRIDES.get(n, QUERIES[n]) for n in names}
-    # Warm every plan shape once on the smallest SF so the timed
-    # section measures the engine, not first-call codegen/JIT.
-    # Reversed: the streaming warmups (last in HEADLINE) run first, so
-    # the post-stream-stop tax lands on warmup batch jobs, not on the
-    # first timed query.
-    for n in reversed(names):
-        _force(fns[n](spark, "/root/testdata/sf0.001"))
-
-    # Three timed passes, min per query: this box is a shared-host VM
-    # and whole-run throughput swings 1.5-2× between invocations with
-    # no local cause (load < nproc, no co-tenant process; measured 2×
-    # across back-to-back identical runs in r7).  min-of-N reports the
-    # machine's actual capability per plan rather than whichever pass
-    # caught the noisy neighbor.
-    timings: dict[str, float] = {}
-
-    def timed_pass() -> None:
-        for n in names:
-            q0 = time.perf_counter()
-            _force(fns[n](spark, sf_dir))
-            dt = round(time.perf_counter() - q0, 3)
-            if n not in timings or dt < timings[n]:
-                timings[n] = dt
-            if any(
-                "streaming"
-                in f.__module__.removeprefix("kafka_spark_streaming_spark")
-                for f in (fns[n], QUERIES[n])
-            ):
-                # belt-and-braces for the quiesce decision (ADVICE
-                # r14): the listener flag rides the async listener
-                # bus, so in principle teardown can outrun the
-                # onQueryStarted delivery of a just-run stream; every
-                # stream-starting query lives in a streaming module
-                # (operators.streaming_queries / streaming.*), and the
-                # EXECUTED fn (an OVERRIDES entry may differ from the
-                # registered one — code-review r15) is checked too, so
-                # this synchronous mark closes the window.  The package
-                # prefix is stripped first (ADVICE r15): the package
-                # name itself contains 'streaming', so the raw
-                # substring test was vacuously true for EVERY query and
-                # silently defeated the batch-only quiesce skip.
-                ran_streaming["flag"] = True
-
+    timer = Timer(get_spark(app_name="kss-bench"))
+    fns = {n: OVERRIDES.get(n, QUERIES[n]) for n in HEADLINE if n in QUERIES}
+    # Warm every plan shape once on the smallest SF (the fixture
+    # default) so the timed section measures the engine, not first-call
+    # codegen/JIT.  Reversed: the streaming warmups (last in HEADLINE)
+    # run first, so the post-stream-stop tax lands on warmup batch
+    # jobs, not on the first timed query.
+    timer.time_queries(dict(reversed(fns.items())), tables.DEFAULT_SF_DIR, 1)
+    # Three timed passes, min per query: whole-run throughput on this
+    # shared-host VM swings 1.5-2x between invocations with no local
+    # cause (measured 2x across back-to-back identical runs in r7).
     prev_q, prev_d = _prev_bench()
-    for _pass in range(3):
-        timed_pass()
-    # Dirty-window rule (VERDICT r21 #7): if the canary factor after
-    # the standard 3 passes says the whole window was polluted
-    # (co-tenant CPU steal), take up to 2 EXTRA passes rather than
-    # publish near-blind numbers.  min-of-N is monotone — extra passes
-    # can only move a number toward the machine's true capability,
-    # never away from it — so round-over-round comparability is
-    # preserved; a clean window still runs exactly the 3 passes every
-    # prior round ran.  extra_passes in the doc records when it fired.
-    extra_passes = 0
-    while host_factor(timings, prev_q) > 2.0 and extra_passes < 2:
-        extra_passes += 1
+    timings, errors = timer.time_queries(fns, sf_dir, 3)
+    # Dirty-window rule: if the canary factor after the standard 3
+    # passes says the window was polluted, take up to 2 EXTRA passes
+    # rather than publish near-blind numbers.  min-of-N is monotone, so
+    # extra passes only move a number toward the machine's capability;
+    # a clean window runs exactly the 3 passes every prior round ran.
+    extra = 0
+    while should_rerun_window(hf := host_factor(timings, prev_q), extra, 2):
+        extra += 1
         print(
-            f"[dirty-window] canary factor "
-            f"{host_factor(timings, prev_q):.2f} > 2.0 — extra pass "
-            f"{extra_passes}/2",
+            f"[dirty-window] canary factor {hf:.2f} > {DIRTY_FACTOR} — "
+            f"extra pass {extra}/2",
             file=sys.stderr,
         )
-        timed_pass()
-    total = round(sum(timings.values()), 3)
-
-    # One-time derived-artifact build cost at the bench SF (ADVICE r4
-    # #2): the session memo means the timed passes above only measure
-    # the probe; this surfaces the build so it can't regress invisibly.
-    # Keys are "artifact:<sf_dir>" — keep the sf_dir ones, shorten to
-    # the artifact name for round-over-round comparability.
-    from kafka_spark_streaming_spark import tables as _tables
-
-    # A one-shot build sample is pure noise-roulette on this host; give
-    # every derived artifact a SECOND build (memo cleared) and let
-    # session_checkpoint keep the min — the build-time analogue of the
-    # per-query min-of-N above.
-    _tables.reset_derived_cache()  # cache + sidecars together
-    for n in (
-        "d_minhash_lsh_pairs",
-        "g_pagerank_trade",
-        "p_decontaminate_ngram",
-        # r12 HEADLINE artifacts: the IVF index (+ centroid sidecar)
-        # and the simhash signature table
-        "sim_ann_ivf",
-        "d_simhash_pairs",
-        # r14: the rep-collapsed containment candidate index (in
-        # HEADLINE via d_containment_pairs) — without a second build
-        # its derived_build_sec is a one-shot noise sample
-        "d_containment_pairs",
-    ):
-        if n in fns:
-            _force(fns[n](spark, sf_dir))
-
-    derived = {
-        k.split(":", 1)[0]: v
-        for k, v in _tables.DERIVED_BUILD_SEC.items()
-        if sf_dir in k
-    }
+        timer.time_queries(fns, sf_dir, 1, timings=timings, errors=errors)
+    errors.update(timer.resample(sf_dir)[0])
+    if errors:
+        raise RuntimeError(f"bench queries failed: {errors}")
+    derived = derived_build_sec(sf_dir)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
-    # Gate on canary-normalized seconds (VERDICT r18 #4): the host
-    # factor is measured from the same run's pure-JVM canaries, so a
-    # loaded window on unchanged code prints regressions: [] while a
-    # real single-query regression still flags (ratios normalize by
-    # the SAME factor, so anything above gate x host stands out).
-    # Raw seconds stay in `queries`/`derived_build_sec`, and the
-    # unnormalized flags stay visible as raw_regressions.
-    hf = host_factor(timings, prev_q)
+    sf_val = float(sf) if sf.replace(".", "", 1).isdigit() else sf
     doc = {
         "metric": "headline_queries_total_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
         "derived_build_sec": derived,
-        "host_factor": round(hf, 3),
-        "regressions": regressions(timings, prev_q, host=hf)
-        + regressions(derived, prev_d, host=hf),
-        "raw_regressions": regressions(timings, prev_q)
-        + regressions(derived, prev_d),
+        **gate(timings, derived, prev_q, prev_d),
     }
-    if extra_passes:
-        doc["extra_passes"] = extra_passes
+    if extra:
+        doc["extra_passes"] = extra
     # The driver keeps only the LAST 2000 bytes of stdout and parses the
     # JSON line out of that tail — r9/r10 both shipped `parsed: null`
     # because the inline NOTES prose pushed the line past the window and
-    # clipped its FRONT (VERDICT r10 #2). The printed line is now the
-    # compact machine-readable doc (measured ~1.3 KB with 28 queries);
-    # the full doc including NOTES goes to its own file, which the
-    # round commits alongside BENCH_r{N}.json.
+    # clipped its FRONT (VERDICT r10 #2). The printed line is the
+    # compact machine-readable doc; the full doc including NOTES goes
+    # to its own file, which the round commits alongside BENCH_r{N}.json.
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_FULL_LAST.json"), "w") as f:
         json.dump({**doc, "notes": NOTES}, f, indent=1)
-    line = compact_line(doc)
-    # BENCH_r12 was `parsed: null` because a post-stop StateStore
-    # maintenance WARN printed AFTER the JSON line, pushing it out of
-    # the driver's 2000-byte tail window. Quiesce the engine BEFORE
-    # printing: stop any streaming queries still holding state stores,
-    # stop the session (joins the maintenance pool), then give lagging
-    # daemon threads a beat to flush — the JSON line is the process'
-    # final stdout bytes. The print lives in `finally` so a teardown
-    # exception (wedged stream, dropped py4j connection) degrades to a
-    # possibly-noisy tail rather than losing the line entirely — the
-    # teardown exists to protect the line, so it must never eat it.
-    try:
-        # the listener flag (set at any onQueryStarted) is the ground
-        # truth; streams.active at teardown misses queries that
-        # already stopped themselves but whose maintenance threads
-        # still lag.  Batch-only runs skip the whole quiesce.
-        quiesce = ran_streaming["flag"] or bool(spark.streams.active)
-        for q in spark.streams.active:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        spark.stop()
-        if quiesce:
-            time.sleep(2)
-    finally:
-        sys.stdout.flush()
-        sys.stderr.flush()
-        print(line, flush=True)
+    timer.emit(compact_line(doc))
 
 
 if __name__ == "__main__":

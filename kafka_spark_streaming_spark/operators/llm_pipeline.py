@@ -120,6 +120,8 @@ def _ngram_sql(n: int) -> str:
     """,
 )
 def p_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from kafka_spark_streaming_spark.operators.text import vocab_broadcast
+
     # one shingle pass, materialized: ev / card / hits all consume it —
     # without the checkpoint the corpus-wide 8-gram construction runs
     # once per consumer.  Memoized per (session, corpus): the 8-gram
@@ -136,7 +138,9 @@ def p_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = sh.filter(F.col("doc_id") % 50 != 0)
     card = train.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (
-        # eval shingles are benchmark-sized -> broadcast; the corpus
+        # eval shingles are benchmark-sized -> broadcast, bounded by
+        # the documents source (ev is ~1/50 of the corpus' shingles,
+        # so the vocabulary guard's source bound covers it); the corpus
         # side is a streaming semi-probe, never shuffled on shingle.
         # LEFT SEMI since r22: the old inner join needed a .distinct()
         # on ev (duplicate eval shingles would multiply matches), and
@@ -148,7 +152,9 @@ def p_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         # |{doc shingles} ∩ {eval set}| exactly as before — verified
         # row-identical at sf0.1; interleaved 5-round A/B median
         # 0.93 -> 0.53 s, min 0.83 -> 0.37 s.
-        train.join(F.broadcast(ev), "s", "semi")
+        train.join(
+            vocab_broadcast(ev, sf_dir, source="documents"), "s", "semi"
+        )
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )

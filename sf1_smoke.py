@@ -17,8 +17,12 @@ deliberately floods the near-dup path with K-sized duplicate clusters
 (every replica pair is a true Jaccard-1.0 pair) — the adversarial
 load for candidate generation and verification.
 
+Timing, the derived-build resample, the baseline reader, the gate and
+the teardown come from bench.py, the one measurement core; this file
+owns the replicated fixture, the query set and the sf1 JSON schema.
+
 Usage:  python sf1_smoke.py          # one JSON line; commit as BENCH_r{N}_sf1.json
-Env:    KSS_SF1_FACTOR (default 10), SPARK_GRAFT_SF_DIR (default sf0.1)
+Env:    SPARK_GRAFT_SF_DIR (source fixture, default sf0.1)
 """
 
 from __future__ import annotations
@@ -35,7 +39,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-K = int(os.environ.get("KSS_SF1_FACTOR", "10"))
+import bench  # noqa: E402
+
+K = 10
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(
     tempfile.gettempdir(), f"kss_sf1_{K}x_{os.path.basename(os.path.normpath(SRC))}"
@@ -173,145 +179,58 @@ def build(spark) -> None:
 CANARIES = ("q1_pricing_summary", "q18_large_volume_customers")
 
 
-def host_factor(
-    timings: dict[str, float], prev: dict[str, float]
-) -> float:
-    """Median canary slowdown vs the committed sf1 baseline, clamped
-    to [1.0, 3.0].  The policy (median + clamp rationale) lives in
-    bench.host_factor since r20 — this run's prototype became the
-    shared implementation when the sf0.1 bench and the sweep adopted
-    the same normalization (VERDICT r18 #4); only the canary set
-    differs (SMOKE carries q1/q18 but not q6)."""
-    import bench
-
-    return bench.host_factor(timings, prev, canaries=CANARIES)
-
-
-def _prev_sf1() -> dict[str, float]:
-    """Per-query sf1 timings from the latest committed BENCH_r*_sf1.json
-    (same latest-real-round selection as bench._prev_bench)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best_n, best_q = -1, {}
-    for path in glob.glob(os.path.join(here, "BENCH_r*_sf1.json")):
-        m = re.search(r"BENCH_r(\d+)_sf1\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        q = {
-            k: v.get("sec")
-            for k, v in (doc.get("queries") or {}).items()
-            if isinstance(v, dict) and "error" not in v and v.get("sec")
-        }
-        if int(m.group(1)) > best_n and q:
-            best_n, best_q = int(m.group(1)), q
-    return best_q
-
-
 def main() -> None:
-    from bench import regressions
-    from kafka_spark_streaming_spark import tables as _tables
     from kafka_spark_streaming_spark.operators import QUERIES
-    from kafka_spark_streaming_spark.operators.streaming_queries import (
-        s_stateful_user_stats,
-    )
     from kafka_spark_streaming_spark.session import get_spark
 
-    spark = get_spark(app_name="kss-sf1-smoke")
-    build(spark)
-
-    fns = dict(QUERIES)
-    # same 2-batch override bench.py uses: the timing should reflect the
-    # operator + state growth, not the forced micro-batch count
-    fns["s_stateful_user_stats"] = lambda s, d: s_stateful_user_stats(
-        s, d, n_batches=2
-    )
-
-    results: dict[str, dict] = {}
+    timer = bench.Timer(get_spark(app_name="kss-sf1-smoke"))
+    build(timer.spark)
+    # bench's overrides (the 2-batch stateful drain): the timing should
+    # reflect the operator + state growth, not the forced batch count
+    fns = {n: bench.OVERRIDES.get(n, QUERIES[n]) for n in SMOKE}
     # min-of-3 (was min-of-2 through r9's first sidecar): back-to-back
     # full-smoke runs on this host showed single queries swinging
     # 1.5-2.2x between 2-pass mins (d_minhash 3.2 vs 7.2, containment
     # 1.9 vs 3.5) — the same co-tenant noise bench.py absorbs with
-    # min-of-3, so match its protocol.
-    for _pass in range(3):
-        for name in SMOKE:
-            t0 = time.perf_counter()
-            try:
-                df = fns[name](spark, OUT)
-                n = df.count()
-                sec = round(time.perf_counter() - t0, 3)
-                prev = results.get(name)
-                if prev is None or "error" in prev or sec < prev["sec"]:
-                    results[name] = {"sec": sec, "rows": n}
-            except Exception as exc:  # noqa: BLE001 — the smoke must report, not die
-                if name not in results:
-                    results[name] = {
-                        "sec": round(time.perf_counter() - t0, 3),
-                        "error": f"{type(exc).__name__}: {str(exc)[:300]}",
-                    }
-    # A one-shot derived-build sample is noise-roulette on this host
-    # (bench.py's rationale, ported here in r9 after containment's
-    # single-shot sample read 8.1 s vs a 3.7 s min-of-2): clear the
-    # session memo and build every dedup index once more —
-    # session_checkpoint keeps the MIN per artifact across rebuilds.
-    for _rebuild in range(2):
-        _tables.reset_derived_cache()  # cache + sidecars together
-        for name in ("d_minhash_lsh_pairs", "d_containment_pairs",
-                     "d_ngram_jaccard_pairs",
-                     # r12: the three memoized ANN index builds
-                     "sim_ann_ivf", "sim_ann_lsh", "sim_pq_adc_topk",
-                     # r13: the quantized-embedding index build and the
-                     # simhash signature + doc-rep builds
-                     "d_embedding_near_dup_lsh", "d_simhash_pairs"):
-            if name in SMOKE:
-                try:
-                    fns[name](spark, OUT).count()
-                except Exception:  # noqa: BLE001 — resamples are best-effort
-                    pass
-    derived = {
-        k.split(":", 1)[0]: v
-        for k, v in _tables.DERIVED_BUILD_SEC.items()
-        if OUT in k
+    # min-of-3, so match its protocol.  count() instead of the noop
+    # write: the record carries each query's row count.
+    timings, errors = timer.time_queries(fns, OUT, 3, lambda df: df.count())
+    # two cleared-cache rebuilds per artifact (r9: containment's
+    # single-shot sample read 8.1 s vs a 3.7 s min-of-2); best-effort:
+    # the sf1 record has no field for a replay failure
+    timer.resample(OUT, rebuilds=2, action=lambda df: df.count())
+    derived = bench.derived_build_sec(OUT)
+    results = {
+        n: {"error": errors[n]}
+        if n in errors
+        else {"sec": timings[n], "rows": timer.outputs[n]}
+        for n in SMOKE
     }
-    timings = {
-        k: v["sec"] for k, v in results.items() if "error" not in v
-    }
-    prev = _prev_sf1()
-    hf = host_factor(timings, prev)
-    print(
-        json.dumps(
-            {
-                "metric": "sf1_smoke",
-                "factor": K,
-                "source_sf": SRC,
-                "derived_dir": OUT,
-                "queries": results,
-                "derived_build_sec": derived,
-                "host_factor": round(hf, 3),
-                "regressions": regressions(timings, prev, host=hf),
-                "raw_regressions": regressions(timings, prev),
-                "note": (
-                    "scale stress on a K-replicated sf0.1 (exact-duplicate "
-                    "documents = adversarial near-dup load); per-query sec "
-                    "= min of 3 passes, gated at 1.5x vs the latest "
-                    "committed BENCH_r*_sf1.json AFTER dividing by "
-                    "host_factor (median JVM-canary slowdown, clamped to "
-                    "[1,3] — r18, VERDICT r17 #3: raw-seconds gating on "
-                    "this shared host flagged pure CPU-steal drift; "
-                    "raw_regressions keeps the unnormalized view for "
-                    "transparency; since r20 the sf0.1 bench and the "
-                    "registry sweep apply the same normalization)"
-                ),
-            }
-        )
+    timings = {n: r["sec"] for n, r in results.items() if "sec" in r}
+    prev_q, prev_d = bench._prev_bench("_sf1")
+    line = json.dumps(
+        {
+            "metric": "sf1_smoke",
+            "factor": K,
+            "source_sf": SRC,
+            "derived_dir": OUT,
+            "queries": results,
+            "derived_build_sec": derived,
+            **bench.gate(
+                timings, derived, prev_q, prev_d, canaries=CANARIES
+            ),
+            "note": (
+                "scale stress on a K-replicated sf0.1 (exact-duplicate "
+                "documents = adversarial near-dup load); per-query sec = "
+                "min of 3 passes, derived builds min of 3; both gated at "
+                "1.5x vs the latest committed BENCH_r*_sf1.json AFTER "
+                "dividing by host_factor (median JVM-canary slowdown, "
+                "clamped to [1,3] — r18, VERDICT r17 #3); "
+                "raw_regressions keeps the unnormalized view"
+            ),
+        }
     )
-    spark.stop()
+    timer.emit(line)
 
 
 if __name__ == "__main__":

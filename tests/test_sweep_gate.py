@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 )
@@ -143,7 +145,7 @@ def test_sf1_host_factor_forgives_uniform_drift_only():
     must; and a per-query regression RIDING host drift must still
     poke above the normalized gate."""
     from bench import regressions
-    from sf1_smoke import host_factor
+    from bench import host_factor
 
     prev = {
         "q1_pricing_summary": 1.0,
@@ -181,7 +183,7 @@ def test_sf1_host_factor_forgives_uniform_drift_only():
 def test_sf1_host_factor_clamps():
     """A faster host must not loosen the gate (floor 1.0) and a canary
     collapse beyond the drift band must not forgive the board (cap 3)."""
-    from sf1_smoke import host_factor
+    from bench import host_factor
 
     prev = {"q1_pricing_summary": 1.0, "q18_large_volume_customers": 1.0}
     assert host_factor(
@@ -425,7 +427,7 @@ def test_dirty_window_rerun_policy():
     """VERDICT r21 #7: a pre-confirm canary factor above the dirty
     threshold re-runs the timing loop while attempts remain; a clean
     window never re-runs; the retry budget bounds the loop."""
-    from tools.sweep import should_rerun_window
+    from bench import should_rerun_window
 
     assert should_rerun_window(2.5, attempt=0, retries=1, threshold=2.0)
     assert not should_rerun_window(1.4, attempt=0, retries=1, threshold=2.0)
@@ -510,3 +512,190 @@ def test_table_plan_memo_misses_on_fixture_regeneration(tmp_path):
     import pytest as _pytest
     with _pytest.raises(Exception):
         tbl.table(spark, sf, "documents")
+
+
+def test_compact_line_warns_loudly_when_over_budget(capsys):
+    """A per-query map too large for the budget even after every flag
+    array is capped and derived_build_sec collapsed: the line is still
+    returned whole (queries are never dropped), and stderr says how far
+    over the budget it is."""
+    import json
+
+    from bench import compact_line
+
+    queries = {f"q{i:03d}_a_rather_long_query_name": 1.234 for i in range(80)}
+    doc = {
+        "metric": "headline_queries_total_sec",
+        "queries": queries,
+        "derived_build_sec": {"artifact": 2.0},
+        "regressions": [],
+        "raw_regressions": [],
+    }
+    line = compact_line(doc)
+    assert len(line) > 1900
+    assert json.loads(line)["queries"] == queries
+    err = capsys.readouterr().err
+    assert "WARNING" in err
+    assert f"{len(line)} bytes" in err and "1900-byte budget" in err
+    # a line that fits stays silent
+    compact_line({"queries": {"q1": 1.0}})
+    assert capsys.readouterr().err == ""
+
+
+_REAL = {"queries": {"q1_pricing_summary": 1.0}, "derived_build_sec": {"a": 2.0}}
+
+
+@pytest.mark.parametrize(
+    "files, suffix, expected",
+    [
+        pytest.param(
+            {
+                "BENCH_r20.json": {"parsed": _REAL},
+                "BENCH_r21.json": {
+                    "parsed": {
+                        "queries": {"q1_pricing_summary": 1.5, "junk": "x"},
+                        "derived_build_sec": {"a": 2.5},
+                    }
+                },
+                "BENCH_r22_sf1.json": _REAL,
+                "BENCH_r22_c8.json": {"parsed": _REAL},
+            },
+            "",
+            ({"q1_pricing_summary": 1.5}, {"a": 2.5}),
+            id="bench-round",
+        ),
+        pytest.param(
+            {
+                "BENCH_r20_sf1.json": _REAL,
+                "BENCH_r21_sf1.json": {
+                    "queries": {
+                        "q1_pricing_summary": {"sec": 2.0, "rows": 4},
+                        "q18_large_volume_customers": {"error": "boom"},
+                        "late": {"sec": 3.0, "error": "boom"},
+                    },
+                    "derived_build_sec": {"a": 1.0},
+                },
+                "BENCH_r22.json": {"parsed": _REAL},
+            },
+            "_sf1",
+            ({"q1_pricing_summary": 2.0}, {"a": 1.0}),
+            id="sf1-round",
+        ),
+        pytest.param(
+            {
+                "BENCH_r20.json": {"parsed": _REAL},
+                "BENCH_r21.json": {"n": 21, "rc": 1, "parsed": None},
+            },
+            "",
+            ({"q1_pricing_summary": 1.0}, {"a": 2.0}),
+            id="crashed-round",
+        ),
+        pytest.param(
+            {
+                "BENCH_r20.json": {"parsed": _REAL},
+                "BENCH_r21.json": {
+                    "parsed": {
+                        "queries": {"_see": "BENCH_FULL_LAST.json", "n": 27},
+                        "derived_build_sec": {"a": 9.0},
+                    }
+                },
+            },
+            "",
+            ({"q1_pricing_summary": 1.0}, {"a": 2.0}),
+            id="pointer-queries",
+        ),
+        pytest.param(
+            {
+                "BENCH_r20_sf1.json": _REAL,
+                "BENCH_r21_sf1.json": {
+                    "queries": {"q1_pricing_summary": {"sec": 1.1}},
+                    "derived_build_sec": {"_see": "BENCH_FULL_LAST.json"},
+                },
+            },
+            "_sf1",
+            ({"q1_pricing_summary": 1.1}, {}),
+            id="pointer-derived",
+        ),
+    ],
+)
+def test_baseline_reader_takes_newest_real_round(
+    tmp_path, monkeypatch, files, suffix, expected
+):
+    """One reader serves the bench (BENCH_r*.json, wrapped in
+    `parsed`) and the sf1 smoke (BENCH_r*_sf1.json, bare docs with
+    {"sec", "rows"} entries): the newest round with real per-query
+    numbers wins, and every timing map it returns has passed the one
+    sanitizer — no pointers, errors or non-numeric values."""
+    import json
+
+    import bench
+
+    for name, doc in files.items():
+        (tmp_path / name).write_text(json.dumps(doc))
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._prev_bench(suffix) == expected
+
+
+def test_streaming_rule_matches_the_registry():
+    """The core treats an entry as streaming iff its name starts with
+    s_ (settle before/after, quiesce at teardown).  That holds only if
+    every query registered from streaming_queries has an s_ name and
+    no other module registers one."""
+    from kafka_spark_streaming_spark.operators import QUERIES
+
+    mod = "kafka_spark_streaming_spark.operators.streaming_queries"
+    assert any(fn.__module__ == mod for fn in QUERIES.values())
+    for name, fn in QUERIES.items():
+        assert name.startswith("s_") == (fn.__module__ == mod), name
+
+
+def test_resample_replays_exactly_the_observed_builders(monkeypatch):
+    """The derived-build resample set is observed, not hand-kept: only
+    queries whose first timed pass added a derived_build_sec key for
+    this sf_dir are replayed, once per rebuild; a replay that raises is
+    reported with the artifacts it left one-shot.  A query that raises
+    in a timed pass is recorded and skipped by later passes."""
+    import bench
+    from kafka_spark_streaming_spark import tables
+
+    monkeypatch.setattr(tables, "DERIVED_BUILD_SEC", {})
+    monkeypatch.setattr(tables, "reset_derived_cache", lambda: None)
+    calls: list[str] = []
+
+    def builds(spark, sf_dir):
+        calls.append("builds")
+        tables.DERIVED_BUILD_SEC.setdefault(f"art:{sf_dir}", 1.0)
+
+    def elsewhere(spark, sf_dir):
+        calls.append("elsewhere")
+        tables.DERIVED_BUILD_SEC.setdefault("other:/another/sf", 1.0)
+
+    def breaks_on_replay(spark, sf_dir):
+        calls.append("flaky")
+        if f"idx:{sf_dir}" in tables.DERIVED_BUILD_SEC:
+            raise RuntimeError("replay broke")
+        tables.DERIVED_BUILD_SEC[f"idx:{sf_dir}"] = 2.0
+
+    def boom(spark, sf_dir):
+        calls.append("boom")
+        raise RuntimeError("nope")
+
+    fns = {
+        "builds": builds,
+        "elsewhere": elsewhere,
+        "flaky": breaks_on_replay,
+        "boom": boom,
+    }
+    timer = bench.Timer(spark=None)  # no s_* entry: no session needed
+    timings, errors = timer.time_queries(fns, "/sf", 1, lambda df: 0)
+    assert set(timings) == {"builds", "elsewhere", "flaky"}
+    assert errors == {"boom": "RuntimeError: nope"}
+    timer.time_queries(fns, "/sf", 1, timings=timings, errors=errors)
+    assert calls.count("boom") == 1  # skipped after it raised
+    calls.clear()
+
+    failed, one_shot = timer.resample("/sf", 2, lambda df: 0)
+    assert calls == ["builds", "flaky", "builds"]
+    assert failed == {"flaky": "RuntimeError: replay broke"}
+    assert one_shot == ["idx"]
+    assert bench.derived_build_sec("/sf") == {"art": 1.0, "idx": 2.0}

@@ -34,61 +34,51 @@ Usage:
                                       # query breaches the gate
 Env:
     SPARK_GRAFT_SF_DIR   fixture dir (default /root/testdata/sf0.1)
-    KSS_SWEEP_GATE       ratio vs baseline min (default 2.0)
-    KSS_SWEEP_SLACK      absolute slack seconds (default 0.75)
     KSS_SWEEP_OUT        explicit output path (default SWEEP_r{N}.json,
                          N = newest CORRECTNESS round + 1)
+
+Timing, the derived-build resample, the dirty-window predicate and the
+teardown come from bench.py, the one measurement core; this file owns
+the min-of-history gate and the SWEEP_r*.json schema.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-GATE = float(os.environ.get("KSS_SWEEP_GATE", "2.0"))
+GATE = 2.0
 # Sub-second queries swing 2-3x on pure scheduler jitter; the absolute
 # slack keeps the gate meaningful (a 0.2 s query at 0.5 s is noise; a
 # 5 s query at 11 s is a regression).
-SLACK = float(os.environ.get("KSS_SWEEP_SLACK", "0.75"))
+SLACK = 0.75
 BASELINE_PATH = os.path.join(REPO, "SWEEP_BASELINE.json")
 # Dirty-window re-run rule (VERDICT r21 #7): the r21 seal published
 # from a window whose pre-confirm canary factor hit the 3.0 clamp —
 # the gates were near-blind exactly when scrutiny mattered.  If the
-# pre-confirm canary factor exceeds this threshold, the whole timing
-# loop re-runs (up to KSS_SWEEP_DIRTY_RETRIES extra attempts) and the
+# pre-confirm canary factor exceeds bench.DIRTY_FACTOR, the whole
+# timing loop re-runs (up to DIRTY_RETRIES extra attempts) and the
 # aborted window is RECORDED in the artifact rather than gated on; a
 # final window still dirty after retries publishes with
 # window_dirty: true so a reader can never mistake it for a seal.
-DIRTY_FACTOR = float(os.environ.get("KSS_SWEEP_DIRTY_FACTOR", "2.0"))
-DIRTY_RETRIES = int(os.environ.get("KSS_SWEEP_DIRTY_RETRIES", "1"))
+DIRTY_RETRIES = 1
 
-import bench  # noqa: E402  — repo root is on sys.path above; shares
-# host_factor/CANARIES with the bench gate so the two policies can't drift
+import bench  # noqa: E402  — repo root is on sys.path above; the shared
+# measurement core (pass loop, resample, host_factor/CANARIES, teardown)
 
 
 def _round_number() -> int:
-    best = 0
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
+    done = bench.rounds(r"CORRECTNESS_r(\d+)\.json")
+    return (done[0][0] if done else 0) + 1
 
 
-def load_baseline() -> dict[str, dict]:
-    try:
-        with open(BASELINE_PATH) as f:
-            doc = json.load(f)
-        return doc.get("queries", {})
-    except (OSError, ValueError):
-        return {}
+def _slowest_first(timings: dict[str, float]) -> dict[str, float]:
+    return dict(sorted(timings.items(), key=lambda kv: -kv[1]))
 
 
 def sweep_host_factor(
@@ -103,9 +93,8 @@ def sweep_host_factor(
     against best-EVER seconds, so co-tenant CPU steal alone walks
     slow-window ratios toward the gate; dividing by the canary factor
     makes the gate measure the CODE."""
-    return bench.host_factor(
-        timings, {n: e.get("min_sec") for n, e in baseline.items()}
-    )
+    best = {n: e.get("min_sec") for n, e in baseline.items()}
+    return bench.host_factor(timings, best)
 
 
 def gate_flags(
@@ -128,10 +117,8 @@ def gate_flags(
     noise (ADVICE r11)."""
     out = []
     for name, sec in timings.items():
-        if name in errors:
-            continue
         base = baseline.get(name, {}).get("min_sec")
-        if base is None or base <= 0:
+        if name in errors or base is None or base <= 0:
             continue
         norm = sec / host
         if norm > gate * base and norm > base + slack:
@@ -164,12 +151,8 @@ def merged_baseline(
     subsequent healthy run flag."""
     out = dict(baseline)
     for name, sec in timings.items():
-        if name in errors:
-            continue
         prev = out.get(name)
-        if prev is None:
-            out[name] = {"min_sec": sec, "round": round_tag}
-        elif sec < prev["min_sec"]:
+        if name not in errors and (prev is None or sec < prev["min_sec"]):
             out[name] = {"min_sec": sec, "round": round_tag}
     return dict(sorted(out.items()))
 
@@ -190,25 +173,7 @@ def final_flags(
     the confirm pass, so the factor describes the window that produced
     the gated numbers.  Pure so the policy is unit-testable."""
     host = sweep_host_factor(timings, baseline)
-    return (
-        gate_flags(
-            timings, baseline, gate=gate, slack=slack, errors=errors, host=host
-        ),
-        host,
-    )
-
-
-def should_rerun_window(
-    host_window: float,
-    attempt: int,
-    retries: int = DIRTY_RETRIES,
-    threshold: float = DIRTY_FACTOR,
-) -> bool:
-    """Pure dirty-window policy (VERDICT r21 #7): a pre-confirm canary
-    factor above `threshold` means co-tenant load polluted the whole
-    timing loop — re-run it (while attempts remain) instead of gating
-    near-blind behind a clamped factor."""
-    return host_window > threshold and attempt < retries
+    return gate_flags(timings, baseline, gate, slack, errors, host), host
 
 
 def confirm_pass(
@@ -242,58 +207,23 @@ def main() -> int:
         "KSS_SWEEP_OUT", os.path.join(REPO, f"SWEEP_r{rnd:02d}.json")
     )
 
-    from kafka_spark_streaming_spark import tables as _tables
     from kafka_spark_streaming_spark.operators import QUERIES
     from kafka_spark_streaming_spark.session import get_spark
 
-    spark = get_spark(app_name="kss-sweep")
-
-    def force(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    def settle_streams(timeout_s: float = 60.0) -> None:
-        """Drain the previous streaming query's teardown BEFORE the
-        next s_* timer starts (VERDICT r11 #3: registry-order timing
-        charged the prior stream's stop tax to the next entry —
-        s_stream_stream_join recorded 30.2 s vs 12.5-19.5 s isolated,
-        so SWEEP_BASELINE held floor+tax, not the real drain floor).
-        Stop any still-active query, then run a trivial job as a
-        scheduler barrier so stop/cleanup threads finish off-clock."""
-        deadline = time.perf_counter() + timeout_s
-        while spark.streams.active and time.perf_counter() < deadline:
-            for q in spark.streams.active:
-                try:
-                    q.stop()
-                except Exception:  # noqa: BLE001 — settle must not fail the sweep
-                    pass
-            time.sleep(0.2)
-        spark.range(1).count()
-
-    baseline = load_baseline()
+    timer = bench.Timer(get_spark(app_name="kss-sweep"))
+    baseline = bench.read_json(BASELINE_PATH).get("queries", {})
 
     def time_all() -> tuple[dict[str, float], dict[str, str]]:
+        # query-major: batch entries get 2 consecutive passes (pass 1
+        # may pay the derived build + codegen, min reports the warm
+        # plan), s_* entries one (their cost is the drain floor)
         timings: dict[str, float] = {}
         errors: dict[str, str] = {}
         for i, (name, fn) in enumerate(QUERIES.items(), 1):
-            passes = 1 if name.startswith("s_") else 2
-            try:
-                for _ in range(passes):
-                    if name.startswith("s_"):
-                        settle_streams()
-                    t0 = time.perf_counter()
-                    force(fn(spark, sf_dir))
-                    dt = round(time.perf_counter() - t0, 3)
-                    if name not in timings or dt < timings[name]:
-                        timings[name] = dt
-            except Exception as exc:  # noqa: BLE001 — a sweep must finish
-                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            if name.startswith("s_"):
-                # settle AFTER a streaming entry too (ADVICE r12): a
-                # batch query that follows it in registry order must not
-                # absorb this stream's stop/teardown tax on its pass-1
-                # timing — same contamination class the pre-s_* barrier
-                # fixed.
-                settle_streams()
+            timer.time_queries(
+                {name: fn}, sf_dir, 1 if name.startswith("s_") else 2,
+                timings=timings, errors=errors,
+            )
             done = timings.get(name, "ERR")
             print(f"[{i}/{len(QUERIES)}] {name}: {done}", file=sys.stderr)
         return timings, errors
@@ -303,7 +233,7 @@ def main() -> int:
     for attempt in range(DIRTY_RETRIES + 1):
         timings, errors = time_all()
         host_window = sweep_host_factor(timings, baseline)
-        if not should_rerun_window(host_window, attempt):
+        if not bench.should_rerun_window(host_window, attempt, DIRTY_RETRIES):
             break
         # Dirty window (VERDICT r21 #7): record it, never gate on it.
         aborted_windows.append(
@@ -312,14 +242,12 @@ def main() -> int:
                 "total_warm_sec": round(sum(timings.values()), 3),
                 "n_timed": len(timings),
                 "errors": errors,
-                "queries": dict(
-                    sorted(timings.items(), key=lambda kv: -kv[1])
-                ),
+                "queries": _slowest_first(timings),
             }
         )
         print(
             f"[dirty-window] pre-confirm canary factor {host_window:.2f}"
-            f" > {DIRTY_FACTOR} — re-running the timing loop "
+            f" > {bench.DIRTY_FACTOR} — re-running the timing loop "
             f"(attempt {attempt + 2}/{DIRTY_RETRIES + 1})",
             file=sys.stderr,
         )
@@ -333,12 +261,11 @@ def main() -> int:
     # regression (the 13x d_simhash_pairs class) survives trivially.
 
     def retime(name: str) -> float:
-        settle_streams()
-        t0 = time.perf_counter()
-        force(QUERIES[name](spark, sf_dir))
-        dt = round(time.perf_counter() - t0, 3)
-        print(f"[confirm] {name}: {dt}", file=sys.stderr)
-        return dt
+        t, e = timer.time_queries({name: QUERIES[name]}, sf_dir, 1)
+        if e:
+            raise RuntimeError(e[name])
+        print(f"[confirm] {name}: {t[name]}", file=sys.stderr)
+        return t[name]
 
     # canary-normalized gate (VERDICT r18 #4): suspects are gathered
     # with the PRE-confirm window's factor (that window produced the
@@ -354,20 +281,18 @@ def main() -> int:
     # from those same post-confirm timings — dividing settled seconds
     # by a stale loaded-window factor under-reported real regressions
     # that settle above the gate (they only surfaced in raw_flagged).
-    host_window = sweep_host_factor(timings, baseline)
-    suspects = {
-        f["query"]: f
+    suspects = dict.fromkeys(
+        f["query"]
         for f in gate_flags(timings, baseline, errors=errors)
         + gate_flags(timings, baseline, errors=errors, host=host_window)
-    }
-    confirm_targets = list(suspects.values())
-    if confirm_targets:
-        confirm_targets += [
-            {"query": c}
-            for c in bench.CANARIES
-            if c in timings and c not in suspects and c not in errors
-        ]
-    confirm_errors = confirm_pass(confirm_targets, timings, retime)
+    )
+    if suspects:
+        suspects.update(
+            dict.fromkeys(c for c in bench.CANARIES if c not in errors)
+        )
+    confirm_errors = confirm_pass(
+        [{"query": n} for n in suspects if n in timings], timings, retime
+    )
     wall = round(time.perf_counter() - t_sweep, 1)
 
     flagged, host = final_flags(timings, baseline, errors=errors)
@@ -379,56 +304,17 @@ def main() -> int:
 
     # Second build per derived artifact (r14, the bench/sf1 protocol):
     # during the main loop every artifact builds exactly once, inside
-    # whichever query first touches it, so derived_build_sec was a
+    # whichever query first touches it, so derived_build_sec would be a
     # one-shot sample on a host whose throughput swings 1.5-4x —
     # SWEEP_r14's first run recorded pq_codebook at 4.03 s whose
-    # settled min-of-2 is 1.4 s.  session_checkpoint keeps the min
-    # across rebuilds, so one cleared-cache replay of the
-    # artifact-bearing queries below makes their entries min-of-2;
-    # any artifact built ONLY by a query outside this list keeps its
-    # one-shot sample and is NAMED in derived_one_shot so the record
-    # never silently claims a protocol it didn't run (code-review r14
-    # second pass).
-    before_keys = {
-        k[1].split("@", 1)[0]
-        for k in _tables._DERIVED_CACHE
-        if sf_dir in k[1]
-    }
-    _tables.reset_derived_cache()
-    resample_errors: list[dict] = []
-    for name in (
-        "d_minhash_lsh_pairs",
-        "d_simhash_pairs",
-        "d_embedding_near_dup_lsh",
-        "d_semantic_only_pairs_lsh",
-        "d_ngram_jaccard_pairs",
-        "d_containment_pairs",
-        "sim_ann_ivf",
-        "sim_pq_adc_topk",
-        "g_pagerank_trade",
-        "p_decontaminate_ngram",
-    ):
-        try:
-            force(QUERIES[name](spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 — sampling must not fail
-            # the sweep, but a hard failure here means the query
-            # regressed into breakage AFTER its timed pass — surface
-            # it instead of letting it read as a benign protocol gap
-            # (ADVICE r14).
-            resample_errors.append({"query": name, "err": repr(exc)})
-    resampled = {
-        k[1].split("@", 1)[0]
-        for k in _tables._DERIVED_CACHE
-        if sf_dir in k[1]
-    }
-    one_shot = sorted(
-        k.split(":", 1)[0] for k in (before_keys - resampled)
-    )
-    derived = {
-        k.split(":", 1)[0]: v
-        for k, v in _tables.DERIVED_BUILD_SEC.items()
-        if sf_dir in k
-    }
+    # settled min-of-2 is 1.4 s.  The resample replays exactly the
+    # queries observed building an artifact; one whose replay raised
+    # leaves its artifacts one-shot, and they are NAMED in
+    # derived_one_shot so the record never silently claims a protocol
+    # it didn't run.  A replay failure means the query regressed into
+    # breakage AFTER its timed pass (ADVICE r14): resample_errors.
+    resample_failed, one_shot = timer.resample(sf_dir)
+    derived = bench.derived_build_sec(sf_dir)
     doc = {
         "metric": "full_registry_sweep",
         "round": round_tag,
@@ -445,8 +331,8 @@ def main() -> int:
         # its pre-confirm window exceeded the dirty threshold even
         # after the re-run budget (never silently seal from a clamped
         # window), and keeps every aborted window's raw numbers.
-        "window_dirty": host_window > DIRTY_FACTOR,
-        "dirty_factor": DIRTY_FACTOR,
+        "window_dirty": host_window > bench.DIRTY_FACTOR,
+        "dirty_factor": bench.DIRTY_FACTOR,
         "aborted_windows": aborted_windows,
         "flagged": flagged,
         "raw_flagged": gate_flags(timings, baseline, errors=errors),
@@ -454,35 +340,26 @@ def main() -> int:
         "confirm_errors": confirm_errors,
         "new_in_baseline": new_queries,
         "derived_build_sec": derived,
-        "resample_errors": resample_errors,
+        "resample_errors": [
+            {"query": n, "err": e} for n, e in resample_failed.items()
+        ],
         "derived_one_shot": one_shot,
-        "queries": dict(sorted(timings.items(), key=lambda kv: -kv[1])),
+        "queries": _slowest_first(timings),
         "notes": {
             "protocol": (
-                "batch = min of 2 consecutive noop-forced passes (warm); "
-                "s_* streaming = 1 pass (micro-batch drain floor) with a "
-                "settle barrier so the prior stream's stop tax stays off "
-                "the clock; any would-be flag gets ONE settled confirm "
-                "pass (min kept) before it is reported; gate compares vs "
-                "min-of-history in SWEEP_BASELINE.json — baselines only "
-                "tighten, so shared-host drift (the r10 uniform 1.3x) "
-                "cannot loosen the gate round over round; since r20 the "
-                "window's seconds are divided by the pure-JVM canary "
-                "host_factor (bench.host_factor, clamp [1,3]) before the "
-                "gate — raw seconds stay in `queries` and raw_flagged "
-                "keeps the unnormalized view (VERDICT r18 #4; the "
-                "baseline merge stays RAW so a loaded window's "
-                "normalized seconds can never synthetically tighten the "
-                "floor); since r21 the confirm pass also settles the "
-                "canaries whenever it runs, and the final flags use a "
-                "factor re-derived from the post-confirm timings they "
-                "gate (host_factor; host_factor_window keeps the "
-                "pre-confirm suspect-gathering factor) — VERDICT r20 #2; "
-                "since r22 a pre-confirm canary factor above "
-                "dirty_factor re-runs the whole timing loop (aborted "
-                "windows recorded in aborted_windows) and a still-dirty "
-                "final window publishes window_dirty: true rather than "
-                "passing as a seal — VERDICT r21 #7"
+                "batch = min of 2 consecutive noop-forced passes; s_* = 1 "
+                "pass (drain floor), settled before and after; each "
+                "would-be flag (normalized or raw) gets one settled "
+                "confirm pass with the canaries, min kept; gate = ratio + "
+                "abs slack vs the min-of-history SWEEP_BASELINE.json "
+                "(merged from raw seconds, only tightens) after dividing "
+                "by the canary host_factor of the post-confirm timings "
+                "(host_factor_window: pre-confirm); raw view in `queries` "
+                "and raw_flagged; a pre-confirm factor above dirty_factor "
+                "re-runs the loop once (aborted_windows), a still-dirty "
+                "window publishes window_dirty: true; derived builds = min "
+                "of the first build and one cleared-cache replay of the "
+                "queries observed building them"
             ),
         },
     }
@@ -500,22 +377,17 @@ def main() -> int:
             f,
             indent=1,
         )
-    spark.stop()
-
-    print(
-        json.dumps(
-            {
-                "sweep": out_path,
-                "n_timed": len(timings),
-                "errors": len(errors),
-                "flagged": flagged,
-                "slowest": dict(
-                    sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-                ),
-                "wall_sec": wall,
-            }
-        )
+    line = json.dumps(
+        {
+            "sweep": out_path,
+            "n_timed": len(timings),
+            "errors": len(errors),
+            "flagged": flagged,
+            "slowest": dict(list(doc["queries"].items())[:10]),
+            "wall_sec": wall,
+        }
     )
+    timer.emit(line)
     return 1 if (flagged or errors) else 0
 
 
