@@ -83,9 +83,9 @@ def force(df) -> None:
 
 # Same data, same operator, 2 forced micro-batch boundaries instead of
 # 4: the timing is dominated by the per-batch state-store floor (task +
-# commit + Arrow hop per store per batch), not by data volume, so fewer
-# forced batches makes the number interpretable as operator cost rather
-# than micro-batch count.
+# state load and commit per store per batch), not by data volume, so
+# fewer forced batches makes the number interpretable as operator cost
+# rather than micro-batch count.
 OVERRIDES = {
     "s_stateful_user_stats": functools.partial(
         QUERIES["s_stateful_user_stats"], n_batches=2
@@ -93,7 +93,7 @@ OVERRIDES = {
 }
 NOTES = {
     "s_stateful_user_stats": (
-        "applyInPandasWithState drained over 2 real micro-batches; "
+        "JVM streaming aggregate drained over 2 real micro-batches; "
         "cost is the per-batch state-store floor, amortized at scale "
         "by larger batches (registered correctness query uses 4)"
     ),

@@ -382,9 +382,9 @@ def s_upsert_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snap.select("rowkey", "cf", "qualifier", "value")
 
 
-# --- custom stateful operator: per-user lifetime stats -------------------
-# applyInPandasWithState across 4 real micro-batches; the oracle is the
-# equivalent one-shot batch aggregate (batch≡stream). Exact-integer
+# --- keyed stateful fold: per-user lifetime stats ------------------------
+# a JVM streaming aggregate across 4 real micro-batches; the oracle is
+# the equivalent one-shot batch aggregate (batch≡stream). Exact-integer
 # state folds make the equivalence bit-for-bit.
 @register(
     "s_stateful_user_stats",
@@ -402,20 +402,20 @@ def s_stateful_user_stats(
 ) -> DataFrame:
     stream = multi_batch_events_stream(spark, sf_dir, n_batches=n_batches)
     # State-store count is fixed at stream start from
-    # spark.sql.shuffle.partitions and never AQE-coalesced; per-batch
-    # cost has a fixed floor per store (task + commit + Arrow hop) but
-    # stores also ARE the parallelism of the Python state workers. On a
-    # cluster you size this to executors; locally the measured sweet
-    # spot is 16 (A/B at sf0.1, min-of-4: 4→2.75s, 8→2.03s, 16→1.79s,
-    # 24→2.27s, 32→2.07s — Arrow-worker parallelism beats per-store
-    # commit overhead up to half the cores, then task churn wins).
-    # VERDICT r16 #4 re-decomposition (r17): 16 is still the sweet
-    # spot post-r15/r16 (8→4.71s vs 16→3.60s min-of-3 same session);
-    # the extra lever was AQE — per-batch plans are tiny, and AQE's
-    # stage-by-stage jobs only add scheduling floor (16-part A/B:
-    # on 3.99s / off 3.60s).  Same local-small-batch scoping
-    # rationale as the incremental-dedup drain.
-    with _scoped_sql_confs(spark, _small_batch_drain_confs(spark, 16)):
+    # spark.sql.shuffle.partitions, never AQE-coalesced, and pinned by
+    # the checkpoint for its whole life.  The fold runs on the JVM, so
+    # each store adds a fixed cost per batch (task + state load + delta
+    # commit) and no parallelism the fold needs.  Interleaved A/B on
+    # a 4-vCPU VM (PERF_NOTES "s_stateful_user_stats on the JVM"):
+    # perfbench stateful_drain median events/s 2→18.4k, 4→13.4k,
+    # 8→12.7k, 16→8.4k; registered query at sf0.1 (4 batches of 25k
+    # rows) min-of-4 2→1.21 s, 4→1.40 s, 8→1.78 s, 16→2.64 s.
+    # 100 TB sizing rule: stores = min(executor cores, max(per-batch
+    # rows / 10^4, state bytes / 1 GB)), chosen before the first
+    # start — below ~10^4 rows per store per batch the fixed store
+    # cost outweighs the fold (here: 5k-12k), and the HDFS-backed
+    # provider holds each store's map in executor memory.
+    with _scoped_sql_confs(spark, _small_batch_drain_confs(spark, 2)):
         snapshots = _drain_to_memory(
             user_lifetime_stats(stream), "update"
         )
@@ -437,9 +437,11 @@ def _scoped_shuffle_partitions(spark: SparkSession, n: int):
       state stores): 32 -> 13.3-26.7 s, 16 -> 7.2-7.6 s,
       8 -> 4.5-5.1 s, 4 -> 3.7 s, 2 -> 4.1 s; row count identical
       throughout.  Locally fewer stores win until the per-partition
-      batch volume bites; on a cluster you size stores to executors
-      (the applyInPandasWithState operator's Arrow workers push ITS
-      sweet spot up to 16).
+      batch volume bites (s_stateful_user_stats, a JVM aggregate with
+      one store per partition: 2 stores beat 4/8/16 at 5k-12k rows
+      per store per batch); on a cluster you size stores to executor
+      cores, per-batch volume and state bytes (the rule at
+      s_stateful_user_stats).
     - STATELESS foreachBatch drains: each batch's plans read the
       session conf at execution, so the scope also bounds ordinary
       batch shuffles — small micro-batches lose to 32-way task

@@ -1,34 +1,40 @@
-"""Custom stateful streaming operator (applyInPandasWithState).
+"""Checkpointed per-user state as a Catalyst streaming aggregate.
 
 The reference keeps NO state across micro-batches (its only cross-batch
 artifact is a driver-side counter variable, Streamer.scala:122 — lost
 on restart).  This module is the engine's checkpointed replacement:
-per-key state maintained by Structured Streaming's state store,
-Arrow-batched into Python, surviving restarts and rescaling with the
-number of shuffle partitions.
+per-key count / sum / max folded by Structured Streaming's own
+streaming aggregation, kept in the JVM state store, surviving restarts
+and rescaling with the number of shuffle partitions.
 
 Determinism: money is accumulated as integer hundredths-of-a-cent
 (round(value * 10000)) and timestamps as epoch seconds, so state folds
 are exact integers — batch order cannot change the result and the
 DuckDB batch oracle matches bit-for-bit (batch≡stream equivalence,
-SURVEY.md §5.3).
+SURVEY.md §5.3), nulls included: SUM/MAX over a user's all-null
+values is NULL in both engines.
 
 100 TB posture: state is partitioned by user_id across
 spark.sql.shuffle.partitions state-store instances; each micro-batch
-shuffles only that batch's rows (not the state), and the pandas hook
-receives per-key Arrow batches — no driver-side state, no collect.
+partially aggregates its rows map-side and shuffles one partial row
+per (task, user) — never the state — and the merge with the stored
+fold runs inside the JVM: no Python worker, no Arrow hop, no
+driver-side state, no collect.
+
+Checkpoint compatibility: a checkpoint written by the earlier
+applyInPandasWithState operator cannot be resumed by this aggregate —
+both the operator and the state schema differ.  None is persisted
+today: the registered query and the tests drain into fresh scratch
+checkpoints, and the __main__ CLI does not expose this operator.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StructField,
@@ -44,66 +50,24 @@ STATS_SCHEMA = StructType(
     ]
 )
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("s", LongType()),
-        StructField("t", LongType()),
-    ]
-)
-
-
-def _update_user_stats(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Fold this batch's rows for one user into the running state and
-    emit the post-batch snapshot."""
-    if state.exists:
-        n, s, t = state.get
-    else:
-        n, s, t = 0, 0, 0
-    for pdf in pdfs:
-        n += len(pdf)
-        # nullable columns arrive as float64 with NaN through the Arrow
-        # hop; drop nulls before the integer fold so an all-null batch
-        # can't raise int(NaN) and the sum stays exact int64
-        cents = pdf["cents4"].dropna()
-        s += int(cents.astype("int64").sum())
-        epochs = pdf["epoch"].dropna()
-        if len(epochs):
-            t = max(t, int(epochs.max()))
-    state.update((n, s, t))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "sum_value_4dec": [s],
-            "last_ts_epoch": [t],
-        }
-    )
-
 
 def user_lifetime_stats(events_stream: DataFrame) -> DataFrame:
-    """Streaming per-user lifetime stats with explicit keyed state.
+    """Streaming per-user lifetime stats with keyed state.
 
     Input: a *streaming* DataFrame with (user_id, ts, value).
     Output (update mode): one post-batch snapshot row per user per
     micro-batch the user appears in — n_events / sum / last-seen are
-    monotone folds of the state.
+    monotone folds of the state (columns as STATS_SCHEMA).
     """
     prepared = events_stream.select(
         "user_id",
         F.round(F.col("value") * 10000).cast("long").alias("cents4"),
         F.unix_timestamp("ts").alias("epoch"),
     )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _update_user_stats,
-        STATS_SCHEMA,
-        _STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return prepared.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("cents4").alias("sum_value_4dec"),
+        F.max("epoch").alias("last_ts_epoch"),
     )
 
 

@@ -747,6 +747,72 @@ def test_stateful_state_survives_restart(spark, sf_smoke, tmp_path_factory):
     assert expected.exceptAll(final).count() == 0
 
 
+def test_stateful_user_stats_all_null_folds_match_oracle(spark, tmp_path):
+    """A user whose values (or timestamps) are all null folds to a NULL
+    sum (or last-seen), as the registered DuckDB oracle's SUM/MAX do —
+    not to 0 — across two real micro-batches."""
+    import duckdb
+
+    from kafka_spark_streaming_spark.operators.registry import ORACLES
+    from kafka_spark_streaming_spark.operators.streaming_queries import (
+        _drain_to_memory,
+    )
+    from kafka_spark_streaming_spark.streaming.stateful import (
+        fold_snapshots_to_final,
+        user_lifetime_stats,
+    )
+    from tests.oracle_check import compare
+
+    batches = [
+        # user 1: all-null value; user 3: all-null ts (both span batches)
+        "(1, TIMESTAMP'2024-01-02 03:04:05', NULL), "
+        "(2, TIMESTAMP'2024-01-02 03:04:05', 1.5), "
+        "(3, NULL, 0.25)",
+        "(1, NULL, NULL), (3, NULL, NULL), "
+        "(2, TIMESTAMP'2024-01-05 00:00:01', NULL)",
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    for k, rows in enumerate(batches):
+        staged = str(tmp_path / f"staged{k}")
+        spark.sql(
+            "SELECT CAST(user_id AS BIGINT) AS user_id, "
+            "CAST(ts AS TIMESTAMP) AS ts, CAST(value AS DOUBLE) AS value "
+            f"FROM VALUES {rows} AS t(user_id, ts, value)"
+        ).coalesce(1).write.parquet(staged)
+        (part,) = glob.glob(staged + "/part-*.parquet")
+        dest = str(src / f"batch{k}.parquet")
+        os.rename(part, dest)
+        os.utime(dest, (1_000_000_000 + k, 1_000_000_000 + k))
+
+    files = sorted(glob.glob(str(src / "*.parquet")))
+    stream = (
+        spark.readStream.schema(spark.read.parquet(*files).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    snapshots = _drain_to_memory(user_lifetime_stats(stream), "update")
+    # two batches: users 1-3 snapshot in both
+    assert snapshots.count() == 6
+    final = fold_snapshots_to_final(snapshots)
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM read_parquet({files!r})"
+        )
+        cur = con.execute(ORACLES["s_stateful_user_stats"])
+        ora_cols = [d[0] for d in cur.description]
+        ora_rows = cur.fetchall()
+    finally:
+        con.close()
+    assert sorted(ora_rows)[0][2] is None  # the oracle's SUM over nulls
+    problems = compare(
+        final.columns, [tuple(r) for r in final.collect()], ora_cols, ora_rows
+    )
+    assert not problems, "\n".join(problems)
+
+
 def test_cli_streamer_end_to_end(spark, sf_smoke, tmp_path_factory):
     """python -m kafka_spark_streaming_spark with the reference's flag
     surface, file-source stand-in: summary printed, sink cells written."""
