@@ -30,6 +30,7 @@ from kafka_spark_streaming_spark.streaming.pipeline import (
     StreamerPipeline,
 )
 from kafka_spark_streaming_spark.streaming.stateful import (
+    daily_rollup,
     fold_snapshots_to_final,
     multi_batch_events_stream,
     user_lifetime_stats,
@@ -49,9 +50,8 @@ _seq = itertools.count()
 # bucketed/partitioned layouts) have their own fingerprint-based pruning
 # and must NOT be matched here
 _SCRATCH_PREFIXES = (
-    "kss_ckpt_", "kss_pipe_", "kss_rollup_", "kss_rck_", "kss_topk_",
-    "kss_tck_", "kss_hll_", "kss_hck_", "kss_increddup_", "kss_s5_",
-    "kss_s5ck_", "kss_snap_", "kss_sivf_",
+    "kss_ckpt_", "kss_pipe_", "kss_increddup_", "kss_s5_", "kss_s5ck_",
+    "kss_snap_", "kss_sivf_",
 )
 
 
@@ -116,6 +116,46 @@ def _drain_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     return stream_df.sparkSession.table(name)
 
 
+# State-store count of the update-mode aggregate drains (_drain_and_fold:
+# s_stateful_user_stats, s_incremental_daily_rollup, s_stream_topk_tokens,
+# s_stream_hll_users).  The count is fixed at stream start from
+# spark.sql.shuffle.partitions, never AQE-coalesced, and pinned by the
+# checkpoint for its whole life.  The folds run on the JVM, so each
+# store adds a fixed cost per batch (task + state load + delta commit)
+# and no parallelism the fold needs.  Interleaved A/B on a 4-vCPU VM
+# (PERF_NOTES "s_stateful_user_stats on the JVM"): perfbench
+# stateful_drain median events/s 2→18.4k, 4→13.4k, 8→12.7k, 16→8.4k;
+# s_stateful_user_stats at sf0.1 (4 batches of 25k rows) min-of-4
+# 2→1.21 s, 4→1.40 s, 8→1.78 s, 16→2.64 s; the other three drains at
+# sf0.1 in PERF_NOTES "Three partial-fold drains as streaming
+# aggregates" (8 stores loses on each).
+# 100 TB sizing rule: stores = min(executor cores, max(per-batch rows /
+# 10^4, state bytes / 1 GB)), chosen before the first start — below
+# ~10^4 rows per store per batch the fixed store cost outweighs the
+# fold, and the HDFS-backed provider holds each store's map in executor
+# memory.  State bytes per drain: |users| × 3 longs (user stats),
+# |days| × 2 longs (rollup), |vocab| × (token + 1 long) (top-k),
+# |types| × one HLL sketch of about 4 KB at the default lgConfigK 12
+# (HLL).  That state is bounded by the key set, and update mode emits
+# only the keys a batch touched; per-batch partial files would instead
+# grow by every batch's touched keys for the life of the stream.
+_AGGREGATE_DRAIN_STORES = 2
+
+
+def _drain_and_fold(agg: DataFrame, key: str, count: str) -> DataFrame:
+    """Drain a streaming `groupBy(key).agg(...)` in update mode and fold
+    its per-batch snapshot rows to each key's final state by the
+    strictly rising row count `count` (stateful.fold_snapshots_to_final).
+    Exactly-once comes from the checkpointed state store: a batch
+    re-executed after a crash before its commit resumes from the last
+    committed state version, and its re-emitted snapshots fold away."""
+    spark = agg.sparkSession
+    confs = _small_batch_drain_confs(spark, _AGGREGATE_DRAIN_STORES)
+    with _scoped_sql_confs(spark, confs):
+        snapshots = _drain_to_memory(agg, "update")
+    return fold_snapshots_to_final(snapshots, key, count)
+
+
 # --- streaming aggregation folded to final state -------------------------
 @register(
     "s_stream_value_counts",
@@ -124,10 +164,10 @@ def _drain_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
 def s_stream_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     msgs = file_stream_messages(spark, _events_path(sf_dir))
     agg = msgs.groupBy("value").agg(F.count(F.lit(1)).alias("n"))
-    # 8 state-store partitions (A/B in _scoped_shuffle_partitions: this
-    # query 1.26 -> 0.81 s); foreachBatch-based entries keep the
-    # session default — their per-batch aggregations want parallelism
-    # and measured slightly worse at 8.
+    # 8 state-store partitions (A/B against the 32-partition default:
+    # 1.26 -> 0.81 s); the update-mode drains' 2 stores
+    # (_AGGREGATE_DRAIN_STORES) have not been A/B'd on this complete-
+    # mode drain.
     with _scoped_shuffle_partitions(spark, 8):
         return _drain_to_memory(agg, "complete")
 
@@ -401,52 +441,24 @@ def s_stateful_user_stats(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
     stream = multi_batch_events_stream(spark, sf_dir, n_batches=n_batches)
-    # State-store count is fixed at stream start from
-    # spark.sql.shuffle.partitions, never AQE-coalesced, and pinned by
-    # the checkpoint for its whole life.  The fold runs on the JVM, so
-    # each store adds a fixed cost per batch (task + state load + delta
-    # commit) and no parallelism the fold needs.  Interleaved A/B on
-    # a 4-vCPU VM (PERF_NOTES "s_stateful_user_stats on the JVM"):
-    # perfbench stateful_drain median events/s 2→18.4k, 4→13.4k,
-    # 8→12.7k, 16→8.4k; registered query at sf0.1 (4 batches of 25k
-    # rows) min-of-4 2→1.21 s, 4→1.40 s, 8→1.78 s, 16→2.64 s.
-    # 100 TB sizing rule: stores = min(executor cores, max(per-batch
-    # rows / 10^4, state bytes / 1 GB)), chosen before the first
-    # start — below ~10^4 rows per store per batch the fixed store
-    # cost outweighs the fold (here: 5k-12k), and the HDFS-backed
-    # provider holds each store's map in executor memory.
-    with _scoped_sql_confs(spark, _small_batch_drain_confs(spark, 2)):
-        snapshots = _drain_to_memory(
-            user_lifetime_stats(stream), "update"
-        )
-    return fold_snapshots_to_final(snapshots)
+    return _drain_and_fold(user_lifetime_stats(stream), "user_id", "n_events")
 
 
 @contextmanager
 def _scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Scope spark.sql.shuffle.partitions to a streaming drain and
-    restore it afterwards (exception-safe), making the partition count
-    an explicit per-query decision instead of whatever the session
-    default is.  Two distinct reasons to use it:
-
-    - STATEFUL drains: the state-store count is fixed at stream start
-      from this conf and never AQE-coalesced, and for JVM-side
-      stateful operators the per-batch floor is dominated by per-store
-      task + commit overhead.  A/B on s_stream_stream_join at sf0.1
-      (min-of-2 settled, 4 batches, stores = partitions x 4 join
-      state stores): 32 -> 13.3-26.7 s, 16 -> 7.2-7.6 s,
-      8 -> 4.5-5.1 s, 4 -> 3.7 s, 2 -> 4.1 s; row count identical
-      throughout.  Locally fewer stores win until the per-partition
-      batch volume bites (s_stateful_user_stats, a JVM aggregate with
-      one store per partition: 2 stores beat 4/8/16 at 5k-12k rows
-      per store per batch); on a cluster you size stores to executor
-      cores, per-batch volume and state bytes (the rule at
-      s_stateful_user_stats).
-    - STATELESS foreachBatch drains: each batch's plans read the
-      session conf at execution, so the scope also bounds ordinary
-      batch shuffles — small micro-batches lose to 32-way task
-      scheduling overhead (s_incremental_near_dedup A/B: 32 -> 6.57 s,
-      8 -> 5.76 s).
+    """Scope spark.sql.shuffle.partitions to a stateful streaming drain
+    and restore it afterwards (exception-safe), making the state-store
+    count an explicit per-query decision instead of whatever the
+    session default is.  The count is fixed at stream start from this
+    conf and never AQE-coalesced, and for JVM-side stateful operators
+    the per-batch floor is dominated by per-store task + commit
+    overhead.  A/B on s_stream_stream_join at sf0.1 (min-of-2 settled,
+    4 batches, stores = partitions x 4 join state stores): 32 ->
+    13.3-26.7 s, 16 -> 7.2-7.6 s, 8 -> 4.5-5.1 s, 4 -> 3.7 s, 2 ->
+    4.1 s; row count identical throughout.  Locally fewer stores win
+    until the per-partition batch volume bites; the update-mode
+    aggregate drains share one count and its sizing rule
+    (_AGGREGATE_DRAIN_STORES).
 
     SINGLE-THREADED BY ASSUMPTION (ADVICE r14): this mutates the
     SHARED session conf, so overlapping scopes from concurrent query
@@ -466,7 +478,12 @@ def _small_batch_drain_confs(spark: SparkSession, parts: int) -> dict:
     shuffle width plus the engine's drain AQE policy (config.py
     DRAIN_ADAPTIVE_KEY — default off, the measured local optimum; a
     deployment whose per-batch volumes benefit from AQE flips the
-    knob, no engine edit)."""
+    knob, no engine edit).  For a foreachBatch drain each batch's
+    plans read the session conf at execution, so the pinned width
+    also bounds its ordinary batch shuffles — small micro-batches lose
+    to 32-way task scheduling overhead (s_incremental_near_dedup A/B:
+    32 -> 6.57 s, 8 -> 5.76 s); for an aggregate drain it is the
+    state-store count (_AGGREGATE_DRAIN_STORES)."""
     from kafka_spark_streaming_spark.config import (
         DRAIN_ADAPTIVE_DEFAULT,
         DRAIN_ADAPTIVE_KEY,
@@ -627,15 +644,12 @@ def s_foreach_record_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- incremental materialized rollup (foreachBatch ETL) ------------------
-# Maintains a daily rollup incrementally: each micro-batch appends its
-# per-day PARTIAL aggregate stamped with batch_id; the read side
-# dedups (day, batch_id) — so a foreachBatch retry replaying a batch
-# cannot double-count — and folds partials to the rollup. Append-only
-# writes + exact-integer partials make this the idempotent,
-# shuffle-light way to keep a 100 TB rollup current: per batch it
-# shuffles |batch| rows to |days touched| partials, never rescans
-# history.
+# --- incremental materialized rollup (streaming aggregate) -------------
+# Maintains a daily rollup incrementally: each micro-batch folds its rows
+# into the per-day state of a checkpointed streaming aggregate and emits
+# the days it touched; the snapshot fold keeps each day's last state.
+# Exact-integer sums make it order-independent, and per batch it shuffles
+# |batch| rows to |days touched| partial rows, never rescanning history.
 @register(
     "s_incremental_daily_rollup",
     """
@@ -646,44 +660,8 @@ def s_foreach_record_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir("kss_rollup_") + "/partials"
     stream = multi_batch_events_stream(spark, sf_dir, n_batches=4)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy(F.col("ts").cast("date").alias("d"))
-            .agg(
-                F.count(F.lit(1)).alias("pn"),
-                F.sum(F.round(F.col("value") * 10000).cast("long")).alias(
-                    "ps"
-                ),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    # 8 shuffle partitions for the drain (r17 interleaved A/B at
-    # sf0.1, min-of-3: 32 → 3.83 s, 8 → 2.42 s, 4 → 2.45 s; AQE
-    # on/off a wash at 8): each batch's partial aggregate moves ~30
-    # day-groups, where 32-way task scheduling is pure overhead.
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", _scratch_dir("kss_rck_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    partials = spark.read.parquet(out).dropDuplicates(["d", "batch_id"])
-    return (
-        partials.groupBy("d")
-        .agg(
-            F.sum("pn").alias("n"),
-            F.sum("ps").alias("sum_value_4dec"),
-        )
-        .orderBy("d")
-    )
+    return _drain_and_fold(daily_rollup(stream), "d", "n").orderBy("d")
 
 
 # --- streaming incremental near-dup dedup (MinHash store probe) ----------
@@ -1246,15 +1224,13 @@ def s_incremental_near_dedup(
 
 
 # --- streaming incremental top-k (heavy hitters over a doc stream) -------
-# Maintains the corpus top-10 tokens while documents stream in: each
-# micro-batch appends its PARTIAL token counts stamped with batch_id
-# (per batch: shuffle |batch tokens| → |vocab-touched| partials —
-# history is never rescanned); the read side dedups (token, batch_id)
-# so a foreachBatch retry cannot double-count, folds partials, and
-# takes the top-10 with a deterministic (count DESC, token ASC)
-# tiebreak, which compiles to TakeOrderedAndProject — a per-partition
-# heap, no global sort. Batch ≡ stream exactly, so the batch top-k SQL
-# is the oracle.
+# Maintains the corpus top-10 tokens while documents stream in: a
+# streaming aggregate keeps the per-token count (per batch: shuffle
+# |batch tokens| → |vocab touched| state rows — history is never
+# rescanned); the snapshot fold keeps each token's last count, and the
+# top-10 takes a deterministic (count DESC, token ASC) tiebreak, which
+# compiles to TakeOrderedAndProject — a per-partition heap, no global
+# sort. Batch ≡ stream exactly, so the batch top-k SQL is the oracle.
 @register(
     "s_stream_topk_tokens",
     """
@@ -1264,46 +1240,29 @@ def s_incremental_near_dedup(
     """,
 )
 def s_stream_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir("kss_topk_") + "/partials"
     stream = _docs_ordered_batches(spark, sf_dir, n_batches=3)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(
-                F.explode(F.split("text", " ")).alias("token")
-            )
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("pn"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", _scratch_dir("kss_tck_"))
-        .trigger(availableNow=True)
-        .start()
+    counts = (
+        stream.select(F.explode(F.split("text", " ")).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    q.awaitTermination()
-    partials = spark.read.parquet(out).dropDuplicates(["token", "batch_id"])
     return (
-        partials.groupBy("token")
-        .agg(F.sum("pn").cast("bigint").alias("n"))
+        _drain_and_fold(counts, "token", "n")
         .orderBy(F.desc("n"), F.asc("token"))
         .limit(10)
     )
 
 
-# --- streaming mergeable-HLL distinct (sketch partials across batches) ---
-# The streaming twin of sk_hll_daily_rollup: each micro-batch writes
-# one constant-size DataSketches HLL partial per event_type (stamped
-# with batch_id — a replayed batch overwrites, never double-counts);
-# the fold UNIONs sketches, so distinct-over-the-whole-stream needs
-# state proportional to |types| × sketch size, not |users|. This is
-# how a 100 TB stream answers cumulative count-distinct without
-# keeping the key set anywhere. Estimate is engine-specific ⇒ the
-# sk_hll contract: exact count (oracled) + error-bound boolean.
+# --- streaming mergeable-HLL distinct (a sketch as aggregate state) ------
+# The streaming twin of sk_hll_daily_rollup: a streaming aggregate keeps
+# one constant-size DataSketches HLL sketch per event_type next to the
+# type's row count, merging each batch's users into it; the snapshot fold
+# keeps the sketch of each type's last snapshot (max_by the count).
+# Distinct-over-the-whole-stream needs state proportional to |types| ×
+# sketch size, not |users| — how a 100 TB stream answers cumulative
+# count-distinct without keeping the key set anywhere. Estimate is
+# engine-specific ⇒ the sk_hll contract: exact count (oracled) +
+# error-bound boolean.
 @register(
     "s_stream_hll_users",
     """
@@ -1314,30 +1273,13 @@ def s_stream_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir("kss_hll_") + "/partials"
     stream = multi_batch_events_stream(spark, sf_dir, n_batches=3)
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type")
-            .agg(F.hll_sketch_agg("user_id").alias("sk"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", _scratch_dir("kss_hck_"))
-        .trigger(availableNow=True)
-        .start()
+    sketches = stream.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.hll_sketch_agg("user_id").alias("sk"),
     )
-    q.awaitTermination()
-    partials = spark.read.parquet(out).dropDuplicates(
-        ["event_type", "batch_id"]
-    )
-    merged = partials.groupBy("event_type").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
+    merged = _drain_and_fold(sketches, "event_type", "n").select(
+        "event_type", F.hll_sketch_estimate("sk").alias("est")
     )
     exact = (
         table(spark, sf_dir, "events")

@@ -1,11 +1,13 @@
-"""Checkpointed per-user state as a Catalyst streaming aggregate.
+"""Checkpointed keyed state as Catalyst streaming aggregates.
 
 The reference keeps NO state across micro-batches (its only cross-batch
 artifact is a driver-side counter variable, Streamer.scala:122 — lost
 on restart).  This module is the engine's checkpointed replacement:
-per-key count / sum / max folded by Structured Streaming's own
-streaming aggregation, kept in the JVM state store, surviving restarts
-and rescaling with the number of shuffle partitions.
+per-key count / sum / max (per user, per day) folded by Structured
+Streaming's own streaming aggregation, kept in the JVM state store,
+surviving restarts and rescaling with the number of shuffle partitions;
+fold_snapshots_to_final collapses any such drain's update-mode
+snapshots to the final state.
 
 Determinism: money is accumulated as integer hundredths-of-a-cent
 (round(value * 10000)) and timestamps as epoch seconds, so state folds
@@ -68,6 +70,22 @@ def user_lifetime_stats(events_stream: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents4").alias("sum_value_4dec"),
         F.max("epoch").alias("last_ts_epoch"),
+    )
+
+
+def daily_rollup(events_stream: DataFrame) -> DataFrame:
+    """Streaming per-day rollup with keyed state.
+
+    Input: a *streaming* DataFrame with (ts, value).
+    Output (update mode): one post-batch snapshot row per day per
+    micro-batch the day appears in — (d, n, sum_value_4dec), n the
+    day's running row count.
+    """
+    return events_stream.groupBy(F.col("ts").cast("date").alias("d")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.round(F.col("value") * 10000).cast("long")).alias(
+            "sum_value_4dec"
+        ),
     )
 
 
@@ -136,15 +154,24 @@ def multi_batch_events_stream(
     )
 
 
-def fold_snapshots_to_final(snapshots: DataFrame) -> DataFrame:
-    """Collapse per-batch snapshot rows to each user's final state.
+def fold_snapshots_to_final(
+    snapshots: DataFrame, key: str, count: str
+) -> DataFrame:
+    """Collapse the update-mode snapshot rows of a streaming aggregate
+    to each key's final state.
 
-    n_events is strictly increasing per user across its snapshots, so
-    the final state is the max_by(n_events) row — an aggregate, not a
-    window, so it needs no extra sort.
+    `count` is a row count kept by the aggregate, so it rises strictly
+    per key across the key's snapshots (each batch that touches a key
+    adds at least one row): the final state is the max_by(count) row
+    for every other column — an aggregate, not a window, so it needs
+    no extra sort.  A batch re-executed after a crash before its
+    commit re-emits the same snapshot rows, which the max/max_by fold
+    absorbs.  Output columns keep the snapshots' order.
     """
-    return snapshots.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max_by("sum_value_4dec", "n_events").alias("sum_value_4dec"),
-        F.max_by("last_ts_epoch", "n_events").alias("last_ts_epoch"),
+    return snapshots.groupBy(key).agg(
+        *(
+            F.max(c).alias(c) if c == count else F.max_by(c, count).alias(c)
+            for c in snapshots.columns
+            if c != key
+        )
     )

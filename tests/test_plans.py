@@ -1337,27 +1337,41 @@ def test_pipeline_batch_body_builds_no_python_rdd(spark, tmp_path, monkeypatch):
         assert plan is None, f"{what} scans a Python RDD:\n{plan}"
 
 
-def test_stateful_user_stats_state_stays_on_the_jvm(spark, sf_smoke, monkeypatch):
-    """s_stateful_user_stats folds per-user state with Catalyst's own
-    streaming aggregate: STATS_SCHEMA's names and types, no Python node
-    in the executed micro-batch plan (every batch would otherwise ship
-    its keys through an Arrow hop into Python state workers), and the
-    chosen state-store count in the stream's progress."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s_stateful_user_stats",
+        "s_incremental_daily_rollup",
+        "s_stream_topk_tokens",
+        "s_stream_hll_users",
+    ],
+)
+def test_stateful_user_stats_state_stays_on_the_jvm(
+    spark, sf_smoke, monkeypatch, name
+):
+    """The update-mode aggregate drains fold their keyed state with
+    Catalyst's own streaming aggregate: STATS_SCHEMA's names and types
+    for the per-user stats, no Python node and no foreachBatch sink in
+    the executed micro-batch plan (every batch would otherwise ship its
+    keys through an Arrow hop into Python state workers, or write and
+    commit partial files beside the state), and the shared state-store
+    count in the stream's progress."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-    from kafka_spark_streaming_spark.operators.streaming_queries import (
-        s_stateful_user_stats,
-    )
+    from kafka_spark_streaming_spark.operators import streaming_queries
     from kafka_spark_streaming_spark.streaming.stateful import (
         STATS_SCHEMA,
         multi_batch_events_stream,
         user_lifetime_stats,
     )
 
-    out = user_lifetime_stats(multi_batch_events_stream(spark, sf_smoke, 1))
-    assert [(f.name, f.dataType) for f in out.schema] == [
-        (f.name, f.dataType) for f in STATS_SCHEMA
-    ]
+    kwargs = {}
+    if name == "s_stateful_user_stats":
+        kwargs = {"n_batches": 1}
+        out = user_lifetime_stats(multi_batch_events_stream(spark, sf_smoke, 1))
+        assert [(f.name, f.dataType) for f in out.schema] == [
+            (f.name, f.dataType) for f in STATS_SCHEMA
+        ]
 
     started = []
     real_start = DataStreamWriter.start
@@ -1367,7 +1381,8 @@ def test_stateful_user_stats_state_stays_on_the_jvm(spark, sf_smoke, monkeypatch
         return started[-1]
 
     monkeypatch.setattr(DataStreamWriter, "start", start)
-    assert s_stateful_user_stats(spark, sf_smoke, n_batches=1).count() > 0
+    drain = getattr(streaming_queries, name)
+    assert drain(spark, sf_smoke, **kwargs).count() > 0
     (q,) = started
     plan = q._jsq.explainInternal(True)
     for node in (
@@ -1375,10 +1390,14 @@ def test_stateful_user_stats_state_stays_on_the_jvm(spark, sf_smoke, monkeypatch
         "ArrowEvalPython",
         "BatchEvalPython",
         "PythonUDF",
+        "MapInPandas",
+        "MapInArrow",
+        "ForeachBatchSink",
     ):
         assert node not in plan, f"{node} in the micro-batch plan:\n{plan}"
     assert "StateStoreSave" in plan, plan
-    # the store count the registered drain scopes (A/B in PERF_NOTES,
+    # the store count the registered drains scope
+    # (streaming_queries._AGGREGATE_DRAIN_STORES; A/B in PERF_NOTES,
     # "s_stateful_user_stats on the JVM")
     (op,) = q.lastProgress["stateOperators"]
     assert op["numStateStoreInstances"] == 2

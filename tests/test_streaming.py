@@ -664,7 +664,7 @@ def test_stateful_user_stats_crosses_batches(spark, sf_smoke):
     stream = multi_batch_events_stream(spark, sf_smoke, n_batches=4)
     snapshots = _drain_to_memory(user_lifetime_stats(stream), "update")
     n_snapshots = snapshots.count()
-    final = fold_snapshots_to_final(snapshots)
+    final = fold_snapshots_to_final(snapshots, "user_id", "n_events")
     n_users = final.count()
     assert n_users > 0
     assert n_snapshots > n_users, (
@@ -673,20 +673,28 @@ def test_stateful_user_stats_crosses_batches(spark, sf_smoke):
     )
 
 
-def test_stateful_state_survives_restart(spark, sf_smoke, tmp_path_factory):
+@pytest.mark.parametrize("agg", ["user_lifetime_stats", "daily_rollup"])
+def test_stateful_state_survives_restart(spark, sf_smoke, tmp_path_factory, agg):
     """Kill the stream after half the input, start a NEW query on the
     same checkpoint with the rest: resumed state must make the final
     fold equal the one-shot batch aggregate (exactly-once semantics of
-    checkpointed state + availableNow)."""
+    checkpointed state + availableNow).  The first run's last commit is
+    deleted before the restart, so the restart re-executes that batch
+    (a crash between the batch's sink write and its commit): the
+    re-emitted snapshot rows must not double-count."""
     import shutil
 
+    from kafka_spark_streaming_spark.streaming import stateful
     from kafka_spark_streaming_spark.streaming.stateful import (
-        STATS_SCHEMA,
         fold_snapshots_to_final,
-        user_lifetime_stats,
     )
     from kafka_spark_streaming_spark.tables import table as t
 
+    aggregate = getattr(stateful, agg)
+    key, count = {
+        "user_lifetime_stats": ("user_id", "n_events"),
+        "daily_rollup": ("d", "n"),
+    }[agg]
     base = tmp_path_factory.mktemp("restart")
     src = str(base / "src")
     ckpt = str(base / "ckpt")
@@ -699,6 +707,11 @@ def test_stateful_state_survives_restart(spark, sf_smoke, tmp_path_factory):
     assert len(parts) == 4
 
     out = str(base / "snapshots")
+    batch_ids = []
+
+    def write(df, bid):
+        batch_ids.append(bid)
+        df.write.mode("append").parquet(out)
 
     def run():
         stream = (
@@ -708,11 +721,9 @@ def test_stateful_state_survives_restart(spark, sf_smoke, tmp_path_factory):
         )
         # memory sink can't recover a checkpoint; foreachBatch can
         q = (
-            user_lifetime_stats(stream)
+            aggregate(stream)
             .writeStream.outputMode("update")
-            .foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(out)
-            )
+            .foreachBatch(write)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -722,8 +733,19 @@ def test_stateful_state_survives_restart(spark, sf_smoke, tmp_path_factory):
 
     for p in parts[:2]:
         shutil.copy(p, src)
-    n1 = run().count()
+    run1 = run()
+    n1 = run1.count()
     assert n1 > 0
+    assert batch_ids == [0, 1]
+    run1_rows = run1.collect()
+
+    # crash before the last batch's commit: its output is in the sink
+    # but the checkpoint does not record it.  The .crc goes too: left
+    # behind, it makes the rewrite of commits/1 fail as "multiple
+    # streaming queries are concurrently using .../commits"
+    commits = os.path.join(ckpt, "commits")
+    os.remove(os.path.join(commits, "1"))
+    os.remove(os.path.join(commits, ".1.crc"))
 
     for p in parts[2:]:
         shutil.copy(p, src)
@@ -732,17 +754,33 @@ def test_stateful_state_survives_restart(spark, sf_smoke, tmp_path_factory):
     # users in run-2 snapshots carry counts > their run-1 rows only if
     # state survived; equality of the final fold proves it exactly.
     assert snaps.count() > n1
-    final = fold_snapshots_to_final(snaps)
-    expected = (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
+    # batch 1 re-executed from state version 1 and re-emitted exactly
+    # its first snapshot rows; batch 0 did not run again
+    assert batch_ids == [0, 1, 1, 2, 3]
+    dup = snaps.exceptAll(snaps.distinct())
+    assert dup.count() > 0
+    run1_df = spark.createDataFrame(run1_rows, snaps.schema)
+    assert dup.exceptAll(run1_df).count() == 0
+    final = fold_snapshots_to_final(snaps, key, count)
+    assert final.columns == snaps.columns
+    if agg == "user_lifetime_stats":
+        expected = (
+            ev.groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.round(F.col("value") * 10000).cast("long")).alias(
+                    "sum_value_4dec"
+                ),
+                F.max(F.unix_timestamp("ts")).alias("last_ts_epoch"),
+            )
+        )
+    else:
+        expected = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
+            F.count(F.lit(1)).alias("n"),
             F.sum(F.round(F.col("value") * 10000).cast("long")).alias(
                 "sum_value_4dec"
             ),
-            F.max(F.unix_timestamp("ts")).alias("last_ts_epoch"),
         )
-    )
     assert final.exceptAll(expected).count() == 0
     assert expected.exceptAll(final).count() == 0
 
@@ -794,7 +832,7 @@ def test_stateful_user_stats_all_null_folds_match_oracle(spark, tmp_path):
     snapshots = _drain_to_memory(user_lifetime_stats(stream), "update")
     # two batches: users 1-3 snapshot in both
     assert snapshots.count() == 6
-    final = fold_snapshots_to_final(snapshots)
+    final = fold_snapshots_to_final(snapshots, "user_id", "n_events")
 
     con = duckdb.connect()
     try:
@@ -1070,53 +1108,6 @@ def test_multi_batch_split_files_arrive_in_ts_order(spark):
     multi_batch_events_stream(spark, sf_dir, n_batches=4)
     mtimes = [os.stat(p).st_mtime for p in sorted(_glob.glob(split_dir + "/part-*.parquet"))]
     assert mtimes == sorted(mtimes) and len(set(mtimes)) == 4
-
-
-def test_incremental_rollup_retry_cannot_double_count(spark, sf_smoke):
-    """The incremental rollup's claim: a foreachBatch retry that
-    re-appends a batch's per-day partials cannot double-count, because
-    the read side dedups on (day, batch_id). Simulate the retry by
-    literally appending a duplicate of one batch's partial rows, then
-    assert the folded rollup equals the untouched batch oracle."""
-    import glob as _glob
-
-    from kafka_spark_streaming_spark.operators.streaming_queries import (
-        s_incremental_daily_rollup,
-    )
-    from kafka_spark_streaming_spark.tables import table
-
-    rolled = s_incremental_daily_rollup(spark, sf_smoke)
-    # locate the partials dir from the plan's scanned files
-    out_dir = os.path.dirname(rolled.inputFiles()[0].replace("file:", ""))
-
-    # "retry": duplicate every partial row of batch 0 by re-appending it
-    partials = spark.read.parquet(out_dir)
-    partials.filter(F.col("batch_id") == 0).write.mode("append").parquet(out_dir)
-
-    refolded = (
-        spark.read.parquet(out_dir)
-        .dropDuplicates(["d", "batch_id"])
-        .groupBy("d")
-        .agg(
-            F.sum("pn").alias("n"),
-            F.sum("ps").alias("sum_value_4dec"),
-        )
-        .orderBy("d")
-    )
-    ev = table(spark, sf_smoke, "events")
-    expect = (
-        ev.groupBy(F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 10000).cast("long")).alias(
-                "sum_value_4dec"
-            ),
-        )
-        .orderBy("d")
-    )
-    assert [tuple(r) for r in refolded.collect()] == [
-        tuple(r) for r in expect.collect()
-    ]
 
 
 def test_put_single_default_preserves_prior_cells(spark, tmp_path):
