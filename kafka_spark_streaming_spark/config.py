@@ -113,8 +113,8 @@ ANN_COMPACT_EVERY_DEFAULT = 0
 # The r17 job-floor decomposition showed AQE's stage-by-stage
 # materialization multiplying tiny per-batch plans into 4-6 job
 # submissions each (17/batch on the incremental-dedup drain) with
-# nothing to re-plan — so the drains that measured a win scope
-# adaptive.enabled off alongside their shuffle width.  That is a
+# nothing to re-plan — so every stream drain (streaming_queries._drain)
+# scopes adaptive.enabled off alongside its shuffle width.  That is a
 # LOCAL small-batch tuning: at the 100 TB design point per-batch
 # volumes are large enough that AQE's skew/coalesce wins dominate,
 # so this knob lets a deployment re-enable AQE inside those scoped

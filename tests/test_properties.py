@@ -622,22 +622,44 @@ def test_build_reps_properties(spark, keys):
         assert got[i] == (mins[k], counts[k]), (i, k, got[i])
 
 
-def test_scoped_shuffle_partitions_restores_conf_on_error(spark):
-    """The scoped shuffle-partitions conf (r14) must restore the session
-    default even when the drain raises — a leaked 8 would silently
-    reshape every later batch query's shuffles."""
+def test_drain_restores_conf_on_error(spark, sf_smoke):
+    """A failing stream re-raises out of streaming_queries._drain, and
+    the drain's scoped shuffle width and AQE flag are restored to the
+    session's values (a leaked width would silently reshape every later
+    batch query's shuffles); a failed memory drain leaves no view."""
+    import os
+
     import pytest as _pytest
+    from pyspark.errors import StreamingQueryException
 
-    from kafka_spark_streaming_spark.operators.streaming_queries import (
-        _scoped_shuffle_partitions,
+    from kafka_spark_streaming_spark.operators.streaming_queries import _drain
+    from kafka_spark_streaming_spark.sources.files import file_stream_messages
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    msgs = file_stream_messages(
+        spark, os.path.join(sf_smoke, "events.parquet")
     )
+    seen = []
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with _pytest.raises(RuntimeError, match="boom"):
-        with _scoped_shuffle_partitions(spark, 8):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    def boom(batch_df, batch_id):
+        seen.append(tuple(spark.conf.get(k) for k in keys))
+        raise RuntimeError("boom")
+
+    with _pytest.raises(StreamingQueryException, match="boom"):
+        _drain(spark, msgs.writeStream.foreachBatch(boom), 3)
+    assert seen == [("3", "false")]
+    assert {k: spark.conf.get(k) for k in keys} == prev
+
+    failing = msgs.select(F.raise_error(F.lit("boom")).cast("string"))
+    with _pytest.raises(StreamingQueryException, match="boom"):
+        _drain(spark, failing.writeStream.format("memory"), 3)
+    assert {k: spark.conf.get(k) for k in keys} == prev
+    assert not [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("kss_drain_")
+    ]
 
 
 @settings(

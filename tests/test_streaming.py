@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import glob
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_spark_streaming_spark.operators import QUERIES
 from kafka_spark_streaming_spark.sinks.foreach import RecordForeachWriter
 from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 from kafka_spark_streaming_spark.sources.files import file_stream_messages
@@ -653,6 +655,7 @@ def test_stateful_user_stats_crosses_batches(spark, sf_smoke):
     users spanning batches emit one snapshot per batch, so the
     snapshot stream is strictly larger than the user set."""
     from kafka_spark_streaming_spark.operators.streaming_queries import (
+        _AGGREGATE_DRAIN_STORES,
         _drain_to_memory,
     )
     from kafka_spark_streaming_spark.streaming.stateful import (
@@ -662,7 +665,9 @@ def test_stateful_user_stats_crosses_batches(spark, sf_smoke):
     )
 
     stream = multi_batch_events_stream(spark, sf_smoke, n_batches=4)
-    snapshots = _drain_to_memory(user_lifetime_stats(stream), "update")
+    snapshots = _drain_to_memory(
+        user_lifetime_stats(stream), "update", _AGGREGATE_DRAIN_STORES
+    )
     n_snapshots = snapshots.count()
     final = fold_snapshots_to_final(snapshots, "user_id", "n_events")
     n_users = final.count()
@@ -793,6 +798,7 @@ def test_stateful_user_stats_all_null_folds_match_oracle(spark, tmp_path):
 
     from kafka_spark_streaming_spark.operators.registry import ORACLES
     from kafka_spark_streaming_spark.operators.streaming_queries import (
+        _AGGREGATE_DRAIN_STORES,
         _drain_to_memory,
     )
     from kafka_spark_streaming_spark.streaming.stateful import (
@@ -829,7 +835,9 @@ def test_stateful_user_stats_all_null_folds_match_oracle(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    snapshots = _drain_to_memory(user_lifetime_stats(stream), "update")
+    snapshots = _drain_to_memory(
+        user_lifetime_stats(stream), "update", _AGGREGATE_DRAIN_STORES
+    )
     # two batches: users 1-3 snapshot in both
     assert snapshots.count() == 6
     final = fold_snapshots_to_final(snapshots, "user_id", "n_events")
@@ -849,6 +857,50 @@ def test_stateful_user_stats_all_null_folds_match_oracle(spark, tmp_path):
         final.columns, [tuple(r) for r in final.collect()], ora_cols, ora_rows
     )
     assert not problems, "\n".join(problems)
+
+
+# every registered query that starts a stream
+_STREAM_DRAINS = sorted(
+    n for n in QUERIES if n.startswith("s_") and n != "s_upsert_snapshot_read"
+)
+
+
+@pytest.mark.parametrize("name", _STREAM_DRAINS)
+def test_registered_stream_drains_through_one_helper(
+    spark, sf_smoke, monkeypatch, name
+):
+    """Every stream-backed registered query drains through
+    streaming_queries._drain: its streams carry the helper's name and
+    have terminated when the query returns, no memory-sink view
+    outlives the drain, and the returned frame still reads the drained
+    rows, the same on every action."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    def drain_views():
+        return [
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("kss_drain_")
+        ]
+
+    assert not drain_views()
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        started.append(real_start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    out = QUERIES[name](spark, sf_smoke)
+    assert started
+    for q in started:
+        assert q.name.startswith("kss_drain_"), q.name
+        assert not q.isActive, q.name
+    assert not drain_views()
+    first = Counter(out.collect())
+    assert first
+    assert Counter(out.collect()) == first
 
 
 def test_cli_streamer_end_to_end(spark, sf_smoke, tmp_path_factory):
