@@ -27,6 +27,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_spark_streaming_spark import tables  # noqa: E402
 from kafka_spark_streaming_spark.operators import QUERIES  # noqa: E402
+from kafka_spark_streaming_spark.operators.streaming_queries import (  # noqa: E402
+    reclaim_scratch,
+)
 
 # Headline set: one per operator family — scan-agg, top-k join,
 # star join, scan-filter-agg, multiway join, windowing, as-of join,
@@ -144,6 +147,8 @@ class Timer:
     """
 
     def __init__(self, spark) -> None:
+        # aged drain scratch goes now, outside every timed window
+        reclaim_scratch()
         self.spark = spark
         self.builders: dict[str, dict[str, tuple]] = {}
         self.outputs: dict[str, object] = {}

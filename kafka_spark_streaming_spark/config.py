@@ -172,7 +172,6 @@ DRAIN_LEASE_FACTOR = 30.0
 # snapshot held longer than ~one batch — ADVICE r19); an EXPLICIT 0
 # opts out of that fallback.
 STORE_PIN_TTL_KEY = "spark.kss.store.pinTtlSec"
-STORE_PIN_TTL_DEFAULT = 0.0
 
 # The fallback multiplier above: generous enough that a read spanning
 # many batch intervals stays protected, small enough that a crashed
@@ -314,8 +313,6 @@ def store_pin_ttl(spark: SparkSession) -> float | None:
         # explicit setting wins outright — including an explicit 0
         # (pid mode), which must NOT fall through to the fence TTL
         return _parse_ttl(STORE_PIN_TTL_KEY, raw)
-    if STORE_PIN_TTL_DEFAULT > 0:  # seam for a nonzero shipped default
-        return STORE_PIN_TTL_DEFAULT
     lease = fence_lease_ttl(spark)
     if lease is None:
         return None

@@ -44,7 +44,7 @@ def w_top3_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part")
     rev = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_partkey")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
     )
@@ -229,7 +229,7 @@ def j_semi_anti_customer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("bk")
     ).distinct()
     flagged = cust.join(
-        F.broadcast(buyers), cust.c_custkey == F.col("bk"), "left_outer"
+        buyers, cust.c_custkey == F.col("bk"), "left_outer"
     ).select(F.col("bk").isNotNull().alias("has_order"))
     return flagged.agg(
         F.count(F.when(F.col("has_order"), 1)).alias("n_with_orders"),
@@ -565,7 +565,7 @@ def w_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         local.join(F.broadcast(offsets), "pid")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select("c_custkey", "revenue", decile.alias("decile"))
     )
 
@@ -664,7 +664,7 @@ def time_gapfill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence("lo", "hi")).alias("day")
     )
     types = ev.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(days))
+    spine = types.crossJoin(days)
     daily = (
         ev.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(

@@ -629,7 +629,7 @@ _SIMHASH_BITS = 64
 # geometry DEFINES the Hamming cut — radius and banding can never
 # drift apart.  The registered query pins the fixture contract:
 _SIMHASH_GEOMETRY = (16, 4)  # radius 15; empirical true-pair radius 12
-# The measured 100 TB shape (tools/simhash_geometry_frontier.py): a
+# The measured 100 TB shape (PERF_NOTES "Geometry frontiers"): a
 # tighter radius with wider bands — 8 bands × 8 bits, radius 7 — cuts
 # the uniform random-collision floor from n²·16/2⁴ to n²·8/2⁸ (~20×).
 # One config away, exercised by test_simhash_geometry_pigeonhole.
@@ -1029,22 +1029,6 @@ def _quant_vec(col: F.Column) -> F.Column:
         lambda x: F.floor(
             x.cast("double") * F.lit(float(_EMB_Q)) + F.lit(0.5)
         ).cast("int"),
-    )
-
-
-def _quant_norm(qcol: F.Column) -> F.Column:
-    """sqrt of the exact int64 sum of squares of a micro-unit vector.
-    The integer fold is exact (each int32 component widened before the
-    multiply); the sum is ≤ 2⁵³ for guard-accepted vectors
-    (_EMB_NORM2_MAX), so the int→double conversion is exact and the
-    one sqrt is correctly rounded — the double matches DuckDB's
-    sqrt(CAST(list_sum(...) AS DOUBLE)) bit for bit."""
-    return F.sqrt(
-        F.aggregate(
-            qcol,
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x.cast("long") * x,
-        ).cast("double")
     )
 
 
@@ -1633,8 +1617,8 @@ def d_semantic_only_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Candidate volume at tau=0.25 (VERDICT r9 #2 adjudication): the
     27:1 candidate:survivor ratio is DATA-forced, not a free band
-    parameter. tools/lsh_geometry_frontier.py enumerates the (L, k)
-    frontier on the real fixture: every geometry from (8,4) to (32,6)
+    parameter. The (L, k) frontier measured on the real fixture
+    (PERF_NOTES "Geometry frontiers"): every geometry from (8,4) to (32,6)
     lands at ratio 19-28, and every step that trims candidates trims
     recall faster (8x5: 22.7:1 at recall 0.46; 8x6: 18.9:1 at recall
     0.30 — both below the tested 0.5 recall floor). The cause is the

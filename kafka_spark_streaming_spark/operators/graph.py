@@ -39,20 +39,20 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(
-            F.broadcast(n.select(
+            n.select(
                 F.col("n_nationkey").alias("ck"),
                 F.col("n_name").alias("src"),
-            )),
+            ),
             F.col("c_nationkey") == F.col("ck"),
         )
         .join(
-            F.broadcast(n.select(
+            n.select(
                 F.col("n_nationkey").alias("sk"),
                 F.col("n_name").alias("dst"),
-            )),
+            ),
             F.col("s_nationkey") == F.col("sk"),
         )
         .groupBy("src", "dst")
@@ -116,7 +116,7 @@ def g_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     n = table(spark, sf_dir, "nation").select("n_name")
     n_nodes = n.agg(F.count(F.lit(1)).alias("n_nodes"))
-    nodes = n.crossJoin(F.broadcast(n_nodes))
+    nodes = n.crossJoin(n_nodes)
 
     # Materialize the (nations²-sized) edge list once per session: the
     # distilled edge list is the persisted derived table of a real
@@ -203,7 +203,7 @@ def g_triangle_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum <2^53 integers exactly, so the >= cut is bit-identical
     cut = edges.agg(F.avg("w").alias("mean_w"))
     und = (
-        edges.crossJoin(F.broadcast(cut))
+        edges.crossJoin(cut)
         .filter((F.col("src") != F.col("dst")) & (F.col("w") >= F.col("mean_w")))
         .select(
             F.least("src", "dst").alias("a"),

@@ -421,7 +421,7 @@ def p_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = d.filter(F.col("doc_id") < 250).select("fp").distinct()
     inc = d.filter(F.col("doc_id") >= 250)
     bloom = bloom_build(existing, "fp")
-    probed = inc.crossJoin(F.broadcast(bloom)).withColumn(
+    probed = inc.crossJoin(bloom).withColumn(
         "maybe_seen", bloom_might_contain(F.col("fp"), F.col("bloom"))
     )
     definite_new = probed.filter(~F.col("maybe_seen")).select("doc_id", "fp")
@@ -584,7 +584,7 @@ def pipe_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = d.agg(F.sum(F.size(toks)).alias("total"))
     lp = (
         tok.join(vocab_broadcast(uni, sf_dir, source="documents"), "token")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .groupBy("doc_id")
         .agg(F.avg(F.log(F.col("c") * 1.0 / F.col("total"))).alias("avg_logprob"))
     )
@@ -599,7 +599,7 @@ def pipe_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(dup2, 0.9)").alias("dup_cut"),
     )
     return (
-        sig.crossJoin(F.broadcast(cuts))
+        sig.crossJoin(cuts)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -898,7 +898,7 @@ def p_corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cannot multiply the per-doc-distinct train shingles, so
         # n_overlap is unchanged while the eval subtree loses its
         # exchange + second aggregate stage.
-        tr_sh.join(F.broadcast(ev), "s", "semi")
+        tr_sh.join(ev, "s", "semi")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
@@ -921,7 +921,7 @@ def p_corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = corpus.agg(F.sum("n").alias("total"))
     lp = (
         tok.join(vocab_broadcast(uni, sf_dir, source="documents"), "token")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .groupBy("doc_id")
         .agg(
             F.avg(F.log(F.col("c") * 1.0 / F.col("total"))).alias(
@@ -947,7 +947,7 @@ def p_corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(dup2, 0.9)").alias("dup_cut"),
     )
     passed = (
-        sig.crossJoin(F.broadcast(cuts))
+        sig.crossJoin(cuts)
         .filter(
             (F.col("avg_logprob") > F.col("lp_cut"))
             & (F.col("dup2") < F.col("dup_cut"))

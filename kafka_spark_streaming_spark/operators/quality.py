@@ -398,7 +398,7 @@ def q_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     orphan_orders = o.join(
-        F.broadcast(cust.select("c_custkey")),
+        cust.select("c_custkey"),
         o.o_custkey == F.col("c_custkey"),
         "left_anti",
     )
@@ -463,7 +463,7 @@ def smp_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = counts.agg(
         F.sum("n_s").alias("n_total"), F.count(F.lit(1)).alias("n_sources")
     )
-    rates = counts.crossJoin(F.broadcast(totals)).select(
+    rates = counts.crossJoin(totals).select(
         "source",
         "n_s",
         F.least(
@@ -635,7 +635,7 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = Window.orderBy(F.desc("n"), F.asc("key"))
         return (
             top.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .crossJoin(F.broadcast(stats))
+            .crossJoin(stats)
             .select(
                 F.lit(col).alias("col_name"),
                 "key",

@@ -75,7 +75,7 @@ def r_batch_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_distinct")
         )
     )
-    return main.crossJoin(F.broadcast(dcount)).select(
+    return main.crossJoin(dcount).select(
         "batch_id", "n_messages", "n_distinct", "batch_date", "summary"
     )
 

@@ -72,7 +72,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q3: shipping priority (TPC-H Q3 shape) ------------------------------
 # customer (filtered) ⋈ orders ⋈ lineitem. customer-side is small after
-# the segment filter → broadcast hint removes one shuffle; the
+# the segment filter, so the planner broadcasts it (one shuffle fewer); the
 # orders⋈lineitem join shuffles on orderkey (the natural co-location key
 # — at scale both sides would be bucketed by orderkey to kill this
 # shuffle too). Top-10 is a TakeOrderedAndProject — no global sort.
@@ -106,7 +106,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
         .select(
@@ -157,14 +157,14 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .join(
-            F.broadcast(supp),
+            supp,
             (li.l_suppkey == supp.s_suppkey)
             & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
     )

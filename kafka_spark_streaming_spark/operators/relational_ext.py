@@ -78,7 +78,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
@@ -139,7 +139,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part")
     dp = disc_price()
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .agg(
             (
                 F.lit(100.00)
@@ -185,7 +185,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_rev = revenue.agg(F.max("total_revenue").alias("m"))
     supp = table(spark, sf_dir, "supplier")
     return (
-        revenue.join(F.broadcast(max_rev), revenue.total_revenue == F.col("m"))
+        revenue.join(max_rev, revenue.total_revenue == F.col("m"))
         .join(supp, F.col("supplier_no") == supp.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
     )
@@ -267,7 +267,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q19_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part")
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    j = li.join(part, li.l_partkey == part.p_partkey)
     qty, size, brand = F.col("l_quantity"), F.col("p_size"), F.col("p_brand")
     cond = (
         ((brand == "Brand#1") & size.between(1, 15) & qty.between(1, 21))
@@ -308,7 +308,7 @@ def q22_inactive_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
          / F.count("c_acctbal")).alias("avg_bal")
     )
     return (
-        cust.join(F.broadcast(avg_bal_df))
+        cust.join(avg_bal_df)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .groupBy("c_nationkey")
@@ -348,10 +348,10 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = table(spark, sf_dir, "nation").alias("n2")
     j = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), supp.s_nationkey == F.col("n1.n_nationkey"))
-        .join(F.broadcast(n2), cust.c_nationkey == F.col("n2.n_nationkey"))
+        .join(n1, supp.s_nationkey == F.col("n1.n_nationkey"))
+        .join(n2, cust.c_nationkey == F.col("n2.n_nationkey"))
         .filter(
             (
                 (F.col("n1.n_name") == "NATION_1")
@@ -402,7 +402,7 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("s_suppkey")
     return (
         li.join(bad_supp, li.l_suppkey == bad_supp.s_suppkey, "left_anti")
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -430,7 +430,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
          / F.count("l_quantity")).alias("avg_q")
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(part_avg, li.l_partkey == part_avg.ap)
         .filter(F.col("l_quantity") < 0.5 * F.col("avg_q"))
         .agg(

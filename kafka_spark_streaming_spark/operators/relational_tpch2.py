@@ -87,21 +87,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0).cast(_DP_DEC)
     joined = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            F.broadcast(n2),
-            F.col("s_nationkey") == F.col("n2.n_nationkey"),
-        )
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(n1),
-            F.col("c_nationkey") == F.col("n1.n_nationkey"),
-        )
-        .join(
-            F.broadcast(region),
-            F.col("n1.n_regionkey") == F.col("r_regionkey"),
-        )
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n2, F.col("s_nationkey") == F.col("n2.n_nationkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .join(n1, F.col("c_nationkey") == F.col("n1.n_nationkey"))
+        .join(region, F.col("n1.n_regionkey") == F.col("r_regionkey"))
     )
     return (
         joined.select(
@@ -151,10 +142,10 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = table(spark, sf_dir, "supplier")
     nation = table(spark, sf_dir, "nation")
     return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
@@ -202,10 +193,10 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = table(spark, sf_dir, "nation")
     region = table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     priced = (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
         .withColumn("unit_price", F.col("l_extendedprice") / F.col("l_quantity"))
         .withColumn(
             "min_price", F.min("unit_price").over(W.partitionBy("p_partkey"))
@@ -264,8 +255,8 @@ def q11_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = table(spark, sf_dir, "supplier")
     nation = table(spark, sf_dir, "nation")
     srev = (
-        li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name", "s_name")
         .agg(dec_sum("l_extendedprice").alias("revenue"))
     )
@@ -358,9 +349,7 @@ def q20_red_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     supp = table(spark, sf_dir, "supplier")
     sq = (
-        li.join(
-            F.broadcast(red), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
-        )
+        li.join(red, F.col("l_partkey") == F.col("p_partkey"), "left_semi")
         .groupBy("l_suppkey")
         .agg(dec_sum("l_quantity").alias("red_qty"))
     )
@@ -371,8 +360,8 @@ def q20_red_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
     )
     return (
-        sq.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(tot))
+        sq.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(tot)
         .filter(F.col("red_qty") * F.col("n") > F.col("total"))
         .select("s_suppkey", "s_name", "red_qty")
         .orderBy("s_suppkey")
@@ -434,7 +423,7 @@ def q21_sole_return_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return (
-        culprit.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        culprit.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.col("numwait").desc(), "s_name")

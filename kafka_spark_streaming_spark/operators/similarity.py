@@ -304,7 +304,7 @@ def _topk(scored: DataFrame) -> DataFrame:
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, c = _queries_and_candidates(spark, sf_dir)
     scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        c.join(q, F.col("query_id") != F.col("neighbor_id"))
         .withColumn("s", cosine_similarity(F.col("qv"), F.col("cv")))
         .select("query_id", "neighbor_id", "s")
     )
@@ -834,7 +834,7 @@ def _pq_subvectors(e: DataFrame) -> DataFrame:
 def _pq_subspace_dists(sub: DataFrame, cb: DataFrame) -> DataFrame:
     """Quantized squared L2 of every (vector, subspace, codeword)."""
     return (
-        sub.join(F.broadcast(cb), ["m", "pos"])
+        sub.join(cb, ["m", "pos"])
         .groupBy("vec_id", "m", "k")
         .agg(
             _q9(
@@ -976,7 +976,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_lang_centroid_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     d = table(spark, sf_dir, "documents").select("doc_id", "lang")
-    ed = e.join(F.broadcast(d), e.vec_id == d.doc_id).select(
+    ed = e.join(d, e.vec_id == d.doc_id).select(
         "lang", F.slice("embedding", 1, 8).alias("v")
     )
     ex = ed.select(

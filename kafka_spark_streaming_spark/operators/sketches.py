@@ -113,10 +113,10 @@ def sk_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("nt").alias("n_total"))
     )
     return (
-        toks.join(F.broadcast(candidates), "tok", "left_semi")
+        toks.join(candidates, "tok", "left_semi")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
-        .join(F.broadcast(total))
+        .join(total)
         .filter(F.col("n") * _PHI_INV >= F.col("n_total"))
         .select("tok", "n")
         .orderBy(F.desc("n"), F.asc("tok"))

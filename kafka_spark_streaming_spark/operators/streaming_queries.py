@@ -73,17 +73,15 @@ def _newest_mtime_shallow(d: str) -> float:
     return newest
 
 
-def _scratch_dir(prefix: str, min_age_s: float = 1800) -> str:
-    """mkdtemp plus reclamation: every streaming query creates fresh
-    drain-output/checkpoint dirs per call (bench alone = 3 timed passes
-    + warmup) and nothing else ever deletes them, so /tmp would grow by
-    several corpus copies per round. Before allocating, best-effort-
-    remove any transient sibling whose newest shallow mtime is older
-    than min_age_s — age-gated on activity, not creation, so a
-    concurrent session's live drain (even one running longer than the
-    threshold) is never touched (same threshold rationale as
-    physical._prune_stale)."""
-    assert prefix in _SCRATCH_PREFIXES, f"unregistered scratch prefix {prefix}"
+def reclaim_scratch(min_age_s: float = 1800) -> None:
+    """Best-effort-remove every transient scratch dir whose newest
+    shallow mtime is older than min_age_s — age-gated on activity, not
+    creation, so a concurrent session's live drain (even one running
+    longer than the threshold) is never touched (same threshold
+    rationale as physical._prune_stale).  Harnesses call it once
+    before their timed windows (`bench.Timer`), so a drain that
+    happens to run after a batch of dirs ages out is not charged for
+    deleting them."""
     now = time.time()
     tmp = tempfile.gettempdir()
     for pref in _SCRATCH_PREFIXES:
@@ -93,6 +91,16 @@ def _scratch_dir(prefix: str, min_age_s: float = 1800) -> str:
                     shutil.rmtree(d, ignore_errors=True)
             except OSError:
                 pass
+
+
+def _scratch_dir(prefix: str, min_age_s: float = 1800) -> str:
+    """mkdtemp plus reclamation: every streaming query creates fresh
+    drain-output/checkpoint dirs per call (bench alone = 3 timed passes
+    + warmup) and nothing else ever deletes them, so /tmp would grow by
+    several corpus copies per round. Before allocating, reclaim aged
+    transient siblings (`reclaim_scratch`)."""
+    assert prefix in _SCRATCH_PREFIXES, f"unregistered scratch prefix {prefix}"
+    reclaim_scratch(min_age_s)
     return tempfile.mkdtemp(prefix=prefix)
 
 

@@ -436,7 +436,7 @@ def t_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # df table is vocabulary-sized (corpus-growth aggregate) — the
         # broadcast hint is size-guarded, AQE decides past the guard
         tf.join(vocab_broadcast(dfreq, sf_dir, source="documents"), "term")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "doc_id",
             "term",
@@ -614,7 +614,7 @@ def t_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = d.agg(F.sum(F.size(_toks())).alias("total"))
     return (
         tok.join(vocab_broadcast(uni, sf_dir, source="documents"), "token")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
@@ -686,7 +686,7 @@ def t_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("tok", "id")
     )
-    enc = tok.join(F.broadcast(vocab), "tok", "left")
+    enc = tok.join(vocab, "tok", "left")
     return (
         enc.groupBy("doc_id")
         .agg(

@@ -676,11 +676,6 @@ def session_checkpoint(
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → reference-shaped stream input (key, value, topic, ts).
 

@@ -205,3 +205,107 @@ def test_filter_reaches_scan(spark, sf_smoke, name, section, needle):
     assert any(needle in x for x in lists), (
         f"{name}: expected {needle!r} in a {section} list; got {lists}"
     )
+
+
+# Every forced broadcast in the package: (module, top-level function) ->
+# one size bound per F.broadcast( call in it.  AQE broadcasts any side
+# under autoBroadcastJoinThreshold from runtime sizes, so a hint stays
+# only where the executed plan changes without it (PERF_NOTES "Forced
+# broadcasts"), and each one states what bounds its broadcast side.
+_FORCED_BROADCAST_OK = {
+    ("operators.analytic", "w_revenue_deciles"): (
+        "32 rows (one offset per range partition)",
+    ),
+    ("operators.analytic", "time_zscore_anomalies"): (
+        "one row per event_type",
+    ),
+    ("operators.graph", "g_pagerank_trade"): (
+        "≤ 25 rows (one rank per nation)",
+        "≤ 25 rows (one in-mass per nation)",
+    ),
+    ("operators.llm_pipeline", "exclusive_prefix_sum"): (
+        "n_parts rows (one offset per range partition)",
+    ),
+    ("operators.quality", "smp_mixture_rebalance"): (
+        "one row per source",
+    ),
+    ("operators.relational_tpch2", "q11_supplier_concentration"): (
+        "≤ 25 rows (one total per nation)",
+    ),
+    ("operators.similarity", "sim_ann_lsh"): (
+        "≤ N_QUERIES × _LSH_TABLES rows (query buckets)",
+    ),
+    ("operators.similarity", "sim_ann_ivf"): (
+        "≤ N_QUERIES × n_probe rows (query cells)",
+    ),
+    ("operators.similarity", "sim_pq_adc_topk"): (
+        "≤ N_QUERIES × _PQ_M × _PQ_K rows (query ADC table)",
+    ),
+    ("operators.similarity", "_km_dists"): (
+        "_KM_K × dim rows (centroid coordinates)",
+    ),
+    ("operators.text", "vocab_broadcast"): (
+        "only when the source table is ≤ _VOCAB_HINT_SOURCE_BYTES on disk",
+    ),
+    ("operators.streaming_queries", "s_stream_static_enrich"): (
+        "one row per distinct user_id (the user dimension, not events)",
+    ),
+    ("operators.streaming_queries", "s_incremental_ann_ivf"): (
+        "≤ N_QUERIES × n_probe rows (query cells)",
+    ),
+    ("operators.store_maintenance", "_rebalance_body"): (
+        "≤ n_cells rows (one seed position per cell)",
+    ),
+}
+
+
+def _forced_broadcast_sites() -> dict[tuple[str, str], int]:
+    """(module, top-level function or class) -> number of
+    ``F.broadcast(`` calls in it, over every module of the package."""
+    import ast
+    import collections
+    import pathlib
+
+    import kafka_spark_streaming_spark
+
+    pkg = pathlib.Path(kafka_spark_streaming_spark.__file__).parent
+    found: collections.Counter = collections.Counter()
+    for path in sorted(pkg.rglob("*.py")):
+        module = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for top in ast.parse(path.read_text(), str(path)).body:
+            scope = getattr(top, "name", "<module>")
+            for call in ast.walk(top):
+                if (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "broadcast"
+                    and isinstance(call.func.value, ast.Name)
+                    and call.func.value.id == "F"
+                ):
+                    found[(module, scope)] += 1
+    return dict(found)
+
+
+def test_forced_broadcasts_state_their_bound():
+    found = _forced_broadcast_sites()
+    unlisted = sorted(set(found) - set(_FORCED_BROADCAST_OK))
+    assert not unlisted, (
+        f"forced broadcasts with no stated bound: {unlisted} — drop the "
+        "hint if the executed plan is the same without it, else add the "
+        "site to _FORCED_BROADCAST_OK with its size bound"
+    )
+    stale = sorted(set(_FORCED_BROADCAST_OK) - set(found))
+    assert not stale, f"_FORCED_BROADCAST_OK entries with no hint: {stale}"
+    miscounted = {
+        k: (n, len(_FORCED_BROADCAST_OK[k]))
+        for k, n in found.items()
+        if n != len(_FORCED_BROADCAST_OK[k])
+    }
+    assert not miscounted, (
+        f"(hints found, bounds listed) differ: {miscounted} — state one "
+        "bound per F.broadcast( call"
+    )
+    blank = [k for k, bounds in _FORCED_BROADCAST_OK.items() if not all(
+        b.strip() for b in bounds
+    )]
+    assert not blank, f"empty bound for {blank}"

@@ -335,6 +335,27 @@ def test_scratch_dir_prunes_only_aged_transients(tmp_path, monkeypatch):
     assert os.path.isdir(new_dir)
 
 
+def test_timer_reclaims_aged_scratch_before_timing(tmp_path, monkeypatch):
+    """bench.Timer reclaims aged drain scratch when it is built, before
+    any timed window, so no timed drain pays for deleting it."""
+    import os
+    import tempfile as _tf
+    import time
+
+    import bench
+
+    monkeypatch.setattr(_tf, "gettempdir", lambda: str(tmp_path))
+    aged = tmp_path / "kss_ckpt_old"
+    young = tmp_path / "kss_ckpt_fresh"
+    for d in (aged, young):
+        d.mkdir()
+    old = time.time() - 3600
+    os.utime(aged, (old, old))
+    bench.Timer(spark=None)
+    assert not aged.exists(), "aged checkpoint dir not reclaimed by Timer"
+    assert young.exists(), "young checkpoint dir must survive"
+
+
 def test_pagerank_mass_conserved(spark, sf_smoke):
     # every rank in (0,1); total mass ≤ 1 (dangling-node mass may leak
     # by design) and ≥ the pure-teleport floor (1-d) = 0.15
