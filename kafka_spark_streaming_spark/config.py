@@ -271,30 +271,27 @@ def drain_fence_lease_ttl(
     return max(DRAIN_LEASE_FLOOR_S, DRAIN_LEASE_FACTOR * trigger_interval_s)
 
 
-def _pin_fallback(lease: float, source: str) -> float:
-    """The one place the pin-TTL fallback policy lives (code-review
-    r20, second pass — it had drifted into two near-verbatim copies):
-    PIN_TTL_FALLBACK_FACTOR x the writer's lease, with the sizing
-    warning naming where the lease came from."""
-    import warnings
+def pin_ttl_for_writer(
+    spark: SparkSession, writer_lease_ttl: float | None = None
+) -> float | None:
+    """Auto-expiry TTL for reader pins handed out by a store whose
+    WRITER holds the given effective fence lease, or None for
+    pid-liveness pins (the default).  Separate knob from
+    fence_lease_ttl by design (see the key's comment).  Resolution
+    order:
 
-    fallback = lease * PIN_TTL_FALLBACK_FACTOR
-    warnings.warn(
-        f"{source} but {STORE_PIN_TTL_KEY} is not set: reader pins "
-        f"will auto-expire after {PIN_TTL_FALLBACK_FACTOR:g}x that "
-        f"lease ({fallback}s). Set {STORE_PIN_TTL_KEY} to the "
-        "intended vacuum horizon (longest allowed read).",
-        stacklevel=3,
-    )
-    return fallback
+    1. an EXPLICIT pinTtlSec always wins — including 0, an opt-out
+       that keeps pid-liveness pins even in fence-lease mode
+       (code-review r19: the fallback must not override the key's
+       documented '0 = off');
+    2. else, when the leaseTtlSec conf is set, PIN_TTL_FALLBACK_FACTOR
+       x that lease, with a warning;
+    3. else, when the writer's effective lease is on (the registered
+       drains run lease-mode by DEFAULT without setting the conf,
+       code-review r20), PIN_TTL_FALLBACK_FACTOR x that lease, with
+       the same warning.
 
-
-def store_pin_ttl(spark: SparkSession) -> float | None:
-    """Auto-expiry TTL for reader pins, or None for pid-liveness (the
-    default).  Separate knob from fence_lease_ttl by design (see the
-    key's comment), but when the fence lease is on and this knob is
-    UNSET, PIN_TTL_FALLBACK_FACTOR x the fence TTL is used as the pin
-    TTL with a warning (code-review r19; widened ADVICE r19): in
+    Why the fallback (code-review r19; widened ADVICE r19): in
     multi-host mode pid pins are simply wrong — they can both reap a
     live remote reader's pin (local pid table says dead) and block
     vacuum forever (coincidental local pid says alive) — but the raw
@@ -304,44 +301,29 @@ def store_pin_ttl(spark: SparkSession) -> float | None:
     never renewed; the fence is renewed every commit).  The factor
     keeps multi-batch reads protected while a crashed remote reader's
     pin still expires promptly.  Deployments should still set
-    pinTtlSec explicitly to the intended vacuum horizon — and an
-    EXPLICIT pinTtlSec=0 is an opt-out that keeps pid-liveness pins
-    even in fence-lease mode (code-review r19: the fallback must not
-    override the key's documented '0 = off')."""
+    pinTtlSec explicitly to the intended vacuum horizon."""
+    import warnings
+
     raw = spark.conf.get(STORE_PIN_TTL_KEY, None)
     if raw is not None:
-        # explicit setting wins outright — including an explicit 0
-        # (pid mode), which must NOT fall through to the fence TTL
         return _parse_ttl(STORE_PIN_TTL_KEY, raw)
     lease = fence_lease_ttl(spark)
-    if lease is None:
+    if lease is not None:
+        source = f"{FENCE_LEASE_TTL_KEY} is set"
+    elif writer_lease_ttl is not None:
+        lease = writer_lease_ttl
+        source = f"this store's writer runs a {writer_lease_ttl}s fence lease"
+    else:
         return None
-    return _pin_fallback(lease, f"{FENCE_LEASE_TTL_KEY} is set")
-
-
-def pin_ttl_for_writer(
-    spark: SparkSession, writer_lease_ttl: float | None
-) -> float | None:
-    """Pin TTL for snapshots handed out by a store whose WRITER holds
-    the given effective fence lease (code-review r20): the r20 drains
-    run lease-mode by DEFAULT without setting the leaseTtlSec conf, so
-    store_pin_ttl's conf-keyed fallback saw 'no lease' and silently
-    left their snapshot pins pid-based — the exact multi-host wrongness
-    the fallback exists to prevent.  Resolution order: an EXPLICIT
-    pinTtlSec always wins (including 0 = pid pins); else the conf-knob
-    chain (store_pin_ttl, which covers a conf-set fence lease); else,
-    when the writer's effective lease is on, PIN_TTL_FALLBACK_FACTOR x
-    that lease with the same sizing warning."""
-    raw = spark.conf.get(STORE_PIN_TTL_KEY, None)
-    if raw is not None:
-        return _parse_ttl(STORE_PIN_TTL_KEY, raw)
-    ttl = store_pin_ttl(spark)
-    if ttl is not None or writer_lease_ttl is None:
-        return ttl
-    return _pin_fallback(
-        writer_lease_ttl,
-        f"this store's writer runs a {writer_lease_ttl}s fence lease",
+    fallback = lease * PIN_TTL_FALLBACK_FACTOR
+    warnings.warn(
+        f"{source} but {STORE_PIN_TTL_KEY} is not set: reader pins "
+        f"will auto-expire after {PIN_TTL_FALLBACK_FACTOR:g}x that "
+        f"lease ({fallback}s). Set {STORE_PIN_TTL_KEY} to the "
+        "intended vacuum horizon (longest allowed read).",
+        stacklevel=2,
     )
+    return fallback
 
 
 def dedup_compact_every(spark: SparkSession) -> int:

@@ -27,7 +27,7 @@ Mechanics
   maintenance (``compact_dedup_store``) can distinguish "a drain is
   live" from "a writer once existed"; ``live_writer`` is that
   guard's probe, treating an idled tenure, an expired lease, or (in
-  pid mode) an active token whose pid is dead as stale.
+  pid mode) a token whose pid is dead as stale.
 
 Guarantee and caveat (same class as any advisory fencing without
 compare-and-swap): once a new writer's acquire is durable, every
@@ -152,7 +152,6 @@ class WriterFence:
             # then picks exactly one winner
             "nonce": os.urandom(8).hex(),
             "purpose": purpose,
-            "active": True,
         }
         if lease_ttl_s is not None:
             token["lease_ttl_s"] = float(lease_ttl_s)
@@ -170,53 +169,30 @@ class WriterFence:
         # re-create one afterwards, which stays a dead file until the
         # next acquire sweeps it.  Filters (code-review r19, twice):
         # only epochs BELOW ours — a stalled acquirer's delayed sweep
-        # must not delete a NEWER tenure's idle marker and un-idle it
-        # (the transitional shared `.idle` format keeps its tenure in
-        # the CONTENT, so it is read before unlinking for the same
-        # guard); isdecimal, not isdigit, so a junk name cannot crash
-        # the acquire that already committed its token (int() rejects
-        # the non-ASCII digits isdigit accepts); and FRESH mkstemp
-        # temps (random '.suffix') are never unlinked out from under
-        # a concurrent idle(), while temps orphaned by a hard kill —
+        # must not delete a NEWER tenure's idle marker and un-idle it;
+        # isdecimal, not isdigit, so a junk name cannot crash the
+        # acquire that already committed its token (int() rejects the
+        # non-ASCII digits isdigit accepts); and FRESH mkstemp temps
+        # (random '.suffix') are never unlinked out from under a
+        # concurrent idle(), while temps orphaned by a hard kill —
         # which nothing else ever reclaims — age out after an hour.
         import time
 
         d = os.path.dirname(marker_path) or "."
-        base = os.path.basename(marker_path)
-        prefix = base + ".idle-"
+        prefix = os.path.basename(marker_path) + ".idle-"
         now = time.time()
         for name in os.listdir(d):
-            if not name.startswith(base + ".idle"):
+            if not name.startswith(prefix):
                 continue
             path = os.path.join(d, name)
-            if name == base + ".idle":
-                try:
-                    legacy = _read_token(path)
-                except ValueError:
-                    continue  # junk content: leave for a human
-                if (
-                    legacy
-                    and isinstance(legacy.get("epoch"), int)
-                    and legacy["epoch"] >= token["epoch"]
-                ):
-                    continue  # a newer-or-equal tenure's idle state
-            elif name.startswith(prefix):
-                ep, _, nonce = name[len(prefix):].partition("-")
-                if ep.isdecimal() and nonce and "." not in nonce:
-                    # committed per-tenure shape: epoch guard
-                    if int(ep) >= token["epoch"]:
-                        continue
-                else:
-                    # temp/junk shape: age out only (a live idle()'s
-                    # in-flight temp is milliseconds old)
-                    try:
-                        if now - os.stat(path).st_mtime < 3600:
-                            continue
-                    except FileNotFoundError:
-                        continue
+            ep, _, nonce = name[len(prefix):].partition("-")
+            if ep.isdecimal() and nonce and "." not in nonce:
+                # committed per-tenure shape: epoch guard
+                if int(ep) >= token["epoch"]:
+                    continue
             else:
-                # '<base>.idle.XXXX' legacy-format temp or junk: age
-                # out like the per-tenure temps
+                # temp/junk shape: age out only (a live idle()'s
+                # in-flight temp is milliseconds old)
                 try:
                     if now - os.stat(path).st_mtime < 3600:
                         continue
@@ -494,7 +470,7 @@ def live_pins(pin_dir: str) -> list[dict]:
 
 def live_writer(marker_path: str) -> dict | None:
     """The store's writer token if it plausibly belongs to a LIVE
-    writer: its tenure not marked idle (the ``.idle`` sidecar naming
+    writer: its tenure not marked idle (the ``.idle-`` sidecar naming
     this exact epoch+nonce — see WriterFence.idle), plus liveness — a
     LEASE check when the token carries ``lease_ttl_s`` (mtime within
     TTL; authoritative and host-agnostic, r19), else the pid probe
@@ -504,21 +480,8 @@ def live_writer(marker_path: str) -> dict | None:
     import time
 
     tok = _read_token(marker_path)
-    if not tok or not tok.get("active"):
-        return None  # pre-sidecar tokens carry active:False when idled
-    if os.path.exists(_idle_marker(marker_path, tok)):
-        return None  # this tenure finished cleanly
-    # transitional shared-sidecar format (one r19 iteration wrote
-    # `<marker>.idle` with the tenure in the CONTENT): honor it when
-    # it names this exact tenure, so a store idled under that format
-    # is not misreported live until its next acquire sweeps the file
-    legacy = _read_token(marker_path + ".idle")
-    if (
-        legacy
-        and legacy.get("epoch") == tok.get("epoch")
-        and legacy.get("nonce") == tok.get("nonce")
-    ):
-        return None
+    if not tok or os.path.exists(_idle_marker(marker_path, tok)):
+        return None  # never acquired, or this tenure finished cleanly
     ttl = tok.get("lease_ttl_s")
     if ttl is not None:
         try:

@@ -31,8 +31,9 @@ the same sibling-marker convention as the `.layout` sidecar).  Two
 modes:
 
 - STANDALONE (``fence=None``, the CLI path): refuses to run while
-  the token names a LIVE writer (active + pid alive — a drain is
-  appending; ``force=True`` overrides for operator judgment calls),
+  the token names a LIVE writer (fencing.live_writer: tenure not
+  idled, lease fresh or pid alive — a drain is appending;
+  ``force=True`` overrides for operator judgment calls),
   then ACQUIRES its own fence.  The epoch bump means a zombie drain
   that silently survived a failover raises at its next append
   instead of interleaving with the compaction; the fence is
@@ -183,7 +184,7 @@ def pinned_store_read(
     # the pin TTL must see the store WRITER's effective fence lease
     # (code-review r20, second pass): a drain on the r20 lease default
     # acquires with drain_fence_lease_ttl while the conf knobs stay
-    # unset, so the conf-keyed store_pin_ttl alone would hand out
+    # unset, so a TTL from the conf keys alone would hand out
     # pid-based pins — wrong on multi-host.  The writer's lease is in
     # the store's epoch token (set at acquire, never rewritten), so
     # read it from there; no token or a pid-mode token leaves the

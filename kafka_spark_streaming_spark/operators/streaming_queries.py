@@ -326,11 +326,14 @@ def s_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- stream-static enrichment join ---------------------------------------
 # The third streaming join shape (next to stream-stream and stateful):
-# each micro-batch broadcast-joins against a static dimension — no
-# state, the dim is re-resolvable per batch. Here the dim is a
-# batch-computed user→cohort table; at scale it is the classic
-# "enrich events with user metadata" pattern where the dim broadcast
-# replaces any shuffle of the stream.
+# each micro-batch joins against a static dimension — no state, the
+# dim is re-resolvable per batch. Here the dim is a batch-computed
+# user→cohort table; at scale it is the classic "enrich events with
+# user metadata" pattern. The dim grows with the user base, so the
+# planner picks the strategy from its size estimate: it broadcasts the
+# dim at sf0.1 and on the sf1 fixture (the plan a forced hint gave,
+# PERF_NOTES "Forced broadcasts") and may shuffle it once the estimate
+# passes autoBroadcastJoinThreshold.
 @register(
     "s_stream_static_enrich",
     """
@@ -356,7 +359,7 @@ def s_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = file_stream_events(spark, _events_path(sf_dir))
     agg = (
-        stream.join(F.broadcast(dim), "user_id")
+        stream.join(dim, "user_id")
         .groupBy("cohort")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

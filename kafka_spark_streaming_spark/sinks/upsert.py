@@ -23,10 +23,11 @@ Design for scale:
   a `_MANIFEST.json` mapping each live `rb=` partition to the version
   that owns its data, so a new version rewrites only the touched
   partitions' files and inherits the rest as pure metadata — the
-  exact file-remapping move of a Delta/Iceberg MERGE, and unlike the
-  r16 hard-link carry-forward it works on ANY filesystem (object
-  stores have no hard links).  Read fan-out is bounded: when a
-  manifest would reference more than
+  exact file-remapping move of a Delta/Iceberg MERGE, and unlike a
+  hard-link carry-forward it works on ANY filesystem (object stores
+  have no hard links).  A committed version without its manifest is
+  not a layout this sink writes and fails every read loudly.  Read
+  fan-out is bounded: when a manifest would reference more than
   spark.kss.sink.upsertCompactVersions distinct versions, the next
   write folds ALL live partitions into itself (log-structured
   compaction — amortized one full rewrite every ~threshold batches).
@@ -202,20 +203,14 @@ class KeyedUpsertSink:
         used to rmtree+rewrite v_N in place, which deleted the files a
         live snapshot() pin was still reading; now every commit gets
         a fresh name and the superseded attempt lingers until prune,
-        exactly like any other non-head version).  Attempt suffixes
-        are zero-padded AND _versions() sorts numerically on
-        (batch_id, attempt) rather than lexicographically (ADVICE r18:
-        bare '-r10' sorted between '-r1' and '-r2', so after the 10th
-        retry head selection picked a superseded attempt and _prune
-        rmtree'd the newest committed state; numeric sort also keeps
-        pre-fix stores with bare suffixes ordered correctly)."""
+        exactly like any other non-head version).  _versions() sorts
+        numerically on (batch_id, attempt), never on the name."""
         return int(version[2:].split("-", 1)[0])
 
     @staticmethod
     def _attempt_of(version: str) -> int:
         """retry-attempt number of a version dir name (0 for a first
-        attempt).  Parses both the zero-padded '-r000010' form and the
-        bare '-r10' form written before the padding fix."""
+        attempt)."""
         return int(version.rsplit("-r", 1)[1]) if "-r" in version else 0
 
     def _new_version_name(self, batch_id: int, versions: list[str]) -> str:
@@ -232,8 +227,6 @@ class KeyedUpsertSink:
         # exclude in-flight '.tmp' build dirs: after a crash between the
         # tmp write and the rename they linger, and current() must never
         # surface uncommitted state (nor _prune count them toward keep).
-        # Numeric (batch_id, attempt) key, NOT lexicographic — bare
-        # pre-fix '-r10' suffixes break string ordering at k>=10.
         return sorted(
             (
                 d for d in os.listdir(self.path)
@@ -246,47 +239,25 @@ class KeyedUpsertSink:
     def _rb(self, col) -> Column:
         return F.pmod(F.xxhash64(col), F.lit(self.buckets)).cast("int")
 
-    def _head_rb_dirs(self, version: str) -> list[str]:
-        """rb= partition dirs physically present in a committed
-        version ([] for a store written by the pre-r16 unpartitioned
-        layout — the merge then falls back to a full-state LWW once
-        and writes the new layout, a self-migrating upgrade)."""
-        vdir = os.path.join(self.path, version)
-        return sorted(
-            d for d in os.listdir(vdir)
-            if d.startswith("rb=")
-            and os.path.isdir(os.path.join(vdir, d))
-        )
-
-    def _manifest_file(self, version: str) -> dict[str, str] | None:
-        """The version's committed manifest, or None when NO manifest
-        file exists (pre-r17 legacy layouts).  The None sentinel is
-        the one distinction _manifest's {} cannot carry: a committed
-        EMPTY manifest (real empty state — the purge-everything retry
-        outcome) and a flat pre-r16 store both look like {} to
-        callers that only see _manifest (ADVICE r17 upsert.py:281 —
-        write_batch misclassified the former as flat_head and ran a
-        needless all-bucket merge)."""
+    def _manifest(self, version: str) -> dict[str, str]:
+        """{rb= dir → owning version} of a committed version.  Every
+        version write_batch commits carries one (an empty manifest is
+        empty state), so a committed version without it is corruption
+        or a layout this sink never writes: fail loudly rather than
+        guess its ownership."""
         import json
 
         mpath = os.path.join(self.path, version, MANIFEST_NAME)
-        if os.path.exists(mpath):
+        try:
             with open(mpath) as fh:
                 return json.load(fh)
-        return None
-
-    def _manifest(self, version: str) -> dict[str, str]:
-        """{rb= dir → owning version} for a committed version.  A
-        version with no manifest file is a pre-r17 layout: the
-        hard-link carry-forward wrote EVERY live partition into the
-        head (links or data — indistinguishable and irrelevant here),
-        so the head owning all its physical rb= dirs IS its manifest —
-        the old layout is a degenerate manifest and migrates for free.
-        A flat pre-r16 store has neither manifest nor rb= dirs → {}."""
-        committed = self._manifest_file(version)
-        if committed is not None:
-            return committed
-        return {d: version for d in self._head_rb_dirs(version)}
+        except FileNotFoundError:
+            raise ValueError(
+                f"upsert store version {os.path.join(self.path, version)!r}"
+                f" has no {MANIFEST_NAME} — not a layout this sink "
+                "writes; restore its manifest or rebuild the store "
+                "before reattaching"
+            ) from None
 
     def _write_manifest(self, vdir: str, manifest: dict[str, str]) -> None:
         """Written into the STILL-UNCOMMITTED tmp dir (the version
@@ -326,16 +297,7 @@ class KeyedUpsertSink:
         head = versions[-1]
         manifest = self._manifest(head)
         if not manifest:
-            if self._manifest_file(head) is not None:
-                # a committed EMPTY manifest is a real (empty) state —
-                # the purge-everything outcome of an empty retry over a
-                # first-ever batch — not the flat legacy layout
-                return literal_frame(self.spark, READ_SCHEMA), head, manifest
-            # flat pre-r16 unpartitioned store
-            df = self.spark.read.parquet(os.path.join(self.path, head))
-            if "rb" not in df.columns:
-                df = df.withColumn("rb", self._rb(F.col("rowkey")))
-            return df, head, manifest
+            return literal_frame(self.spark, READ_SCHEMA), head, manifest
         by_owner: dict[str, list[str]] = {}
         for rb_dir, owner in manifest.items():
             by_owner.setdefault(owner, []).append(rb_dir)
@@ -430,24 +392,15 @@ class KeyedUpsertSink:
                 # multi-host mode: the pin auto-expires instead of
                 # relying on the single-host pid probe (fencing.live_pins)
                 payload["lease_ttl_s"] = ttl
-            # verify against a FILE-level sentinel where one exists
-            # (ADVICE r19): _prune deletes via shutil.rmtree, which
-            # removes files before the directory, so a pruner caught
-            # MID-rmtree still passes an isdir probe with the data
-            # already gone.  Each version's _MANIFEST.json (present on
-            # every version this code writes) disappears in that same
+            # verify against a FILE-level sentinel (ADVICE r19):
+            # _prune deletes via shutil.rmtree, which removes files
+            # before the directory, so a pruner caught MID-rmtree still
+            # passes an isdir probe with the data already gone.  Each
+            # version's _MANIFEST.json disappears in that same
             # file-removal phase, narrowing the undetected window to
-            # rmtree's final rmdir; pre-r17 manifest-less versions
-            # keep the isdir probe (captured at LISTING time — a
-            # manifest observed then but missing at verify means a
-            # deleter is mid-pass and must fail the verify).
+            # rmtree's final rmdir.
             sentinels = [
-                os.path.join(self.path, v, MANIFEST_NAME)
-                if os.path.isfile(
-                    os.path.join(self.path, v, MANIFEST_NAME)
-                )
-                else os.path.join(self.path, v)
-                for v in pins
+                os.path.join(self.path, v, MANIFEST_NAME) for v in pins
             ]
 
             def verify():
@@ -560,25 +513,14 @@ class KeyedUpsertSink:
             versions = self._versions()
             head = versions[-1] if versions else None
             manifest = self._manifest(head) if head else {}
-            # flat_head keys on manifest-FILE absence, not manifest
-            # emptiness (ADVICE r17): a committed empty manifest is
-            # real empty state, and classifying it as the flat legacy
-            # layout ran a needless all-bucket migration merge.
-            flat_head = (
-                bool(head)
-                and not manifest
-                and self._manifest_file(head) is None
-            )
             vname = self._new_version_name(batch_id, versions)
             out = os.path.join(self.path, vname)
             tmp = out + ".tmp"
             if not rbs:
-                if not head or flat_head:
-                    # empty batch over empty-or-flat state: a 0-row
+                if not head:
+                    # empty batch over an empty store: a 0-row
                     # partitionBy write emits NO files, so the version
-                    # would hold nothing readable.  Skip the version; a
-                    # flat head stays readable as-is and migrates on
-                    # the first non-empty batch (code-review r16).
+                    # would hold nothing readable.  Skip the version.
                     return
                 if self._batch_of(head) >= batch_id:
                     # EMPTY retry of a committed batch whose first
@@ -590,12 +532,10 @@ class KeyedUpsertSink:
                     # partition re-merges under the batch_id < N
                     # filter against the empty batch.  If that purges
                     # the whole store the version commits an EMPTY
-                    # manifest, which current() reads as empty state
-                    # (distinct from the flat-legacy no-manifest-file
-                    # case).
+                    # manifest, which current() reads as empty state.
                     rbs = sorted(int(d[3:]) for d in manifest)
                 else:
-                    # empty batch over a manifest head: a pure-metadata
+                    # empty batch over a committed head: a pure-metadata
                     # version — every live partition carries forward in
                     # the manifest verbatim, no Spark job at all
                     if os.path.exists(tmp):
@@ -609,11 +549,7 @@ class KeyedUpsertSink:
                     self._prune(keep=self.keep_versions)
                     fence.heartbeat()
                     return
-            if flat_head:
-                # pre-r16 unpartitioned head: one full merge migrates
-                # the layout (no partition dirs to prune or carry)
-                rbs = list(range(self.buckets))
-            elif head and self._batch_of(head) >= batch_id:
+            if head and self._batch_of(head) >= batch_id:
                 # RETRY of a committed batch (ADVICE r16): merge every
                 # live partition so the batch_id < N purge reaches the
                 # first attempt's rows wherever its (possibly

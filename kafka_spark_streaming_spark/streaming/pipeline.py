@@ -190,39 +190,17 @@ class StreamerPipeline:
                 # summary cell and the bulk cells have disjoint cell
                 # keys (bare-epoch/'message*' vs prefixed/'content'), so
                 # folding them into a single version is last-write-wins
-                # equivalent to the old put_single + put_bulk pair while
+                # equivalent to a put_single + put_bulk pair while
                 # paying the merge cycle (prior read + key window +
                 # state write + prune) once instead of twice — measured
-                # 1.54 -> 0.9 s of the batch body at sf0.1. The stamp
-                # stays 2*batch_id: a stream resuming over sink state
-                # written by the old two-write scheme (cells at 2b and
-                # 2b+1) must write ABOVE the old head — a bare batch_id
-                # would sort below v_{2N-1}, be invisible to current(),
-                # and get pruned (code-review r15); 2N > 2N-1 keeps
-                # version order and the prior-filter monotone across
-                # the upgrade, and a foreachBatch retry still rewrites
-                # the same version idempotently — even when cfg.clock
-                # is wall-clock and the retry's epoch rowkey drifts,
+                # 1.54 -> 0.9 s of the batch body at sf0.1.  A
+                # foreachBatch retry commits a fresh attempt of the
+                # same batch_id idempotently — even when cfg.clock is
+                # wall-clock and the retry's epoch rowkey drifts,
                 # because the sink detects the retry (head >= batch_id)
                 # and full-merges, purging the first attempt's rows in
-                # every rb bucket (ADVICE r16 upsert.py:205).  One
-                # benign corner (ADVICE r15): if the last PRE-upgrade
-                # batch N committed both of its sink versions (v_2N
-                # and v_2N+1) but the stream checkpoint did not, the
-                # replayed merged write lands at 2N, BELOW the stale
-                # v_2N+1 head — current() keeps serving v_2N+1 until
-                # batch N+1 writes v_2N+2.  Under a DETERMINISTIC
-                # cfg.clock the stale head's cells are identical to
-                # the rewrite (same batch, same cells, split across
-                # two versions); under the default wall clock the
-                # stale head can briefly serve the first attempt's
-                # epoch summary instead of the replayed one (ADVICE
-                # r16 pipeline.py:130) — stale-but-was-once-true
-                # state, one batch wide, converging at v_2N+2.  The
-                # corner exists only for streams upgraded mid-flight
-                # from the pre-r15 two-write scheme; new stores never
-                # have a v_2N+1 head.
-                self.sink.write_batch(cells, 2 * batch_id)
+                # every rb bucket (ADVICE r16 upsert.py:205).
+                self.sink.write_batch(cells, batch_id)
         finally:
             batch_df.unpersist()
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
+import tempfile
 from decimal import Decimal
 
 import duckdb
@@ -18,8 +20,28 @@ import duckdb
 from kafka_spark_streaming_spark.tables import TABLES
 
 
+# DuckDB defaults to 80% of physical RAM and spills into `.tmp` under
+# the working directory. The oracle runs beside a Spark JVM, so it gets
+# an explicit limit, and it spills under the system temp dir instead
+# of into the checkout.
+ORACLE_MEMORY_LIMIT = "8GB"
+
+
+def _connect() -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB connection with an explicit memory limit and
+    a spill directory under the system temp dir."""
+    return duckdb.connect(
+        config={
+            "memory_limit": ORACLE_MEMORY_LIMIT,
+            "temp_directory": os.path.join(
+                tempfile.gettempdir(), f"duckdb_oracle_spill_{os.getpid()}"
+            ),
+        }
+    )
+
+
 def run_oracle(sql: str, sf_dir: str) -> tuple[list[str], list[tuple]]:
-    con = duckdb.connect()
+    con = _connect()
     try:
         for t in TABLES:
             con.execute(
@@ -127,7 +149,7 @@ def compare_dtypes(spark_pdf, ora_pdf) -> list[str]:
 
 
 def run_oracle_df(sql: str, sf_dir: str):
-    con = duckdb.connect()
+    con = _connect()
     try:
         for t in TABLES:
             con.execute(

@@ -476,14 +476,12 @@ def test_snapshot_survives_replay_of_pinned_batch(spark, tmp_path):
 
 
 def test_attempt_ordering_at_double_digit_retries(spark, tmp_path):
-    """Regression (ADVICE r18 upsert.py:190): bare '-r10' sorts
-    lexicographically between '-r1' and '-r2', so after the 10th
-    retry committed, head selection picked the superseded '-r9'
-    attempt (current() read stale state) and _prune treated the true
-    newest attempt as non-live and deleted it.  _versions() now sorts
-    numerically on (batch_id, attempt) — which also keeps a pre-fix
-    store holding bare suffixes ordered — and new attempt names are
-    zero-padded."""
+    """Regression (ADVICE r18 upsert.py:190): after the 10th retry
+    committed, head selection picked a superseded attempt (current()
+    read stale state) and _prune treated the true newest attempt as
+    non-live and deleted it.  _versions() sorts numerically on
+    (batch_id, attempt), and the next attempt name continues from the
+    highest committed attempt, zero-padded."""
     from kafka_spark_streaming_spark.config import UPSERT_STATE_BUCKETS_KEY
     from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
@@ -492,20 +490,20 @@ def test_attempt_ordering_at_double_digit_retries(spark, tmp_path):
         sink = KeyedUpsertSink(spark, str(tmp_path / "cells"))
     finally:
         spark.conf.unset(UPSERT_STATE_BUCKETS_KEY)
-    # a pre-fix store: bare attempt suffixes up to the 10th retry
-    legacy = ["v_000000000000"] + [
-        f"v_000000000000-r{k}" for k in range(1, 11)
-    ]
-    for d in legacy:
+    # a committed first attempt plus ten zero-padded retries
+    for d in ["v_000000000000"] + [
+        f"v_000000000000-r{k:06d}" for k in range(1, 11)
+    ]:
         os.makedirs(os.path.join(sink.path, d))
+        sink._write_manifest(os.path.join(sink.path, d), {})
     vs = sink._versions()
-    assert vs[-1] == "v_000000000000-r10", vs
+    assert vs[-1] == "v_000000000000-r000010", vs
     assert [sink._attempt_of(v) for v in vs] == list(range(11))
-    # the next attempt continues from 10, zero-padded, and still
-    # sorts after every bare predecessor
+    # the next attempt continues from 10, zero-padded
     nxt = sink._new_version_name(0, vs)
     assert nxt == "v_000000000000-r000011"
     os.makedirs(os.path.join(sink.path, nxt))
+    sink._write_manifest(os.path.join(sink.path, nxt), {})
     assert sink._versions()[-1] == nxt
     # prune keeps the true newest attempt, not a lexicographic head
     sink._prune(keep=1)
@@ -535,6 +533,40 @@ def test_current_tracks_head_across_double_digit_replays(spark, tmp_path):
     # the live head lineage
     sink.write_batch(_cells(spark, [("k1", "v1")]), 1)
     assert [r.value for r in sink.current().collect()] == ["v1"]
+
+
+def test_manifestless_version_fails_closed(spark, tmp_path):
+    """Every version the sink commits carries _MANIFEST.json, so a
+    committed version without one (parquet data, no manifest) is not a
+    layout this sink writes: current(), snapshot() and write_batch()
+    each raise a pointed ValueError instead of guessing which rb
+    partitions the version owns, and nothing is committed over it."""
+    import re
+
+    from kafka_spark_streaming_spark.sinks.upsert import (
+        MANIFEST_NAME,
+        KeyedUpsertSink,
+    )
+
+    path = str(tmp_path / "cells")
+    sink = KeyedUpsertSink(spark, path)
+    spark.createDataFrame(
+        [(f"k{i}", "cf1", "q", f"v{i}", 0) for i in range(4)],
+        "rowkey string, cf string, qualifier string, value string,"
+        " batch_id long",
+    ).write.parquet(os.path.join(path, "v_000000000000"))
+    assert sink._versions() == ["v_000000000000"]
+    match = re.escape(f"has no {MANIFEST_NAME}")
+    with pytest.raises(ValueError, match=match):
+        sink.current()
+    with pytest.raises(ValueError, match=match):
+        sink.snapshot()
+    with pytest.raises(ValueError, match=match):
+        sink.write_batch(_cells(spark, [("k1", "v1-new")]), 1)
+    assert sink._versions() == ["v_000000000000"]
+    assert not os.path.exists(
+        os.path.join(path, "v_000000000000", MANIFEST_NAME)
+    )
 
 
 def test_snapshot_pins_are_durable_cross_process(spark, tmp_path):
@@ -851,16 +883,16 @@ def test_idle_sidecar_cannot_clobber_usurper(tmp_path):
     past its check (simulated by writing the sidecar directly) cannot
     fence out the legitimate writer: the sidecar names a superseded
     epoch/nonce and is ignored."""
-    from kafka_spark_streaming_spark.fencing import _write_token
+    from kafka_spark_streaming_spark.fencing import (
+        _idle_marker,
+        _write_token,
+    )
 
     marker = str(tmp_path / "store.epoch")
     f1 = WriterFence.acquire(marker, purpose="drain")
     f2 = WriterFence.acquire(marker, purpose="drain-2")
     # zombie f1's idle, bypassing its check (the race window)
-    _write_token(
-        marker + ".idle",
-        {"epoch": f1.epoch, "nonce": f1.token["nonce"]},
-    )
+    _write_token(_idle_marker(marker, f1.token), {})
     assert live_writer(marker) is not None, (
         "a superseded tenure's idle sidecar must not mark the live "
         "writer inactive"
@@ -871,7 +903,7 @@ def test_idle_sidecar_cannot_clobber_usurper(tmp_path):
 
 
 def test_pin_ttl_falls_back_to_fence_lease(spark):
-    """store_pin_ttl: explicit pinTtlSec wins; unset with the fence
+    """pin_ttl_for_writer: explicit pinTtlSec wins; unset with the fence
     lease on falls back to PIN_TTL_FALLBACK_FACTOR x the fence TTL
     with a warning (multi-host mode must never silently use pid pins,
     but the raw batch-sized fence TTL would strip vacuum protection
@@ -883,14 +915,14 @@ def test_pin_ttl_falls_back_to_fence_lease(spark):
         FENCE_LEASE_TTL_KEY,
         PIN_TTL_FALLBACK_FACTOR,
         STORE_PIN_TTL_KEY,
-        store_pin_ttl,
+        pin_ttl_for_writer,
     )
 
-    assert store_pin_ttl(spark) is None
+    assert pin_ttl_for_writer(spark) is None
     spark.conf.set(FENCE_LEASE_TTL_KEY, "30")
     try:
         with pytest.warns(UserWarning, match="pinTtlSec"):
-            assert store_pin_ttl(spark) == 30.0 * PIN_TTL_FALLBACK_FACTOR
+            assert pin_ttl_for_writer(spark) == 30.0 * PIN_TTL_FALLBACK_FACTOR
         assert PIN_TTL_FALLBACK_FACTOR >= 8, (
             "the fallback factor exists to cover multi-batch reads; "
             "a small factor re-opens the silent-protection-loss gap"
@@ -898,7 +930,7 @@ def test_pin_ttl_falls_back_to_fence_lease(spark):
         spark.conf.set(STORE_PIN_TTL_KEY, "600")
         with _warnings.catch_warnings():
             _warnings.simplefilter("error")  # explicit knob: no warning
-            assert store_pin_ttl(spark) == 600.0
+            assert pin_ttl_for_writer(spark) == 600.0
     finally:
         spark.conf.unset(FENCE_LEASE_TTL_KEY)
         spark.conf.unset(STORE_PIN_TTL_KEY)
@@ -911,13 +943,13 @@ def test_explicit_pin_ttl_zero_opts_out_of_fallback(spark):
     from kafka_spark_streaming_spark.config import (
         FENCE_LEASE_TTL_KEY,
         STORE_PIN_TTL_KEY,
-        store_pin_ttl,
+        pin_ttl_for_writer,
     )
 
     spark.conf.set(FENCE_LEASE_TTL_KEY, "30")
     spark.conf.set(STORE_PIN_TTL_KEY, "0")
     try:
-        assert store_pin_ttl(spark) is None
+        assert pin_ttl_for_writer(spark) is None
     finally:
         spark.conf.unset(FENCE_LEASE_TTL_KEY)
         spark.conf.unset(STORE_PIN_TTL_KEY)
@@ -1060,12 +1092,10 @@ def test_drain_runs_end_to_end_in_lease_mode(spark, sf_smoke):
 
 def test_acquire_sweep_guards_and_ages(tmp_path):
     """The acquire-time sidecar sweep (code-review r19, final pass):
-    older tenures' committed sidecars go; newer/equal tenures' stay
-    (per-tenure AND legacy shared format, whose tenure lives in the
-    content); fresh mkstemp-shaped temps stay (a live idle() may be
-    mid-write); hard-kill-orphaned temps age out; junk names never
-    crash the acquire."""
-    import json
+    older tenures' committed sidecars go; newer/equal tenures' stay;
+    fresh mkstemp-shaped temps stay (a live idle() may be mid-write);
+    hard-kill-orphaned temps age out; junk names never crash the
+    acquire."""
     import time
 
     from kafka_spark_streaming_spark.fencing import _write_token
@@ -1078,10 +1108,6 @@ def test_acquire_sweep_guards_and_ages(tmp_path):
     # a NEWER tenure's sidecar (as if a stalled sweeper raced it)
     newer = f"{marker}.idle-9-{'ab' * 8}"
     _write_token(newer, {})
-    # legacy shared sidecar naming a newer tenure: must survive
-    legacy = marker + ".idle"
-    with open(legacy, "w") as fh:
-        json.dump({"epoch": 9, "nonce": "ab" * 8}, fh)
     # fresh temp (live idle mid-write) and an aged orphan temp
     fresh_tmp = f"{marker}.idle-1-deadbeef.AbCdEf"
     aged_tmp = f"{marker}.idle-1-deadbeef.ZyXwVu"
@@ -1099,7 +1125,6 @@ def test_acquire_sweep_guards_and_ages(tmp_path):
     f2 = WriterFence.acquire(marker, purpose="t2")  # epoch 2: sweeps
     assert not os.path.exists(old_sidecar), "older tenure swept"
     assert os.path.exists(newer), "newer tenure's sidecar must survive"
-    assert os.path.exists(legacy), "legacy sidecar naming newer tenure kept"
     assert os.path.exists(fresh_tmp), "fresh in-flight temp kept"
     assert not os.path.exists(aged_tmp), "orphaned temp aged out"
     assert not os.path.exists(junk), "aged junk aged out, no crash"

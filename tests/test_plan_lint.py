@@ -247,9 +247,6 @@ _FORCED_BROADCAST_OK = {
     ("operators.text", "vocab_broadcast"): (
         "only when the source table is ≤ _VOCAB_HINT_SOURCE_BYTES on disk",
     ),
-    ("operators.streaming_queries", "s_stream_static_enrich"): (
-        "one row per distinct user_id (the user dimension, not events)",
-    ),
     ("operators.streaming_queries", "s_incremental_ann_ivf"): (
         "≤ N_QUERIES × n_probe rows (query cells)",
     ),

@@ -1011,81 +1011,6 @@ def test_upsert_merge_prunes_state_partitions(spark, tmp_path):
     assert "rb" not in sink.current().columns
 
 
-def test_upsert_sink_migrates_unpartitioned_state(spark, tmp_path):
-    """A store written by the pre-r16 UNPARTITIONED layout must keep
-    working: the first write_batch over it detects the missing rb=
-    dirs, falls back to one full-state merge (nothing to prune or
-    carry), and writes the new partitioned layout — a
-    self-migrating upgrade, no state lost."""
-    import os
-
-    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
-
-    path = str(tmp_path / "cells")
-    sink = KeyedUpsertSink(spark, path)
-    old = spark.createDataFrame(
-        [(f"k{i}", "cf1", "q", f"v{i}", 0) for i in range(20)],
-        "rowkey string, cf string, qualifier string, value string,"
-        " batch_id long",
-    )
-    # hand-write an old-layout committed version (flat, no rb= dirs)
-    old.write.parquet(os.path.join(path, "v_000000000000"))
-    assert sink._head_rb_dirs("v_000000000000") == []
-
-    one = spark.createDataFrame(
-        [("k5", "cf1", "q", "v5-new")],
-        "rowkey string, cf string, qualifier string, value string",
-    )
-    sink.write_batch(one, 1)
-    state = {r["rowkey"]: r["value"] for r in sink.current().collect()}
-    assert len(state) == 20 and state["k5"] == "v5-new"
-    assert state["k11"] == "v11"
-    # and the store is now on the partitioned layout
-    assert sink._head_rb_dirs(sink._versions()[-1])
-
-
-def test_upsert_sink_migrates_hardlink_layout(spark, tmp_path):
-    """A store written by the r16 HARD-LINK layout (rb= dirs, no
-    _MANIFEST.json) must keep working: the head owning all its
-    physical rb= dirs IS its manifest (degenerate case), so the first
-    write over it carries untouched partitions forward as manifest
-    entries and the store is on the manifest layout from then on —
-    no state lost, no rewrite of untouched data."""
-    import json
-    import os
-
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        MANIFEST_NAME,
-        KeyedUpsertSink,
-    )
-
-    sink = KeyedUpsertSink(spark, str(tmp_path / "cells"))
-    cells0 = spark.createDataFrame(
-        [(f"k{i}", "cf1", "q", f"v{i}") for i in range(40)],
-        "rowkey string, cf string, qualifier string, value string",
-    )
-    sink.write_batch(cells0, 0)
-    head0 = sink._versions()[-1]
-    # simulate the r16 layout: physically-complete head, no manifest
-    os.remove(os.path.join(sink.path, head0, MANIFEST_NAME))
-
-    one = spark.createDataFrame(
-        [("k3", "cf1", "q", "v3-new")],
-        "rowkey string, cf string, qualifier string, value string",
-    )
-    sink.write_batch(one, 1)
-    state = {r["rowkey"]: r["value"] for r in sink.current().collect()}
-    assert len(state) == 40 and state["k3"] == "v3-new"
-    assert state["k7"] == "v7"
-    head1 = sink._versions()[-1]
-    with open(os.path.join(sink.path, head1, MANIFEST_NAME)) as fh:
-        man = json.load(fh)
-    owners = set(man.values())
-    assert owners == {head0, head1}, "untouched partitions not carried"
-    # and the new version physically holds ONLY the touched partition
-    assert len(sink._head_rb_dirs(head1)) == 1
-
-
 def test_upsert_manifest_compaction_bounds_read_fanout(spark, tmp_path):
     """spark.kss.sink.upsertCompactVersions caps how many distinct
     versions a manifest may reference: a long run of single-key
@@ -1455,9 +1380,9 @@ def test_store_bucket_configs_steer_layout(spark, tmp_path, sf_smoke):
             "rowkey string, cf string, qualifier string, value string",
         )
         sink.write_batch(cells, 0)
+        head = os.path.join(sink.path, sink._versions()[-1])
         rbs = sorted(
-            int(p[3:])
-            for p in sink._head_rb_dirs(sink._versions()[-1])
+            int(p[3:]) for p in os.listdir(head) if p.startswith("rb=")
         )
         assert rbs == [0, 1, 2]
 
