@@ -31,11 +31,14 @@ Consistency contract: a store's bucket count is fixed at the first
 write — and ENFORCED, not just documented (code-review r16): the
 upsert sink persists its count in a `_BUCKETS` marker inside the
 store, and the incremental-dedup store persists both counts in a
-sidecar `<store>.layout` marker at its first non-empty append.  Every
+sidecar `<store>.layout` marker at its first non-empty batch.  Every
 later attach/batch reads the marker, so a conf change mid-run or
 across a restart re-seeds nothing and can never make probes disagree
-with the directories on disk.  The conf values only seed brand-new
-stores.
+with the leaves the store's manifests name.  The conf values only
+seed brand-new stores.  The stores' contents follow one commit
+protocol (manifest.py): every batch commits an immutable version
+whose `_MANIFEST.json` names the files a read sees, so a reader sees
+a whole committed batch or none of it, and never a row twice.
 """
 
 from __future__ import annotations
@@ -86,14 +89,14 @@ UPSERT_KEEP_VERSIONS_KEY = "spark.kss.sink.upsertKeepVersions"
 UPSERT_KEEP_VERSIONS_DEFAULT = 2
 
 # -- incremental near-dedup: drain-integrated store compaction ---------------
-# The dedup store appends one file per (batch, touched leaf) by
-# design; compact_dedup_store (operators/store_maintenance.py) folds
-# leaves back to one file but existed only as a manual CLI, so a
+# Each dedup-store version adds one file per touched leaf by design;
+# compact_dedup_store (operators/store_maintenance.py) folds leaves
+# back to one file but existed only as a manual CLI, so a
 # long-running stream still grew O(batches × buckets) files between
 # operator interventions (VERDICT r17 #2).  With this knob > 0, the
 # incremental-near-dedup drain invokes the compaction pass every N
 # micro-batches from inside its own foreachBatch body — a store-idle
-# point (the batch's append has committed; the next batch cannot
+# point (the batch's version has committed; the next batch cannot
 # start until the callback returns) and the same writer context, so
 # the single-writer contract holds by construction.  Default 0 = off
 # (manual maintenance, the pre-r18 behavior); a POLICY knob, read

@@ -1,7 +1,8 @@
 """Writer fencing for the engine's on-disk incremental stores.
 
-Both versioned stores (the keyed-upsert sink's version dirs and the
-incremental-dedup append store) are SINGLE-writer: the writer is a
+All three on-disk stores (the keyed-upsert sink, the incremental-dedup
+store and the streaming-IVF store, which commit through one manifest
+protocol — manifest.py) are SINGLE-writer: the writer is a
 foreachBatch body and Structured Streaming guarantees one live query
 per checkpoint.  That contract held by documentation only (VERDICT
 r17 #1) — the reference got real enforcement for free from HBase
@@ -15,11 +16,10 @@ Mechanics
   (unique-tmp write + fsync + ``os.replace``, then a read-back that
   raises if a concurrent acquire landed on top — last acquire wins).
 - ``fence.check()`` re-reads the token before every commit-point
-  mutation (version rename, state prune, store append, compaction
-  delete phase) and raises :class:`StaleWriterError` if any newer
-  writer has acquired since.  A zombie driver that lost a failover
-  therefore fails LOUDLY at its next commit instead of interleaving
-  renames/appends with the new driver's.
+  mutation (the version rename and the prune's deletions) and raises
+  :class:`StaleWriterError` if any newer writer has acquired since.
+  A zombie driver that lost a failover therefore fails LOUDLY at its
+  next commit instead of interleaving renames with the new driver's.
 - ``fence.idle()`` marks the holder's TENURE finished by creating a
   per-tenure sidecar file (``<marker>.idle-<epoch>-<nonce>``; the
   shared token is never rewritten after acquire — rewrites had
@@ -34,9 +34,10 @@ compare-and-swap): once a new writer's acquire is durable, every
 LATER ``check()`` by an older writer raises — the zombie cannot
 start a new commit.  A check that passed immediately before the
 usurper's acquire can still finish its in-flight rename (the window
-is one syscall); both stores tolerate that specific interleaving —
-the upsert sink's retry path purges by ``batch_id`` and the dedup
-store's reads are duplicate-tolerant.  On a real deployment the
+is one syscall); that lands one whole version, which the newer
+writer's next listing simply takes as the head (the upsert sink's
+retry path then purges by ``batch_id``; an append store's retry of a
+committed batch commits nothing).  On a real deployment the
 token maps onto a primitive with a true CAS (object-store
 conditional PUT / a catalog lock); the call sites here are the part
 that carries over.  Liveness has both shapes in-tree (r19): the
@@ -286,11 +287,10 @@ def pid_alive(pid) -> bool:
 
 def write_pin(pin_dir: str, payload: dict) -> str:
     """Durably publish a reader pin file (unique name, unique-tmp +
-    fsync + replace) and return its path.  A pin names resources
-    (store versions, data files) that pruners/compactors must not
-    delete while the holder pid is alive; ``live_pins`` is the
-    reading side.  Shared by the upsert sink's snapshot pins and the
-    append stores' pinned reads so the lifecycle cannot drift."""
+    fsync + replace) and return its path.  A pin names store VERSIONS
+    that no prune may delete while the holder is live; ``live_pins``
+    is the reading side.  Shared by every store's version pin
+    (manifest.ManifestStore._snapshot)."""
     os.makedirs(pin_dir, exist_ok=True)
     path = os.path.join(
         pin_dir, f"pin-{os.getpid()}-{os.urandom(8).hex()}.json"
@@ -310,9 +310,9 @@ def release_pin(pin_path: str) -> None:
 
 
 class PinRaceLost(Exception):
-    """A pin attempt observed state vanishing under it (a pruner or
-    compactor won the listing-to-pin window); ``pin_guarded`` retries
-    the attempt against the store's new head."""
+    """A pin attempt observed state vanishing under it (a pruner won
+    the listing-to-pin window); ``pin_guarded`` retries the attempt
+    against the store's new head."""
 
 
 def is_path_not_found(exc) -> bool:
@@ -336,9 +336,9 @@ def is_path_not_found(exc) -> bool:
 
 
 def pin_guarded(pin_dir: str, attempt, attempts: int = 5, what: str = "pinned read"):
-    """The publish-then-verify pin protocol, shared by the upsert
-    sink's snapshot() and the append stores' pinned_store_read so the
-    lifecycle cannot drift (code-review r19).
+    """The publish-then-verify pin protocol of the shared version pin
+    (manifest.ManifestStore._snapshot — the upsert sink's snapshot()
+    and the dedup/IVF stores' pinned_store_read).
 
     ``attempt()`` returns ``(payload, verify, finish)``:
 
@@ -371,8 +371,8 @@ def pin_guarded(pin_dir: str, attempt, attempts: int = 5, what: str = "pinned re
             return finish(None)
         path = write_pin(pin_dir, payload)
         # ANY exception out of verify/finish must not leak the pin —
-        # a lingering pid-mode pin blocks compaction sweeps for the
-        # whole driver lifetime (code-review r19); PinRaceLost
+        # a lingering pid-mode pin blocks prunes for the whole
+        # driver lifetime (code-review r19); PinRaceLost
         # retries, everything else re-raises after the release.
         try:
             ok = verify()
@@ -408,7 +408,7 @@ def live_pins(pin_dir: str) -> list[dict]:
     and pins gate only deletions, never correctness).  A pin file
     that does not parse is outside interference and fails LOUDLY —
     silently ignoring it could let a pruner delete a live reader's
-    files."""
+    versions."""
     import time
 
     out: list[dict] = []

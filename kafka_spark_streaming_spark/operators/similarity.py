@@ -492,12 +492,14 @@ def _ann_ivf_oracle() -> str:
 
 
 def ivf_assign_catalyst(centroids) -> F.Column:
-    """argmax-cosine cell id, pure Catalyst: greatest() over per-centroid
-    dot products of the normalized vector. The HOF dots are interpreted
-    (not codegen'd) and the when-chain re-evaluates them, so this costs
-    ~3.5 s per pass over 2000×16 at sf0.1 — kept ONLY as the exactness
-    twin for ivf_assign_arrow (same role as lsh_buckets vs
-    lsh_buckets_arrow); no registered query executes it."""
+    """argmax-cosine cell id, pure Catalyst: one transform() over the
+    centroid matrix yields every dot product of the normalized vector
+    in a single pass, and the argmax is the LAST position holding the
+    max (ties to the highest cell, as the oracle and the Arrow twin
+    break them).  The HOF dots are interpreted (not codegen'd) — kept
+    ONLY as the exactness twin for ivf_assign_arrow (same role as
+    lsh_buckets vs lsh_buckets_arrow); no registered query executes
+    it."""
     norm = F.sqrt(
         F.aggregate(
             F.col("embedding"),
@@ -505,24 +507,25 @@ def ivf_assign_catalyst(centroids) -> F.Column:
             lambda a, x: a + x.cast("double") * x.cast("double"),
         )
     )
-    dots = [
-        F.aggregate(
+    cmat = F.array(
+        *[F.array(*[F.lit(float(v)) for v in c]) for c in centroids]
+    )
+    dots = F.transform(
+        cmat,
+        lambda c: F.aggregate(
             F.zip_with(
-                F.col("embedding"),
-                F.array(*[F.lit(float(v)) for v in c]),
-                lambda a, b: a.cast("double") * b,
+                F.col("embedding"), c, lambda a, b: a.cast("double") * b
             ),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        / norm
-        for c in centroids
-    ]
-    best = F.greatest(*dots)
-    cell = F.lit(0)
-    for i, d in enumerate(dots):
-        cell = F.when(d == best, F.lit(i)).otherwise(cell)
-    return cell
+        / norm,
+    )
+    # first match in the reversed array = last match in the original
+    return (
+        F.lit(len(centroids))
+        - F.array_position(F.reverse(dots), F.array_max(dots))
+    ).cast("int")
 
 
 def ivf_assign_arrow(e: DataFrame, cmat) -> DataFrame:

@@ -1,186 +1,133 @@
 """Maintenance passes for the engine's on-disk incremental stores.
 
-The incremental-dedup store (operators/streaming_queries.py) is an
-append-only (kind, pk)-partitioned dataset where every micro-batch
-lands exactly one file per touched leaf — by design, so probe listings
-stay O(batches x buckets).  On a long-running stream that linear file
-growth is the one unbounded term left in the store's cost model (the
-probes themselves are partition-pruned): after 10k batches a 32-bucket
-store lists ~hundreds of thousands of files.  `compact_dedup_store`
-folds each leaf back to one file, capping listings at O(buckets)
-between maintenance runs — the same role OPTIMIZE/rewrite_data_files
-plays for a Delta/Iceberg table, and the symmetric move to the upsert
-sink's manifest compaction (sinks/upsert.py).
+The incremental-dedup store and the streaming-IVF store
+(operators/streaming_queries.py) commit one manifest version per
+micro-batch (manifest.py), and each batch adds one file per touched
+leaf — so a leaf's owner list, and the files a probe lists, grow
+O(batches) on a long-running stream.  `compact_dedup_store` /
+`compact_ann_store` fold every multi-file leaf of the head back to one
+file and commit the result as a `v_{head}-r{k}` version — the role
+OPTIMIZE/rewrite_data_files plays for a Delta/Iceberg table, and the
+symmetric move to the upsert sink's manifest compaction
+(sinks/upsert.py).  `rebalance_ann_store` re-trains the IVF quantizer
+and commits the re-partitioned data and the new quantizer in ONE
+version, so probes switch quantizers in the same rename that moves
+the rows.
 
-Crash safety WITHOUT atomic directory swaps: the store's read paths
-are duplicate-tolerant by construction (the replay-idempotence
-argument — band duplicates only duplicate candidates, which the
-candidate dropDuplicates collapses; profile duplicates only duplicate
-verify matches, and `rejected` is distinct'd; the final read dedups by
-doc_id).  Compaction exploits exactly that invariant: it APPENDS the
-compacted files into the live leaves first and deletes the originals
-last, so every crash point leaves either extra bit-identical rows
-(tolerated) or a finished compaction — never a missing-store or
-half-swapped state.  This is test-pinned by re-introducing an
-already-deleted original file and checking reads are unchanged.
+Crash safety is the commit protocol's: nothing a pass writes is
+visible before its version rename, so a crash — or a fenced abort —
+leaves the pre-maintenance head, and the next pass rebuilds from it.
+The superseded versions are reclaimed by the commit's prune once no
+manifest and no reader pin references them.
 
 Single WRITER contract — ENFORCED since r18 (was documentation):
-compaction participates in the store's writer fencing
+maintenance participates in the store's writer fencing
 (kafka_spark_streaming_spark.fencing, token at `<store>.epoch` —
 the same sibling-marker convention as the `.layout` sidecar).  Two
 modes:
 
 - STANDALONE (``fence=None``, the CLI path): refuses to run while
   the token names a LIVE writer (fencing.live_writer: tenure not
-  idled, lease fresh or pid alive — a drain is appending;
-  ``force=True`` overrides for operator judgment calls),
-  then ACQUIRES its own fence.  The epoch bump means a zombie drain
-  that silently survived a failover raises at its next append
-  instead of interleaving with the compaction; the fence is
-  re-checked immediately before the delete phase — the only step
-  that removes data — so if a NEW drain attaches mid-compaction the
-  pass aborts leaving only extra bit-identical rows, which every
-  read path tolerates (the crash-safety invariant doubles as the
-  abort-safety one).
+  idled, lease fresh or pid alive — a drain is committing;
+  ``force=True`` overrides for operator judgment calls), then
+  ACQUIRES its own fence.  The epoch bump means a zombie drain that
+  silently survived a failover raises at its next commit instead of
+  interleaving with the pass; if a NEW drain attaches mid-pass, the
+  fence check before the pass's rename aborts it, leaving the
+  pre-maintenance head.
 - COOPERATIVE (``fence=`` the owning drain's token): invoked from
   the drain's own foreachBatch body at a store-idle point (the
-  append committed, the next batch can't start until the callback
-  returns — spark.kss.dedup.compactEveryNBatches wires this); no
-  guard or acquire, just the caller's fence checked before the
-  delete phase.
+  batch's version committed, the next batch can't start until the
+  callback returns — spark.kss.dedup.compactEveryNBatches wires
+  this); no guard or acquire, just the caller's fence checked before
+  the rename.
 
-Reader caveat and the pinned-read escape hatch (r19): a DataFrame
-whose file listing was captured BEFORE a compaction pass may
-reference originals the delete phase has since removed — rebuild
-readers after maintenance (the standard OPTIMIZE caveat), OR hand
-them out via ``pinned_store_read``, which snapshots the store's
-current data files, builds the DataFrame over exactly that listing,
-and publishes a durable pin file (``<store>.pins/``, the same
-fencing.write_pin/live_pins lifecycle as the upsert sink's snapshot
-pins) that the delete phase honors: live-pinned originals are
-SKIPPED, left behind as bit-identical duplicates every read path
-tolerates, and swept by the first compaction after the pin is
-released.  The registered queries don't need it (their read plans
-are built strictly after the drain, and the maintenance idle points
-sit inside the drain) — it exists for out-of-band readers
-(debugging, exports) that overlap maintenance.
+Readers that overlap maintenance (debugging, exports) use
+``pinned_store_read``: the shared version pin, whose pinned versions
+no prune deletes while the DataFrame is alive.
 """
 
 from __future__ import annotations
 
-import glob
+import json
 import os
-import shutil
-import weakref
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_spark_streaming_spark.fencing import (
-    PinRaceLost,
     StaleWriterError,
     WriterFence,
-    is_path_not_found,
-    live_pins,
     live_writer,
-    pin_guarded,
-    release_pin,
+)
+from kafka_spark_streaming_spark.manifest import ManifestStore
+
+# the IVF quantizer file a streaming-IVF version holds (batch 0's, and
+# each rebalance's); the manifest names its owner under this key
+CENTROIDS_NAME = "_CENTROIDS.json"
+
+# the streaming-IVF store's row layout: explicit on every read, so no
+# read needs a parquet footer-inference job
+ANN_STORE_SCHEMA = T.StructType(
+    [
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+        T.StructField("cell", T.IntegerType()),
+    ]
 )
 
 
-def _leaf_dirs(
-    store_dir: str, leaf_glob: str = os.path.join("kind=*", "pk=*")
-) -> list[str]:
-    return sorted(
-        d
-        for d in glob.glob(os.path.join(store_dir, leaf_glob))
-        if os.path.isdir(d)
-    )
-
-
-def _data_files(leaf: str) -> list[str]:
-    return sorted(
-        os.path.join(leaf, f)
-        for f in os.listdir(leaf)
-        if f.endswith(".parquet")
-    )
-
-
-def _pin_dir(store_dir: str) -> str:
-    # sibling dir, same convention as the `.epoch` fence marker and
-    # the `.layout` sidecar — never inside the store, so partition
-    # discovery and leaf listings can't trip over it
-    return store_dir.rstrip("/") + ".pins"
-
-
-def _all_data_files(store_dir: str) -> list[str]:
-    """Every committed data file under the store — skipping any path
-    with a hidden component (`_temporary` from an in-flight append,
-    `.`-prefixed sidecars), the same filter Spark's own partition
-    discovery applies; an explicit file list bypasses that filter, so
-    it must be re-applied here or a pinned read racing an append could
-    capture uncommitted task files."""
-    return sorted(
-        f
-        for f in glob.glob(
-            os.path.join(store_dir, "**", "*.parquet"), recursive=True
+def _live_files(store_dir: str) -> dict[str, list[str]]:
+    """leaf → the data files of every owner the head manifest lists
+    for it (metadata entries skipped) — what a full read scans."""
+    store = ManifestStore(store_dir)
+    return {
+        leaf: sorted(
+            os.path.join(store_dir, owner, leaf, f)
+            for owner in owners
+            for f in os.listdir(os.path.join(store_dir, owner, leaf))
+            if f.endswith(".parquet")
         )
-        if not any(
-            part.startswith(("_", "."))
-            for part in os.path.relpath(f, store_dir).split(os.sep)
+        for leaf, owners in store._head()[1].items()
+        if not leaf.startswith("_")
+    }
+
+
+def ann_centroids(store: ManifestStore, manifest: dict) -> np.ndarray:
+    """The committed IVF quantizer the manifest names."""
+    if CENTROIDS_NAME not in manifest:
+        raise ValueError(
+            f"no centroid sidecar ({CENTROIDS_NAME}) committed under "
+            f"{store.path!r} — not a streaming-IVF store (or its drain "
+            "never trained batch 0)"
         )
-    )
+    owner = manifest[CENTROIDS_NAME][0]
+    with open(os.path.join(store.path, owner, CENTROIDS_NAME)) as fh:
+        return np.array(json.load(fh), dtype=np.float64)
 
 
-def _pinned_files(store_dir: str) -> set[str]:
-    """Data files named by live-holder pins (realpath-normalized for
-    the delete-phase comparison)."""
-    pinned: set[str] = set()
-    for pin in live_pins(_pin_dir(store_dir)):
-        pinned.update(os.path.realpath(f) for f in pin.get("files", []))
-    return pinned
+def write_centroids(vdir: str, cmat) -> None:
+    """Write a quantizer into a still-uncommitted version dir, fsync'd
+    like the manifest (the version rename commits it)."""
+    with open(os.path.join(vdir, CENTROIDS_NAME), "w") as fh:
+        json.dump([[float(x) for x in row] for row in cmat], fh)
+        fh.flush()
+        os.fsync(fh.fileno())
 
 
-def pinned_store_read(
-    spark: SparkSession,
-    store_dir: str,
-    dedup_cols: list[str] | None = None,
-) -> DataFrame:
-    """Compaction-safe read of a partitioned append store: the
-    DataFrame reads EXACTLY the data files present now (basePath keeps
-    the partition columns real), and those files are pinned against
-    compaction's delete phase for as long as the returned DataFrame
-    object is alive — the append stores' analogue of the upsert sink's
-    snapshot() (module docstring, reader caveat).  Dropping the
-    reference releases the pin; a holder that crashes without
-    releasing leaves a dead-pid pin the next maintenance pass reaps.
-    Raises on an empty store — there is no listing to pin (create the
-    store by draining at least one batch first).  The returned frame
-    is full-row deduplicated by default (ADVICE r19): a listing taken
-    after a crash window, or after a compaction that skipped pin-held
-    originals, contains originals AND compacted copies, and unlike
-    the registered queries an out-of-band export has no downstream
-    collapse — so this read applies the same full-row dropDuplicates
-    compaction's rewrite bakes in.  CAVEAT (code-review r20): full-row
-    dedup only collapses SAME-LEAF copies; a row RELOCATED across
-    partitions (rebalance_ann_store's crash window or its pin-skipped
-    originals — old cell and new cell both present) differs in the
-    partition column and survives it.  Pass ``dedup_cols`` with the
-    store's logical key (``["vec_id"]`` for ANN stores) to collapse
-    relocated copies too; which copy's partition value wins is
-    arbitrary, exactly like the probe paths' own key dedup.
-
-    Paths are realpath-normalized at WRITE time so a pin taken with a
-    relative store_dir still matches the delete phase's comparison
-    from any cwd, and the pin follows the shared publish-then-verify
-    protocol (fencing.pin_guarded, code-review r19): a compaction
-    pass that deleted a listed file in the listing-to-pin window
-    fails the post-publish verify — or raises path-not-found while
-    the plan is built — and the attempt retries from a fresh listing;
-    see pin_guarded for the residual-window argument."""
-    from pyspark.errors import AnalysisException
-
-    store_dir = os.path.realpath(store_dir)
+def pinned_store_read(spark: SparkSession, store_dir: str) -> DataFrame:
+    """Maintenance-safe read of a dedup or IVF store: the DataFrame
+    reads the head manifest of one listing (basePath keeps the
+    partition columns real), and every version it references is
+    pinned against the prune for as long as the returned DataFrame
+    object is alive — the same version pin as the upsert sink's
+    snapshot() (ManifestStore._snapshot).  Dropping the reference
+    releases the pin; a holder that crashes without releasing leaves
+    a dead-pid pin the next prune reaps.  Raises on a store with
+    nothing committed (create it by draining at least one batch
+    first)."""
     # the pin TTL must see the store WRITER's effective fence lease
     # (code-review r20, second pass): a drain on the r20 lease default
     # acquires with drain_fence_lease_ttl while the conf knobs stay
@@ -193,71 +140,44 @@ def pinned_store_read(
     from kafka_spark_streaming_spark.fencing import _read_token
 
     try:
-        tok = _read_token(store_dir + ".epoch")
+        tok = _read_token(store_dir.rstrip("/") + ".epoch")
     except ValueError:
         tok = None  # corrupt token fails the WRITER path loudly, not reads
     ttl = pin_ttl_for_writer(
         spark, tok.get("lease_ttl_s") if tok else None
     )
+    store = ManifestStore(store_dir)
 
-    def attempt():
-        files = _all_data_files(store_dir)
-        if not files:
+    def build(manifest: dict) -> DataFrame:
+        df = store._read(spark, manifest)
+        if df is None:
             raise ValueError(
-                f"pinned_store_read: no data files under {store_dir!r}"
+                f"pinned_store_read: nothing committed under {store_dir!r}"
             )
-        payload = {"files": files, "purpose": "pinned-store-read"}
-        if ttl is not None:
-            # multi-host mode: the pin auto-expires instead of relying
-            # on the single-host pid probe (fencing.live_pins)
-            payload["lease_ttl_s"] = ttl
+        return df
 
-        def verify():
-            return all(os.path.exists(f) for f in files)
-
-        def finish(pin_path):
-            try:
-                df = (
-                    spark.read.option("basePath", store_dir)
-                    .parquet(*files)
-                    # collapse duplicate rows exactly as compaction's
-                    # rewrite does (ADVICE r19): after a crash window —
-                    # or a compaction that skipped pin-held originals —
-                    # the listing legitimately contains both originals
-                    # and compacted copies, and an out-of-band EXPORT
-                    # has no downstream dedup the registered queries'
-                    # duplicate-tolerance argument can lean on.
-                    # dedup_cols widens the collapse to partition-
-                    # relocated copies (docstring caveat, r20).
-                    .dropDuplicates(dedup_cols)
-                )
-            except AnalysisException as exc:
-                if not is_path_not_found(exc):
-                    raise  # deterministic failure, not a race
-                raise PinRaceLost(str(exc)) from exc
-            weakref.finalize(df, release_pin, pin_path)
-            return df
-
-        return payload, verify, finish
-
-    return pin_guarded(
-        _pin_dir(store_dir),
-        attempt,
-        what=f"pinned_store_read({store_dir!r})",
+    return store._snapshot(
+        build, ttl, what=f"pinned_store_read({store_dir!r})"
     )
 
 
-def _standalone_fence(
+def _fenced_pass(
     spark: SparkSession,
     store_dir: str,
-    purpose: str,
+    fence: WriterFence | None,
     force: bool,
+    purpose: str,
     verb: str,
-) -> WriterFence:
-    """The standalone maintenance-pass fence protocol, shared by
-    compaction and rebalance (code-review r20 — it was copy-pasted):
-    refuse a live writer unless ``force``, then acquire with the
-    session's lease knob."""
+    body,
+) -> dict:
+    """Run ``body(store)`` under the maintenance fence protocol shared
+    by compaction and rebalance (module docstring).  STANDALONE
+    (``fence=None``): refuse a live writer unless ``force``, acquire
+    with the session's lease knob, and idle the fence afterwards —
+    also on failure, so a failed pass stays retryable (code-review
+    r20)."""
+    if fence is not None:
+        return body(ManifestStore(store_dir, fence))
     marker = store_dir.rstrip("/") + ".epoch"
     tok = live_writer(marker)
     if tok is not None and not force:
@@ -269,54 +189,22 @@ def _standalone_fence(
         )
     from kafka_spark_streaming_spark.config import fence_lease_ttl
 
-    return WriterFence.acquire(
+    # same lease plumbing as the drains and the upsert sink — without
+    # it a standalone pass that crashed on another host would leave a
+    # pid-mode token that live_writer can only probe locally
+    fence = WriterFence.acquire(
         marker, purpose=purpose, lease_ttl_s=fence_lease_ttl(spark)
     )
-
-
-def _idle_quietly(fence: WriterFence) -> None:
-    """Mark a standalone pass's tenure finished on the FAILURE path so
-    a failed pass is immediately retryable (code-review r20: an
-    exception between acquire and the success-path idle() left the
-    token active — blocking retries for the holder pid's lifetime, or
-    a full TTL in lease mode).  Quiet: if a newer writer already
-    usurped us, idling is neither possible nor needed."""
     try:
-        fence.idle()
-    except Exception:  # noqa: BLE001 — failure-path cleanup only
-        pass
-
-
-def _move_leaf_files(tmp: str, store_dir: str, leaf_glob: str) -> None:
-    """Append-first move of a rewrite's tmp-dataset files into the
-    live leaves (os.rename, same filesystem; Spark part names carry a
-    job UUID so they cannot collide)."""
-    for tleaf in _leaf_dirs(tmp, leaf_glob):
-        rel = os.path.relpath(tleaf, tmp)
-        dest = os.path.join(store_dir, rel)
-        os.makedirs(dest, exist_ok=True)
-        for f in os.listdir(tleaf):
-            if f.endswith(".parquet") or f.endswith(".parquet.crc"):
-                os.rename(os.path.join(tleaf, f), os.path.join(dest, f))
-
-
-def _delete_snapshotted(
-    before: dict[str, list[str]], pinned: set[str]
-) -> None:
-    """Delete-last phase shared by compaction and rebalance: remove the
-    snapshotted original files (+ .crc sidecars), SKIPPING any file a
-    live pin still references."""
-    for files in before.values():
-        for f in files:
-            if os.path.realpath(f) in pinned:
-                continue
-            for path in (f, os.path.join(
-                os.path.dirname(f), "." + os.path.basename(f) + ".crc"
-            )):
-                try:
-                    os.remove(path)
-                except FileNotFoundError:
-                    pass
+        out = body(ManifestStore(store_dir, fence))
+    except BaseException:
+        try:
+            fence.idle()
+        except Exception:  # noqa: BLE001 — usurped: nothing to idle
+            pass
+        raise
+    fence.idle()
+    return out
 
 
 def _occupancy(counts: dict[int, int], n_cells: int | None) -> dict:
@@ -343,30 +231,27 @@ def ann_store_stats(spark: SparkSession, store_dir: str) -> dict:
     """Cell-occupancy introspection for a streaming-IVF store
     (VERDICT r18 #2 / r19 #1) — the append-store analogue of the
     upsert sink's history(): one partition-column aggregation
-    (groupBy cell, a metadata-friendly scan; bounded collect of
+    (groupBy cell over the head's leaves; bounded collect of
     <= n_cells rows) summarizing how evenly the frozen quantizer is
-    spreading appends.  ``skew`` is max-cell rows over the mean
-    across DECLARED cells (the centroid sidecar's count, so cells
-    the drift has emptied out still dilute the mean — an occupancy
-    view over observed cells only would under-report collapse).
-    skew ~1 = healthy; a drifting stream concentrating appends into
-    few cells pushes it toward n_cells, degrading append parallelism
-    and probe pruning — the signal rebalance_ann_store answers.
-    Duplicate rows from replayed batches are collapsed (vec_id) so
-    the histogram reflects logical occupancy, not crash-window
-    artifacts."""
-    import json
-
-    df = spark.read.parquet(store_dir).dropDuplicates(["vec_id"])
-    per = {
+    spreading rows.  ``skew`` is max-cell rows over the mean across
+    DECLARED cells (the committed quantizer's count, so cells the
+    drift has emptied out still dilute the mean — an occupancy view
+    over observed cells only would under-report collapse).  skew ~1 =
+    healthy; a drifting stream concentrating rows into few cells
+    pushes it toward n_cells, degrading write parallelism and probe
+    pruning — the signal rebalance_ann_store answers."""
+    store = ManifestStore(store_dir)
+    manifest = store._head()[1]
+    df = store._read(spark, manifest, ANN_STORE_SCHEMA)
+    per = {} if df is None else {
         int(r["cell"]): int(r["count"])
         for r in df.groupBy("cell").count().collect()  # <= n_cells rows
     }
-    cent_path = store_dir.rstrip("/") + ".centroids.json"
-    n_cells = None
-    if os.path.exists(cent_path):
-        with open(cent_path) as fh:
-            n_cells = len(json.load(fh))
+    n_cells = (
+        len(ann_centroids(store, manifest))
+        if CENTROIDS_NAME in manifest
+        else None
+    )
     return _occupancy(per, n_cells)
 
 
@@ -378,12 +263,12 @@ def rebalance_ann_store(
 ) -> dict:
     """Offline re-train + re-partition pass for a skewed streaming-IVF
     store (VERDICT r19 #1): the drain freezes its coarse quantizer at
-    batch 0, so a drifting stream concentrates appends into few cell=
+    batch 0, so a drifting stream concentrates rows into few cell=
     leaves — this pass re-trains the quantizer on the store's CURRENT
     contents and rewrites every row into its new argmax cell,
-    restoring append parallelism and probe pruning.  Cell COUNT is
-    preserved (read from the centroid sidecar): the fix for drift is
-    where the centroids sit, not how many there are.
+    restoring write parallelism and probe pruning.  Cell COUNT is
+    preserved (read from the committed quantizer): the fix for drift
+    is where the centroids sit, not how many there are.
 
     Seeding is OCCUPANCY-PROPORTIONAL, deliberately unlike the drain's
     batch-0 id-strided init: re-training must seed where the data IS,
@@ -395,74 +280,23 @@ def rebalance_ann_store(
     hot cell holding 90% of the rows thus contributes ~90% of the
     seeds, and the single Lloyd step (the drain's shared helper)
     splits it.  One bounded collect of <= n_cells seed rows; then one
-    store-wide Arrow-matmul reassignment job.
+    store-wide Arrow-matmul reassignment job, which writes the new
+    version's cell leaves next to its new quantizer.  The version
+    rename swaps both at once; a later drain batch assigns against
+    the quantizer the head names.
 
-    Crash safety reuses compact_partitioned_store's append-first /
-    delete-last skeleton, with the centroid-sidecar swap slotted
-    between the two:
-
-      1. snapshot the current data files (the deletion set);
-      2. ONE Spark job re-assigns the deduplicated store against the
-         re-trained centroids and writes a sibling tmp dataset,
-         one file per new cell;
-      3. move the files INTO the live leaves (append-first) — every
-         row now exists under BOTH quantizers' assignments;
-      4. atomically publish the new centroid sidecar (tmp+rename,
-         same protocol as the drain's batch-0 freeze);
-      5. fence-heartbeat, then delete the snapshotted originals
-         (skipping live-pinned files, like compaction).
-
-    A crash BEFORE step 4 leaves probes on the OLD centroids with
-    every row still in its old cell (the new-cell copies are extra
-    rows a probe either prunes away or collapses via its
-    dropDuplicates(vec_id)); a crash AFTER step 4 leaves probes on
-    the NEW centroids with every row in its new cell (the old copies
-    are the tolerated stragglers).  Either way re-running the pass
-    converges: step 2 reads the union and dedups by vec_id.  A
-    post-rebalance drain batch is consistent by construction — the
-    fold re-reads the sidecar every batch, so replays and new batches
-    assign against the new quantizer.
-
-    Fencing: same standalone/cooperative contract as
-    compact_partitioned_store (refuse a live writer unless ``force``;
-    cooperative mode shares the owning drain's token; the fence is
-    re-checked before the delete phase)."""
-    import json
-
-    cent_path = store_dir.rstrip("/") + ".centroids.json"
-    if not os.path.exists(cent_path):
-        raise ValueError(
-            f"no centroid sidecar at {cent_path!r} — not a streaming-IVF "
-            "store (or its drain never trained batch 0)"
-        )
-    with open(cent_path) as fh:
-        n_cells = len(json.load(fh))
-    standalone = fence is None
-    if standalone:
-        fence = _standalone_fence(
-            spark, store_dir, "rebalance-ann-store", force, "rebalance"
-        )
-    try:
-        out = _rebalance_body(spark, store_dir, cent_path, n_cells, fence)
-    except BaseException:
-        if standalone:
-            _idle_quietly(fence)  # failed pass stays retryable
-        raise
-    if standalone:
-        fence.idle()
-    return out
+    Fencing: same standalone/cooperative contract as compaction
+    (module docstring)."""
+    # validate before fencing: a non-store must not grow an .epoch
+    store = ManifestStore(store_dir)
+    ann_centroids(store, store._head()[1])
+    return _fenced_pass(
+        spark, store_dir, fence, force, "rebalance-ann-store", "rebalance",
+        lambda fenced: _rebalance_body(spark, fenced),
+    )
 
 
-def _rebalance_body(
-    spark: SparkSession,
-    store_dir: str,
-    cent_path: str,
-    n_cells: int,
-    fence: WriterFence,
-) -> dict:
-    import json
-    import tempfile
-
+def _rebalance_body(spark: SparkSession, store: ManifestStore) -> dict:
     from pyspark.sql import Window
 
     from kafka_spark_streaming_spark.operators.similarity import (
@@ -471,13 +305,11 @@ def _rebalance_body(
         lloyd_refine,
     )
 
-    leaves = _leaf_dirs(store_dir, "cell=*")
-    before = {leaf: _data_files(leaf) for leaf in leaves}
-    files_before = sum(len(v) for v in before.values())
-
+    head, manifest = store._head()
+    n_cells = len(ann_centroids(store, manifest))
+    files_before = sum(len(v) for v in _live_files(store.path).values())
     base = (
-        spark.read.parquet(store_dir)
-        .dropDuplicates(["vec_id"])
+        store._read(spark, manifest, ANN_STORE_SCHEMA)
         .select("vec_id", "embedding", "cell")
         .persist()
     )
@@ -492,7 +324,7 @@ def _rebalance_body(
         stats_before = _occupancy(counts, n_cells)
         n = sum(counts.values())
         if n == 0:
-            raise ValueError(f"empty ANN store {store_dir!r}")
+            raise ValueError(f"empty ANN store {store.path!r}")
         n_seeds = min(n, n_cells)
         # largest-remainder apportionment of the seed budget over the
         # OLD cells' occupancy (the drift map); ties by cell id
@@ -520,50 +352,33 @@ def _rebalance_body(
         cmat = ivf_init_centroids(init, n_cells=n_cells)
         cmat2 = lloyd_refine(ivf_assign_arrow(base, cmat), cmat)
 
-        tmp = store_dir.rstrip("/") + ".rebalance.tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)  # leftover from a crashed prior run
-        (
-            ivf_assign_arrow(base, cmat2)
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(tmp)
+        def write(tmp: str) -> None:
+            (
+                ivf_assign_arrow(base, cmat2)
+                .repartition("cell")
+                .write.mode("overwrite")
+                .partitionBy("cell")
+                .parquet(tmp)
+            )
+            write_centroids(tmp, cmat2)
+
+        # the new version owns every leaf and the quantizer: the old
+        # cell assignment is superseded as a whole
+        store._commit(
+            store._batch_of(head),
+            lambda vname, leaves: {
+                **{leaf: [vname] for leaf in leaves},
+                CENTROIDS_NAME: [vname],
+            },
+            write,
         )
     finally:
         base.unpersist()
-    # append-first: move the re-assigned files into the live leaves
-    _move_leaf_files(tmp, store_dir, "cell=*")
-    # publish the new quantizer — the probe cutover point (tmp+rename
-    # atomic, same as the drain's batch-0 freeze)
-    d = os.path.dirname(cent_path) or "."
-    fd, ctmp = tempfile.mkstemp(
-        prefix=os.path.basename(cent_path) + ".", dir=d
-    )
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump([[float(x) for x in row] for row in cmat2], fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ctmp, cent_path)
-    except BaseException:
-        try:
-            os.unlink(ctmp)
-        except FileNotFoundError:
-            pass
-        raise
-    # delete originals last (fence re-check first; pins honored)
-    fence.heartbeat()
-    _delete_snapshotted(before, _pinned_files(store_dir))
-    shutil.rmtree(tmp, ignore_errors=True)
-    stats_after = ann_store_stats(spark, store_dir)
+    stats_after = ann_store_stats(spark, store.path)
     return {
         "rows": stats_after["rows"],
         "files_before": files_before,
-        "files_after": sum(
-            len(_data_files(leaf))
-            for leaf in _leaf_dirs(store_dir, "cell=*")
-        ),
+        "files_after": sum(len(v) for v in _live_files(store.path).values()),
         "skew_before": stats_before["skew"],
         "skew_after": stats_after["skew"],
         "occupied_before": stats_before["occupied_cells"],
@@ -583,18 +398,12 @@ def compact_dedup_store(
     fence: WriterFence | None = None,
     force: bool = False,
 ) -> dict:
-    """Fold every (kind, pk) leaf of an incremental-dedup store back to
-    one file — the dedup-store instance of the generic
+    """Fold every multi-file (kind, pk) leaf of an incremental-dedup
+    store back to one file — the dedup-store instance of
     compact_partitioned_store below (kept as the named public surface
     its CLI/tests/drain wiring use)."""
     return compact_partitioned_store(
-        spark,
-        store_dir,
-        partition_cols=["kind", "pk"],
-        leaf_glob=os.path.join("kind=*", "pk=*"),
-        min_files=min_files,
-        fence=fence,
-        force=force,
+        spark, store_dir, ["kind", "pk"], min_files, fence, force,
         purpose="compact-dedup-store",
     )
 
@@ -606,21 +415,11 @@ def compact_ann_store(
     fence: WriterFence | None = None,
     force: bool = False,
 ) -> dict:
-    """Fold every cell= leaf of a streaming-IVF index store back to
-    one file (r18).  The IVF store has the identical growth and
-    duplicate-tolerance profile as the dedup store (one file per
-    (batch, touched cell); replayed batches re-append bit-identical
-    rows that the read-side dropDuplicates(vec_id) collapses), so the
-    same crash-safe append-first/delete-last pass applies verbatim —
-    only the leaf layout differs."""
+    """Fold every multi-file cell= leaf of a streaming-IVF store back
+    to one file (r18) — the same pass as the dedup store's; only the
+    leaf layout differs."""
     return compact_partitioned_store(
-        spark,
-        store_dir,
-        partition_cols=["cell"],
-        leaf_glob="cell=*",
-        min_files=min_files,
-        fence=fence,
-        force=force,
+        spark, store_dir, ["cell"], min_files, fence, force,
         purpose="compact-ann-store",
     )
 
@@ -629,120 +428,63 @@ def compact_partitioned_store(
     spark: SparkSession,
     store_dir: str,
     partition_cols: list[str],
-    leaf_glob: str,
     min_files: int = 2,
     fence: WriterFence | None = None,
     force: bool = False,
     purpose: str = "compact-store",
 ) -> dict:
-    """Fold every leaf of a partitioned append store back to one file.
-    Returns {leaves, files_before, files_after, rewrote}.
-
-    Steps (order is the crash-safety argument — see module docstring):
-      1. snapshot the current data files per leaf (the deletion set);
-      2. ONE Spark job rewrites the whole store into a sibling tmp
-         dataset, repartitioned to one file per leaf;
-      3. move the compacted files INTO the live leaves (os.rename,
-         same filesystem; Spark part names carry a job UUID so they
-         cannot collide with existing names);
-      4. delete the snapshotted originals (+ their .crc sidecars);
-      5. remove the tmp dataset.
-    A crash after any step leaves only bit-identical duplicate rows,
-    which every read path collapses.  Leaves already at one file are
-    left byte-identical (no rewrite) when NO leaf needs work; when any
-    does, the single-job rewrite covers all leaves (simpler than
-    per-leaf jobs, and maintenance cost is one store scan either way).
+    """Fold every leaf of the head holding >= ``min_files`` files back
+    to one file.  Returns {leaves, files_before, files_after,
+    rewrote}.  ONE Spark job rewrites those leaves into a new
+    `v_{head}-r{k}` version (repartitioned on the partition keys, so
+    each leaf lands in exactly one task and one file); its manifest
+    maps each rewritten leaf to it alone and carries every other leaf
+    unchanged.  A store whose leaves all hold fewer files — or with
+    nothing committed — is left as it is.
 
     Fencing (r18, module docstring): standalone (``fence=None``)
     refuses a live writer unless ``force`` and acquires its own
     token; cooperative passes the owning drain's fence.  Either way
-    the fence is checked before step 4 — the only destructive step.
-    """
-    standalone = fence is None
-    if standalone:
-        # same lease plumbing as the drains and the upsert sink —
-        # without it a standalone pass that crashed on another host
-        # would leave a pid-mode token that live_writer can only
-        # probe locally (code-review r19)
-        fence = _standalone_fence(spark, store_dir, purpose, force, "compact")
-    try:
-        out = _compact_body(
-            spark, store_dir, partition_cols, leaf_glob, min_files, fence
-        )
-    except BaseException:
-        if standalone:
-            _idle_quietly(fence)  # failed pass stays retryable (r20)
-        raise
-    if standalone:
-        fence.idle()
-    return out
+    the fence is checked before the version rename."""
+    return _fenced_pass(
+        spark, store_dir, fence, force, purpose, "compact",
+        lambda store: _compact_body(spark, store, partition_cols, min_files),
+    )
 
 
 def _compact_body(
     spark: SparkSession,
-    store_dir: str,
+    store: ManifestStore,
     partition_cols: list[str],
-    leaf_glob: str,
     min_files: int,
-    fence: WriterFence,
 ) -> dict:
-    leaves = _leaf_dirs(store_dir, leaf_glob)
-    before = {leaf: _data_files(leaf) for leaf in leaves}
-    files_before = sum(len(v) for v in before.values())
-    if not leaves or all(len(v) < min_files for v in before.values()):
+    head, manifest = store._head()
+    files = _live_files(store.path)
+    files_before = sum(len(v) for v in files.values())
+    multi = [leaf for leaf, fs in files.items() if len(fs) >= min_files]
+    if not multi:
+        store._prune(keep=1)  # still reclaim versions pins released
         return {
-            "leaves": len(leaves),
+            "leaves": len(files),
             "files_before": files_before,
             "files_after": files_before,
             "rewrote": False,
         }
-
-    tmp = store_dir.rstrip("/") + ".compact.tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # leftover from a crashed prior run
-    # full-row dropDuplicates: the only duplicates a store can carry
-    # are bit-identical (replayed batches and crashed prior
-    # compactions — deterministic profiles, one batch per doc), and
-    # reads merely tolerate them; compaction is the natural place to
-    # collapse them permanently so a crash-then-rerun cannot bake the
-    # crash window's extra rows into the store forever.  repartition
-    # on the partition keys lands each leaf in exactly one task, so
-    # partitionBy writes exactly one file per leaf (same argument as
-    # the append job's).
-    (
-        spark.read.parquet(store_dir)
-        .dropDuplicates()
-        .repartition(*partition_cols)
+    rows = store._read(spark, manifest, leaves=multi)
+    store._commit(
+        store._batch_of(head),
+        lambda vname, leaves: {
+            **manifest,
+            **{leaf: [vname] for leaf in leaves},
+        },
+        lambda tmp: rows.repartition(*partition_cols)
         .write.mode("overwrite")
         .partitionBy(*partition_cols)
-        .parquet(tmp)
-    )
-    # move compacted files into the live leaves (append-first)
-    _move_leaf_files(tmp, store_dir, leaf_glob)
-    # delete originals last — the only step that removes data, and by
-    # now every row exists in a compacted file.  Fence check first: if
-    # a newer writer attached since, abort HERE — the appended
-    # compacted files are bit-identical duplicates every read path
-    # tolerates, so a fenced abort is exactly a crash-window state.
-    # heartbeat = check + lease renewal (code-review r19): the rewrite
-    # job above is the pass's long pole and aged the token's mtime for
-    # its whole duration, so a lease-mode fence renews here for the
-    # work that follows; a single job longer than the TTL still needs
-    # the TTL sized to the pass (FENCE_LEASE_TTL_KEY comment) — an
-    # expired-mid-pass lease lets a second pass start, which this
-    # abort keeps correct at the cost of the wasted rewrite.
-    # Files a live pinned_store_read still references are SKIPPED —
-    # left behind as tolerated duplicates for the first pass after
-    # the pin is released to sweep (module docstring, r19).
-    fence.heartbeat()
-    _delete_snapshotted(before, _pinned_files(store_dir))
-    shutil.rmtree(tmp, ignore_errors=True)
-    files_after = sum(
-        len(_data_files(leaf)) for leaf in _leaf_dirs(store_dir, leaf_glob)
+        .parquet(tmp),
     )
     return {
-        "leaves": len(leaves),
+        "leaves": len(files),
         "files_before": files_before,
-        "files_after": files_after,
+        "files_after": sum(len(v) for v in _live_files(store.path).values()),
         "rewrote": True,
     }

@@ -802,24 +802,40 @@ from kafka_spark_streaming_spark.config import (  # noqa: E402
 )
 
 
-# The incremental-dedup store is ONE parquet dataset partitioned by
-# (kind, pk): kind='b' rows are (doc_id, bh) band entries with
-# pk = pmod(bh, band_store_buckets); kind='p' rows are full MinHash
-# profiles with a `kept` verdict flag and
+# The incremental-dedup store is ONE manifest store (manifest.py)
+# whose leaves are (kind, pk): kind='b' rows are (doc_id, bh) band
+# entries with pk = pmod(bh, band_store_buckets); kind='p' rows are
+# full MinHash profiles with a `kept` verdict flag and
 # pk = pmod(doc_id, profile_store_buckets).  One layout, two pruned
-# probes, and — the point of the merge (r16) — ONE append job per
-# micro-batch whose job commit lands a batch's band and profile rows
-# together (no partial-pair crash states; the r15 two-dir layout
-# needed a write-ordering argument instead).
+# probes, and ONE version per micro-batch whose rename commits a
+# batch's band and profile rows together.
+
+
+def _store_probe(
+    spark: SparkSession, store_dir: str, kind: str, pks: list, schema
+) -> DataFrame | None:
+    """The head's `kind=<kind>/pk=` leaves named by ``pks``, read from
+    their owner versions and filtered on both partition columns (None
+    when no named leaf is committed)."""
+    from kafka_spark_streaming_spark.manifest import ManifestStore
+
+    store = ManifestStore(store_dir)
+    df = store._read(
+        spark, store._head()[1], schema, [f"kind={kind}/pk={k}" for k in pks]
+    )
+    if df is None:
+        return None
+    return df.filter((F.col("kind") == kind) & F.col("pk").isin(pks))
 
 
 def _bucketed_band_probe(
     spark: SparkSession, store_dir: str, pbs: list, schema=None
-) -> DataFrame:
+) -> DataFrame | None:
     """Partition-pruned read of the incremental-dedup store's BAND
-    rows: only the `kind=b/pk=` directories named by the incoming
-    batch's band hashes are listed and scanned (PartitionFilters on
-    the parquet scan — pinned by tests/test_plans.py::
+    rows (None when no probed leaf is committed): only the
+    `kind=b/pk=` leaves named by the incoming batch's band hashes are
+    scanned, in the owner versions the head manifest lists for them
+    (PartitionFilters on the scan — pinned by tests/test_plans.py::
     test_band_store_probe_prunes_partitions).  Exact by construction:
     `pk = pmod(bh, band_store_buckets)` is a function of the join key
     `bh`, so a store row outside the probed partitions cannot collide
@@ -828,24 +844,18 @@ def _bucketed_band_probe(
     footer inference — one fewer 1-task driver job per batch (r17
     job-floor decomposition: inference was 2 of the 17 per-batch job
     submissions)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return (
-        reader.parquet(store_dir)
-        .filter((F.col("kind") == "b") & F.col("pk").isin(pbs))
-        .select("doc_id", "bh")
-    )
+    df = _store_probe(spark, store_dir, "b", pbs, schema)
+    return None if df is None else df.select("doc_id", "bh")
 
 
 def _bucketed_profile_probe(
     spark: SparkSession, store_dir: str, pds: list, schema=None
-) -> DataFrame:
+) -> DataFrame | None:
     """Partition-pruned read of the incremental-dedup store's PROFILE
     rows (r16 — this was the last per-batch full-store scan in the
-    engine): only the `kind=p/pk=` directories named by this batch's
-    candidate `doc_a` values are listed and scanned (PartitionFilters
-    plan-pinned in tests/test_plans.py::
+    engine; None when no probed leaf is committed): only the
+    `kind=p/pk=` leaves named by this batch's candidate `doc_a` values
+    are scanned (PartitionFilters plan-pinned in tests/test_plans.py::
     test_profile_store_probe_prunes_partitions).  Exact by
     construction: `pk = pmod(doc_id, profile_store_buckets)` is a
     function of the verify join key `doc_id`, so a profile row outside
@@ -856,14 +866,8 @@ def _bucketed_profile_probe(
     `bh` (null on every profile row) — what remains is exactly the
     in-batch profile shape, so unionByName with `prof` lines up.
     `schema` skips footer inference like the band probe's."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return (
-        reader.parquet(store_dir)
-        .filter((F.col("kind") == "p") & F.col("pk").isin(pds))
-        .drop("kind", "pk", "kept", "bh")
-    )
+    df = _store_probe(spark, store_dir, "p", pds, schema)
+    return None if df is None else df.drop("kind", "pk", "kept", "bh")
 
 
 def _store_layout(
@@ -882,10 +886,9 @@ def _store_layout(
     reads here are commit=False and the batch body calls back with
     commit=True only after its 0-row guard passes.  The marker is a
     SIBLING of store_dir so writing it never creates the store dir
-    itself (the batch body keys the has-history branch on
-    os.path.exists(store_dir)); the write itself is tmp+rename atomic
-    with first-writer-wins under a concurrent-attach race
-    (config.commit_layout)."""
+    itself (a losing batch must leave no store behind); the write
+    itself is tmp+rename atomic with first-writer-wins under a
+    concurrent-attach race (config.commit_layout)."""
     from kafka_spark_streaming_spark.config import commit_layout, read_layout
 
     marker = store_dir.rstrip("/") + ".layout"
@@ -899,25 +902,36 @@ def _store_layout(
 
 
 def _incremental_dedup_batch(
-    batch_df: DataFrame, store_dir: str, fence=None
+    batch_df: DataFrame, store_dir: str, batch_id: int, fence=None
 ) -> None:
     """One micro-batch of the incremental near-dedup — module-level
-    (not a closure) so the replay-idempotence argument is directly
-    testable: tests/test_streaming.py::
-    test_incremental_dedup_batch_replay_idempotent re-runs a batch and
-    pins that the kept set is unchanged.
+    (not a closure) so the exactly-once argument is directly testable
+    (tests/test_streaming.py::
+    test_incremental_dedup_batch_replay_idempotent).
+
+    The batch commits ONE manifest version (manifest.py).  When the
+    committed head's batch is already >= ``batch_id`` the call is a
+    foreachBatch retry of a committed batch and commits nothing: the
+    file-source batches are deterministic, so the retry has nothing
+    new to write — exactly-once comes from the manifest, not from
+    reads that tolerate duplicates.
 
     ``fence`` (r18): the owning drain's fencing.WriterFence, checked
-    immediately before the append (the batch's one commit-point
-    mutation) so a zombie drain raises StaleWriterError instead of
-    appending behind a newer writer.  None (the default) is the
+    immediately before the version rename (the batch's one commit
+    point) so a zombie drain raises StaleWriterError instead of
+    committing behind a newer writer.  None (the default) is the
     unfenced direct-call path for tests and one-shot batch use, where
     the caller IS the single writer by construction."""
+    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.dedup import (
         minhash_profile,
         shingles_of,
     )
 
+    store = ManifestStore(store_dir, fence)
+    head, manifest = store._head()
+    if head is not None and store._batch_of(head) >= batch_id:
+        return
     # persist + materialize-via-the-pb-collect instead of an eager
     # localCheckpoint + separate collect (r15): the pb collect in the
     # body is the batch's first action (every batch since r16 — it
@@ -926,7 +940,7 @@ def _incremental_dedup_batch(
     # cache is dropped at the end of the batch.
     prof = minhash_profile(shingles_of(batch_df)).persist()
     try:
-        _incremental_dedup_batch_body(prof, store_dir, fence=fence)
+        _incremental_dedup_batch_body(prof, store, head, manifest, batch_id)
     finally:
         # the batch's cache must not accumulate across micro-batches —
         # including across foreachBatch RETRIES, so the unpersist sits
@@ -936,14 +950,16 @@ def _incremental_dedup_batch(
 
 
 def _incremental_dedup_batch_body(
-    prof: DataFrame, store_dir: str, fence=None
+    prof: DataFrame, store, head, manifest: dict, batch_id: int
 ) -> None:
+    from kafka_spark_streaming_spark.manifest import appended
     from kafka_spark_streaming_spark.operators.dedup import (
         band_buckets,
         verified_pairs,
     )
 
     sess = prof.sparkSession
+    store_dir = store.path
     n_pb, n_pd = _store_layout(sess, store_dir)
     # this batch's band rows — cheap on top of the cached profile
     # (16 xxhash64 per row, no shuffle), so NOT separately persisted
@@ -951,16 +967,13 @@ def _incremental_dedup_batch_body(
     incoming = band_buckets(prof).withColumn(
         "pk", F.pmod(F.col("bh"), F.lit(n_pb))
     )
-    store_exists = os.path.exists(store_dir)
     # bounded collect: ≤ band_store_buckets scalars.  Equal band
     # hashes have equal pk, so pruning the store to the batch's pk
     # values drops only rows that cannot join — exactness is by
     # construction, not recall-traded.  Collected on EVERY batch (not
     # just when history exists): an empty pbs means a 0-row batch,
-    # which must not reach the append — a 0-row partitionBy write
-    # would create a store dir holding only _SUCCESS and break schema
-    # inference on the next batch's probe (code-review r16; same
-    # guard class as the upsert sink's).
+    # which must not commit — a 0-row partitionBy write produces no
+    # leaf (code-review r16; same guard class as the upsert sink's).
     pbs = [r[0] for r in incoming.select("pk").distinct().collect()]
     if not pbs:
         return
@@ -970,7 +983,7 @@ def _incremental_dedup_batch_body(
     # concurrent-attach race commit_layout is first-writer-wins; if a
     # racer pinned a DIFFERENT layout between our read and this
     # commit, the pk values computed above are wrong for the store —
-    # refuse to append rather than corrupt the fan-out.
+    # refuse to commit rather than corrupt the fan-out.
     pinned = _store_layout(sess, store_dir, commit=True)
     if pinned != (n_pb, n_pd):
         raise RuntimeError(
@@ -995,21 +1008,19 @@ def _incremental_dedup_batch_body(
             T.StructField("pk", T.IntegerType()),
         ]
     )
-    if store_exists:
-        seen_bands = _bucketed_band_probe(
-            sess, store_dir, pbs, schema=store_schema
-        ).unionByName(incoming.select("doc_id", "bh"))
-    else:
-        seen_bands = incoming.select("doc_id", "bh")
+    seen_bands = incoming.select("doc_id", "bh")
+    if head is not None:
+        probed = _bucketed_band_probe(sess, store_dir, pbs, store_schema)
+        if probed is not None:
+            seen_bands = probed.unionByName(seen_bands)
     # candidate generator: pruned store bands ∪ this batch's bands
     # against this batch's bands; only pairs whose LARGER side is
     # in this batch matter — earlier docs were already decided in
-    # their own batch.  Replayed band rows (a retry that re-appends)
-    # only duplicate candidates, which the dropDuplicates collapses.
-    # Persisted: the pd collect below is its materializing action
-    # (same persist+collect-as-materializer pattern as prof), and the
-    # verify join then reads the cached pairs instead of re-running
-    # the band join.
+    # their own batch.  The dropDuplicates collapses multi-band
+    # matches of one pair.  Persisted: the pd collect below is its
+    # materializing action (same persist+collect-as-materializer
+    # pattern as prof), and the verify join then reads the cached
+    # pairs instead of re-running the band join.
     cand = (
         seen_bands.alias("x")
         .join(
@@ -1025,22 +1036,16 @@ def _incremental_dedup_batch_body(
         .persist()
     )
     try:
-        if store_exists:
+        universe = prof
+        if head is not None:
             # the store keeps ALL seen docs (kept and rejected): a
             # future doc duplicating a rejected doc must still be
-            # rejected — so the universe ignores the kept flag.  NO
-            # per-batch dropDuplicates replay guard here (r15): that
-            # was a full-history shuffle of the hs arrays every batch;
-            # replayed rows are bit-identical (deterministic profiles),
-            # duplicate verify matches carry identical jaccard values,
-            # and `rejected` is distinct'd — so duplicates can't change
-            # the verdict, only the final read dedups by doc_id.
+            # rejected — so the universe ignores the kept flag.
             # r16: the verify-side profile lookup is PARTITION-PRUNED —
             # only candidate doc_a values can need an out-of-batch
             # profile (doc_b is always in-batch by the join above), so
             # the ≤ profile_store_buckets pd values they hash to name
-            # the only store directories worth scanning.  This was the
-            # last per-batch full-store read in the engine.
+            # the only store leaves worth scanning.
             pds = [
                 r[0]
                 for r in cand.select(
@@ -1049,46 +1054,27 @@ def _incremental_dedup_batch_body(
                 .distinct()
                 .collect()
             ]
-            universe = (
-                _bucketed_profile_probe(
-                    sess, store_dir, pds, schema=store_schema
-                ).unionByName(
-                    prof
-                )
-                if pds
-                else prof
+            probed = _bucketed_profile_probe(
+                sess, store_dir, pds, store_schema
             )
-        else:
-            universe = prof
+            if probed is not None:
+                universe = probed.unionByName(prof)
         rejected = (
             verified_pairs(cand, universe)
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()
             .withColumn("_rej", F.lit(True))
         )
-        # ONE append job per batch (r16; r14 merged the kept/profile
-        # split, r16 merges bands + profiles into one kind-partitioned
-        # dataset): every profile row is stored once with its verdict
-        # as a `kept` flag under kind=p/pk=pmod(doc_id, n_pd), and its
-        # band rows land under kind=b/pk=pmod(bh, n_pb) — IN THE SAME
-        # JOB, so the job commit makes a batch's band and profile rows
-        # visible together and the r15 "bands append BEFORE profile
-        # append" crash-ordering argument is no longer needed: every
-        # crash point leaves either the whole batch or none of it (a
-        # crash mid-commit can at worst expose the pair together on
-        # retry as exact duplicates, which the read-side
-        # dropDuplicates(doc_id) / candidate dropDuplicates collapse —
-        # deterministic profiles make replayed rows bit-identical).
-        # Read-side dedup keeps the append replay-idempotent the same
-        # way as before: each doc belongs to exactly one ordered
-        # batch, and a foreachBatch retry recomputes the same verdict
-        # against the same prior store (the probe DFs snapshotted
-        # their file listings before this write).
-        # The repartition lands exactly one file per (batch, kind, pk)
-        # so probe listings stay O(batches × buckets), not O(tasks ×
-        # buckets).  (coalesce(1) was measured WORSE — it collapses
-        # the upstream band computation into a single task: 9.1 vs
-        # 7.6 s min-of-3.)
+        # ONE version per batch (r16 merged bands + profiles into one
+        # kind-partitioned dataset): every profile row is stored once
+        # with its verdict as a `kept` flag under
+        # kind=p/pk=pmod(doc_id, n_pd), and its band rows land under
+        # kind=b/pk=pmod(bh, n_pb) — IN THE SAME WRITE, so the version
+        # rename commits a batch's band and profile rows together.
+        # The repartition lands exactly one file per (kind, pk) leaf
+        # per version, so each leaf holds one file per owner.
+        # (coalesce(1) was measured WORSE — it collapses the upstream
+        # band computation into a single task: 9.1 vs 7.6 s min-of-3.)
         combined = incoming.withColumn("kind", F.lit("b")).unionByName(
             prof.join(rejected, "doc_id", "left")
             .withColumn("kept", F.col("_rej").isNull())
@@ -1097,17 +1083,13 @@ def _incremental_dedup_batch_body(
             .withColumn("pk", F.pmod(F.col("doc_id"), F.lit(n_pd))),
             allowMissingColumns=True,
         )
-        if fence is not None:
-            # commit point: the append below is the batch's one store
-            # mutation — a zombie drain must raise here, not append
-            # behind a newer writer (r18 fencing; probes above are
-            # read-only and need no check)
-            fence.check()
-        (
-            combined.repartition("kind", "pk")
-            .write.mode("append")
+        store._commit(
+            batch_id,
+            lambda vname, leaves: appended(manifest, vname, leaves),
+            lambda tmp: combined.repartition("kind", "pk")
+            .write.mode("overwrite")
             .partitionBy("kind", "pk")
-            .parquet(store_dir)
+            .parquet(tmp),
         )
     finally:
         # cached candidate pairs must not accumulate across
@@ -1138,28 +1120,27 @@ def _incremental_dedup_batch_body(
 def s_incremental_near_dedup(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    """Streaming MinHash near-dedup against an append-only,
-    BAND-HASH-BUCKETED store: each micro-batch bands only its own
-    profiles, probes the store's band rows with a partition-pruned
-    read (`_bucketed_band_probe` — the batch's ≤ band_store_buckets
-    distinct `pk` values select directories; PartitionFilters
-    plan-pinned in tests/test_plans.py), verifies candidates exactly
-    against the store's PROFILE rows likewise partition-pruned by
+    """Streaming MinHash near-dedup against a BAND-HASH-BUCKETED
+    manifest store: each micro-batch bands only its own profiles,
+    probes the store's band rows with a partition-pruned read
+    (`_bucketed_band_probe` — the batch's ≤ band_store_buckets
+    distinct `pk` values select leaves; PartitionFilters plan-pinned
+    in tests/test_plans.py), verifies candidates exactly against the
+    store's PROFILE rows likewise partition-pruned by
     `pk = pmod(doc_id, profile_store_buckets)` (r16,
     `_bucketed_profile_probe` — only candidate doc_a values can need
-    an out-of-batch profile), and appends band + profile rows in ONE
-    kind-partitioned job per batch (commit-atomic pair).  r15 made
-    the band side pruned; r16 closed the verify side — per-batch work
-    is now O(batch bands + store rows in the probed band/profile
-    partitions + collisions) with NO full-store read anywhere in the
-    batch.  Bucket counts are engine config (config.py — 100 TB
-    sizing rule there; thousands of buckets at the design point, 16
-    locally)."""
+    an out-of-batch profile), and commits band + profile rows as ONE
+    version per batch.  Per-batch work is O(batch bands + store rows
+    in the probed band/profile partitions + collisions) with NO
+    full-store read anywhere in the batch.  Bucket counts are engine
+    config (config.py — 100 TB sizing rule there; thousands of
+    buckets at the design point, 16 locally)."""
     from kafka_spark_streaming_spark.config import (
         dedup_compact_every,
         drain_fence_lease_ttl,
     )
     from kafka_spark_streaming_spark.fencing import WriterFence
+    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         compact_dedup_store,
     )
@@ -1168,12 +1149,12 @@ def s_incremental_near_dedup(
     run_dir = _scratch_dir("kss_increddup_")
     store_dir = os.path.join(run_dir, "store")
     # writer fence for the whole drain (r18): one attach-scoped token,
-    # checked by every batch before its append — the store analogue of
-    # the upsert sink's _WRITER_EPOCH (same sibling-marker convention
-    # as the .layout sidecar, so acquiring never creates the store dir).
-    # LEASE mode by default since r20 (drain_fence_lease_ttl): the
-    # per-batch heartbeat below renews it, and the explicit
-    # leaseTtlSec knob still overrides either way.
+    # checked by every batch before its commit rename — the store
+    # analogue of the upsert sink's _WRITER_EPOCH (same sibling-marker
+    # convention as the .layout sidecar, so acquiring never creates
+    # the store dir).  LEASE mode by default since r20
+    # (drain_fence_lease_ttl): the per-batch heartbeat below renews
+    # it, and the explicit leaseTtlSec knob still overrides either way.
     fence = WriterFence.acquire(
         store_dir.rstrip("/") + ".epoch",
         purpose="incremental-near-dedup",
@@ -1182,17 +1163,13 @@ def s_incremental_near_dedup(
     # compaction cadence (VERDICT r17 #2): policy knob, read once per
     # drain; > 0 folds the store's leaves back to one file every N
     # batches from this callback — a store-idle point (this batch's
-    # append has committed; the next cannot start until we return) in
-    # the same writer context, so the compactor shares our fence.
+    # version has committed; the next cannot start until we return)
+    # in the same writer context, so the compactor shares our fence.
     compact_every = dedup_compact_every(spark)
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _incremental_dedup_batch(batch_df, store_dir, fence=fence)
-        if (
-            compact_every
-            and (batch_id + 1) % compact_every == 0
-            and os.path.exists(store_dir)
-        ):
+        _incremental_dedup_batch(batch_df, store_dir, batch_id, fence=fence)
+        if compact_every and (batch_id + 1) % compact_every == 0:
             compact_dedup_store(spark, store_dir, fence=fence)
         fence.heartbeat()  # per-batch lease renewal (read-only check
         # in the default pid mode — fencing.heartbeat)
@@ -1202,14 +1179,20 @@ def s_incremental_near_dedup(
     # drain finished: mark the token inactive so standalone maintenance
     # (compact_dedup_store's live-writer guard) stops refusing
     fence.idle()
+    store = ManifestStore(store_dir)
+    manifest = store._head()[1]
     return (
-        spark.read.parquet(store_dir)
-        # kind=p prunes to the profile partitions (band rows have a
-        # null `kept`, so the flag filter alone would also drop them —
-        # the kind filter makes the pruning explicit in the plan)
+        store._read(
+            spark,
+            manifest,
+            # the columns read, named so no footer-inference job runs
+            "doc_id long, n long, kept boolean, kind string, pk int",
+            [k for k in manifest if k[:7] == "kind=p/"],
+        )
+        # the kind filter makes the profile-leaf pruning explicit in
+        # the plan (band rows have a null `kept` anyway)
         .filter((F.col("kind") == "p") & F.col("kept"))
         .select("doc_id", F.col("n").alias("n_shingles"))
-        .dropDuplicates(["doc_id"])
         .orderBy("doc_id")
     )
 
@@ -1392,67 +1375,133 @@ def _sivf_oracle() -> str:
     """
 
 
+def _ivf_fold(
+    batch_df: DataFrame, store_dir: str, batch_id: int, fence=None
+) -> None:
+    """One micro-batch of the streaming-IVF drain — module-level so
+    its exactly-once argument is testable, like the near-dedup
+    batch's.  The first non-empty batch trains the coarse quantizer
+    (same deterministic recipe as sim_ann_ivf's session index —
+    strided init + one Lloyd step, shared helpers so the code cannot
+    drift) and its version holds it (`_CENTROIDS.json`, named by the
+    manifest); every batch assigns its vectors against the committed
+    quantizer (one Arrow matmul) and commits them as ONE
+    cell-partitioned version.  A retry of a committed batch commits
+    nothing (see _incremental_dedup_batch)."""
+    from kafka_spark_streaming_spark.manifest import ManifestStore, appended
+    from kafka_spark_streaming_spark.operators.similarity import (
+        _IVF_CELLS,
+        ivf_assign_arrow,
+        ivf_init_centroids,
+        lloyd_refine,
+    )
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        CENTROIDS_NAME,
+        ann_centroids,
+        write_centroids,
+    )
+
+    store = ManifestStore(store_dir, fence)
+    head, manifest = store._head()
+    if head is not None and store._batch_of(head) >= batch_id:
+        return
+    if head is None:
+        # the batch is scanned three times here (count, init collect,
+        # Lloyd assignment) plus once by the write — persisted for the
+        # build only; later batches are scanned exactly once (the
+        # write) and skip the count job entirely
+        batch_df.persist()
+        try:
+            n = batch_df.count()
+            if n == 0:
+                return
+            stride = max(n // _IVF_CELLS, 1)
+            init = (
+                batch_df.filter(
+                    (F.col("vec_id") % stride == 0)
+                    & (F.col("vec_id") < stride * _IVF_CELLS)
+                )
+                .orderBy("vec_id")
+                .collect()  # bounded: <= n_cells rows
+            )
+            cmat = ivf_init_centroids(init)
+            cmat2 = lloyd_refine(ivf_assign_arrow(batch_df, cmat), cmat)
+        finally:
+            batch_df.unpersist()
+    else:
+        cmat2 = ann_centroids(store, manifest)
+    assigned = ivf_assign_arrow(batch_df, cmat2)
+
+    def write(tmp: str) -> None:
+        (
+            assigned.repartition("cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(tmp)
+        )
+        if head is None:
+            write_centroids(tmp, cmat2)
+
+    def manifest_of(vname: str, leaves: list[str]) -> dict:
+        out = appended(manifest, vname, leaves)
+        if head is None:
+            out[CENTROIDS_NAME] = [vname]
+        return out
+
+    store._commit(batch_id, manifest_of, write)
+
+
 @register("s_incremental_ann_ivf", _sivf_oracle())
 def s_incremental_ann_ivf(
     spark: SparkSession, sf_dir: str, n_batches: int = _SIVF_BATCHES
 ) -> DataFrame:
-    """Streaming IVF index maintenance + probe (r18): micro-batch 0
-    trains the coarse quantizer (same deterministic recipe as
-    sim_ann_ivf's session index — strided init + one Lloyd step,
-    shared helpers so the code cannot drift) and freezes it as a
-    sidecar; every batch assigns its vectors against the frozen
-    centroids (one Arrow matmul per batch, ivf_assign_arrow) and
-    appends them in ONE cell-partitioned job.  The post-drain probe
-    reads ONLY the probed cell= directories (PartitionFilters — the
-    inverted-list lookup is directory pruning), exact-cosine reranks,
-    and returns the same top-k contract as sim_ann_ivf.
+    """Streaming IVF index maintenance + probe (r18): the drain folds
+    each micro-batch into a cell-partitioned manifest store
+    (`_ivf_fold` — batch 0 trains and commits the quantizer, every
+    batch commits one version of argmax-assigned vectors).  The
+    post-drain probe reads ONLY the probed cell= leaves
+    (PartitionFilters — the inverted-list lookup is leaf pruning),
+    exact-cosine reranks, and returns the same top-k contract as
+    sim_ann_ivf.
 
-    Scale shape: per-batch cost is one matmul + one append — history
-    is never rescanned and the quantizer is never retrained; the
-    store is the dedup/upsert stores' third sibling (fenced
-    single-writer, append-only, partition-pruned probes,
-    duplicate-tolerant reads so a foreachBatch replay's bit-identical
-    re-append is collapsed by the read-side dropDuplicates).  The
-    frozen quantizer's drift exposure (a shifting stream concentrating
-    appends into few cells) has a maintenance answer since r20:
-    store_maintenance.ann_store_stats is the occupancy watch and
-    rebalance_ann_store the offline re-train/re-partition response
-    (tools/ann_rebalance.py), crash-safe like compaction; this
-    registered drain keeps the frozen quantizer so construction stays
+    Scale shape: per-batch cost is one matmul + one version commit —
+    history is never rescanned and the quantizer is never retrained;
+    the store is the dedup/upsert stores' third sibling (fenced
+    single-writer, one manifest commit protocol, partition-pruned
+    probes).  The frozen quantizer's drift exposure (a shifting
+    stream concentrating rows into few cells) has a maintenance
+    answer since r20: store_maintenance.ann_store_stats is the
+    occupancy watch and rebalance_ann_store the offline
+    re-train/re-partition response (tools/ann_rebalance.py), which
+    commits data and quantizer in one version; this registered drain
+    keeps the frozen quantizer so construction stays
     batch-replayable against the oracle.
 
     Batch ≡ stream: assignment depends only on (frozen centroids,
     row), so the DuckDB oracle replays the construction with the
     training set restricted to batch 0's deterministic id range
     [0, (max_id+1) // n_batches)."""
-    import json as _json
-
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from kafka_spark_streaming_spark.fencing import WriterFence
-    from kafka_spark_streaming_spark.functions import cosine_similarity
-    from kafka_spark_streaming_spark.operators.similarity import (
-        _IVF_CELLS,
-        _topk,
-        ivf_assign_arrow,
-        ivf_init_centroids,
-        ivf_probe_cells,
-        lloyd_refine,
-    )
-
     from kafka_spark_streaming_spark.config import (
         ann_compact_every,
         drain_fence_lease_ttl,
     )
+    from kafka_spark_streaming_spark.fencing import WriterFence
+    from kafka_spark_streaming_spark.functions import cosine_similarity
+    from kafka_spark_streaming_spark.manifest import ManifestStore
+    from kafka_spark_streaming_spark.operators.similarity import (
+        N_QUERIES,
+        _topk,
+        ivf_probe_cells,
+    )
     from kafka_spark_streaming_spark.operators.store_maintenance import (
+        ANN_STORE_SCHEMA,
+        ann_centroids,
         compact_ann_store,
     )
 
     stream = _embeddings_ordered_batches(spark, sf_dir, n_batches)
     run_dir = _scratch_dir("kss_sivf_")
     store_dir = os.path.join(run_dir, "store")
-    cent_path = store_dir + ".centroids.json"
     # lease mode by default since r20 — see the dedup drain's fence
     fence = WriterFence.acquire(
         store_dir + ".epoch",
@@ -1464,62 +1513,8 @@ def s_incremental_ann_ivf(
     compact_every = ann_compact_every(spark)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not os.path.exists(cent_path):
-            # FIRST non-empty batch trains and freezes the quantizer.
-            # A replay of this batch finds the sidecar and skips the
-            # rebuild (the build is deterministic anyway); the write
-            # is tmp+rename atomic so a crash mid-write cannot leave
-            # a torn centroid file.  The batch is scanned three times
-            # here (count, init collect, Lloyd assignment) plus once
-            # by the append — persisted for the build only; later
-            # batches are scanned exactly once (the append) and skip
-            # the count job entirely (a 0-row append is a harmless
-            # no-op once the store and sidecar exist).
-            batch_df.persist()
-            try:
-                n = batch_df.count()
-                if n == 0:
-                    return
-                stride = max(n // _IVF_CELLS, 1)
-                init = (
-                    batch_df.filter(
-                        (F.col("vec_id") % stride == 0)
-                        & (F.col("vec_id") < stride * _IVF_CELLS)
-                    )
-                    .orderBy("vec_id")
-                    .collect()  # bounded: <= n_cells rows
-                )
-                cmat = ivf_init_centroids(init)
-                cmat2 = lloyd_refine(
-                    ivf_assign_arrow(batch_df, cmat), cmat
-                )
-                tmp = f"{cent_path}.tmp{os.getpid()}"
-                with open(tmp, "w") as fh:
-                    _json.dump(
-                        [[float(x) for x in row] for row in cmat2], fh
-                    )
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                os.rename(tmp, cent_path)
-            finally:
-                batch_df.unpersist()
-        with open(cent_path) as fh:
-            cmat2 = np.array(_json.load(fh), dtype=np.float64)
-        assigned = ivf_assign_arrow(batch_df, cmat2)
-        # commit point: the cell-partitioned append is the batch's one
-        # store mutation — fenced like the dedup store's
-        fence.check()
-        (
-            assigned.repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(store_dir)
-        )
-        if (
-            compact_every
-            and (batch_id + 1) % compact_every == 0
-            and os.path.exists(store_dir)
-        ):
+        _ivf_fold(batch_df, store_dir, batch_id, fence=fence)
+        if compact_every and (batch_id + 1) % compact_every == 0:
             compact_ann_store(spark, store_dir, fence=fence)
         fence.heartbeat()  # per-batch lease renewal (read-only check
         # in the default pid mode — fencing.heartbeat)
@@ -1527,13 +1522,12 @@ def s_incremental_ann_ivf(
     _drain(spark, stream.writeStream.foreachBatch(fold), 8)
     fence.idle()
 
-    with open(cent_path) as fh:
-        cmat2 = np.array(_json.load(fh), dtype=np.float64)
+    store = ManifestStore(store_dir)
+    manifest = store._head()[1]
+    cmat2 = ann_centroids(store, manifest)
     # queries come from the fixture table (their embeddings are
     # identical to the store's rows; the table read keeps the bounded
     # N_QUERIES collect off the partitioned store)
-    from kafka_spark_streaming_spark.operators.similarity import N_QUERIES
-
     q_rows = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < N_QUERIES)
@@ -1550,23 +1544,14 @@ def s_incremental_ann_ivf(
     ).select("query_id", "qv", F.explode("cells").alias("cell"))
     needed = sorted({int(c) for row in probes for c in row})
     # explicit schema (no footer-inference job — same job-floor lever
-    # as the dedup-store probes); the cell.isin filter prunes at the
-    # DIRECTORY level because cell is a partition column
-    store_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("cell", T.IntegerType()),
-        ]
-    )
+    # as the dedup-store probes); only the probed cells' owners are
+    # read, and the cell.isin filter shows as PartitionFilters because
+    # cell is a partition column
     corpus = (
-        spark.read.schema(store_schema)
-        .parquet(store_dir)
+        store._read(
+            spark, manifest, ANN_STORE_SCHEMA, [f"cell={c}" for c in needed]
+        )
         .filter(F.col("cell").isin(needed))
-        # replay tolerance: a retried batch re-appends bit-identical
-        # rows; each vec_id lives in exactly one cell, so the dedup is
-        # complete within the pruned subset
-        .dropDuplicates(["vec_id"])
         .select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("cv"),

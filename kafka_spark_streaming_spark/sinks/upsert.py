@@ -19,13 +19,14 @@ Design for scale:
   moves |touched partitions| + |batch| rows, not |state| (VERDICT
   r15 #3: the per-batch one-shuffle-of-|state| was the next shape to
   go if the sink carries volume).  Untouched partitions carry forward
-  as MANIFEST ENTRIES (VERDICT r16 #1): every committed version holds
-  a `_MANIFEST.json` mapping each live `rb=` partition to the version
-  that owns its data, so a new version rewrites only the touched
-  partitions' files and inherits the rest as pure metadata — the
-  exact file-remapping move of a Delta/Iceberg MERGE, and unlike a
-  hard-link carry-forward it works on ANY filesystem (object stores
-  have no hard links).  A committed version without its manifest is
+  as MANIFEST ENTRIES (VERDICT r16 #1): versions are committed
+  through the engine's one manifest protocol (manifest.py, shared
+  with the near-dedup and streaming-IVF stores), whose
+  `_MANIFEST.json` maps each live `rb=` partition to its owner list —
+  always ONE owner here, since a merge rewrites a whole partition —
+  so a new version rewrites only the touched partitions' files and
+  inherits the rest as pure metadata, the file-remapping move of a
+  Delta/Iceberg MERGE.  A committed version without its manifest is
   not a layout this sink writes and fails every read loudly.  Read
   fan-out is bounded: when a manifest would reference more than
   spark.kss.sink.upsertCompactVersions distinct versions, the next
@@ -59,7 +60,7 @@ Design for scale:
   `_WRITER_EPOCH` inside the store), acquired lazily at the sink's
   FIRST write_batch (an attach that only reads never fences a live
   writer out) and re-checked immediately before every commit-point
-  mutation (both version renames and the prune's deletions).  Newest
+  mutation (the version rename and the prune's deletions).  Newest
   writer wins: after a failover the new driver's first write bumps
   the epoch, and the zombie's next commit raises StaleWriterError
   instead of interleaving renames — the parquet analogue of the
@@ -69,7 +70,7 @@ Design for scale:
   current() DataFrame held across later write_batch calls may still
   reference version dirs prune has since deleted — use snapshot()
   for a read that pins its versions against EVERY pruner on the
-  host (durable pin files, see PIN_DIR below) for the DataFrame's
+  host (durable pin files, manifest.PIN_DIR) for the DataFrame's
   lifetime (same time-travel caveat as any vacuumed table format
   otherwise).
 """
@@ -77,8 +78,6 @@ Design for scale:
 from __future__ import annotations
 
 import os
-import shutil
-import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -87,6 +86,11 @@ from pyspark.sql import types as T
 
 from kafka_spark_streaming_spark.fencing import WriterFence
 from kafka_spark_streaming_spark.functions import literal_frame
+from kafka_spark_streaming_spark.manifest import (  # noqa: F401 (re-export)
+    MANIFEST_NAME,
+    PIN_DIR,
+    ManifestStore,
+)
 
 CELL_KEY = ["rowkey", "cf", "qualifier"]
 
@@ -108,33 +112,13 @@ READ_SCHEMA = T.StructType(
 )
 
 
-MANIFEST_NAME = "_MANIFEST.json"
-
-# snapshot() pins are DURABLE since r19: each handed-out snapshot
-# writes a `_pins/pin-{pid}-{nonce}.json` file inside the store naming
-# the versions its read plan references, and EVERY pruner — any sink
-# attach in any process on the host — honors pin files whose holder
-# pid is alive (fencing.live_pins).  This closes the r18 caveat that
-# pins lived in a process-local registry, so a reader in a DIFFERENT
-# process raced vacuum: the post-failover writer in a new driver
-# process now sees its fenced predecessor's pins on disk.  Release is
-# the same weakref lifecycle as before (the pin file is deleted when
-# the snapshot DataFrame is collected), with two crash backstops: a
-# holder that dies without releasing leaves a pin whose pid is dead,
-# which the next prune deletes; and pid REUSE merely delays pruning
-# until the recycled pid exits (pins gate only deletions, never
-# correctness).  Multi-host deployments map pid-liveness onto a lease
-# TTL exactly like the writer fence (fencing module docstring).
-PIN_DIR = "_pins"
-
-
 # sentinel: "caller did not choose" — distinct from an explicit None
 # (pid mode), so drains can force lease mode without stealing the
 # conf knob from bare attaches
 _LEASE_FROM_CONF = object()
 
 
-class KeyedUpsertSink:
+class KeyedUpsertSink(ManifestStore):
     def __init__(
         self,
         spark: SparkSession,
@@ -154,8 +138,8 @@ class KeyedUpsertSink:
             upsert_state_buckets,
         )
 
+        super().__init__(path)
         self.spark = spark
-        self.path = path
         self._lease_ttl_s = lease_ttl_s
         self.compact_versions = upsert_compact_versions(spark)
         self.keep_versions = upsert_keep_versions(spark)
@@ -174,8 +158,7 @@ class KeyedUpsertSink:
         )
         # writer fence (module docstring): acquired at the FIRST
         # write_batch, not here — attaching to read must not fence a
-        # live writer out.
-        self._fence: WriterFence | None = None
+        # live writer out (ManifestStore starts it as None).
 
     def _writer_fence(self) -> WriterFence:
         if self._fence is None:
@@ -193,131 +176,25 @@ class KeyedUpsertSink:
             )
         return self._fence
 
-    # -- state management -------------------------------------------------
-    @staticmethod
-    def _batch_of(version: str) -> int:
-        """batch_id of a version dir name.  Names are
-        ``v_{batch_id:012d}`` for a first attempt and
-        ``v_{batch_id:012d}-r{k:06d}`` for the k-th RETRY attempt
-        (r18: committed versions are IMMUTABLE — a foreachBatch retry
-        used to rmtree+rewrite v_N in place, which deleted the files a
-        live snapshot() pin was still reading; now every commit gets
-        a fresh name and the superseded attempt lingers until prune,
-        exactly like any other non-head version).  _versions() sorts
-        numerically on (batch_id, attempt), never on the name."""
-        return int(version[2:].split("-", 1)[0])
-
-    @staticmethod
-    def _attempt_of(version: str) -> int:
-        """retry-attempt number of a version dir name (0 for a first
-        attempt)."""
-        return int(version.rsplit("-r", 1)[1]) if "-r" in version else 0
-
-    def _new_version_name(self, batch_id: int, versions: list[str]) -> str:
-        base = f"v_{batch_id:012d}"
-        attempts = [
-            v for v in versions if v == base or v.startswith(base + "-r")
-        ]
-        if not attempts:
-            return base
-        k = 1 + max(self._attempt_of(v) for v in attempts)
-        return f"{base}-r{k:06d}"
-
-    def _versions(self) -> list[str]:
-        # exclude in-flight '.tmp' build dirs: after a crash between the
-        # tmp write and the rename they linger, and current() must never
-        # surface uncommitted state (nor _prune count them toward keep).
-        return sorted(
-            (
-                d for d in os.listdir(self.path)
-                if d.startswith("v_") and "." not in d
-                and os.path.isdir(os.path.join(self.path, d))
-            ),
-            key=lambda v: (self._batch_of(v), self._attempt_of(v)),
-        )
-
+    # -- state management (version machinery: manifest.ManifestStore) ----
     def _rb(self, col) -> Column:
         return F.pmod(F.xxhash64(col), F.lit(self.buckets)).cast("int")
 
-    def _manifest(self, version: str) -> dict[str, str]:
-        """{rb= dir → owning version} of a committed version.  Every
-        version write_batch commits carries one (an empty manifest is
-        empty state), so a committed version without it is corruption
-        or a layout this sink never writes: fail loudly rather than
-        guess its ownership."""
-        import json
-
-        mpath = os.path.join(self.path, version, MANIFEST_NAME)
-        try:
-            with open(mpath) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(
-                f"upsert store version {os.path.join(self.path, version)!r}"
-                f" has no {MANIFEST_NAME} — not a layout this sink "
-                "writes; restore its manifest or rebuild the store "
-                "before reattaching"
-            ) from None
-
-    def _write_manifest(self, vdir: str, manifest: dict[str, str]) -> None:
-        """Written into the STILL-UNCOMMITTED tmp dir (the version
-        commit is the dir rename), fsync'd so a post-rename crash
-        cannot leave a truncated file (same durability policy as
-        config.commit_layout).  A torn manifest would fail LOUD
-        anyway — a truncated json.dump prefix is invalid JSON and
-        json.load raises — never silently-wrong ownership."""
-        import json
-
-        with open(os.path.join(vdir, MANIFEST_NAME), "w") as fh:
-            json.dump(manifest, fh, sort_keys=True)
-            fh.flush()
-            os.fsync(fh.fileno())
+    def _frame(self, manifest: dict[str, list[str]]) -> DataFrame:
+        """State incl. the rb layout column: one partition-pruned scan
+        per version the manifest references, unioned (the per-owner
+        basePath keeps rb a real partition column, so downstream
+        rb.isin filters prune at the directory level — and the
+        fan-out is bounded by the compaction threshold, not by batch
+        count).  Explicit READ_SCHEMA: the cell layout is fixed, so
+        none of the per-owner reads needs a parquet footer-inference
+        job."""
+        df = self._read(self.spark, manifest, READ_SCHEMA)
+        return literal_frame(self.spark, READ_SCHEMA) if df is None else df
 
     def _current_raw(self) -> DataFrame:
-        """Current state INCLUDING the rb layout column — see
-        _read_state for the plan shape."""
-        return self._read_state()[0]
-
-    def _read_state(self) -> tuple[DataFrame, str | None, dict[str, str]]:
-        """(state df incl. rb, head version, head manifest) from ONE
-        version listing: one partition-pruned scan per version the
-        head manifest references, unioned.  The per-owner basePath
-        keeps rb a real partition column, so downstream rb.isin
-        filters prune at the directory level (PartitionFilters) — and
-        the fan-out is bounded by the compaction threshold, not by
-        batch count.  Returning the head/manifest the plan was built
-        from lets snapshot() derive its pin set from the SAME listing
-        (ADVICE r18: a second _versions() read raced a concurrent
-        write_batch — the pin set named the new head while the
-        DataFrame still read the old manifest, so its files could be
-        pruned despite the pin)."""
-        versions = self._versions()
-        if not versions:
-            return literal_frame(self.spark, READ_SCHEMA), None, {}
-        head = versions[-1]
-        manifest = self._manifest(head)
-        if not manifest:
-            return literal_frame(self.spark, READ_SCHEMA), head, manifest
-        by_owner: dict[str, list[str]] = {}
-        for rb_dir, owner in manifest.items():
-            by_owner.setdefault(owner, []).append(rb_dir)
-        # explicit READ_SCHEMA: the cell layout is fixed, so none of
-        # the per-owner reads needs a parquet footer-inference job — at
-        # one read per referenced version per merge, that is
-        # compact_versions 1-task driver jobs per batch saved (same
-        # job-floor lever as the dedup store probes, r17)
-        parts = []
-        for owner, rb_dirs in sorted(by_owner.items()):
-            vdir = os.path.join(self.path, owner)
-            parts.append(
-                self.spark.read.schema(READ_SCHEMA)
-                .option("basePath", vdir)
-                .parquet(*[os.path.join(vdir, d) for d in sorted(rb_dirs)])
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df.withColumn("rb", F.col("rb").cast("int")), head, manifest
+        """Current state INCLUDING the rb layout column."""
+        return self._frame(self._head()[1])
 
     def current(self) -> DataFrame:
         """Current cell state as a DataFrame (empty if no writes yet).
@@ -335,7 +212,7 @@ class KeyedUpsertSink:
         dropping the reference releases the pin; no explicit close
         needed).  Closes current()'s documented lazy-across-prune
         caveat.  Scope (r19): pins are DURABLE pin files inside the
-        store (module docstring at PIN_DIR), so every pruner on the
+        store (manifest.PIN_DIR), so every pruner on the
         host honors them — any attach in this process, a post-failover
         writer in a DIFFERENT process, or a standalone maintenance
         pass; liveness is pid-based (a holder that crashes without
@@ -345,25 +222,12 @@ class KeyedUpsertSink:
         frames (selects/filters over it) are in use — deriving and
         dropping the original releases the pin at the next prune.
 
-        The read plan and the pin set come from ONE _read_state()
-        listing (ADVICE r18): a second listing could race a
-        concurrent write_batch and pin the new head's versions while
-        the DataFrame still read the old manifest.  And the pin
-        follows the shared publish-then-verify protocol
-        (fencing.pin_guarded, code-review r19): a pruner racing the
-        listing-to-pin window fails the post-publish verify (or
-        surfaces as a path-not-found while the plan is built over the
-        just-pruned listing), and the attempt retries against the new
-        head; see pin_guarded for the residual-window argument."""
-        from pyspark.errors import AnalysisException
-
+        The read plan and the pin set come from ONE listing (ADVICE
+        r18): a second listing could race a concurrent write_batch and
+        pin the new head's versions while the DataFrame still read the
+        old manifest.  The pin is the shared version pin,
+        ManifestStore._snapshot (publish-then-verify)."""
         from kafka_spark_streaming_spark.config import pin_ttl_for_writer
-        from kafka_spark_streaming_spark.fencing import (
-            PinRaceLost,
-            is_path_not_found,
-            pin_guarded,
-            release_pin,
-        )
 
         # the pin TTL must see this sink's EFFECTIVE fence lease, not
         # just the conf knob: a drain-default lease (constructor arg,
@@ -375,58 +239,11 @@ class KeyedUpsertSink:
             if self._lease_ttl_s is _LEASE_FROM_CONF
             else self._lease_ttl_s,
         )
-
-        def attempt():
-            try:
-                raw, head, manifest = self._read_state()
-            except AnalysisException as exc:
-                if not is_path_not_found(exc):
-                    raise  # deterministic failure, not a race
-                raise PinRaceLost(str(exc)) from exc
-            df = raw.drop("rb")
-            if head is None:
-                return None, None, lambda _p: df
-            pins = sorted({head} | set(manifest.values()))
-            payload = {"versions": pins, "purpose": "snapshot"}
-            if ttl is not None:
-                # multi-host mode: the pin auto-expires instead of
-                # relying on the single-host pid probe (fencing.live_pins)
-                payload["lease_ttl_s"] = ttl
-            # verify against a FILE-level sentinel (ADVICE r19):
-            # _prune deletes via shutil.rmtree, which removes files
-            # before the directory, so a pruner caught MID-rmtree still
-            # passes an isdir probe with the data already gone.  Each
-            # version's _MANIFEST.json disappears in that same
-            # file-removal phase, narrowing the undetected window to
-            # rmtree's final rmdir.
-            sentinels = [
-                os.path.join(self.path, v, MANIFEST_NAME) for v in pins
-            ]
-
-            def verify():
-                return all(os.path.exists(s) for s in sentinels)
-
-            def finish(pin_path):
-                weakref.finalize(df, release_pin, pin_path)
-                return df
-
-            return payload, verify, finish
-
-        return pin_guarded(
-            os.path.join(self.path, PIN_DIR),
-            attempt,
+        return self._snapshot(
+            lambda manifest: self._frame(manifest).drop("rb"),
+            ttl,
             what=f"snapshot({self.path!r})",
         )
-
-    def _live_pins(self) -> set[str]:
-        """Union of versions named by live-holder pin files — see
-        fencing.live_pins for the liveness/reaping/corrupt policy."""
-        from kafka_spark_streaming_spark.fencing import live_pins
-
-        pinned: set[str] = set()
-        for pin in live_pins(os.path.join(self.path, PIN_DIR)):
-            pinned.update(pin.get("versions", []))
-        return pinned
 
     def history(self) -> list[dict]:
         """Retained-version metadata, oldest first — the DESCRIBE
@@ -447,7 +264,7 @@ class KeyedUpsertSink:
                     "batch_id": self._batch_of(v),
                     "live_partitions": len(manifest),
                     "owned_partitions": sum(
-                        1 for owner in manifest.values() if owner == v
+                        1 for owners in manifest.values() if owners == [v]
                     ),
                     "is_head": v == versions[-1],
                 }
@@ -510,12 +327,7 @@ class KeyedUpsertSink:
             # the same collect-as-materializer pattern as the
             # incremental-dedup batch body
             rbs = [r[0] for r in stamped.select("rb").distinct().collect()]
-            versions = self._versions()
-            head = versions[-1] if versions else None
-            manifest = self._manifest(head) if head else {}
-            vname = self._new_version_name(batch_id, versions)
-            out = os.path.join(self.path, vname)
-            tmp = out + ".tmp"
+            head, manifest = self._head()
             if not rbs:
                 if not head:
                     # empty batch over an empty store: a 0-row
@@ -538,15 +350,11 @@ class KeyedUpsertSink:
                     # empty batch over a committed head: a pure-metadata
                     # version — every live partition carries forward in
                     # the manifest verbatim, no Spark job at all
-                    if os.path.exists(tmp):
-                        shutil.rmtree(tmp)
-                    os.makedirs(tmp)
-                    self._write_manifest(tmp, manifest)
-                    fence.check()  # commit point: the version rename
-                    if os.path.exists(out):
-                        shutil.rmtree(out)
-                    os.rename(tmp, out)
-                    self._prune(keep=self.keep_versions)
+                    self._commit(
+                        batch_id,
+                        lambda _v, _leaves: manifest,
+                        keep=self.keep_versions,
+                    )
                     fence.heartbeat()
                     return
             if head and self._batch_of(head) >= batch_id:
@@ -559,8 +367,9 @@ class KeyedUpsertSink:
             else:
                 carried_owners = {
                     owner
-                    for d, owner in manifest.items()
+                    for d, owners in manifest.items()
                     if int(d[3:]) not in set(rbs)
+                    for owner in owners
                 }
                 if len(carried_owners) + 1 > self.compact_versions:
                     # manifest would fan reads over too many versions:
@@ -569,82 +378,27 @@ class KeyedUpsertSink:
                     # ~compact_versions batches)
                     rbs = sorted({int(d[3:]) for d in manifest} | set(rbs))
             new_state = self._merged_state(stamped, batch_id, rbs)
-
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            new_state.write.mode("overwrite").partitionBy("rb").parquet(tmp)
             # manifest: carried partitions keep their owners; every rb
             # dir this write actually produced is owned by this
             # version.  A touched rb that merged to ZERO rows (all its
             # cells were first-attempt ghosts) writes no dir and drops
             # out of the manifest — exactly the purge semantics.
-            touched = set(rbs)
-            new_manifest = {
-                d: owner
-                for d, owner in manifest.items()
-                if int(d[3:]) not in touched
-            }
-            for d in os.listdir(tmp):
-                if d.startswith("rb=") and os.path.isdir(
-                    os.path.join(tmp, d)
-                ):
-                    new_manifest[d] = vname
-            self._write_manifest(tmp, new_manifest)
-            fence.check()  # commit point: the version rename
-            if os.path.exists(out):
-                shutil.rmtree(out)
-            os.rename(tmp, out)
-            self._prune(keep=self.keep_versions)
+            touched = {f"rb={k}" for k in rbs}
+            self._commit(
+                batch_id,
+                lambda vname, leaves: {
+                    **{d: o for d, o in manifest.items() if d not in touched},
+                    **{leaf: [vname] for leaf in leaves},
+                },
+                lambda tmp: new_state.write.mode("overwrite")
+                .partitionBy("rb")
+                .parquet(tmp),
+                keep=self.keep_versions,
+            )
             fence.heartbeat()  # renew the lease once per committed
             # batch (no-op write in pid mode — fencing.heartbeat)
         finally:
             stamped.unpersist()
-
-    def _prune(self, keep: int) -> None:
-        # deletions are a commit-point mutation too: a stale writer's
-        # version listing may not include the new writer's head, so it
-        # must not get to rmtree anything (fence is always held here —
-        # _prune is only reached from a fenced write_batch)
-        if self._fence is not None:
-            self._fence.check()
-        versions = self._versions()
-        # live = the kept heads plus every version their manifests
-        # reference — a version dir now holds data that NEWER versions
-        # inherit by manifest entry, so "older than head-keep" is no
-        # longer sufficient to delete (references are direct, never
-        # chained: reading v_N touches only v_N's own manifest)
-        live = set(versions[-keep:])
-        for v in list(live):
-            live.update(self._manifest(v).values())
-        # snapshot pins: versions a handed-out snapshot() DataFrame
-        # still references stay live until the DataFrame is collected —
-        # durable pin files, so snapshots from OTHER attaches and
-        # OTHER processes (the fenced predecessor's readers) are
-        # honored too
-        live.update(self._live_pins())
-        for stale in versions:
-            if stale in live:
-                continue
-            shutil.rmtree(os.path.join(self.path, stale), ignore_errors=True)
-        # crash-leftover build dirs: a v_N.tmp at or below the committed
-        # head can never be renamed into place (a replay of batch N
-        # rewrites it from scratch first), so each one strands a full
-        # state copy until the exact batch_id is retried (ADVICE r6
-        # upsert.py:103). Future-id tmp dirs are left alone — their
-        # batch is still in flight or will rewrite on retry.
-        if versions:
-            head = self._batch_of(versions[-1])
-            for d in os.listdir(self.path):
-                if not (d.startswith("v_") and d.endswith(".tmp")):
-                    continue
-                try:
-                    n = int(d[2:-4].split("-", 1)[0])
-                except ValueError:
-                    continue
-                if n <= head:
-                    shutil.rmtree(
-                        os.path.join(self.path, d), ignore_errors=True
-                    )
 
     # -- convenience: the reference's two write shapes --------------------
     def _next_batch_id(self) -> int:

@@ -8,13 +8,12 @@ pathology with the drain's own training/assignment helpers, show
 ann_store_stats detecting it, and show rebalance_ann_store restoring
 balance without changing the store's logical contents: every row ends
 in its argmax cell under the re-trained quantizer, the (vec_id,
-embedding) set is preserved, and an all-cells probe through the real
-read path equals a numpy exhaustive search.
+embedding) set is preserved, and an all-cells probe through the
+manifest read path equals a numpy exhaustive search.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -25,19 +24,20 @@ from kafka_spark_streaming_spark.fencing import (
     StaleWriterError,
     WriterFence,
 )
-from kafka_spark_streaming_spark.operators.store_maintenance import (
-    _data_files,
-    _leaf_dirs,
-    ann_store_stats,
-    rebalance_ann_store,
-)
+from kafka_spark_streaming_spark.manifest import ManifestStore
 from kafka_spark_streaming_spark.operators.similarity import (
     _IVF_CELLS,
     _IVF_DIM,
     ivf_assign_arrow,
-    ivf_init_centroids,
-    lloyd_refine,
 )
+from kafka_spark_streaming_spark.operators.store_maintenance import (
+    _live_files,
+    ann_centroids,
+    ann_store_stats,
+    pinned_store_read,
+    rebalance_ann_store,
+)
+from kafka_spark_streaming_spark.operators.streaming_queries import _ivf_fold
 
 N_BATCH0 = 64
 N_DRIFT = 500
@@ -62,48 +62,33 @@ def _emb_drift(i: int) -> list[float]:
     return [float(x) for x in v]
 
 
+def _centroids(store_dir: str) -> np.ndarray:
+    store = ManifestStore(store_dir)
+    return ann_centroids(store, store._head()[1])
+
+
 def _build_skewed_store(spark, store_dir: str) -> np.ndarray:
-    """Replay the drain's exact lifecycle by hand: batch 0 trains and
-    freezes the quantizer (strided init + one Lloyd step), every batch
-    appends its Arrow-matmul assignment one-file-per-touched-cell.
-    Batches 1..5 are pure drift.  Returns the frozen centroid matrix."""
+    """Run the drain's exact lifecycle through its own fold: batch 0
+    trains and commits the quantizer (strided init + one Lloyd step),
+    every batch commits its Arrow-matmul assignment
+    one-file-per-touched-cell.  Batches 1..5 are pure drift.  Returns
+    the frozen centroid matrix."""
     b0 = spark.createDataFrame(
         [(i, _emb_batch0(i)) for i in range(N_BATCH0)],
         "vec_id long, embedding array<float>",
     )
-    stride = max(N_BATCH0 // _IVF_CELLS, 1)
-    init = (
-        b0.filter(
-            (F.col("vec_id") % stride == 0)
-            & (F.col("vec_id") < stride * _IVF_CELLS)
-        )
-        .orderBy("vec_id")
-        .collect()
-    )
-    cmat = ivf_init_centroids(init)
-    cmat2 = lloyd_refine(ivf_assign_arrow(b0, cmat), cmat)
-    with open(store_dir.rstrip("/") + ".centroids.json", "w") as fh:
-        json.dump([[float(x) for x in row] for row in cmat2], fh)
-
-    def append(df):
-        (
-            ivf_assign_arrow(df, cmat2)
-            .repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(store_dir)
-        )
-
-    append(b0)
+    _ivf_fold(b0, store_dir, 0)
     for b in range(5):
         ids = range(100 + b * 100, 100 + (b + 1) * 100)
-        append(
+        _ivf_fold(
             spark.createDataFrame(
                 [(i, _emb_drift(i)) for i in ids],
                 "vec_id long, embedding array<float>",
-            )
+            ),
+            store_dir,
+            b + 1,
         )
-    return cmat2
+    return _centroids(store_dir)
 
 
 def _store_rows(spark, store_dir: str) -> dict[int, tuple]:
@@ -112,9 +97,7 @@ def _store_rows(spark, store_dir: str) -> dict[int, tuple]:
             tuple(round(float(x), 6) for x in r.embedding),
             int(r.cell),
         )
-        for r in spark.read.parquet(store_dir)
-        .dropDuplicates(["vec_id"])
-        .collect()
+        for r in pinned_store_read(spark, store_dir).collect()
     }
 
 
@@ -144,8 +127,7 @@ def test_skew_watch_detects_drift_and_rebalance_restores(spark, tmp_path):
     assert out["skew_after"] <= 2.0, out
     assert out["occupied_after"] >= out["occupied_before"]
     # one rewrite job -> one file per occupied leaf (compaction too)
-    leaves = _leaf_dirs(store, "cell=*")
-    assert all(len(_data_files(leaf)) == 1 for leaf in leaves)
+    assert all(len(fs) == 1 for fs in _live_files(store).values())
 
     # --- invariant 1: logical contents preserved exactly ----------------
     after = _store_rows(spark, store)
@@ -154,10 +136,9 @@ def test_skew_watch_detects_drift_and_rebalance_restores(spark, tmp_path):
 
     # --- invariant 2: every row sits in its argmax cell under the new
     # quantizer (the property probe pruning is correct BY) --------------
-    with open(store + ".centroids.json") as fh:
-        new_cmat = np.array(json.load(fh), dtype=np.float64)
+    new_cmat = _centroids(store)
     assert new_cmat.shape == (_IVF_CELLS, _IVF_DIM)
-    sdf = spark.read.parquet(store).dropDuplicates(["vec_id"])
+    sdf = pinned_store_read(spark, store)
     reassigned = {
         int(r.vec_id): int(r.cell)
         for r in ivf_assign_arrow(
@@ -181,9 +162,8 @@ def test_skew_watch_detects_drift_and_rebalance_restores(spark, tmp_path):
             if ids[j] != qid
         ][:3]
         got = (
-            spark.read.parquet(store)
+            pinned_store_read(spark, store)
             .filter(F.col("cell").isin(list(range(_IVF_CELLS))))
-            .dropDuplicates(["vec_id"])
             .filter(F.col("vec_id") != qid)
             .collect()
         )
@@ -233,9 +213,8 @@ def test_rebalance_refuses_live_writer_and_converges(spark, tmp_path):
     ), "a re-run must never change the store's logical contents"
     assert second["skew_after"] <= first["skew_after"] + 0.5
     # and the assignment invariant holds under the latest sidecar
-    with open(store + ".centroids.json") as fh:
-        cmat = np.array(json.load(fh), dtype=np.float64)
-    sdf = spark.read.parquet(store).dropDuplicates(["vec_id"])
+    cmat = _centroids(store)
+    sdf = pinned_store_read(spark, store)
     reassigned = {
         int(r.vec_id): int(r.cell)
         for r in ivf_assign_arrow(
@@ -250,40 +229,3 @@ def test_rebalance_requires_centroid_sidecar(spark, tmp_path):
     os.makedirs(store)
     with pytest.raises(ValueError, match="centroid sidecar"):
         rebalance_ann_store(spark, store)
-
-
-def test_pinned_export_dedup_cols_collapses_relocated_rows(
-    spark, tmp_path
-):
-    """code-review r20: full-row dedup cannot collapse a row the
-    rebalance crash window left in TWO cells (the copies differ in the
-    partition column); dedup_cols=['vec_id'] — the store's logical
-    key — collapses them for out-of-band exports."""
-    import gc
-
-    from kafka_spark_streaming_spark.operators.store_maintenance import (
-        pinned_store_read,
-    )
-
-    store = str(tmp_path / "store")
-    cmat = _build_skewed_store(spark, store)
-    assert cmat is not None
-    # simulate the rebalance crash window: one vector re-appended in a
-    # DIFFERENT cell, originals not yet deleted
-    moved = spark.createDataFrame(
-        [(0, _emb_batch0(0), 15)],
-        "vec_id long, embedding array<float>, cell int",
-    )
-    moved.write.mode("append").partitionBy("cell").parquet(store)
-
-    fullrow = pinned_store_read(spark, store)
-    n_full = fullrow.filter(F.col("vec_id") == 0).count()
-    assert n_full == 2, "precondition: full-row dedup keeps both cells"
-    del fullrow
-    gc.collect()
-
-    keyed = pinned_store_read(spark, store, dedup_cols=["vec_id"])
-    assert keyed.filter(F.col("vec_id") == 0).count() == 1
-    assert keyed.count() == N_BATCH0 + N_DRIFT
-    del keyed
-    gc.collect()

@@ -236,6 +236,9 @@ def test_dedup_batch_fenced_append_raises_for_zombie(spark, sf_smoke, tmp_path):
     """A drain-held fence must stop a zombie's append: after a newer
     writer acquires, the old fence's batch raises StaleWriterError at
     the commit point and the store content is unchanged."""
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        pinned_store_read,
+    )
     from kafka_spark_streaming_spark.operators.streaming_queries import (
         _incremental_dedup_batch,
     )
@@ -246,17 +249,18 @@ def test_dedup_batch_fenced_append_raises_for_zombie(spark, sf_smoke, tmp_path):
     docs = table(spark, sf_smoke, "documents")
     old = WriterFence.acquire(marker, purpose="drain-1")
     _incremental_dedup_batch(
-        docs.filter(F.col("doc_id") < 50), store, fence=old
+        docs.filter(F.col("doc_id") < 50), store, 0, fence=old
     )
-    n_before = spark.read.parquet(store).count()
+    n_before = pinned_store_read(spark, store).count()
     WriterFence.acquire(marker, purpose="drain-2")  # failover
     with pytest.raises(StaleWriterError):
         _incremental_dedup_batch(
             docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)),
             store,
+            1,
             fence=old,
         )
-    assert spark.read.parquet(store).count() == n_before
+    assert pinned_store_read(spark, store).count() == n_before
 
 
 def test_compact_refuses_live_writer_token(spark, sf_smoke, tmp_path):
@@ -277,7 +281,7 @@ def test_compact_refuses_live_writer_token(spark, sf_smoke, tmp_path):
     fence = WriterFence.acquire(marker, purpose="drain")
     for b in range(2):
         _incremental_dedup_batch(
-            docs.filter(F.col("doc_id") % 2 == b), store, fence=fence
+            docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
         )
     with pytest.raises(StaleWriterError, match="live writer"):
         compact_dedup_store(spark, store)
@@ -286,12 +290,12 @@ def test_compact_refuses_live_writer_token(spark, sf_smoke, tmp_path):
     stats = compact_dedup_store(spark, store, force=True)
     assert stats["rewrote"]
     with pytest.raises(StaleWriterError):
-        _incremental_dedup_batch(docs.limit(10), store, fence=fence)
+        _incremental_dedup_batch(docs.limit(10), store, 2, fence=fence)
     # a new drain attaches cleanly behind the compaction and, once it
     # idles, standalone compaction no longer refuses
     fence2 = WriterFence.acquire(marker, purpose="drain-2")
     _incremental_dedup_batch(
-        docs.filter(F.col("doc_id") < 20), store, fence=fence2
+        docs.filter(F.col("doc_id") < 20), store, 2, fence=fence2
     )
     fence2.idle()
     stats2 = compact_dedup_store(spark, store, min_files=1)
@@ -339,7 +343,7 @@ def test_dedup_layout_race_guard_fires_on_foreign_pin(
     sq._store_layout = racing_layout
     try:
         with pytest.raises(RuntimeError, match="pinned to \\(3, 5\\)"):
-            _incremental_dedup_batch(docs, store)
+            _incremental_dedup_batch(docs, store, 0)
     finally:
         sq._store_layout = orig
     assert not os.path.exists(store), "losing batch must not create the store"
@@ -382,14 +386,14 @@ def test_compact_cooperative_abort_before_delete_is_crash_shaped(
     spark, sf_smoke, tmp_path
 ):
     """Cooperative compaction whose fence goes stale mid-pass must
-    abort at the delete phase: the already-appended compacted files
-    are bit-identical duplicates every read path collapses (exactly a
-    crash-window state), no original file is removed, and a later
-    legitimate pass cleans it all up."""
+    abort at its commit point: the version rename never happens, so
+    the store keeps its pre-compaction head — exactly a crash-window
+    state — and a later legitimate pass compacts it."""
+    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
-        _data_files,
-        _leaf_dirs,
+        _live_files,
         compact_dedup_store,
+        pinned_store_read,
     )
     from kafka_spark_streaming_spark.operators.streaming_queries import (
         _incremental_dedup_batch,
@@ -402,37 +406,35 @@ def test_compact_cooperative_abort_before_delete_is_crash_shaped(
     fence = WriterFence.acquire(marker, purpose="drain")
     for b in range(2):
         _incremental_dedup_batch(
-            docs.filter(F.col("doc_id") % 2 == b), store, fence=fence
+            docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
         )
 
     def kept(d):
         return sorted(
             r["doc_id"]
-            for r in spark.read.parquet(d)
+            for r in pinned_store_read(spark, d)
             .filter((F.col("kind") == "p") & F.col("kept"))
-            .dropDuplicates(["doc_id"])
             .collect()
         )
 
     expect = kept(store)
-    files_before = sum(len(_data_files(leaf)) for leaf in _leaf_dirs(store))
-    # the fence goes stale before the pass reaches its delete phase
+    head_before = ManifestStore(store)._head()
+    files_before = _live_files(store)
+    # the fence goes stale before the pass reaches its commit point
     # (failover landed mid-compaction)
     usurper = WriterFence.acquire(marker, purpose="drain-2")
     with pytest.raises(StaleWriterError):
         compact_dedup_store(spark, store, fence=fence)
-    files_after_abort = sum(
-        len(_data_files(leaf)) for leaf in _leaf_dirs(store)
+    assert ManifestStore(store)._head() == head_before, (
+        "the abort point is BEFORE the version rename — the "
+        "pre-compaction head must still be the store's head"
     )
-    assert files_after_abort > files_before, (
-        "the abort point is AFTER the append phase — duplicates must "
-        "exist, originals must not have been deleted"
-    )
-    assert kept(store) == expect  # duplicate-tolerant reads unchanged
+    assert _live_files(store) == files_before
+    assert kept(store) == expect
     # the usurping drain's own cooperative pass folds everything back
     stats = compact_dedup_store(spark, store, fence=usurper, min_files=1)
     assert stats["rewrote"]
-    assert all(len(_data_files(leaf)) == 1 for leaf in _leaf_dirs(store))
+    assert all(len(fs) == 1 for fs in _live_files(store).values())
     assert kept(store) == expect
 
 
@@ -661,16 +663,15 @@ def test_snapshot_pin_file_lifecycle(spark, tmp_path):
 
 
 def test_pinned_store_read_survives_compaction(spark, sf_smoke, tmp_path):
-    """r19: pinned_store_read pins its exact file listing, so a
-    compaction pass that lands mid-read appends but SKIPS deleting the
-    pinned originals (tolerated bit-identical duplicates) — the held
-    DataFrame stays collectable with unchanged content.  Releasing the
-    pin lets the next pass sweep the leftovers down to one file per
-    leaf and reap the pin dir."""
+    """r19: pinned_store_read pins the versions its read references,
+    so a compaction pass that lands mid-read commits its version but
+    the prune SKIPS the pinned ones — the held DataFrame stays
+    collectable with unchanged content.  Releasing the pin lets the
+    next pass's prune reclaim them, down to the compacted head, and
+    reap the pin dir."""
+    from kafka_spark_streaming_spark.manifest import PIN_DIR, ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
-        _data_files,
-        _leaf_dirs,
-        _pin_dir,
+        _live_files,
         compact_dedup_store,
         pinned_store_read,
     )
@@ -684,7 +685,7 @@ def test_pinned_store_read_survives_compaction(spark, sf_smoke, tmp_path):
     fence = WriterFence.acquire(store + ".epoch", purpose="drain")
     for b in range(2):
         _incremental_dedup_batch(
-            docs.filter(F.col("doc_id") % 2 == b), store, fence=fence
+            docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
         )
     fence.idle()  # drain finished: standalone compaction may run
 
@@ -692,32 +693,37 @@ def test_pinned_store_read_survives_compaction(spark, sf_smoke, tmp_path):
         return sorted(
             r["doc_id"]
             for r in df.filter((F.col("kind") == "p") & F.col("kept"))
-            .dropDuplicates(["doc_id"])
             .collect()
         )
 
     pinned = pinned_store_read(spark, store)
     expect = kept(pinned)
-    assert expect == kept(spark.read.parquet(store))
-    stats = compact_dedup_store(spark, store)
+    assert expect == kept(pinned_store_read(spark, store))
+    # min_files=1 rewrites every leaf, so the compacted head references
+    # neither original version — only the pin keeps them
+    stats = compact_dedup_store(spark, store, min_files=1)
     assert stats["rewrote"]
-    # pinned originals survived: some leaf holds >1 file (compacted +
-    # pinned original), and the held DataFrame still collects the same
-    # answer from the SAME files
-    assert any(len(_data_files(leaf)) > 1 for leaf in _leaf_dirs(store))
+    # pinned originals survived: the pre-compaction versions are still
+    # on disk beside the compacted head, and the held DataFrame still
+    # collects the same answer from the SAME files
+    assert ManifestStore(store)._versions() == [
+        "v_000000000000", "v_000000000001", "v_000000000001-r000001"
+    ]
     assert kept(pinned) == expect
-    assert kept(spark.read.parquet(store)) == expect  # dups tolerated
-    # release the pin -> the next pass sweeps the leftovers
+    assert kept(pinned_store_read(spark, store)) == expect
+    # release the pin -> the next pass's prune reclaims them
     del pinned
     gc.collect()
-    stats2 = compact_dedup_store(spark, store, min_files=2)
+    stats2 = compact_dedup_store(spark, store, min_files=1)
     assert stats2["rewrote"]
-    assert all(len(_data_files(leaf)) == 1 for leaf in _leaf_dirs(store))
-    assert kept(spark.read.parquet(store)) == expect
+    assert ManifestStore(store)._versions() == ["v_000000000001-r000002"]
+    assert all(len(fs) == 1 for fs in _live_files(store).values())
+    assert kept(pinned_store_read(spark, store)) == expect
+    gc.collect()
+    pin_dir = os.path.join(store, PIN_DIR)
     assert not [
-        f for f in os.listdir(_pin_dir(store))
-        if f.endswith(".json")
-    ] if os.path.isdir(_pin_dir(store)) else True
+        f for f in os.listdir(pin_dir) if f.endswith(".json")
+    ] if os.path.isdir(pin_dir) else True
 
 
 def test_fence_lease_ttl_liveness(tmp_path):
@@ -778,7 +784,7 @@ def test_compact_standalone_proceeds_past_expired_lease(
     fence = WriterFence.acquire(marker, purpose="drain", lease_ttl_s=30.0)
     for b in range(2):
         _incremental_dedup_batch(
-            docs.filter(F.col("doc_id") % 2 == b), store, fence=fence
+            docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
         )
     # live lease: compaction refuses
     with pytest.raises(StaleWriterError):
@@ -790,7 +796,7 @@ def test_compact_standalone_proceeds_past_expired_lease(
     assert stats["rewrote"]
     # and the zombie, were it to come back, is fenced at its next append
     with pytest.raises(StaleWriterError):
-        _incremental_dedup_batch(docs.limit(5), store, fence=fence)
+        _incremental_dedup_batch(docs.limit(5), store, 2, fence=fence)
 
 
 def test_fence_lease_knob_wires_store_writers(spark, tmp_path):
@@ -1214,47 +1220,6 @@ def test_snapshot_verify_fails_on_mid_rmtree_version(
         spark.conf.unset(UPSERT_STATE_BUCKETS_KEY)
 
 
-def test_pinned_store_read_collapses_crash_window_duplicates(
-    spark, tmp_path
-):
-    """ADVICE r19 store_maintenance.py:142: pinned_store_read serves
-    out-of-band EXPORTS, which have no downstream dedup — after a
-    crash window the store legitimately holds bit-identical duplicate
-    rows (original + compacted copy), so the read applies the same
-    full-row dropDuplicates compaction's rewrite does."""
-    import shutil
-
-    from kafka_spark_streaming_spark.operators.store_maintenance import (
-        _data_files,
-        _leaf_dirs,
-        pinned_store_read,
-    )
-
-    store = str(tmp_path / "store")
-    df = spark.createDataFrame(
-        [("a", 0, 1), ("a", 0, 2), ("b", 1, 3)],
-        "kind string, pk int, val int",
-    ).coalesce(1)
-    df.write.partitionBy("kind", "pk").parquet(store)
-    # crash-window simulation: a compacted copy appended, originals
-    # not yet deleted -> the same rows exist twice in one leaf
-    leaf = _leaf_dirs(store)[0]
-    src = _data_files(leaf)[0]
-    shutil.copy(src, os.path.join(leaf, "part-dup-copy.parquet"))
-    raw = spark.read.parquet(store)
-    assert raw.count() > 3, "precondition: raw listing sees duplicates"
-
-    pinned = pinned_store_read(spark, store)
-    rows = sorted(
-        (r.kind, r.pk, r.val) for r in pinned.collect()
-    )
-    assert rows == [("a", 0, 1), ("a", 0, 2), ("b", 1, 3)], (
-        "export read must collapse bit-identical duplicates"
-    )
-    del pinned
-    gc.collect()
-
-
 def test_drains_default_to_lease_mode(spark, tmp_path):
     """VERDICT r19 #5: the registered drains' writers run LEASE mode
     by default — the pid probe means nothing multi-host and every
@@ -1440,13 +1405,13 @@ def test_failed_standalone_pass_is_retryable(spark, sf_smoke, tmp_path):
     fence = WriterFence.acquire(store + ".epoch", purpose="drain")
     for b in range(2):
         _incremental_dedup_batch(
-            docs.filter(F.col("doc_id") % 2 == b), store, fence=fence
+            docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
         )
     fence.idle()
 
     # inject a failure mid-pass: make the tmp path unusable by
     # pre-creating it as a FILE (the pass rmtree/overwrites a dir)
-    tmp = store + ".compact.tmp"
+    tmp = os.path.join(store, "v_000000000001-r000001.tmp")
     with open(tmp, "w") as fh:
         fh.write("not a dir")
     with pytest.raises(Exception):
@@ -1469,16 +1434,26 @@ def test_pinned_store_read_inherits_writer_lease(spark, tmp_path):
     from kafka_spark_streaming_spark.config import (
         PIN_TTL_FALLBACK_FACTOR,
     )
+    from kafka_spark_streaming_spark.manifest import PIN_DIR, ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
-        _pin_dir,
         pinned_store_read,
     )
+
+    def _pin_dir(store):
+        return os.path.join(store, PIN_DIR)
+
+    def commit(store):
+        ManifestStore(store)._commit(
+            0,
+            lambda vname, leaves: {leaf: [vname] for leaf in leaves},
+            lambda tmp: df.write.partitionBy("kind", "pk").parquet(tmp),
+        )
 
     store = str(tmp_path / "store")
     df = spark.createDataFrame(
         [("a", 0, 1), ("b", 1, 2)], "kind string, pk int, val int"
     ).coalesce(1)
-    df.write.partitionBy("kind", "pk").parquet(store)
+    commit(store)
 
     # writer ran the drain default: leased fence, conf knobs unset
     fence = WriterFence.acquire(
@@ -1498,7 +1473,7 @@ def test_pinned_store_read_inherits_writer_lease(spark, tmp_path):
 
     # a pid-mode writer's store keeps pid pins (no token lease)
     store2 = str(tmp_path / "store2")
-    df.write.partitionBy("kind", "pk").parquet(store2)
+    commit(store2)
     WriterFence.acquire(store2 + ".epoch", purpose="drain").idle()
     pinned2 = pinned_store_read(spark, store2)
     (pin2,) = [

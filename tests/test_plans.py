@@ -839,8 +839,8 @@ def _combined_dedup_store(spark, tmp_path, n_rows=500):
     """A miniature of the r16 combined incremental-dedup store: band
     rows (kind=b, pk=pmod(bh, band buckets)) and profile rows
     (kind=p, pk=pmod(doc_id, profile buckets)) in ONE (kind, pk)-
-    partitioned dataset, written the way the batch body writes it
-    (unionByName with allowMissingColumns)."""
+    partitioned manifest version, written the way the batch body
+    writes it (unionByName with allowMissingColumns)."""
     from pyspark.sql import functions as F
 
     from kafka_spark_streaming_spark.config import (
@@ -873,10 +873,16 @@ def _combined_dedup_store(spark, tmp_path, n_rows=500):
         )
         .withColumn("kind", F.lit("p"))
     )
+    from kafka_spark_streaming_spark.manifest import ManifestStore
+
     d = str(tmp_path / "store")
-    bands.unionByName(profiles, allowMissingColumns=True).write.partitionBy(
-        "kind", "pk"
-    ).parquet(d)
+    ManifestStore(d)._commit(
+        0,
+        lambda vname, leaves: {leaf: [vname] for leaf in leaves},
+        lambda tmp: bands.unionByName(profiles, allowMissingColumns=True)
+        .write.partitionBy("kind", "pk")
+        .parquet(tmp),
+    )
     return d, bands, profiles
 
 
@@ -1045,12 +1051,12 @@ def test_upsert_manifest_compaction_bounds_read_fanout(spark, tmp_path):
             model[f"k{i}"] = f"v{i}-b{i}"
             head = sink._versions()[-1]
             with open(os.path.join(sink.path, head, MANIFEST_NAME)) as fh:
-                owners = set(json.load(fh).values())
+                owners = set().union(*json.load(fh).values())
             assert len(owners) <= 3, f"batch {i}: fan-out {len(owners)}"
         # every on-disk version is either a kept head or referenced
         live = set(sink._versions()[-2:])
         for v in list(live):
-            live.update(sink._manifest(v).values())
+            live.update(*sink._manifest(v).values())
         assert set(sink._versions()) == live
         got = {r["rowkey"]: r["value"] for r in sink.current().collect()}
         assert got == model
@@ -1349,9 +1355,13 @@ def test_store_bucket_configs_steer_layout(spark, tmp_path, sf_smoke):
     from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
     from kafka_spark_streaming_spark.tables import table
 
-    def pk_values(d):
+    from kafka_spark_streaming_spark.manifest import ManifestStore
+
+    def pk_values(store, kind):
         return sorted(
-            int(p[3:]) for p in os.listdir(d) if p.startswith("pk=")
+            int(leaf.rsplit("=", 1)[1])
+            for leaf in ManifestStore(store)._head()[1]
+            if leaf.startswith(f"kind={kind}/pk=")
         )
 
     assert band_store_buckets(spark) == 16  # default when unset
@@ -1367,11 +1377,11 @@ def test_store_bucket_configs_steer_layout(spark, tmp_path, sf_smoke):
         docs = table(spark, sf_smoke, "documents").filter(
             F.col("doc_id") < 100
         )
-        _incremental_dedup_batch(docs, store)
-        assert set(pk_values(os.path.join(store, "kind=b"))) <= set(
+        _incremental_dedup_batch(docs, store, 0)
+        assert set(pk_values(store, "b")) <= set(
             range(4)
-        ) and len(pk_values(os.path.join(store, "kind=b"))) == 4
-        assert pk_values(os.path.join(store, "kind=p")) == [0, 1]
+        ) and len(pk_values(store, "b")) == 4
+        assert pk_values(store, "p") == [0, 1]
 
         sink = KeyedUpsertSink(spark, str(tmp_path / "cells"))
         assert sink.buckets == 3
@@ -1478,7 +1488,7 @@ def test_incremental_dedup_skips_empty_batch(spark, tmp_path, sf_smoke):
 
     store = str(tmp_path / "store")
     docs = table(spark, sf_smoke, "documents")
-    _incremental_dedup_batch(docs.filter(F.col("doc_id") < 0), store)
+    _incremental_dedup_batch(docs.filter(F.col("doc_id") < 0), store, 0)
     assert not os.path.exists(store)
     # ADVICE r16: the 0-row batch must not pin the layout marker either
     # — a conf retune BEFORE the first real data batch is still honored
@@ -1488,7 +1498,7 @@ def test_incremental_dedup_skips_empty_batch(spark, tmp_path, sf_smoke):
     try:
         spark.conf.set(BAND_STORE_BUCKETS_KEY, "5")
         # and a later real batch starts the store normally
-        _incremental_dedup_batch(docs.filter(F.col("doc_id") < 50), store)
+        _incremental_dedup_batch(docs.filter(F.col("doc_id") < 50), store, 1)
         from kafka_spark_streaming_spark.operators.streaming_queries import (
             _store_layout,
         )
@@ -1496,8 +1506,12 @@ def test_incremental_dedup_skips_empty_batch(spark, tmp_path, sf_smoke):
         assert _store_layout(spark, store)[0] == 5
     finally:
         spark.conf.unset(BAND_STORE_BUCKETS_KEY)
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        pinned_store_read,
+    )
+
     kept = (
-        spark.read.parquet(store)
+        pinned_store_read(spark, store)
         .filter((F.col("kind") == "p") & F.col("kept"))
         .count()
     )

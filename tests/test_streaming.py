@@ -402,20 +402,18 @@ def test_upsert_empty_retry_purges_first_attempt(spark, tmp_path):
 def test_dedup_store_compaction_preserves_semantics(spark, sf_smoke, tmp_path):
     """compact_dedup_store folds every (kind, pk) leaf to one file and
     must be invisible to every consumer: (a) the kept set is unchanged,
-    (b) a crash-window state — an already-deleted original file
-    reappearing next to its compacted copy — changes nothing (the
-    duplicate-tolerance invariant compaction's crash-safety leans on),
-    (c) a store that keeps streaming AFTER compaction converges to the
-    same kept set as an identical store that never compacted."""
+    (b) a superseded original file reappearing at its old path changes
+    nothing (reads go through the head manifest only), (c) a store
+    that keeps streaming AFTER compaction converges to the same kept
+    set as an identical store that never compacted."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
     from kafka_spark_streaming_spark.operators.store_maintenance import (
-        _data_files,
-        _leaf_dirs,
+        _live_files,
         compact_dedup_store,
+        pinned_store_read,
     )
     from kafka_spark_streaming_spark.operators.streaming_queries import (
         _incremental_dedup_batch,
@@ -427,22 +425,20 @@ def test_dedup_store_compaction_preserves_semantics(spark, sf_smoke, tmp_path):
     control = str(tmp_path / "control")
     for b in range(4):
         batch = docs.filter(F.col("doc_id") % 5 == b)
-        _incremental_dedup_batch(batch, store)
-        _incremental_dedup_batch(batch, control)
+        _incremental_dedup_batch(batch, store, b)
+        _incremental_dedup_batch(batch, control, b)
 
     def kept(d):
         return sorted(
             r["doc_id"]
-            for r in spark.read.parquet(d)
+            for r in pinned_store_read(spark, d)
             .filter((F.col("kind") == "p") & F.col("kept"))
-            .dropDuplicates(["doc_id"])
             .collect()
         )
 
     expect = kept(store)
-    saved = None  # an original file, preserved to replay the crash window
-    for leaf in _leaf_dirs(store):
-        files = _data_files(leaf)
+    saved = None  # an original file, preserved to replay it later
+    for files in _live_files(store).values():
         if len(files) >= 2:
             saved = (files[0], open(files[0], "rb").read())
             break
@@ -450,11 +446,12 @@ def test_dedup_store_compaction_preserves_semantics(spark, sf_smoke, tmp_path):
 
     stats = compact_dedup_store(spark, store)
     assert stats["rewrote"] and stats["files_after"] < stats["files_before"]
-    assert all(len(_data_files(leaf)) == 1 for leaf in _leaf_dirs(store))
+    assert all(len(fs) == 1 for fs in _live_files(store).values())
     assert kept(store) == expect
 
-    # (b) crash window: a deleted original resurfaces beside its
-    # compacted copy — reads must collapse the duplicate rows
+    # (b) a superseded original resurfaces at its old path — reads
+    # follow the head manifest, so nothing changes
+    os.makedirs(os.path.dirname(saved[0]), exist_ok=True)
     with open(saved[0], "wb") as fh:
         fh.write(saved[1])
     assert kept(store) == expect
@@ -465,8 +462,8 @@ def test_dedup_store_compaction_preserves_semantics(spark, sf_smoke, tmp_path):
     # (c) the compacted store keeps streaming identically to the
     # never-compacted control
     last = docs.filter(F.col("doc_id") % 5 == 4)
-    _incremental_dedup_batch(last, store)
-    _incremental_dedup_batch(last, control)
+    _incremental_dedup_batch(last, store, 4)
+    _incremental_dedup_batch(last, control, 4)
     assert kept(store) == kept(control)
     # layout marker untouched by maintenance
     from kafka_spark_streaming_spark.operators.streaming_queries import (
@@ -485,13 +482,11 @@ def test_dedup_compaction_policy_sawtooths_file_growth(
     stays identical to a never-compacted control.  Exercises the
     cooperative fence path compact_dedup_store takes when invoked
     from inside a drain."""
-    import os
-
     from kafka_spark_streaming_spark.fencing import WriterFence
     from kafka_spark_streaming_spark.operators.store_maintenance import (
-        _data_files,
-        _leaf_dirs,
+        _live_files,
         compact_dedup_store,
+        pinned_store_read,
     )
     from kafka_spark_streaming_spark.operators.streaming_queries import (
         _incremental_dedup_batch,
@@ -506,30 +501,27 @@ def test_dedup_compaction_policy_sawtooths_file_growth(
     total_files = []  # trajectory after each batch(+policy) step
     for b in range(6):
         batch = docs.filter(F.col("doc_id") % 6 == b)
-        _incremental_dedup_batch(batch, store, fence=fence)
-        _incremental_dedup_batch(batch, control)
-        if (b + 1) % every == 0 and os.path.exists(store):
+        _incremental_dedup_batch(batch, store, b, fence=fence)
+        _incremental_dedup_batch(batch, control, b)
+        if (b + 1) % every == 0:
             compact_dedup_store(spark, store, fence=fence)
         total_files.append(
-            sum(len(_data_files(leaf)) for leaf in _leaf_dirs(store))
+            sum(len(fs) for fs in _live_files(store).values())
         )
-    n_leaves = len(_leaf_dirs(store))
+    n_leaves = len(_live_files(store))
     # sawtooth: every policy point is back at one file per leaf...
     assert total_files[1::every] == [n_leaves] * 3, total_files
     # ...while between points the count grows above it
     assert total_files[2] > n_leaves
     # control grows monotonically past the compacted store's ceiling
-    control_files = sum(
-        len(_data_files(leaf)) for leaf in _leaf_dirs(control)
-    )
+    control_files = sum(len(fs) for fs in _live_files(control).values())
     assert control_files > total_files[-1]
 
     def kept(d):
         return sorted(
             r["doc_id"]
-            for r in spark.read.parquet(d)
+            for r in pinned_store_read(spark, d)
             .filter((F.col("kind") == "p") & F.col("kept"))
-            .dropDuplicates(["doc_id"])
             .collect()
         )
 
@@ -957,23 +949,6 @@ def test_cli_per_record_end_to_end(spark, sf_smoke, tmp_path_factory):
     )  # null keys routed to the sentinel
 
 
-def test_compaction_preserves_rows(spark, sf_smoke, tmp_path):
-    """Fragment events into many tiny files, compact, assert identical
-    content and a bounded file count."""
-    from kafka_spark_streaming_spark.maintenance import compact_parquet
-
-    path = str(tmp_path / "frag")
-    ev = table(spark, sf_smoke, "events")
-    ev.repartition(64).write.parquet(path)
-    assert len([f for f in os.listdir(path) if f.endswith(".parquet")]) == 64
-    before = ev.count()
-    n_files = compact_parquet(spark, path, target_file_bytes=1 << 20)
-    assert n_files < 64
-    after_df = spark.read.parquet(path)
-    assert after_df.count() == before
-    assert after_df.exceptAll(ev).count() == 0
-
-
 def test_pipeline_zombie_driver_fenced_after_failover(
     spark, sf_smoke, tmp_path
 ):
@@ -1336,20 +1311,20 @@ def test_explain_cli_prints_plan(spark, capsys):
 
 
 def test_incremental_dedup_batch_replay_idempotent(spark, sf_smoke, tmp_path):
-    """r15 removed the per-batch dropDuplicates replay guard on the
-    profile-store read (it was a full-history shuffle of the hs arrays
-    every batch) on the ARGUMENT that a foreachBatch retry appends
-    bit-identical rows whose duplicate verify matches cannot change
-    any verdict.  This test makes that argument executable: run two
-    batches, then REPLAY the second (exactly what a retry after a
-    post-write crash does — the store already holds the replayed
-    batch's own profile and band rows), and pin that the kept set is
-    unchanged row-for-row.  Also pins the band store's pb= directory
-    layout, which the partition-pruned probe relies on."""
-    import os
-
+    """Exactly-once from the manifest: run two batches, then REPLAY
+    the second with its batch_id (exactly what a foreachBatch retry
+    after a post-commit crash does — the store already holds the
+    replayed batch's version), and pin that the retry commits no
+    version, leaves the stored profile-row count unchanged and leaves
+    the kept set unchanged row-for-row.  Also pins the store's
+    (kind, pk) leaf layout, which the partition-pruned probes rely
+    on."""
     from pyspark.sql import functions as F
 
+    from kafka_spark_streaming_spark.manifest import ManifestStore
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        pinned_store_read,
+    )
     from kafka_spark_streaming_spark.operators.streaming_queries import (
         _incremental_dedup_batch,
     )
@@ -1360,41 +1335,87 @@ def test_incremental_dedup_batch_replay_idempotent(spark, sf_smoke, tmp_path):
     half0 = docs.filter(F.col("doc_id") < 250)
     half1 = docs.filter(F.col("doc_id") >= 250)
 
+    def profiles():
+        return pinned_store_read(spark, store_dir).filter(
+            F.col("kind") == "p"
+        )
+
     def kept_rows():
         return sorted(
             tuple(r)
-            for r in spark.read.parquet(store_dir)
-            .filter((F.col("kind") == "p") & F.col("kept"))
+            for r in profiles()
+            .filter(F.col("kept"))
             .select("doc_id", "n")
-            .dropDuplicates(["doc_id"])
             .collect()
         )
 
-    _incremental_dedup_batch(half0, store_dir)
-    _incremental_dedup_batch(half1, store_dir)
+    _incremental_dedup_batch(half0, store_dir, 0)
+    _incremental_dedup_batch(half1, store_dir, 1)
     before = kept_rows()
     assert len(before) > 0
-    # the combined store is directory-partitioned on (kind, pk):
-    # band rows under kind=b, profile rows under kind=p (r16 — both
-    # pruned probes rely on this layout)
-    kinds = set(os.listdir(store_dir)) - {"_SUCCESS"}
-    assert {"kind=b", "kind=p"} <= kinds, f"store layout: {kinds}"
+    n_profiles = profiles().count()
+    assert n_profiles == docs.count(), "one profile row per document"
+    # the combined store is leaf-partitioned on (kind, pk): band rows
+    # under kind=b, profile rows under kind=p (r16 — both pruned
+    # probes rely on this layout)
+    store = ManifestStore(store_dir)
+    versions = store._versions()
+    leaves = store._head()[1]
+    assert {leaf.split("/")[0] for leaf in leaves} == {"kind=b", "kind=p"}
     assert any(
-        d.startswith("pk=")
-        for d in os.listdir(os.path.join(store_dir, "kind=b"))
+        leaf.startswith("kind=b/pk=") for leaf in leaves
     ), "band rows lost their pk= partition layout"
 
-    # retry of batch 1: same input against a store that already holds
-    # batch 1's own rows
-    _incremental_dedup_batch(half1, store_dir)
-    after = kept_rows()
-    assert after == before, "replayed batch changed the kept set"
-    # and the replay appended duplicates rather than rewriting state:
-    # raw profile row count grew, deduped verdict set did not
-    raw = spark.read.parquet(store_dir).filter(F.col("kind") == "p").count()
-    assert raw > len(
-        set(r[0] for r in before)
-    ), "replay should append duplicate rows (append-only store)"
+    # retry of batch 1: same input against a store whose head already
+    # holds batch 1
+    _incremental_dedup_batch(half1, store_dir, 1)
+    assert store._versions() == versions, "the retry committed a version"
+    assert profiles().count() == n_profiles
+    assert kept_rows() == before, "replayed batch changed the kept set"
+
+
+def test_ivf_fold_replay_commits_nothing(spark, sf_smoke, tmp_path):
+    """The streaming-IVF fold's exactly-once argument, as for the
+    near-dedup batch: replaying a committed batch_id commits no
+    version and leaves the stored rows (and the quantizer) as they
+    were; the next batch_id still commits."""
+    from kafka_spark_streaming_spark.manifest import ManifestStore
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        CENTROIDS_NAME,
+        pinned_store_read,
+    )
+    from kafka_spark_streaming_spark.operators.streaming_queries import (
+        _ivf_fold,
+    )
+    from kafka_spark_streaming_spark.tables import table
+
+    store_dir = str(tmp_path / "store")
+    emb = table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
+    parts = [emb.filter(F.col("vec_id") % 3 == b) for b in range(3)]
+
+    def rows():
+        return sorted(
+            (r.vec_id, r.cell)
+            for r in pinned_store_read(spark, store_dir)
+            .select("vec_id", "cell")
+            .collect()
+        )
+
+    _ivf_fold(parts[0], store_dir, 0)
+    _ivf_fold(parts[1], store_dir, 1)
+    store = ManifestStore(store_dir)
+    versions = store._versions()
+    quantizer = store._head()[1][CENTROIDS_NAME]
+    before = rows()
+    for b in (0, 1):
+        _ivf_fold(parts[b], store_dir, b)
+    assert store._versions() == versions, "a replay committed a version"
+    assert rows() == before
+    assert store._head()[1][CENTROIDS_NAME] == quantizer
+    _ivf_fold(parts[2], store_dir, 2)
+    after = rows()
+    assert len(after) == emb.count()
+    assert len({v for v, _ in after}) == len(after), "duplicate vec_ids"
 
 
 def test_incremental_dedup_batching_invariant(spark, sf_smoke):
@@ -1437,8 +1458,7 @@ def test_ann_store_compaction_policy_and_knob_invariance(spark, sf_smoke):
 
     from kafka_spark_streaming_spark.config import ANN_COMPACT_EVERY_KEY
     from kafka_spark_streaming_spark.operators.store_maintenance import (
-        _data_files,
-        _leaf_dirs,
+        _live_files,
     )
     from kafka_spark_streaming_spark.operators.streaming_queries import (
         s_incremental_ann_ivf,
@@ -1463,12 +1483,9 @@ def test_ann_store_compaction_policy_and_knob_invariance(spark, sf_smoke):
                 )
                 - before
             )
-            store = os.path.join(run_dir, "store")
-            files = sum(
-                len(_data_files(leaf))
-                for leaf in _leaf_dirs(store, "cell=*")
-            )
-            leaves = len(_leaf_dirs(store, "cell=*"))
+            live = _live_files(os.path.join(run_dir, "store"))
+            files = sum(len(fs) for fs in live.values())
+            leaves = len(live)
             return rows, files, leaves
         finally:
             if knob is not None:

@@ -7,11 +7,11 @@ Prints one JSON line per store.  With --stats-only: the cell-
 occupancy histogram (ann_store_stats — the drift signal), no writes.
 Otherwise: the result of rebalance_ann_store (re-train the coarse
 quantizer on the store's current contents, rewrite rows into their
-new argmax cells; crash-safe append-first/sidecar-swap/delete-last —
-see kafka_spark_streaming_spark/operators/store_maintenance.py),
+new argmax cells, and commit rows and quantizer as one manifest
+version — see kafka_spark_streaming_spark/operators/store_maintenance.py),
 whose record carries skew/occupancy AND the per-cell histograms
 before and after, so nothing is lost by skipping the separate stats
-scan.  The
+scan.  A path holding no committed version prints an error line.  The
 single-writer contract is enforced exactly like compaction: the pass
 refuses a store whose writer token names a live drain, and --force
 overrides a token you know is stale.
@@ -36,6 +36,7 @@ def main(argv: list[str]) -> int:
         return 2
     from kafka_spark_streaming_spark import get_spark
     from kafka_spark_streaming_spark.fencing import StaleWriterError
+    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         ann_store_stats,
         rebalance_ann_store,
@@ -45,6 +46,10 @@ def main(argv: list[str]) -> int:
     rc = 0
     for path in paths:
         doc: dict = {"store": path}
+        if not ManifestStore(path)._versions():
+            print(json.dumps({**doc, "error": "no committed version"}))
+            rc = 1
+            continue
         try:
             if stats_only:
                 doc["stats"] = ann_store_stats(spark, path)
@@ -62,7 +67,6 @@ def main(argv: list[str]) -> int:
             doc["error"] = f"{type(exc).__name__}: {exc}"
             rc = 1
         print(json.dumps(doc))
-    spark.stop()
     return rc
 
 

@@ -3,11 +3,13 @@
 Usage:
     python tools/compact_dedup_store.py [--force] [--ann] /path/to/store [more...]
 
-Folds every leaf of each store back to one file (see
-kafka_spark_streaming_spark/operators/store_maintenance.py for the
-crash-safety argument): by default the incremental-dedup layout
-(kind=*/pk=* leaves); with --ann the streaming-IVF layout (cell=*
-leaves).  The single-writer contract is ENFORCED (r18): the pass
+Folds every multi-file leaf of each store's committed head back to
+one file and commits the result as a new manifest version (see
+kafka_spark_streaming_spark/operators/store_maintenance.py): by
+default the incremental-dedup layout (kind=*/pk=* leaves); with --ann
+the streaming-IVF layout (cell=* leaves).  A path holding no
+committed version prints an error line.  The single-writer contract
+is ENFORCED (r18): the pass
 refuses a store whose writer token names a live drain (run between
 drains, or let the drain's compactEveryNBatches policy knob compact
 in-line), and --force overrides a token you know is stale.  Prints
@@ -33,6 +35,7 @@ def main(paths: list[str]) -> int:
         return 2
     from kafka_spark_streaming_spark import get_spark
     from kafka_spark_streaming_spark.fencing import StaleWriterError
+    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         compact_ann_store,
         compact_dedup_store,
@@ -42,8 +45,8 @@ def main(paths: list[str]) -> int:
     spark = get_spark()
     rc = 0
     for p in paths:
-        if not os.path.isdir(p):
-            print(json.dumps({"store": p, "error": "not a directory"}))
+        if not ManifestStore(p)._versions():
+            print(json.dumps({"store": p, "error": "no committed version"}))
             rc = 1
             continue
         try:
