@@ -130,8 +130,8 @@ class ManifestStore:
         # surface uncommitted state (nor _prune count them toward keep).
         try:
             names = os.listdir(self.path)
-        except FileNotFoundError:
-            return []  # nothing committed yet
+        except (FileNotFoundError, NotADirectoryError):
+            return []  # nothing committed yet (or not a store dir)
         return sorted(
             (
                 d for d in names

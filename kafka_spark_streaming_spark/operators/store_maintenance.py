@@ -5,14 +5,14 @@ The incremental-dedup store and the streaming-IVF store
 micro-batch (manifest.py), and each batch adds one file per touched
 leaf — so a leaf's owner list, and the files a probe lists, grow
 O(batches) on a long-running stream.  `compact_dedup_store` /
-`compact_ann_store` fold every multi-file leaf of the head back to one
-file and commit the result as a `v_{head}-r{k}` version — the role
-OPTIMIZE/rewrite_data_files plays for a Delta/Iceberg table, and the
-symmetric move to the upsert sink's manifest compaction
-(sinks/upsert.py).  `rebalance_ann_store` re-trains the IVF quantizer
-and commits the re-partitioned data and the new quantizer in ONE
-version, so probes switch quantizers in the same rename that moves
-the rows.
+`compact_ann_store` rewrite the head, one file per leaf, once any leaf
+holds ``min_files`` files, and commit the result as a `v_{head}-r{k}`
+version that owns every leaf — the role OPTIMIZE/rewrite_data_files
+plays for a Delta/Iceberg table, and the symmetric move to the upsert
+sink's manifest compaction (sinks/upsert.py).  `rebalance_ann_store`
+re-trains the IVF quantizer and commits the re-partitioned data and
+the new quantizer in ONE version, so probes switch quantizers in the
+same rename that moves the rows.
 
 Crash safety is the commit protocol's: nothing a pass writes is
 visible before its version rename, so a crash — or a fenced abort —
@@ -398,8 +398,8 @@ def compact_dedup_store(
     fence: WriterFence | None = None,
     force: bool = False,
 ) -> dict:
-    """Fold every multi-file (kind, pk) leaf of an incremental-dedup
-    store back to one file — the dedup-store instance of
+    """Fold every (kind, pk) leaf of an incremental-dedup store back
+    to one file — the dedup-store instance of
     compact_partitioned_store below (kept as the named public surface
     its CLI/tests/drain wiring use)."""
     return compact_partitioned_store(
@@ -415,8 +415,8 @@ def compact_ann_store(
     fence: WriterFence | None = None,
     force: bool = False,
 ) -> dict:
-    """Fold every multi-file cell= leaf of a streaming-IVF store back
-    to one file (r18) — the same pass as the dedup store's; only the
+    """Fold every cell= leaf of a streaming-IVF store back to one
+    file (r18) — the same pass as the dedup store's; only the
     leaf layout differs."""
     return compact_partitioned_store(
         spark, store_dir, ["cell"], min_files, fence, force,
@@ -433,14 +433,16 @@ def compact_partitioned_store(
     force: bool = False,
     purpose: str = "compact-store",
 ) -> dict:
-    """Fold every leaf of the head holding >= ``min_files`` files back
-    to one file.  Returns {leaves, files_before, files_after,
-    rewrote}.  ONE Spark job rewrites those leaves into a new
-    `v_{head}-r{k}` version (repartitioned on the partition keys, so
-    each leaf lands in exactly one task and one file); its manifest
-    maps each rewritten leaf to it alone and carries every other leaf
-    unchanged.  A store whose leaves all hold fewer files — or with
-    nothing committed — is left as it is.
+    """Fold every leaf of the head back to one file once any leaf
+    holds >= ``min_files`` files.  Returns {leaves, files_before,
+    files_after, rewrote}.  ONE Spark job rewrites the whole head into
+    a new `v_{head}-r{k}` version (repartitioned on the partition
+    keys, so each leaf lands in exactly one task and one file), and
+    the version carries the head's metadata files too: it is the only
+    owner its manifest names, so the commit's prune reclaims every
+    older version no reader pins.  A store whose leaves all hold fewer
+    files — or with nothing committed — is left as it is (the prune
+    still runs).
 
     Fencing (r18, module docstring): standalone (``fence=None``)
     refuses a live writer unless ``force`` and acquires its own
@@ -461,8 +463,7 @@ def _compact_body(
     head, manifest = store._head()
     files = _live_files(store.path)
     files_before = sum(len(v) for v in files.values())
-    multi = [leaf for leaf, fs in files.items() if len(fs) >= min_files]
-    if not multi:
+    if all(len(fs) < min_files for fs in files.values()):
         store._prune(keep=1)  # still reclaim versions pins released
         return {
             "leaves": len(files),
@@ -470,17 +471,33 @@ def _compact_body(
             "files_after": files_before,
             "rewrote": False,
         }
-    rows = store._read(spark, manifest, leaves=multi)
+    # rewrite EVERY leaf, and carry every metadata file (the IVF
+    # quantizer), into the new version: the prune frees space a whole
+    # version at a time, so an older version that still owned one leaf
+    # would keep all its superseded leaf files on disk with it
+    rows = store._read(spark, manifest)
+    meta = [name for name in manifest if name.startswith("_")]
+
+    def write(tmp: str) -> None:
+        (
+            rows.repartition(*partition_cols)
+            .write.mode("overwrite")
+            .partitionBy(*partition_cols)
+            .parquet(tmp)
+        )
+        for name in meta:
+            src = os.path.join(store.path, manifest[name][0], name)
+            with open(src, "rb") as fin, open(
+                os.path.join(tmp, name), "wb"
+            ) as fout:
+                fout.write(fin.read())
+                fout.flush()
+                os.fsync(fout.fileno())
+
     store._commit(
         store._batch_of(head),
-        lambda vname, leaves: {
-            **manifest,
-            **{leaf: [vname] for leaf in leaves},
-        },
-        lambda tmp: rows.repartition(*partition_cols)
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(tmp),
+        lambda vname, leaves: {k: [vname] for k in [*leaves, *meta]},
+        write,
     )
     return {
         "leaves": len(files),

@@ -86,11 +86,7 @@ from pyspark.sql import types as T
 
 from kafka_spark_streaming_spark.fencing import WriterFence
 from kafka_spark_streaming_spark.functions import literal_frame
-from kafka_spark_streaming_spark.manifest import (  # noqa: F401 (re-export)
-    MANIFEST_NAME,
-    PIN_DIR,
-    ManifestStore,
-)
+from kafka_spark_streaming_spark.manifest import ManifestStore
 
 CELL_KEY = ["rowkey", "cf", "qualifier"]
 

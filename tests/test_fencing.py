@@ -545,10 +545,8 @@ def test_manifestless_version_fails_closed(spark, tmp_path):
     partitions the version owns, and nothing is committed over it."""
     import re
 
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        MANIFEST_NAME,
-        KeyedUpsertSink,
-    )
+    from kafka_spark_streaming_spark.manifest import MANIFEST_NAME
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
     path = str(tmp_path / "cells")
     sink = KeyedUpsertSink(spark, path)
@@ -582,10 +580,8 @@ def test_snapshot_pins_are_durable_cross_process(spark, tmp_path):
     import json
 
     from kafka_spark_streaming_spark.config import UPSERT_STATE_BUCKETS_KEY
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        PIN_DIR,
-        KeyedUpsertSink,
-    )
+    from kafka_spark_streaming_spark.manifest import PIN_DIR
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
     spark.conf.set(UPSERT_STATE_BUCKETS_KEY, "1")
     try:
@@ -627,10 +623,8 @@ def test_snapshot_pin_file_lifecycle(spark, tmp_path):
     import pytest as _pytest
 
     from kafka_spark_streaming_spark.config import UPSERT_STATE_BUCKETS_KEY
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        PIN_DIR,
-        KeyedUpsertSink,
-    )
+    from kafka_spark_streaming_spark.manifest import PIN_DIR
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
     spark.conf.set(UPSERT_STATE_BUCKETS_KEY, "1")
     try:
@@ -665,10 +659,10 @@ def test_snapshot_pin_file_lifecycle(spark, tmp_path):
 def test_pinned_store_read_survives_compaction(spark, sf_smoke, tmp_path):
     """r19: pinned_store_read pins the versions its read references,
     so a compaction pass that lands mid-read commits its version but
-    the prune SKIPS the pinned ones — the held DataFrame stays
+    the prune SKIPS the pinned originals — the held DataFrame stays
     collectable with unchanged content.  Releasing the pin lets the
-    next pass's prune reclaim them, down to the compacted head, and
-    reap the pin dir."""
+    next pass's prune reclaim them, down to one file per leaf on disk
+    in the compacted head alone, and reap the pin dir."""
     from kafka_spark_streaming_spark.manifest import PIN_DIR, ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         _live_files,
@@ -696,27 +690,40 @@ def test_pinned_store_read_survives_compaction(spark, sf_smoke, tmp_path):
             .collect()
         )
 
+    def files_on_disk():
+        # leaf -> parquet files under it in EVERY version dir on disk
+        per: dict[str, int] = {}
+        for d, _, files in os.walk(store):
+            rel = os.path.relpath(d, store).split(os.sep)
+            if rel[0].startswith("v_") and len(rel) > 1:
+                leaf = os.path.join(*rel[1:])
+                per[leaf] = per.get(leaf, 0) + sum(
+                    f.endswith(".parquet") for f in files
+                )
+        return {k: n for k, n in per.items() if n}
+
     pinned = pinned_store_read(spark, store)
     expect = kept(pinned)
     assert expect == kept(pinned_store_read(spark, store))
-    # min_files=1 rewrites every leaf, so the compacted head references
-    # neither original version — only the pin keeps them
-    stats = compact_dedup_store(spark, store, min_files=1)
+    stats = compact_dedup_store(spark, store)
     assert stats["rewrote"]
-    # pinned originals survived: the pre-compaction versions are still
-    # on disk beside the compacted head, and the held DataFrame still
+    # pinned originals survived: some leaf holds >1 file on disk
+    # (compacted + pinned original), and the held DataFrame still
     # collects the same answer from the SAME files
+    assert any(n > 1 for n in files_on_disk().values())
     assert ManifestStore(store)._versions() == [
         "v_000000000000", "v_000000000001", "v_000000000001-r000001"
     ]
     assert kept(pinned) == expect
     assert kept(pinned_store_read(spark, store)) == expect
-    # release the pin -> the next pass's prune reclaims them
+    # release the pin -> the next pass's prune reclaims the originals
+    # (the head is already one file per leaf: nothing to rewrite)
     del pinned
     gc.collect()
-    stats2 = compact_dedup_store(spark, store, min_files=1)
-    assert stats2["rewrote"]
-    assert ManifestStore(store)._versions() == ["v_000000000001-r000002"]
+    stats2 = compact_dedup_store(spark, store, min_files=2)
+    assert not stats2["rewrote"]
+    assert ManifestStore(store)._versions() == ["v_000000000001-r000001"]
+    assert all(n == 1 for n in files_on_disk().values())
     assert all(len(fs) == 1 for fs in _live_files(store).values())
     assert kept(pinned_store_read(spark, store)) == expect
     gc.collect()
@@ -848,10 +855,8 @@ def test_lease_mode_pins_auto_expire(spark, tmp_path):
         STORE_PIN_TTL_KEY,
         UPSERT_STATE_BUCKETS_KEY,
     )
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        PIN_DIR,
-        KeyedUpsertSink,
-    )
+    from kafka_spark_streaming_spark.manifest import PIN_DIR
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
     spark.conf.set(UPSERT_STATE_BUCKETS_KEY, "1")
     spark.conf.set(STORE_PIN_TTL_KEY, "45")
@@ -1179,10 +1184,8 @@ def test_snapshot_verify_fails_on_mid_rmtree_version(
     from kafka_spark_streaming_spark.config import (
         UPSERT_STATE_BUCKETS_KEY,
     )
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        MANIFEST_NAME,
-        KeyedUpsertSink,
-    )
+    from kafka_spark_streaming_spark.manifest import MANIFEST_NAME
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
     spark.conf.set(UPSERT_STATE_BUCKETS_KEY, "1")
     try:
@@ -1298,10 +1301,8 @@ def test_drain_default_sink_pins_carry_lease(spark, tmp_path):
         UPSERT_STATE_BUCKETS_KEY,
         drain_fence_lease_ttl,
     )
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        PIN_DIR,
-        KeyedUpsertSink,
-    )
+    from kafka_spark_streaming_spark.manifest import PIN_DIR
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
     spark.conf.set(UPSERT_STATE_BUCKETS_KEY, "1")
     try:

@@ -1031,10 +1031,8 @@ def test_upsert_manifest_compaction_bounds_read_fanout(spark, tmp_path):
     from kafka_spark_streaming_spark.config import (
         UPSERT_COMPACT_VERSIONS_KEY,
     )
-    from kafka_spark_streaming_spark.sinks.upsert import (
-        MANIFEST_NAME,
-        KeyedUpsertSink,
-    )
+    from kafka_spark_streaming_spark.manifest import MANIFEST_NAME
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
 
     try:
         spark.conf.set(UPSERT_COMPACT_VERSIONS_KEY, "3")
@@ -1164,8 +1162,8 @@ def test_one_row_frames_and_empty_state_are_jvm_plans(spark, tmp_path):
     import os
 
     from kafka_spark_streaming_spark.functions import literal_frame
+    from kafka_spark_streaming_spark.manifest import MANIFEST_NAME
     from kafka_spark_streaming_spark.sinks.upsert import (
-        MANIFEST_NAME,
         KeyedUpsertSink,
         single_cell,
     )

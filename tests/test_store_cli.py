@@ -2,7 +2,8 @@
 stores: tools/compact_dedup_store.py and tools/ann_rebalance.py each
 print one JSON line per path, rewrite a store a registered drain
 left behind without changing its rows, and answer a path holding no
-committed version with an error line."""
+committed version — a missing path or a regular file — with an error
+line and go on to the next path."""
 
 from __future__ import annotations
 
@@ -51,12 +52,15 @@ def test_compact_cli_on_drained_store(spark, sf_smoke, tmp_path, capsys):
     )
     rows = _dedup_rows(spark, store)
     missing = str(tmp_path / "no_store")
+    a_file = tmp_path / "a_file"
+    a_file.write_text("not a store")
     capsys.readouterr()
-    assert main([store, missing]) == 1
-    done, err = _json_lines(capsys)
+    assert main([missing, str(a_file), store]) == 1
+    err, file_err, done = _json_lines(capsys)
     assert done["store"] == store and done["rewrote"]
     assert done["files_after"] < done["files_before"]
     assert err == {"store": missing, "error": "no committed version"}
+    assert file_err == {"store": str(a_file), "error": "no committed version"}
     assert _dedup_rows(spark, store) == rows
 
 
@@ -69,11 +73,14 @@ def test_ann_cli_on_drained_store(spark, sf_smoke, tmp_path, capsys):
     )
     n = table(spark, sf_smoke, "embeddings").count()
     missing = str(tmp_path / "no_store")
+    a_file = tmp_path / "a_file"
+    a_file.write_text("not a store")
     capsys.readouterr()
     assert rebalance_main(["--stats-only", store]) == 0
-    assert rebalance_main([store, missing]) == 1
+    assert rebalance_main([str(a_file), store, missing]) == 1
     assert compact_main(["--ann", store]) == 0
-    stats, rebalanced, err, compacted = _json_lines(capsys)
+    stats, file_err, rebalanced, err, compacted = _json_lines(capsys)
+    assert file_err == {"store": str(a_file), "error": "no committed version"}
     assert stats["stats"]["rows"] == n
     assert rebalanced["rebalance"]["rewrote"]
     assert rebalanced["rebalance"]["rows"] == n

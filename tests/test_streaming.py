@@ -1418,6 +1418,76 @@ def test_ivf_fold_replay_commits_nothing(spark, sf_smoke, tmp_path):
     assert len({v for v, _ in after}) == len(after), "duplicate vec_ids"
 
 
+def test_default_compaction_leaves_only_compacted_head_on_disk(
+    spark, sf_smoke, tmp_path
+):
+    """The prune frees space a whole version at a time, so a default
+    compaction (min_files=2) on a store where some leaves hold ONE
+    file must still leave the compacted head as the only version on
+    disk: it rewrites every leaf (and carries the IVF quantizer), so no
+    older version stays referenced.  Checked on both append stores."""
+    from kafka_spark_streaming_spark.manifest import ManifestStore
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        CENTROIDS_NAME,
+        _live_files,
+        ann_centroids,
+        compact_ann_store,
+        compact_dedup_store,
+        pinned_store_read,
+    )
+    from kafka_spark_streaming_spark.operators.streaming_queries import (
+        _incremental_dedup_batch,
+        _ivf_fold,
+    )
+    from kafka_spark_streaming_spark.tables import table
+
+    def on_disk(store_dir):
+        return sorted(
+            os.path.join(d, f)
+            for d, _, files in os.walk(store_dir)
+            for f in files
+            if f.endswith(".parquet")
+        )
+
+    def rows(store_dir, cols):
+        return sorted(
+            tuple(r)
+            for r in pinned_store_read(spark, store_dir).select(*cols)
+            .collect()
+        )
+
+    dedup = str(tmp_path / "dedup")
+    docs = table(spark, sf_smoke, "documents")
+    for b in range(2):
+        _incremental_dedup_batch(
+            docs.filter(F.col("doc_id") % 2 == b), dedup, b
+        )
+    sizes = [len(fs) for fs in _live_files(dedup).values()]
+    assert min(sizes) == 1 and max(sizes) >= 2, sizes
+    before = rows(dedup, ["kind", "pk", "doc_id", "bh", "kept"])
+    assert compact_dedup_store(spark, dedup)["rewrote"]
+    assert ManifestStore(dedup)._versions() == ["v_000000000001-r000001"]
+    live = sorted(f for fs in _live_files(dedup).values() for f in fs)
+    assert on_disk(dedup) == live
+    assert rows(dedup, ["kind", "pk", "doc_id", "bh", "kept"]) == before
+
+    ann = str(tmp_path / "ann")
+    emb = table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
+    for b in range(3):
+        _ivf_fold(emb.filter(F.col("vec_id") % 3 == b), ann, b)
+    store = ManifestStore(ann)
+    quantizer = ann_centroids(store, store._head()[1])
+    before = rows(ann, ["vec_id", "cell"])
+    assert compact_ann_store(spark, ann)["rewrote"]
+    head, manifest = store._head()
+    assert store._versions() == [head] == ["v_000000000002-r000001"]
+    assert manifest[CENTROIDS_NAME] == [head]
+    assert (ann_centroids(store, manifest) == quantizer).all()
+    live = sorted(f for fs in _live_files(ann).values() for f in fs)
+    assert on_disk(ann) == live
+    assert rows(ann, ["vec_id", "cell"]) == before
+
+
 def test_incremental_dedup_batching_invariant(spark, sf_smoke):
     """The kept set must be a property of the CORPUS, not of how the
     stream happened to batch it: the per-batch candidate generator

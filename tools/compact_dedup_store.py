@@ -3,8 +3,9 @@
 Usage:
     python tools/compact_dedup_store.py [--force] [--ann] /path/to/store [more...]
 
-Folds every multi-file leaf of each store's committed head back to
-one file and commits the result as a new manifest version (see
+Once any leaf of a store's committed head holds two or more files,
+rewrites the whole head to one file per leaf and commits the result
+as a new manifest version (see
 kafka_spark_streaming_spark/operators/store_maintenance.py): by
 default the incremental-dedup layout (kind=*/pk=* leaves); with --ann
 the streaming-IVF layout (cell=* leaves).  A path holding no
