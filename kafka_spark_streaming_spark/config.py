@@ -28,13 +28,14 @@ file counts trivial at test scale.  The probe/layout code is
 scale-invariant — the knob is the only thing that changes.
 
 Consistency contract: a store's bucket count is fixed at the first
-write — and ENFORCED, not just documented (code-review r16): the
-upsert sink persists its count in a `_BUCKETS` marker inside the
-store, and the incremental-dedup store persists both counts in a
-sidecar `<store>.layout` marker at its first non-empty batch.  Every
-later attach/batch reads the marker, so a conf change mid-run or
-across a restart re-seeds nothing and can never make probes disagree
-with the leaves the store's manifests name.  The conf values only
+write — and ENFORCED, not just documented (code-review r16): every
+bucketed store keeps its counts in a layout marker inside its own
+dir (manifest.ManifestStore.layout — the upsert sink seeds it at
+attach, the incremental-dedup store at its first non-empty batch).
+Every later attach/batch reads the marker, so a conf change mid-run
+or across a restart re-seeds nothing and can never make probes
+disagree with the leaves the store's manifests name; a store with a
+committed version but no marker fails closed.  The conf values only
 seed brand-new stores.  The stores' contents follow one commit
 protocol (manifest.py): every batch commits an immutable version
 whose `_MANIFEST.json` names the files a read sees, so a reader sees
@@ -425,11 +426,10 @@ def persisted_layout(
     """The enforcement half of the consistency contract above: read a
     store's persisted layout ints from ``marker_path``, seeding the
     marker from ``seed()`` (typically the session conf) the first
-    time.  Shared by the upsert sink's ``_BUCKETS`` marker and the
-    incremental-dedup store's ``.layout`` sidecar so the
-    persist-or-seed mechanism cannot drift between consumers.  Reads
-    validate arity and positivity; the seed write is tmp+rename
-    atomic (ADVICE r16)."""
+    time.  Called for every store's marker by
+    manifest.ManifestStore.layout, so the persist-or-seed mechanism
+    cannot drift between stores.  Reads validate arity and
+    positivity; the seed write is tmp+rename atomic (ADVICE r16)."""
     vals = read_layout(marker_path, arity)
     if vals is not None:
         return vals

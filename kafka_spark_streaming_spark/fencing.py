@@ -8,7 +8,8 @@ per checkpoint.  That contract held by documentation only (VERDICT
 r17 #1) — the reference got real enforcement for free from HBase
 region leases (a zombie region server's RPCs bounce off the new
 lease holder).  This module is the parquet-store analogue: an EPOCH
-TOKEN file next to (or inside) the store.
+TOKEN file inside the store (placed and acquired by
+manifest.ManifestStore.acquire).
 
 Mechanics
 ---------

@@ -7,11 +7,14 @@ store path, each carrying a `_MANIFEST.json` — the file-remapping
 move of a Delta/Iceberg commit, which works on any filesystem (no
 hard links, no in-place rewrites).
 
-Layout::
+Layout — every file of a store lives under its own dir, and this
+module is the only one that names them::
 
     <store>/v_{batch_id:012d}[-r{k:06d}]/<leaf>/part-*.parquet
     <store>/v_.../_MANIFEST.json     {leaf: [owner version, ...]}
     <store>/_pins/pin-*.json         live readers' version pins
+    <store>/_WRITER_EPOCH            the writer token (`acquire`)
+    <store>/_LAYOUT                  the bucket counts (`layout`)
 
 A leaf is one partition dir (`rb=K`, `kind=b/pk=K`, `cell=K`); its
 rows are the union of that leaf dir in every owner version the head
@@ -38,12 +41,24 @@ version `v_N-r{k}` (and a maintenance rewrite of head N commits
 "the committed head's batch is already >= batch_id" — batch ids are
 the stream's, monotone across checkpoint-resumed restarts.
 
+Writer token (`acquire`, `live_writer`): a fencing.WriterFence whose
+token the store keeps at `_WRITER_EPOCH`; the fence is checked before
+every commit rename and every prune.
+
+Layout marker (`layout`): a store whose leaves are `pmod(key,
+buckets)` partitions keeps its bucket counts in `_LAYOUT`, seeded once
+from the session conf (config.persisted_layout) and read by every
+later attach, so a conf change can never make a probe's pmod disagree
+with the leaves on disk.  A store with a committed version but no
+marker fails closed instead of re-seeding.
+
 Pins (`_snapshot`): a reader publishes a durable pin file naming
 every version its read plan references (publish-then-verify,
-fencing.pin_guarded) and holds it for the DataFrame's lifetime.  The
-prune (`_prune`) keeps the last K heads, every version their
-manifests reference and every pinned version, deletes the rest, and
-sweeps stale `.tmp` build dirs.
+fencing.pin_guarded) and holds it for the DataFrame's lifetime; the
+pin auto-expires under the TTL the store's writer token implies
+(config.pin_ttl_for_writer).  The prune (`_prune`) keeps the last K
+heads, every version their manifests reference and every pinned
+version, deletes the rest, and sweeps stale `.tmp` build dirs.
 """
 
 from __future__ import annotations
@@ -54,9 +69,14 @@ import shutil
 import weakref
 from functools import reduce
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from kafka_spark_streaming_spark import config, fencing
+
 MANIFEST_NAME = "_MANIFEST.json"
+WRITER_TOKEN = "_WRITER_EPOCH"
+LAYOUT_NAME = "_LAYOUT"
 
 # snapshot pins are DURABLE: each handed-out pin writes a
 # `_pins/pin-{pid}-{nonce}.json` file inside the store naming the
@@ -99,6 +119,49 @@ class ManifestStore:
     def __init__(self, path: str, fence=None):
         self.path = path
         self._fence = fence
+
+    def acquire(
+        self, purpose: str, lease_ttl_s: float | None = None
+    ) -> fencing.WriterFence:
+        """Become the store's newest writer: create the store dir and
+        acquire the fence on its `_WRITER_EPOCH` token, which every
+        later commit and prune of this object checks."""
+        os.makedirs(self.path, exist_ok=True)
+        self._fence = fencing.WriterFence.acquire(
+            os.path.join(self.path, WRITER_TOKEN), purpose, lease_ttl_s
+        )
+        return self._fence
+
+    def live_writer(self) -> dict | None:
+        """The store's writer token if its holder is plausibly live
+        (fencing.live_writer), else None."""
+        return fencing.live_writer(os.path.join(self.path, WRITER_TOKEN))
+
+    def layout(self, seed, arity: int, commit: bool = True) -> tuple:
+        """The store's persisted bucket counts from `_LAYOUT`.  Without
+        a marker, ``seed()`` (the session conf) answers, and
+        ``commit`` makes that answer the marker — first writer wins
+        under a race (config.commit_layout), so the caller gets what
+        actually landed.  A store that has committed a version but
+        has no marker fails closed: re-seeding it from the conf could
+        make every probe's pmod disagree with the leaves on disk."""
+        marker = os.path.join(self.path, LAYOUT_NAME)
+
+        def first_seed() -> tuple:
+            if self._versions():
+                raise ValueError(
+                    f"store {self.path!r} has committed versions but no "
+                    f"{LAYOUT_NAME} marker — its bucket counts can no "
+                    "longer be trusted; restore the marker from the "
+                    "store's leaf layout before reattaching"
+                )
+            if commit:
+                os.makedirs(self.path, exist_ok=True)
+            return seed()
+
+        if commit:
+            return config.persisted_layout(marker, first_seed, arity)
+        return config.read_layout(marker, arity) or first_seed()
 
     @staticmethod
     def _batch_of(version: str) -> int:
@@ -266,7 +329,7 @@ class ManifestStore:
         self._prune(keep=keep)
         return vname
 
-    def _snapshot(self, build, ttl: float | None, what: str):
+    def _snapshot(self, spark: SparkSession, build, what: str):
         """Version-PINNED read: ``build(manifest)`` makes the
         DataFrame from the head manifest of ONE listing, and every
         version it references (plus the head) is excluded from prunes
@@ -276,25 +339,26 @@ class ManifestStore:
         a pruner racing the listing-to-pin window fails the
         post-publish verify (or surfaces as a path-not-found while the
         plan is built over the just-pruned listing), and the attempt
-        retries against the new head.  ``ttl`` (None: pid liveness)
-        makes the pin auto-expire — the multi-host mapping."""
-        from pyspark.errors import AnalysisException
-
-        from kafka_spark_streaming_spark.fencing import (
-            PinRaceLost,
-            is_path_not_found,
-            pin_guarded,
-            release_pin,
-        )
+        retries against the new head.  The pin auto-expires (the
+        multi-host mapping) under config.pin_ttl_for_writer of the
+        lease the store's writer token carries — a reader attach
+        holds no fence of its own, so the token is the one place the
+        writer's effective lease is recorded; no token, or a pid-mode
+        one, leaves the conf-chain answer (None: pid liveness)."""
+        try:
+            tok = fencing._read_token(os.path.join(self.path, WRITER_TOKEN))
+        except ValueError:
+            tok = None  # a corrupt token fails the WRITER path loudly
+        ttl = config.pin_ttl_for_writer(spark, tok and tok.get("lease_ttl_s"))
 
         def attempt():
             try:
                 head, manifest = self._head()
                 df = build(manifest)
             except AnalysisException as exc:
-                if not is_path_not_found(exc):
+                if not fencing.is_path_not_found(exc):
                     raise  # deterministic failure, not a race
-                raise PinRaceLost(str(exc)) from exc
+                raise fencing.PinRaceLost(str(exc)) from exc
             if head is None:
                 return None, None, lambda _p: df
             pins = sorted({head}.union(*manifest.values()))
@@ -317,22 +381,20 @@ class ManifestStore:
                 return all(os.path.exists(s) for s in sentinels)
 
             def finish(pin_path):
-                weakref.finalize(df, release_pin, pin_path)
+                weakref.finalize(df, fencing.release_pin, pin_path)
                 return df
 
             return payload, verify, finish
 
-        return pin_guarded(
+        return fencing.pin_guarded(
             os.path.join(self.path, PIN_DIR), attempt, what=what
         )
 
     def _live_pins(self) -> set[str]:
         """Union of versions named by live-holder pin files — see
         fencing.live_pins for the liveness/reaping/corrupt policy."""
-        from kafka_spark_streaming_spark.fencing import live_pins
-
         pinned: set[str] = set()
-        for pin in live_pins(os.path.join(self.path, PIN_DIR)):
+        for pin in fencing.live_pins(os.path.join(self.path, PIN_DIR)):
             pinned.update(pin.get("versions", []))
         return pinned
 

@@ -22,15 +22,17 @@ manifest and no reader pin references them.
 
 Single WRITER contract — ENFORCED since r18 (was documentation):
 maintenance participates in the store's writer fencing
-(kafka_spark_streaming_spark.fencing, token at `<store>.epoch` —
-the same sibling-marker convention as the `.layout` sidecar).  Two
+(kafka_spark_streaming_spark.fencing, through the token the store
+keeps in its own dir — ManifestStore.acquire/live_writer).  Two
 modes:
 
 - STANDALONE (``fence=None``, the CLI path): refuses to run while
-  the token names a LIVE writer (fencing.live_writer: tenure not
-  idled, lease fresh or pid alive — a drain is committing;
-  ``force=True`` overrides for operator judgment calls), then
-  ACQUIRES its own fence.  The epoch bump means a zombie drain that
+  the token names a LIVE writer (tenure not idled, lease fresh or
+  pid alive — a drain is committing; ``force=True`` overrides for
+  operator judgment calls).  On a path with nothing committed there
+  is nothing to maintain, so the pass then takes no token and leaves
+  no file at or beside the path; otherwise it ACQUIRES its own
+  fence.  The epoch bump means a zombie drain that
   silently survived a failover raises at its next commit instead of
   interleaving with the pass; if a NEW drain attaches mid-pass, the
   fence check before the pass's rename aborts it, leaving the
@@ -57,11 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_spark_streaming_spark.fencing import (
-    StaleWriterError,
-    WriterFence,
-    live_writer,
-)
+from kafka_spark_streaming_spark.fencing import StaleWriterError, WriterFence
 from kafka_spark_streaming_spark.manifest import ManifestStore
 
 # the IVF quantizer file a streaming-IVF version holds (batch 0's, and
@@ -125,27 +123,10 @@ def pinned_store_read(spark: SparkSession, store_dir: str) -> DataFrame:
     object is alive — the same version pin as the upsert sink's
     snapshot() (ManifestStore._snapshot).  Dropping the reference
     releases the pin; a holder that crashes without releasing leaves
-    a dead-pid pin the next prune reaps.  Raises on a store with
-    nothing committed (create it by draining at least one batch
+    a dead-pid pin the next prune reaps, and the pin auto-expires
+    under the lease of the store's writer token.  Raises on a store
+    with nothing committed (create it by draining at least one batch
     first)."""
-    # the pin TTL must see the store WRITER's effective fence lease
-    # (code-review r20, second pass): a drain on the r20 lease default
-    # acquires with drain_fence_lease_ttl while the conf knobs stay
-    # unset, so a TTL from the conf keys alone would hand out
-    # pid-based pins — wrong on multi-host.  The writer's lease is in
-    # the store's epoch token (set at acquire, never rewritten), so
-    # read it from there; no token or a pid-mode token leaves the
-    # conf-chain result.
-    from kafka_spark_streaming_spark.config import pin_ttl_for_writer
-    from kafka_spark_streaming_spark.fencing import _read_token
-
-    try:
-        tok = _read_token(store_dir.rstrip("/") + ".epoch")
-    except ValueError:
-        tok = None  # corrupt token fails the WRITER path loudly, not reads
-    ttl = pin_ttl_for_writer(
-        spark, tok.get("lease_ttl_s") if tok else None
-    )
     store = ManifestStore(store_dir)
 
     def build(manifest: dict) -> DataFrame:
@@ -157,7 +138,7 @@ def pinned_store_read(spark: SparkSession, store_dir: str) -> DataFrame:
         return df
 
     return store._snapshot(
-        build, ttl, what=f"pinned_store_read({store_dir!r})"
+        spark, build, what=f"pinned_store_read({store_dir!r})"
     )
 
 
@@ -172,14 +153,16 @@ def _fenced_pass(
 ) -> dict:
     """Run ``body(store)`` under the maintenance fence protocol shared
     by compaction and rebalance (module docstring).  STANDALONE
-    (``fence=None``): refuse a live writer unless ``force``, acquire
-    with the session's lease knob, and idle the fence afterwards —
-    also on failure, so a failed pass stays retryable (code-review
-    r20)."""
+    (``fence=None``): refuse a live writer unless ``force``; then, on
+    a store with a committed version, acquire with the session's
+    lease knob, and idle the fence afterwards — also on failure, so a
+    failed pass stays retryable (code-review r20)."""
+    store = ManifestStore(store_dir, fence)
     if fence is not None:
-        return body(ManifestStore(store_dir, fence))
-    marker = store_dir.rstrip("/") + ".epoch"
-    tok = live_writer(marker)
+        return body(store)
+    # the probe comes first and only reads: a drain that has acquired
+    # but not yet committed its first version must still be refused
+    tok = store.live_writer()
     if tok is not None and not force:
         raise StaleWriterError(
             f"store {store_dir!r} has a live writer (pid "
@@ -187,16 +170,16 @@ def _fenced_pass(
             f"refusing to {verb} beside an active drain — run between "
             "drains, or pass force=True if the token is known-stale"
         )
+    if not store._versions():
+        return body(store)  # no head to maintain: take no token
     from kafka_spark_streaming_spark.config import fence_lease_ttl
 
     # same lease plumbing as the drains and the upsert sink — without
     # it a standalone pass that crashed on another host would leave a
     # pid-mode token that live_writer can only probe locally
-    fence = WriterFence.acquire(
-        marker, purpose=purpose, lease_ttl_s=fence_lease_ttl(spark)
-    )
+    fence = store.acquire(purpose, fence_lease_ttl(spark))
     try:
-        out = body(ManifestStore(store_dir, fence))
+        out = body(store)
     except BaseException:
         try:
             fence.idle()
@@ -287,7 +270,8 @@ def rebalance_ann_store(
 
     Fencing: same standalone/cooperative contract as compaction
     (module docstring)."""
-    # validate before fencing: a non-store must not grow an .epoch
+    # validate before fencing: a store with no quantizer must not
+    # grow a writer token
     store = ManifestStore(store_dir)
     ann_centroids(store, store._head()[1])
     return _fenced_pass(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from kafka_spark_streaming_spark.manifest import ManifestStore, appended
 from kafka_spark_streaming_spark.operators.registry import register
 from kafka_spark_streaming_spark.sources.files import file_stream_messages
 from kafka_spark_streaming_spark.streaming.pipeline import (
@@ -817,8 +818,6 @@ def _store_probe(
     """The head's `kind=<kind>/pk=` leaves named by ``pks``, read from
     their owner versions and filtered on both partition columns (None
     when no named leaf is committed)."""
-    from kafka_spark_streaming_spark.manifest import ManifestStore
-
     store = ManifestStore(store_dir)
     df = store._read(
         spark, store._head()[1], schema, [f"kind={kind}/pk={k}" for k in pks]
@@ -873,10 +872,10 @@ def _bucketed_profile_probe(
 def _store_layout(
     spark: SparkSession, store_dir: str, commit: bool = False
 ) -> tuple[int, int]:
-    """(band_buckets, profile_buckets) for a dedup store — persisted
-    in a sidecar marker next to the store (code-review r16): the
-    bucket counts are properties of the STORE layout, so re-resolving
-    the session conf on every micro-batch would let a mid-run (or
+    """(band_buckets, profile_buckets) for a dedup store — the store's
+    persisted layout (ManifestStore.layout, code-review r16): the
+    bucket counts are properties of the STORE, so re-resolving the
+    session conf on every micro-batch would let a mid-run (or
     across-restart) conf change make the probe's pmod disagree with
     the directories on disk — silently dropping true candidates.  The
     conf only seeds the marker at the first NON-EMPTY append (ADVICE
@@ -884,20 +883,12 @@ def _store_layout(
     pin the layout of a store that does not exist yet — a conf retune
     before the first real data batch would be silently ignored), so
     reads here are commit=False and the batch body calls back with
-    commit=True only after its 0-row guard passes.  The marker is a
-    SIBLING of store_dir so writing it never creates the store dir
-    itself (a losing batch must leave no store behind); the write
-    itself is tmp+rename atomic with first-writer-wins under a
-    concurrent-attach race (config.commit_layout)."""
-    from kafka_spark_streaming_spark.config import commit_layout, read_layout
-
-    marker = store_dir.rstrip("/") + ".layout"
-    vals = read_layout(marker, arity=2)
-    if vals is None:
-        vals = (_band_store_buckets(spark), _profile_store_buckets(spark))
-        if commit:
-            vals = commit_layout(marker, vals)
-    n_pb, n_pd = vals
+    commit=True only after its 0-row guard passes."""
+    n_pb, n_pd = ManifestStore(store_dir).layout(
+        lambda: (_band_store_buckets(spark), _profile_store_buckets(spark)),
+        arity=2,
+        commit=commit,
+    )
     return n_pb, n_pd
 
 
@@ -922,7 +913,6 @@ def _incremental_dedup_batch(
     committing behind a newer writer.  None (the default) is the
     unfenced direct-call path for tests and one-shot batch use, where
     the caller IS the single writer by construction."""
-    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.dedup import (
         minhash_profile,
         shingles_of,
@@ -952,7 +942,6 @@ def _incremental_dedup_batch(
 def _incremental_dedup_batch_body(
     prof: DataFrame, store, head, manifest: dict, batch_id: int
 ) -> None:
-    from kafka_spark_streaming_spark.manifest import appended
     from kafka_spark_streaming_spark.operators.dedup import (
         band_buckets,
         verified_pairs,
@@ -1139,8 +1128,6 @@ def s_incremental_near_dedup(
         dedup_compact_every,
         drain_fence_lease_ttl,
     )
-    from kafka_spark_streaming_spark.fencing import WriterFence
-    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         compact_dedup_store,
     )
@@ -1149,16 +1136,13 @@ def s_incremental_near_dedup(
     run_dir = _scratch_dir("kss_increddup_")
     store_dir = os.path.join(run_dir, "store")
     # writer fence for the whole drain (r18): one attach-scoped token,
-    # checked by every batch before its commit rename — the store
-    # analogue of the upsert sink's _WRITER_EPOCH (same sibling-marker
-    # convention as the .layout sidecar, so acquiring never creates
-    # the store dir).  LEASE mode by default since r20
+    # the same store-held token as the upsert sink's, checked by every
+    # batch before its commit rename.  LEASE mode by default since r20
     # (drain_fence_lease_ttl): the per-batch heartbeat below renews
     # it, and the explicit leaseTtlSec knob still overrides either way.
-    fence = WriterFence.acquire(
-        store_dir.rstrip("/") + ".epoch",
-        purpose="incremental-near-dedup",
-        lease_ttl_s=drain_fence_lease_ttl(spark),
+    store = ManifestStore(store_dir)
+    fence = store.acquire(
+        "incremental-near-dedup", drain_fence_lease_ttl(spark)
     )
     # compaction cadence (VERDICT r17 #2): policy knob, read once per
     # drain; > 0 folds the store's leaves back to one file every N
@@ -1179,7 +1163,6 @@ def s_incremental_near_dedup(
     # drain finished: mark the token inactive so standalone maintenance
     # (compact_dedup_store's live-writer guard) stops refusing
     fence.idle()
-    store = ManifestStore(store_dir)
     manifest = store._head()[1]
     return (
         store._read(
@@ -1388,7 +1371,6 @@ def _ivf_fold(
     quantizer (one Arrow matmul) and commits them as ONE
     cell-partitioned version.  A retry of a committed batch commits
     nothing (see _incremental_dedup_batch)."""
-    from kafka_spark_streaming_spark.manifest import ManifestStore, appended
     from kafka_spark_streaming_spark.operators.similarity import (
         _IVF_CELLS,
         ivf_assign_arrow,
@@ -1485,9 +1467,7 @@ def s_incremental_ann_ivf(
         ann_compact_every,
         drain_fence_lease_ttl,
     )
-    from kafka_spark_streaming_spark.fencing import WriterFence
     from kafka_spark_streaming_spark.functions import cosine_similarity
-    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.similarity import (
         N_QUERIES,
         _topk,
@@ -1503,11 +1483,8 @@ def s_incremental_ann_ivf(
     run_dir = _scratch_dir("kss_sivf_")
     store_dir = os.path.join(run_dir, "store")
     # lease mode by default since r20 — see the dedup drain's fence
-    fence = WriterFence.acquire(
-        store_dir + ".epoch",
-        purpose="incremental-ann-ivf",
-        lease_ttl_s=drain_fence_lease_ttl(spark),
-    )
+    store = ManifestStore(store_dir)
+    fence = store.acquire("incremental-ann-ivf", drain_fence_lease_ttl(spark))
     # in-drain maintenance cadence — same policy shape as the dedup
     # drain's (store-idle point, cooperative fence); default off
     compact_every = ann_compact_every(spark)
@@ -1522,7 +1499,6 @@ def s_incremental_ann_ivf(
     _drain(spark, stream.writeStream.foreachBatch(fold), 8)
     fence.idle()
 
-    store = ManifestStore(store_dir)
     manifest = store._head()[1]
     cmat2 = ann_centroids(store, manifest)
     # queries come from the fixture table (their embeddings are

@@ -56,8 +56,9 @@ Design for scale:
 - On a real deployment this maps 1:1 onto a Delta/Iceberg MERGE; the
   versioned-parquet variant keeps the harness dependency-free.
 - SINGLE WRITER per store path — ENFORCED since r18 (was contract
-  only): the sink holds a fenced-writer token (fencing.WriterFence,
-  `_WRITER_EPOCH` inside the store), acquired lazily at the sink's
+  only): the sink holds the store's fenced-writer token
+  (ManifestStore.acquire — the token lives inside the store like
+  every other store file, manifest.py), acquired lazily at the sink's
   FIRST write_batch (an attach that only reads never fences a live
   writer out) and re-checked immediately before every commit-point
   mutation (the version rename and the prune's deletions).  Newest
@@ -76,8 +77,6 @@ Design for scale:
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -128,7 +127,6 @@ class KeyedUpsertSink(ManifestStore):
         config.drain_fence_lease_ttl(...) to run lease-mode by
         default (VERDICT r19 #5); an explicit None forces pid mode."""
         from kafka_spark_streaming_spark.config import (
-            persisted_layout,
             upsert_compact_versions,
             upsert_keep_versions,
             upsert_state_buckets,
@@ -139,18 +137,15 @@ class KeyedUpsertSink(ManifestStore):
         self._lease_ttl_s = lease_ttl_s
         self.compact_versions = upsert_compact_versions(spark)
         self.keep_versions = upsert_keep_versions(spark)
-        os.makedirs(path, exist_ok=True)
         # The bucket count is a property of the STORE, not the
         # session: reopening an rb-partitioned store under a different
         # count would prune the prior read with the wrong pmod and
         # carry stale rows forward as "untouched" — silent LWW
-        # corruption (code-review r16).  So the count is persisted in
-        # a _BUCKETS marker at attach and every later attach reads the
-        # marker; the conf only seeds brand-new stores.
-        (self.buckets,) = persisted_layout(
-            os.path.join(path, "_BUCKETS"),
-            lambda: (upsert_state_buckets(spark),),
-            arity=1,
+        # corruption (code-review r16).  So the store's layout marker
+        # is seeded at the first attach and every later attach reads
+        # it; the conf only seeds brand-new stores.
+        (self.buckets,) = self.layout(
+            lambda: (upsert_state_buckets(spark),), arity=1
         )
         # writer fence (module docstring): acquired at the FIRST
         # write_batch, not here — attaching to read must not fence a
@@ -160,15 +155,11 @@ class KeyedUpsertSink(ManifestStore):
         if self._fence is None:
             from kafka_spark_streaming_spark.config import fence_lease_ttl
 
-            ttl = (
+            self.acquire(
+                "keyed-upsert-sink",
                 fence_lease_ttl(self.spark)
                 if self._lease_ttl_s is _LEASE_FROM_CONF
-                else self._lease_ttl_s
-            )
-            self._fence = WriterFence.acquire(
-                os.path.join(self.path, "_WRITER_EPOCH"),
-                purpose="keyed-upsert-sink",
-                lease_ttl_s=ttl,
+                else self._lease_ttl_s,
             )
         return self._fence
 
@@ -222,22 +213,12 @@ class KeyedUpsertSink(ManifestStore):
         r18): a second listing could race a concurrent write_batch and
         pin the new head's versions while the DataFrame still read the
         old manifest.  The pin is the shared version pin,
-        ManifestStore._snapshot (publish-then-verify)."""
-        from kafka_spark_streaming_spark.config import pin_ttl_for_writer
-
-        # the pin TTL must see this sink's EFFECTIVE fence lease, not
-        # just the conf knob: a drain-default lease (constructor arg,
-        # conf unset) would otherwise leave pins pid-based — wrong on
-        # multi-host (code-review r20)
-        ttl = pin_ttl_for_writer(
-            self.spark,
-            None
-            if self._lease_ttl_s is _LEASE_FROM_CONF
-            else self._lease_ttl_s,
-        )
+        ManifestStore._snapshot (publish-then-verify), which sizes
+        the pin's TTL from the lease in the store's writer token — so
+        a read-only attach pins for the writer's actual lease."""
         return self._snapshot(
+            self.spark,
             lambda manifest: self._frame(manifest).drop("rb"),
-            ttl,
             what=f"snapshot({self.path!r})",
         )
 

@@ -20,10 +20,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_spark_streaming_spark.fencing import (
-    StaleWriterError,
-    WriterFence,
-)
+from kafka_spark_streaming_spark.fencing import StaleWriterError
 from kafka_spark_streaming_spark.manifest import ManifestStore
 from kafka_spark_streaming_spark.operators.similarity import (
     _IVF_CELLS,
@@ -197,7 +194,7 @@ def test_rebalance_refuses_live_writer_and_converges(spark, tmp_path):
     store = str(tmp_path / "store")
     _build_skewed_store(spark, store)
 
-    fence = WriterFence.acquire(store + ".epoch", purpose="drain")
+    fence = ManifestStore(store).acquire("drain")
     with pytest.raises(StaleWriterError, match="live writer"):
         rebalance_ann_store(spark, store)
     fence.idle()

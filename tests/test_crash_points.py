@@ -63,8 +63,6 @@ def _crash_after(monkeypatch, step: str) -> None:
 
 def _copy_store(src: str, dst: str) -> str:
     shutil.copytree(src, dst)
-    if os.path.exists(src + ".layout"):
-        shutil.copy(src + ".layout", dst + ".layout")
     return dst
 
 

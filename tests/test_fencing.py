@@ -22,13 +22,14 @@ from kafka_spark_streaming_spark.fencing import (
     WriterFence,
     live_writer,
 )
+from kafka_spark_streaming_spark.manifest import ManifestStore
 
 
 # --- token protocol -------------------------------------------------------
 
 
 def test_fence_epoch_monotone_and_check(tmp_path):
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
     f1 = WriterFence.acquire(marker, purpose="t1")
     assert f1.epoch == 1
     f1.check()  # freshest writer passes
@@ -48,7 +49,7 @@ def test_fence_epoch_monotone_and_check(tmp_path):
 
 
 def test_fence_live_writer_probe(tmp_path):
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
     assert live_writer(marker) is None  # never acquired
     f = WriterFence.acquire(marker, purpose="drain")
     tok = live_writer(marker)
@@ -65,7 +66,7 @@ def test_fence_live_writer_probe(tmp_path):
 
 
 def test_fence_corrupt_token_fails_loudly(tmp_path):
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
     with open(marker, "w") as fh:
         fh.write("{not json")
     with pytest.raises(ValueError, match="corrupt writer token"):
@@ -79,7 +80,7 @@ def test_fence_concurrent_acquire_single_winner(tmp_path):
     protocol under real interleaving."""
     from concurrent.futures import ThreadPoolExecutor
 
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
 
     def try_acquire(i):
         try:
@@ -111,7 +112,7 @@ def test_commit_layout_racers_all_agree(tmp_path):
 
     from kafka_spark_streaming_spark.config import commit_layout, read_layout
 
-    marker = str(tmp_path / "store.layout")
+    marker = str(tmp_path / "_LAYOUT")
 
     def racer(i):
         return commit_layout(marker, (i + 1, (i + 1) * 10))
@@ -245,14 +246,13 @@ def test_dedup_batch_fenced_append_raises_for_zombie(spark, sf_smoke, tmp_path):
     from kafka_spark_streaming_spark.tables import table
 
     store = str(tmp_path / "store")
-    marker = store + ".epoch"
     docs = table(spark, sf_smoke, "documents")
-    old = WriterFence.acquire(marker, purpose="drain-1")
+    old = ManifestStore(store).acquire("drain-1")
     _incremental_dedup_batch(
         docs.filter(F.col("doc_id") < 50), store, 0, fence=old
     )
     n_before = pinned_store_read(spark, store).count()
-    WriterFence.acquire(marker, purpose="drain-2")  # failover
+    ManifestStore(store).acquire("drain-2")  # failover
     with pytest.raises(StaleWriterError):
         _incremental_dedup_batch(
             docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)),
@@ -276,9 +276,8 @@ def test_compact_refuses_live_writer_token(spark, sf_smoke, tmp_path):
     from kafka_spark_streaming_spark.tables import table
 
     store = str(tmp_path / "store")
-    marker = store + ".epoch"
     docs = table(spark, sf_smoke, "documents")
-    fence = WriterFence.acquire(marker, purpose="drain")
+    fence = ManifestStore(store).acquire("drain")
     for b in range(2):
         _incremental_dedup_batch(
             docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
@@ -293,7 +292,7 @@ def test_compact_refuses_live_writer_token(spark, sf_smoke, tmp_path):
         _incremental_dedup_batch(docs.limit(10), store, 2, fence=fence)
     # a new drain attaches cleanly behind the compaction and, once it
     # idles, standalone compaction no longer refuses
-    fence2 = WriterFence.acquire(marker, purpose="drain-2")
+    fence2 = ManifestStore(store).acquire("drain-2")
     _incremental_dedup_batch(
         docs.filter(F.col("doc_id") < 20), store, 2, fence=fence2
     )
@@ -319,15 +318,17 @@ def test_dedup_layout_race_guard_fires_on_foreign_pin(
     from kafka_spark_streaming_spark.tables import table
 
     store = str(tmp_path / "store")
+    marker = os.path.join(store, "_LAYOUT")
+    os.makedirs(store)
     # the racer pins (3, 5) before our batch (session conf defaults
     # differ: 16/16) reaches its own commit
-    assert commit_layout(store + ".layout", (3, 5)) == (3, 5)
+    assert commit_layout(marker, (3, 5)) == (3, 5)
     docs = table(spark, sf_smoke, "documents").filter(F.col("doc_id") < 30)
     # no guard trip here: the batch READS the already-pinned marker up
     # front and computes with it — the race needs the pin to land
     # mid-batch, which we force by pre-pinning then deleting the
     # marker so the batch's initial read sees None
-    os.remove(store + ".layout")
+    os.remove(marker)
     pinned = {"done": False}
     import kafka_spark_streaming_spark.operators.streaming_queries as sq
 
@@ -336,7 +337,7 @@ def test_dedup_layout_race_guard_fires_on_foreign_pin(
     def racing_layout(sess, sdir, commit=False):
         if commit and not pinned["done"]:
             # the concurrent attach wins the marker right before us
-            commit_layout(sdir.rstrip("/") + ".layout", (3, 5))
+            commit_layout(os.path.join(sdir, "_LAYOUT"), (3, 5))
             pinned["done"] = True
         return orig(sess, sdir, commit=commit)
 
@@ -346,7 +347,9 @@ def test_dedup_layout_race_guard_fires_on_foreign_pin(
             _incremental_dedup_batch(docs, store, 0)
     finally:
         sq._store_layout = orig
-    assert not os.path.exists(store), "losing batch must not create the store"
+    assert os.listdir(store) == ["_LAYOUT"], (
+        "losing batch must leave nothing in the store but the racer's marker"
+    )
 
 
 def test_upsert_keep_versions_knob_and_history(spark, tmp_path):
@@ -389,7 +392,6 @@ def test_compact_cooperative_abort_before_delete_is_crash_shaped(
     abort at its commit point: the version rename never happens, so
     the store keeps its pre-compaction head — exactly a crash-window
     state — and a later legitimate pass compacts it."""
-    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         _live_files,
         compact_dedup_store,
@@ -401,9 +403,8 @@ def test_compact_cooperative_abort_before_delete_is_crash_shaped(
     from kafka_spark_streaming_spark.tables import table
 
     store = str(tmp_path / "store")
-    marker = store + ".epoch"
     docs = table(spark, sf_smoke, "documents")
-    fence = WriterFence.acquire(marker, purpose="drain")
+    fence = ManifestStore(store).acquire("drain")
     for b in range(2):
         _incremental_dedup_batch(
             docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
@@ -422,7 +423,7 @@ def test_compact_cooperative_abort_before_delete_is_crash_shaped(
     files_before = _live_files(store)
     # the fence goes stale before the pass reaches its commit point
     # (failover landed mid-compaction)
-    usurper = WriterFence.acquire(marker, purpose="drain-2")
+    usurper = ManifestStore(store).acquire("drain-2")
     with pytest.raises(StaleWriterError):
         compact_dedup_store(spark, store, fence=fence)
     assert ManifestStore(store)._head() == head_before, (
@@ -663,7 +664,7 @@ def test_pinned_store_read_survives_compaction(spark, sf_smoke, tmp_path):
     collectable with unchanged content.  Releasing the pin lets the
     next pass's prune reclaim them, down to one file per leaf on disk
     in the compacted head alone, and reap the pin dir."""
-    from kafka_spark_streaming_spark.manifest import PIN_DIR, ManifestStore
+    from kafka_spark_streaming_spark.manifest import PIN_DIR
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         _live_files,
         compact_dedup_store,
@@ -676,7 +677,7 @@ def test_pinned_store_read_survives_compaction(spark, sf_smoke, tmp_path):
 
     store = str(tmp_path / "store")
     docs = table(spark, sf_smoke, "documents")
-    fence = WriterFence.acquire(store + ".epoch", purpose="drain")
+    fence = ManifestStore(store).acquire("drain")
     for b in range(2):
         _incremental_dedup_batch(
             docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
@@ -740,7 +741,7 @@ def test_fence_lease_ttl_liveness(tmp_path):
     fenced-out stale holder cannot renew."""
     import time
 
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
     f = WriterFence.acquire(marker, purpose="drain", lease_ttl_s=30.0)
     tok = live_writer(marker)
     assert tok is not None and tok["lease_ttl_s"] == 30.0
@@ -786,9 +787,9 @@ def test_compact_standalone_proceeds_past_expired_lease(
     from kafka_spark_streaming_spark.tables import table
 
     store = str(tmp_path / "store")
-    marker = store + ".epoch"
     docs = table(spark, sf_smoke, "documents")
-    fence = WriterFence.acquire(marker, purpose="drain", lease_ttl_s=30.0)
+    fence = ManifestStore(store).acquire("drain", lease_ttl_s=30.0)
+    marker = os.path.join(store, "_WRITER_EPOCH")
     for b in range(2):
         _incremental_dedup_batch(
             docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
@@ -899,7 +900,7 @@ def test_idle_sidecar_cannot_clobber_usurper(tmp_path):
         _write_token,
     )
 
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
     f1 = WriterFence.acquire(marker, purpose="drain")
     f2 = WriterFence.acquire(marker, purpose="drain-2")
     # zombie f1's idle, bypassing its check (the race window)
@@ -976,7 +977,7 @@ def test_delayed_zombie_idle_cannot_unidle_or_misidle(tmp_path):
         _write_token,
     )
 
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
     f1 = WriterFence.acquire(marker, purpose="drain")
     f2 = WriterFence.acquire(marker, purpose="drain-2")
     f2.idle()
@@ -1111,7 +1112,7 @@ def test_acquire_sweep_guards_and_ages(tmp_path):
 
     from kafka_spark_streaming_spark.fencing import _write_token
 
-    marker = str(tmp_path / "store.epoch")
+    marker = str(tmp_path / "_WRITER_EPOCH")
     f1 = WriterFence.acquire(marker, purpose="t1")  # epoch 1
     f1.idle()  # committed older sidecar: .idle-1-<nonce>
     old_sidecar = f"{marker}.idle-1-{f1.token['nonce']}"
@@ -1403,7 +1404,7 @@ def test_failed_standalone_pass_is_retryable(spark, sf_smoke, tmp_path):
 
     store = str(tmp_path / "store")
     docs = table(spark, sf_smoke, "documents")
-    fence = WriterFence.acquire(store + ".epoch", purpose="drain")
+    fence = ManifestStore(store).acquire("drain")
     for b in range(2):
         _incremental_dedup_batch(
             docs.filter(F.col("doc_id") % 2 == b), store, b, fence=fence
@@ -1418,7 +1419,7 @@ def test_failed_standalone_pass_is_retryable(spark, sf_smoke, tmp_path):
     with pytest.raises(Exception):
         compact_dedup_store(spark, store)
     os.remove(tmp)
-    assert live_writer(store + ".epoch") is None, (
+    assert ManifestStore(store).live_writer() is None, (
         "a failed standalone pass must not leave a live token"
     )
     stats = compact_dedup_store(spark, store)  # retry succeeds now
@@ -1435,7 +1436,7 @@ def test_pinned_store_read_inherits_writer_lease(spark, tmp_path):
     from kafka_spark_streaming_spark.config import (
         PIN_TTL_FALLBACK_FACTOR,
     )
-    from kafka_spark_streaming_spark.manifest import PIN_DIR, ManifestStore
+    from kafka_spark_streaming_spark.manifest import PIN_DIR
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         pinned_store_read,
     )
@@ -1457,9 +1458,7 @@ def test_pinned_store_read_inherits_writer_lease(spark, tmp_path):
     commit(store)
 
     # writer ran the drain default: leased fence, conf knobs unset
-    fence = WriterFence.acquire(
-        store + ".epoch", purpose="drain", lease_ttl_s=300.0
-    )
+    fence = ManifestStore(store).acquire("drain", lease_ttl_s=300.0)
     fence.idle()
     with pytest.warns(UserWarning, match="pinTtlSec"):
         pinned = pinned_store_read(spark, store)
@@ -1475,7 +1474,7 @@ def test_pinned_store_read_inherits_writer_lease(spark, tmp_path):
     # a pid-mode writer's store keeps pid pins (no token lease)
     store2 = str(tmp_path / "store2")
     commit(store2)
-    WriterFence.acquire(store2 + ".epoch", purpose="drain").idle()
+    ManifestStore(store2).acquire("drain").idle()
     pinned2 = pinned_store_read(spark, store2)
     (pin2,) = [
         f for f in os.listdir(_pin_dir(store2)) if f.endswith(".json")
@@ -1483,4 +1482,106 @@ def test_pinned_store_read_inherits_writer_lease(spark, tmp_path):
     with open(os.path.join(_pin_dir(store2), pin2)) as fh:
         assert "lease_ttl_s" not in json.load(fh)
     del pinned2
+    gc.collect()
+
+
+# --- store markers live inside the store ----------------------------------
+
+
+def test_dedup_batch_creates_missing_parent_dirs(spark, sf_smoke, tmp_path):
+    """Every file of a store lives under the store dir, so a batch on a
+    path whose parent does not exist yet creates it with the store: the
+    layout marker is written inside the store, never beside it."""
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        pinned_store_read,
+    )
+    from kafka_spark_streaming_spark.operators.streaming_queries import (
+        _incremental_dedup_batch,
+    )
+    from kafka_spark_streaming_spark.tables import table
+
+    store = str(tmp_path / "not_yet" / "store")
+    docs = table(spark, sf_smoke, "documents").filter(F.col("doc_id") < 40)
+    _incremental_dedup_batch(docs, store, 0)
+    assert ManifestStore(store)._versions() == ["v_000000000000"]
+    got = {
+        r.doc_id
+        for r in pinned_store_read(spark, store)
+        .filter(F.col("kind") == "p")
+        .collect()
+    }
+    assert got == {r.doc_id for r in docs.collect()}
+    assert sorted(os.listdir(tmp_path)) == ["not_yet"]
+    assert os.listdir(tmp_path / "not_yet") == ["store"]
+
+
+def test_missing_layout_marker_fails_closed(spark, sf_smoke, tmp_path):
+    """A store that has committed a version but lost its layout marker
+    must not re-seed its bucket counts from the session conf — the
+    probes' pmod could then disagree with the leaves on disk.  Both
+    bucketed stores refuse to attach or append instead."""
+    from kafka_spark_streaming_spark.operators.streaming_queries import (
+        _incremental_dedup_batch,
+    )
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
+    from kafka_spark_streaming_spark.tables import table
+
+    cells = str(tmp_path / "cells")
+    KeyedUpsertSink(spark, cells).write_batch(_cells(spark, [("k", "v")]), 0)
+    os.remove(os.path.join(cells, "_LAYOUT"))
+    with pytest.raises(ValueError, match="_LAYOUT"):
+        KeyedUpsertSink(spark, cells)
+
+    store = str(tmp_path / "store")
+    docs = table(spark, sf_smoke, "documents")
+    _incremental_dedup_batch(docs.filter(F.col("doc_id") < 30), store, 0)
+    os.remove(os.path.join(store, "_LAYOUT"))
+    with pytest.raises(ValueError, match="_LAYOUT"):
+        _incremental_dedup_batch(
+            docs.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 60)),
+            store,
+            1,
+        )
+    assert ManifestStore(store)._versions() == ["v_000000000000"]
+
+
+def test_standalone_pass_on_missing_store_acquires_nothing(spark, tmp_path):
+    """A standalone maintenance pass on a path with nothing committed
+    has no head to maintain: it takes no writer token and leaves no
+    file at or beside the path."""
+    from kafka_spark_streaming_spark.operators.store_maintenance import (
+        compact_ann_store,
+        compact_dedup_store,
+    )
+
+    missing = str(tmp_path / "no_store")
+    for compact in (compact_dedup_store, compact_ann_store):
+        stats = compact(spark, missing)
+        assert not stats["rewrote"] and stats["files_before"] == 0
+    assert os.listdir(tmp_path) == []
+
+
+def test_read_only_snapshot_follows_writer_lease(spark, tmp_path):
+    """A bare, read-only sink attach (conf keys unset) snapshotting a
+    store whose writer holds a lease hands out a pin that expires with
+    that lease — the pin TTL comes from the store's writer token, not
+    from how this attach was constructed."""
+    import json
+
+    from kafka_spark_streaming_spark.config import PIN_TTL_FALLBACK_FACTOR
+    from kafka_spark_streaming_spark.manifest import PIN_DIR
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
+
+    path = str(tmp_path / "cells")
+    writer = KeyedUpsertSink(spark, path, lease_ttl_s=300.0)
+    writer.write_batch(_cells(spark, [("k1", "v1")]), 0)
+    reader = KeyedUpsertSink(spark, path)
+    with pytest.warns(UserWarning, match="pinTtlSec"):
+        snap = reader.snapshot()
+    pin_dir = os.path.join(path, PIN_DIR)
+    (pin,) = [f for f in os.listdir(pin_dir) if f.endswith(".json")]
+    with open(os.path.join(pin_dir, pin)) as fh:
+        assert json.load(fh)["lease_ttl_s"] == 300.0 * PIN_TTL_FALLBACK_FACTOR
+    assert [(r.rowkey, r.value) for r in snap.collect()] == [("k1", "v1")]
+    del snap
     gc.collect()

@@ -306,3 +306,71 @@ def test_forced_broadcasts_state_their_bound():
         b.strip() for b in bounds
     )]
     assert not blank, f"empty bound for {blank}"
+
+
+# store-marker operations and file names that only manifest.ManifestStore
+# may use: every store keeps its writer token and layout marker inside
+# its own dir, placed by that one class.  config.py is where the layout
+# helpers are defined, so their calls to each other there are the
+# mechanism itself, not a second caller.
+_MARKER_CALLS = {"persisted_layout", "commit_layout", "read_layout"}
+_MARKER_NAMES = ("_WRITER_EPOCH", "_LAYOUT", ".epoch", ".layout")
+
+
+def _store_marker_sites() -> list[tuple[str, int, str]]:
+    """(module path, line, what) for every fence acquire, layout-helper
+    call or string spelling a store marker outside manifest.py.
+    Docstrings are prose (they may name ``ManifestStore.layout``), so
+    only code strings count."""
+    import ast
+    import pathlib
+
+    import kafka_spark_streaming_spark
+
+    pkg = pathlib.Path(kafka_spark_streaming_spark.__file__).parent
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "manifest.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        docstrings = {
+            id(scope.body[0].value)
+            for scope in ast.walk(tree)
+            if isinstance(
+                scope,
+                (ast.Module, ast.ClassDef, ast.FunctionDef,
+                 ast.AsyncFunctionDef),
+            )
+            and ast.get_docstring(scope, clean=False) is not None
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = getattr(func, "attr", getattr(func, "id", None))
+                owner = getattr(func, "value", None)
+                # `WriterFence.acquire` and `fencing.WriterFence.acquire`
+                owner_name = getattr(owner, "id", getattr(owner, "attr", None))
+                if name == "acquire" and owner_name == "WriterFence":
+                    sites.append((rel, node.lineno, "WriterFence.acquire"))
+                elif name in _MARKER_CALLS and rel != "config.py":
+                    sites.append((rel, node.lineno, name))
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+            ):
+                sites.extend(
+                    (rel, node.lineno, repr(marker))
+                    for marker in _MARKER_NAMES
+                    if marker in node.value
+                )
+    return sites
+
+
+def test_only_manifest_places_store_markers():
+    sites = _store_marker_sites()
+    assert not sites, (
+        f"store-marker handling outside manifest.py: {sites} — go "
+        "through ManifestStore.acquire / live_writer / layout instead"
+    )

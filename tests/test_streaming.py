@@ -482,7 +482,7 @@ def test_dedup_compaction_policy_sawtooths_file_growth(
     stays identical to a never-compacted control.  Exercises the
     cooperative fence path compact_dedup_store takes when invoked
     from inside a drain."""
-    from kafka_spark_streaming_spark.fencing import WriterFence
+    from kafka_spark_streaming_spark.manifest import ManifestStore
     from kafka_spark_streaming_spark.operators.store_maintenance import (
         _live_files,
         compact_dedup_store,
@@ -496,7 +496,7 @@ def test_dedup_compaction_policy_sawtooths_file_growth(
     docs = table(spark, sf_smoke, "documents")
     store = str(tmp_path / "store")
     control = str(tmp_path / "control")
-    fence = WriterFence.acquire(store + ".epoch", purpose="soak")
+    fence = ManifestStore(store).acquire("soak")
     every = 2
     total_files = []  # trajectory after each batch(+policy) step
     for b in range(6):

@@ -9,12 +9,12 @@ as a new manifest version (see
 kafka_spark_streaming_spark/operators/store_maintenance.py): by
 default the incremental-dedup layout (kind=*/pk=* leaves); with --ann
 the streaming-IVF layout (cell=* leaves).  A path holding no
-committed version prints an error line.  The single-writer contract
-is ENFORCED (r18): the pass
-refuses a store whose writer token names a live drain (run between
-drains, or let the drain's compactEveryNBatches policy knob compact
-in-line), and --force overrides a token you know is stale.  Prints
-one JSON line per store.
+committed version prints an error line and is left untouched.  The
+single-writer contract is ENFORCED (r18): the pass refuses a store
+whose writer token (kept inside the store dir) names a live drain
+(run between drains, or let the drain's compactEveryNBatches policy
+knob compact in-line), and --force overrides a token you know is
+stale.  Prints one JSON line per store.
 """
 
 from __future__ import annotations
