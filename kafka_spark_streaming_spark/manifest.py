@@ -14,7 +14,7 @@ module is the only one that names them::
     <store>/v_.../_MANIFEST.json     {leaf: [owner version, ...]}
     <store>/_pins/pin-*.json         live readers' version pins
     <store>/_WRITER_EPOCH            the writer token (`acquire`)
-    <store>/_LAYOUT                  the bucket counts (`layout`)
+    <store>/_BUCKETS                 the bucket counts (`layout`)
 
 A leaf is one partition dir (`rb=K`, `kind=b/pk=K`, `cell=K`); its
 rows are the union of that leaf dir in every owner version the head
@@ -46,7 +46,7 @@ token the store keeps at `_WRITER_EPOCH`; the fence is checked before
 every commit rename and every prune.
 
 Layout marker (`layout`): a store whose leaves are `pmod(key,
-buckets)` partitions keeps its bucket counts in `_LAYOUT`, seeded once
+buckets)` partitions keeps its bucket counts in `_BUCKETS`, seeded once
 from the session conf (config.persisted_layout) and read by every
 later attach, so a conf change can never make a probe's pmod disagree
 with the leaves on disk.  A store with a committed version but no
@@ -76,7 +76,7 @@ from kafka_spark_streaming_spark import config, fencing
 
 MANIFEST_NAME = "_MANIFEST.json"
 WRITER_TOKEN = "_WRITER_EPOCH"
-LAYOUT_NAME = "_LAYOUT"
+LAYOUT_NAME = "_BUCKETS"
 
 # snapshot pins are DURABLE: each handed-out pin writes a
 # `_pins/pin-{pid}-{nonce}.json` file inside the store naming the
@@ -138,7 +138,7 @@ class ManifestStore:
         return fencing.live_writer(os.path.join(self.path, WRITER_TOKEN))
 
     def layout(self, seed, arity: int, commit: bool = True) -> tuple:
-        """The store's persisted bucket counts from `_LAYOUT`.  Without
+        """The store's persisted bucket counts from `_BUCKETS`.  Without
         a marker, ``seed()`` (the session conf) answers, and
         ``commit`` makes that answer the marker — first writer wins
         under a race (config.commit_layout), so the caller gets what
@@ -153,7 +153,10 @@ class ManifestStore:
                     f"store {self.path!r} has committed versions but no "
                     f"{LAYOUT_NAME} marker — its bucket counts can no "
                     "longer be trusted; restore the marker from the "
-                    "store's leaf layout before reattaching"
+                    "store's leaf layout before reattaching (a dedup "
+                    "store written before its markers moved inside it "
+                    f"keeps it beside it: move <store>.layout to "
+                    f"<store>/{LAYOUT_NAME})"
                 )
             if commit:
                 os.makedirs(self.path, exist_ok=True)

@@ -29,10 +29,10 @@ modes:
 - STANDALONE (``fence=None``, the CLI path): refuses to run while
   the token names a LIVE writer (tenure not idled, lease fresh or
   pid alive — a drain is committing; ``force=True`` overrides for
-  operator judgment calls).  On a path with nothing committed there
-  is nothing to maintain, so the pass then takes no token and leaves
-  no file at or beside the path; otherwise it ACQUIRES its own
-  fence.  The epoch bump means a zombie drain that
+  operator judgment calls), then ACQUIRES its own fence.  A path
+  with nothing committed has nothing to maintain: the pass returns
+  before the probe, takes no token and leaves no file at or beside
+  the path.  The epoch bump means a zombie drain that
   silently survived a failover raises at its next commit instead of
   interleaving with the pass; if a NEW drain attaches mid-pass, the
   fence check before the pass's rename aborts it, leaving the
@@ -153,15 +153,14 @@ def _fenced_pass(
 ) -> dict:
     """Run ``body(store)`` under the maintenance fence protocol shared
     by compaction and rebalance (module docstring).  STANDALONE
-    (``fence=None``): refuse a live writer unless ``force``; then, on
-    a store with a committed version, acquire with the session's
-    lease knob, and idle the fence afterwards — also on failure, so a
-    failed pass stays retryable (code-review r20)."""
+    (``fence=None``): refuse a live writer unless ``force``, acquire
+    with the session's lease knob, and idle the fence afterwards —
+    also on failure, so a failed pass stays retryable (code-review
+    r20).  Callers return before it on a path with nothing committed,
+    so such a path never grows a token."""
     store = ManifestStore(store_dir, fence)
     if fence is not None:
         return body(store)
-    # the probe comes first and only reads: a drain that has acquired
-    # but not yet committed its first version must still be refused
     tok = store.live_writer()
     if tok is not None and not force:
         raise StaleWriterError(
@@ -170,8 +169,6 @@ def _fenced_pass(
             f"refusing to {verb} beside an active drain — run between "
             "drains, or pass force=True if the token is known-stale"
         )
-    if not store._versions():
-        return body(store)  # no head to maintain: take no token
     from kafka_spark_streaming_spark.config import fence_lease_ttl
 
     # same lease plumbing as the drains and the upsert sink — without
@@ -432,6 +429,10 @@ def compact_partitioned_store(
     refuses a live writer unless ``force`` and acquires its own
     token; cooperative passes the owning drain's fence.  Either way
     the fence is checked before the version rename."""
+    if not ManifestStore(store_dir)._versions():
+        # nothing to maintain: take no token, leave no file
+        return {"leaves": 0, "files_before": 0, "files_after": 0,
+                "rewrote": False}
     return _fenced_pass(
         spark, store_dir, fence, force, purpose, "compact",
         lambda store: _compact_body(spark, store, partition_cols, min_files),

@@ -112,7 +112,7 @@ def test_commit_layout_racers_all_agree(tmp_path):
 
     from kafka_spark_streaming_spark.config import commit_layout, read_layout
 
-    marker = str(tmp_path / "_LAYOUT")
+    marker = str(tmp_path / "_BUCKETS")
 
     def racer(i):
         return commit_layout(marker, (i + 1, (i + 1) * 10))
@@ -318,7 +318,7 @@ def test_dedup_layout_race_guard_fires_on_foreign_pin(
     from kafka_spark_streaming_spark.tables import table
 
     store = str(tmp_path / "store")
-    marker = os.path.join(store, "_LAYOUT")
+    marker = os.path.join(store, "_BUCKETS")
     os.makedirs(store)
     # the racer pins (3, 5) before our batch (session conf defaults
     # differ: 16/16) reaches its own commit
@@ -337,7 +337,7 @@ def test_dedup_layout_race_guard_fires_on_foreign_pin(
     def racing_layout(sess, sdir, commit=False):
         if commit and not pinned["done"]:
             # the concurrent attach wins the marker right before us
-            commit_layout(os.path.join(sdir, "_LAYOUT"), (3, 5))
+            commit_layout(os.path.join(sdir, "_BUCKETS"), (3, 5))
             pinned["done"] = True
         return orig(sess, sdir, commit=commit)
 
@@ -347,7 +347,7 @@ def test_dedup_layout_race_guard_fires_on_foreign_pin(
             _incremental_dedup_batch(docs, store, 0)
     finally:
         sq._store_layout = orig
-    assert os.listdir(store) == ["_LAYOUT"], (
+    assert os.listdir(store) == ["_BUCKETS"], (
         "losing batch must leave nothing in the store but the racer's marker"
     )
 
@@ -1515,6 +1515,35 @@ def test_dedup_batch_creates_missing_parent_dirs(spark, sf_smoke, tmp_path):
     assert os.listdir(tmp_path / "not_yet") == ["store"]
 
 
+def test_sink_store_keeps_its_on_disk_marker_names(spark, tmp_path):
+    """The sink's in-store markers are part of its on-disk format:
+    `_WRITER_EPOCH` and `_BUCKETS` holding the bucket count as text.
+    A store laid out that way — every sink store written so far —
+    reattaches with its own bucket count whatever the conf says now,
+    so renaming a marker would orphan every existing store."""
+    from kafka_spark_streaming_spark.config import UPSERT_STATE_BUCKETS_KEY
+    from kafka_spark_streaming_spark.sinks.upsert import KeyedUpsertSink
+
+    path = str(tmp_path / "cells")
+    spark.conf.set(UPSERT_STATE_BUCKETS_KEY, "3")
+    try:
+        KeyedUpsertSink(spark, path).write_batch(
+            _cells(spark, [("k1", "v1"), ("k2", "v2")]), 0
+        )
+    finally:
+        spark.conf.unset(UPSERT_STATE_BUCKETS_KEY)
+    assert sorted(os.listdir(path)) == [
+        "_BUCKETS", "_WRITER_EPOCH", "v_000000000000"
+    ]
+    with open(os.path.join(path, "_BUCKETS")) as fh:
+        assert fh.read() == "3"
+    sink = KeyedUpsertSink(spark, path)
+    assert sink.buckets == 3
+    assert sorted((r.rowkey, r.value) for r in sink.current().collect()) == [
+        ("k1", "v1"), ("k2", "v2")
+    ]
+
+
 def test_missing_layout_marker_fails_closed(spark, sf_smoke, tmp_path):
     """A store that has committed a version but lost its layout marker
     must not re-seed its bucket counts from the session conf — the
@@ -1528,15 +1557,15 @@ def test_missing_layout_marker_fails_closed(spark, sf_smoke, tmp_path):
 
     cells = str(tmp_path / "cells")
     KeyedUpsertSink(spark, cells).write_batch(_cells(spark, [("k", "v")]), 0)
-    os.remove(os.path.join(cells, "_LAYOUT"))
-    with pytest.raises(ValueError, match="_LAYOUT"):
+    os.remove(os.path.join(cells, "_BUCKETS"))
+    with pytest.raises(ValueError, match="_BUCKETS"):
         KeyedUpsertSink(spark, cells)
 
     store = str(tmp_path / "store")
     docs = table(spark, sf_smoke, "documents")
     _incremental_dedup_batch(docs.filter(F.col("doc_id") < 30), store, 0)
-    os.remove(os.path.join(store, "_LAYOUT"))
-    with pytest.raises(ValueError, match="_LAYOUT"):
+    os.remove(os.path.join(store, "_BUCKETS"))
+    with pytest.raises(ValueError, match="_BUCKETS"):
         _incremental_dedup_batch(
             docs.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 60)),
             store,

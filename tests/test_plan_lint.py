@@ -314,7 +314,7 @@ def test_forced_broadcasts_state_their_bound():
 # helpers are defined, so their calls to each other there are the
 # mechanism itself, not a second caller.
 _MARKER_CALLS = {"persisted_layout", "commit_layout", "read_layout"}
-_MARKER_NAMES = ("_WRITER_EPOCH", "_LAYOUT", ".epoch", ".layout")
+_MARKER_NAMES = ("_WRITER_EPOCH", "_BUCKETS", ".epoch", ".layout")
 
 
 def _store_marker_sites() -> list[tuple[str, int, str]]:

@@ -1490,7 +1490,7 @@ def test_incremental_dedup_skips_empty_batch(spark, tmp_path, sf_smoke):
     assert not os.path.exists(store)
     # ADVICE r16: the 0-row batch must not pin the layout marker either
     # — a conf retune BEFORE the first real data batch is still honored
-    assert not os.path.exists(os.path.join(store, "_LAYOUT"))
+    assert not os.path.exists(os.path.join(store, "_BUCKETS"))
     from kafka_spark_streaming_spark.config import BAND_STORE_BUCKETS_KEY
 
     try:
